@@ -27,6 +27,7 @@ from mapreduce511_spark.functions.vectors import (
     lit_doubles,
     lit_doubles_nested,
 )
+from mapreduce511_spark.memo import stat_signature
 
 K_CELLS = 16
 KMEANS_ITERS = 3
@@ -152,32 +153,18 @@ def _cache_key(emb: DataFrame, *params) -> tuple:
     snapshot actually changes, and always for in-memory frames with
     no input files (createDataFrame corpora are driver-sized by
     construction, so the scan is trivial there)."""
-    import os
-
     files = tuple(sorted(emb.inputFiles()))
     plan_key = None
-    sig = None
-    if files:
-        sig_l = []
-        for f in files:
-            p = f[len("file:"):] if f.startswith("file:") else f
-            try:
-                st = os.stat(p)
-                sig_l.append((f, st.st_size, st.st_mtime_ns))
-            except OSError:
-                # Unstat-able URI (hdfs://, s3a://, ...): the stat
-                # signature can't see rewrites there, so memoizing
-                # under a sentinel would serve a stale fingerprint
-                # forever. Skip memoization and re-fingerprint.
-                sig_l = None
-                break
-        if sig_l is not None:
-            sig = tuple(sig_l)
-            plan_key = emb._jdf.queryExecution().logical().toString()
-            memo = _FP_MEMO.get(plan_key)
-            if memo is not None and memo[0] == sig:
-                n, h = memo[1], memo[2]
-                return (n, h, tuple(emb.columns), *params)
+    # An unstat-able URI (hdfs://, s3a://, ...) hides rewrites, so it
+    # gets no signature and is re-fingerprinted every call.
+    sig = stat_signature(files) if files else None
+    if sig is not None:
+        sig = (files, sig)
+        plan_key = emb._jdf.queryExecution().logical().toString()
+        memo = _FP_MEMO.get(plan_key)
+        if memo is not None and memo[0] == sig:
+            n, h = memo[1], memo[2]
+            return (n, h, tuple(emb.columns), *params)
     n, h = _content_fingerprint(emb)
     if plan_key is not None:
         # latest snapshot only: rewrites replace, never accumulate

@@ -21,6 +21,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mapreduce511_spark.memo import session_memo, stat_signature
 from mapreduce511_spark.queries import register
 from mapreduce511_spark.sources.tables import load_table
 
@@ -33,35 +34,28 @@ CBO_TABLES: tuple[tuple[str, str], ...] = (
     ("orders", "o_orderkey"),
 )
 
-# One CTAS + ANALYZE per corpus snapshot (file-stat keyed, same
-# build-once contract as operators/ann.py's index cache). Latest
-# signature only, per the r8 memo-boundedness fix there.
-_DB_MEMO: dict[str, tuple[tuple, str]] = {}
-
-
-def _snapshot_sig(sf_dir: str) -> tuple:
-    sig = []
-    for t, _ in CBO_TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        try:
-            st = os.stat(p)
-            sig.append((t, st.st_mtime_ns, st.st_size))
-        except OSError:
-            sig.append((t, -1, -1))
-    return tuple(sig)
+# One CTAS + ANALYZE per session and corpus snapshot: a session
+# restart in the same process starts a fresh in-memory catalog that no
+# longer holds the database.
+_DB_MEMO: dict = {}
 
 
 def ensure_cbo_tables(spark: SparkSession, sf_dir: str) -> str:
     """CTAS the demo tables into a warehouse database and ANALYZE
-    table + key-column statistics, once per corpus snapshot; returns
-    the database name. `FOR COLUMNS` computes table-level stats
-    (sizeInBytes + rowCount) as part of the same command."""
+    table + key-column statistics, once per session and corpus
+    snapshot; returns the database name. `FOR COLUMNS` computes
+    table-level stats (sizeInBytes + rowCount) as part of the same
+    command."""
+    paths = [os.path.join(sf_dir, f"{t}.parquet") for t, _ in CBO_TABLES]
+    return session_memo(
+        _DB_MEMO, spark, paths, lambda: _create_cbo_db(spark, sf_dir, paths)
+    )
+
+
+def _create_cbo_db(spark: SparkSession, sf_dir: str, paths: list) -> str:
     import hashlib
 
-    sig = _snapshot_sig(sf_dir)
-    hit = _DB_MEMO.get(sf_dir)
-    if hit and hit[0] == sig:
-        return hit[1]
+    sig = stat_signature(paths)
     tag = hashlib.sha1(repr((sf_dir, sig)).encode()).hexdigest()[:12]
     db = f"cbo_demo_{tag}"
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
@@ -81,7 +75,6 @@ def ensure_cbo_tables(spark: SparkSession, sf_dir: str) -> str:
             f"{db}.{t}"
         )
         spark.sql(f"ANALYZE TABLE {db}.{t} COMPUTE STATISTICS FOR COLUMNS {col}")
-    _DB_MEMO[sf_dir] = (sig, db)
     return db
 
 

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce511_spark.memo import session_memo
 from mapreduce511_spark.operators.graph import connected_components
 from mapreduce511_spark.operators.dedup import (
     MINHASH_P,
@@ -260,16 +261,9 @@ _SQL_COMPONENTS = (
 ).replace("WITH", "WITH RECURSIVE", 1)
 
 
-# r12 (guide §1.2 step 1): three cluster-family queries
-# (dedup_clusters, fuzzy_dedup_survivors, dup_cluster_canonical) each
-# re-ran the FULL MinHash LSH -> exact-verify -> iterative
-# connected-components pipeline per invocation. The finished
-# (node, component) frame is now memoized per (session, documents
-# file signature) — the _copurchase_edges_ck / _corpus_lcp discipline
-# for a standing derived relation: the first consumer in a process
-# pays the build (what the bench's first pass measures), later
-# invocations reuse the checkpointed frame, and a fresh process
-# recomputes from the parquet input.
+# Three cluster-family queries (dedup_clusters, fuzzy_dedup_survivors,
+# dup_cluster_canonical) share the finished (node, component) frame of
+# the MinHash LSH -> exact-verify -> connected-components pipeline.
 _CC_MEMO: dict = {}
 
 
@@ -277,22 +271,15 @@ def _near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared Spark body: verified MinHash pairs -> (node, component)."""
     import os
 
-    # r13 (ADVICE r12): a non-stat-able sf_dir (hdfs://, s3a://) skips
-    # memoization and just builds — the operators/ann.py fingerprint
-    # discipline — instead of raising where the pre-memo code ran.
-    key = None
-    sig = None
-    try:
-        p = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-        st = os.stat(p)
-        key = (spark.sparkContext.applicationId, p)
-        sig = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        pass
-    if key is not None:
-        memo = _CC_MEMO.get(key)
-        if memo is not None and memo[0] == sig:
-            return memo[1]
+    return session_memo(
+        _CC_MEMO,
+        spark,
+        [os.path.join(sf_dir, "documents.parquet")],
+        lambda: _build_near_dup_components(spark, sf_dir),
+    )
+
+
+def _build_near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread_scan(load_table(spark, sf_dir, "documents"))
     # shingles feeds both the signature build and the verify's per-doc
     # set builder — checkpoint so tokenize + explode + distinct
@@ -303,8 +290,6 @@ def _near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     cc = connected_components(pairs, src="doc_a", dst="doc_b").localCheckpoint(
         eager=True
     )
-    if key is not None:
-        _CC_MEMO[key] = (sig, cc)
     return cc
 
 

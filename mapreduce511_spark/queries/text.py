@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce511_spark.functions.text import normalize_text, tokenize, word_ngrams
+from mapreduce511_spark.memo import session_memo
 from mapreduce511_spark.operators.wordcount import word_count
 from mapreduce511_spark.queries import norm0, register
 from mapreduce511_spark.sources.tables import load_table, spread_scan
@@ -3155,33 +3156,21 @@ _HELDOUT_HIST_MEMO: dict = {}
 def _heldout_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (lang, tr, w1, w2, c) bigram count table over the
     deterministic md5 train/val split — the standing relation BOTH
-    held-out perplexity queries score against. The r12 judge ruled it
-    qualifies for the session-memo discipline (VERDICT r12 item 4: it
-    derives deterministically from the corpus exactly like the
-    SA/LCP/edge relations), so it is built once per (applicationId,
-    documents file signature) and shared by ``heldout_bigram_ppl`` /
-    ``heldout_kneser_ney_ppl``: the first consumer in a process pays
-    the build, a fresh process recomputes from the parquet input —
-    nothing persists across runs. A non-stat-able filesystem
-    (hdfs://, s3a://) skips memoization and just builds (the
-    operators/ann.py fingerprint discipline, per the r12 advisor)."""
+    held-out perplexity queries (``heldout_bigram_ppl`` /
+    ``heldout_kneser_ney_ppl``) score against, session-memoized."""
     import os
 
+    return session_memo(
+        _HELDOUT_HIST_MEMO,
+        spark,
+        [os.path.join(sf_dir, "documents.parquet")],
+        lambda: _build_heldout_hist(spark, sf_dir),
+    )
+
+
+def _build_heldout_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce511_spark.operators.dedup import hash60
 
-    key = None
-    sig = None
-    try:
-        path = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-        st = os.stat(path)
-        sig = (st.st_mtime_ns, st.st_size)
-        key = (spark.sparkContext.applicationId, path)
-    except OSError:
-        pass
-    if key is not None:
-        memo = _HELDOUT_HIST_MEMO.get(key)
-        if memo is not None and memo[0] == sig:
-            return memo[1]
     docs = load_table(spark, sf_dir, "documents")
     bucket = hash60(F.col("doc_id").cast("string")) % 100
     big = (
@@ -3208,8 +3197,6 @@ def _heldout_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("c"))
         .localCheckpoint(eager=True)
     )
-    if key is not None:
-        _HELDOUT_HIST_MEMO[key] = (sig, hist)
     return hist
 
 
