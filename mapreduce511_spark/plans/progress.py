@@ -50,9 +50,11 @@ def parse_progress_lines(lines: DataFrame) -> DataFrame:
     )
 
 
-def stage_metrics(progress: DataFrame) -> DataFrame:
-    """One row per run: ``[file, (keys...), map_s, shuffle_s,
-    reduce_s, total_s, overlap_pct]`` (FIXTURES.md F6)."""
+def _run_bounds(progress: DataFrame) -> DataFrame:
+    """Per-run stage boundaries in epoch seconds, one row per run that
+    reaches map 100% (None-abort): ``[file, (keys...), t0, t_end,
+    t_map, t_ss, t_se]``. ``t_se`` is the first map==100 & red>=90
+    record, else the second-to-last record (last if only one)."""
     keys = [c for c in _KEY_COLS if c in progress.columns]
 
     w_desc = Window.partitionBy("file").orderBy(
@@ -80,6 +82,22 @@ def stage_metrics(progress: DataFrame) -> DataFrame:
         F.col("t_se_heur"),
         F.when(F.col("n_rec") >= 2, F.col("t_second_last")).otherwise(F.col("t_end")),
     )
+    return agg.filter(F.col("t_map").isNotNull()).select(
+        "file", *keys, "t0", "t_end", "t_map", "t_ss", t_se.alias("t_se")
+    )
+
+
+def stage_metrics(progress: DataFrame) -> DataFrame:
+    """One row per run: ``[file, (keys...), map_s, shuffle_s,
+    reduce_s, total_s, overlap_pct]`` (FIXTURES.md F6).
+
+    The result is materialized (``localCheckpoint(eager=True)``): it
+    has one row per run, so its size depends on the number of runs,
+    not on log volume, and every report built from it (stage summary,
+    wide reports, result_raw) reads these rows instead of re-parsing
+    the logs. Each call parses the files as they are at that call."""
+    keys = [c for c in _KEY_COLS if c in progress.columns]
+    t_se = F.col("t_se")
     shuffle_s = F.when(F.col("t_ss").isNull(), F.lit(0.0)).otherwise(
         t_se - F.col("t_ss")
     )
@@ -94,7 +112,7 @@ def stage_metrics(progress: DataFrame) -> DataFrame:
     ).otherwise(F.lit(0.0))
 
     return (
-        agg.filter(F.col("t_map").isNotNull())  # None-abort
+        _run_bounds(progress)
         .select(
             "file",
             *keys,
@@ -104,6 +122,7 @@ def stage_metrics(progress: DataFrame) -> DataFrame:
             F.round(F.col("t_end") - F.col("t0"), 2).alias("total_s"),
             F.round(overlap, 2).alias("overlap_pct"),
         )
+        .localCheckpoint(eager=True)
     )
 
 
@@ -118,35 +137,13 @@ def phase_windows(progress: DataFrame) -> DataFrame:
     monitor/phase range join (SURVEY.md §2.3) — the alignment the
     reference only eyeballs from charts."""
     keys = [c for c in _KEY_COLS if c in progress.columns]
-
-    w_desc = Window.partitionBy("file").orderBy(F.desc("ts"), F.desc("line_no"))
-    marked = progress.withColumn("rn_desc", F.row_number().over(w_desc))
-    sec = lambda c: c.cast("double")  # noqa: E731
-    agg = marked.groupBy("file", *keys).agg(
-        F.min(sec(F.col("ts"))).alias("t0"),
-        F.max(sec(F.col("ts"))).alias("t_end"),
-        F.min(F.when(F.col("map_pct") == 100, sec(F.col("ts")))).alias("t_map"),
-        F.min(F.when(F.col("red_pct") > 0, sec(F.col("ts")))).alias("t_ss"),
-        F.min(
-            F.when(
-                (F.col("map_pct") == 100) & (F.col("red_pct") >= 90),
-                sec(F.col("ts")),
-            )
-        ).alias("t_se_heur"),
-        F.max(F.when(F.col("rn_desc") == 2, sec(F.col("ts")))).alias("t_second_last"),
-        F.count("*").alias("n_rec"),
-    )
-    t_se = F.coalesce(
-        F.col("t_se_heur"),
-        F.when(F.col("n_rec") >= 2, F.col("t_second_last")).otherwise(F.col("t_end")),
-    )
     phases = F.array(
         F.struct(F.lit("map").alias("phase"), F.col("t0").alias("start_s"), F.col("t_map").alias("end_s")),
-        F.struct(F.lit("shuffle").alias("phase"), F.col("t_ss").alias("start_s"), t_se.alias("end_s")),
-        F.struct(F.lit("reduce").alias("phase"), t_se.alias("start_s"), F.col("t_end").alias("end_s")),
+        F.struct(F.lit("shuffle").alias("phase"), F.col("t_ss").alias("start_s"), F.col("t_se").alias("end_s")),
+        F.struct(F.lit("reduce").alias("phase"), F.col("t_se").alias("start_s"), F.col("t_end").alias("end_s")),
     )
     return (
-        agg.filter(F.col("t_map").isNotNull())
+        _run_bounds(progress)
         .select("file", *keys, F.explode(phases).alias("p"))
         .select("file", *keys, "p.phase", "p.start_s", "p.end_s")
         .filter(F.col("start_s").isNotNull() & F.col("end_s").isNotNull())

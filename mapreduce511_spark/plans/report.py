@@ -31,12 +31,21 @@ def averaged_series(samples: DataFrame, metric: str = "cpu") -> DataFrame:
     run). Mean-of-means order is load-bearing for golden parity
     (SURVEY.md §4.4): runs with different sample counts per step must
     weigh equally.
+
+    The result is materialized (``localCheckpoint(eager=True)``): it
+    has one row per (dataset, slowstart, time_step), so its size
+    depends on the configs and sample steps, not on log volume, and
+    the CPU mean, wide report and charts built from it read these rows
+    instead of re-parsing the logs. Each call parses the files as they
+    are at that call.
     """
     per_run = samples.groupBy("dataset", "slowstart", "file", "time_step").agg(
         F.avg(metric).alias("run_avg")
     )
-    return per_run.groupBy("dataset", "slowstart", "time_step").agg(
-        F.avg("run_avg").alias(f"avg_{metric}")
+    return (
+        per_run.groupBy("dataset", "slowstart", "time_step")
+        .agg(F.avg("run_avg").alias(f"avg_{metric}"))
+        .localCheckpoint(eager=True)
     )
 
 

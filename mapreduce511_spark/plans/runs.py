@@ -41,7 +41,12 @@ def experiment_files(base_dir: str, filename: str) -> list[str]:
     when no run subdirectory exists — some reference configs carry a
     stray top-level log next to their run dirs, and the golden CSVs
     prove the reference's generator ignored it.
+
+    A ``file:`` scheme is stripped before globbing, so a ``file:`` or
+    ``file://`` root lists the same plain paths as the bare path.
     """
+    if base_dir.startswith("file:"):
+        base_dir = os.path.normpath(base_dir[len("file:"):])
     out: list[str] = []
     for cfg in sorted(_glob.glob(os.path.join(base_dir, "*"))):
         if not os.path.isdir(cfg):

@@ -49,12 +49,13 @@ def _concrete_local_files(path: str | list[str], recursive: bool) -> list[str]:
     """Expand the reader input to concrete local files so the
     one-split-per-file size guard covers every shape of input —
     explicit lists, a single file path, and directory scans (with or
-    without recursiveFileLookup). Non-local URIs (hdfs://, s3a://…)
+    without recursiveFileLookup). A ``file:`` scheme is stripped, as
+    ``memo.stat_signature`` does. Non-local URIs (hdfs://, s3a://…)
     are returned as-is and skipped by the caller's getsize probe."""
     paths = path if isinstance(path, list) else [path]
     out: list[str] = []
     for p in paths:
-        local = p[7:] if p.startswith("file://") else p
+        local = p[len("file:"):] if p.startswith("file:") else p
         if "://" in local:
             out.append(p)  # remote scheme — caller's contract
         elif os.path.isdir(local):

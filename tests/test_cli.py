@@ -45,6 +45,47 @@ def test_cli_analyze_reference_tree(spark, tmp_path, capsys):
     assert "7 report tables" in capsys.readouterr().out
 
 
+def test_cli_analyze_fixture_tree(spark, tmp_path, capsys):
+    """``analyze`` over the synthetic experiment tree writes all seven
+    report tables, and result_raw's stage columns equal the stage
+    summary computed directly."""
+    import csv
+
+    from mapreduce511_spark.plans import (
+        parse_progress_lines,
+        stage_metrics,
+        stage_summary,
+    )
+    from mapreduce511_spark.plans.fixtures import build_fixture_tree
+    from mapreduce511_spark.plans.runs import experiment_lines
+
+    tree = build_fixture_tree(str(tmp_path / "tree"))
+    out = str(tmp_path / "results")
+    rc = main(["analyze", "--tree", tree, "--out", out])
+    assert rc == 0
+    for name in (
+        "result_raw result_time result_map result_shuffle "
+        "result_reduce result_overlap result_cpu"
+    ).split():
+        assert glob.glob(f"{out}/{name}/part-*.csv"), name
+    assert "7 report tables" in capsys.readouterr().out
+
+    got = {}
+    for part in glob.glob(f"{out}/result_raw/part-*.csv"):
+        with open(part, newline="") as fh:
+            for r in csv.DictReader(fh):
+                key = (r["dataset"], float(r["slowstart"]))
+                got[key] = (float(r["map_s"]), float(r["total_s"]))
+    stg = stage_metrics(
+        parse_progress_lines(experiment_lines(spark, tree, "job_output.log"))
+    )
+    want = {
+        (r["dataset"], r["slowstart"]): (r["map_s"], r["total_s"])
+        for r in stage_summary(stg).collect()
+    }
+    assert want and got == want
+
+
 def test_cli_sweep(spark, capsys):
     rc = main(["sweep", "--sf-dir", SF_SMOKE, "--values", "4", "8"])
     assert rc == 0

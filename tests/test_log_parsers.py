@@ -30,7 +30,7 @@ def monitor(spark, tree):
 @pytest.fixture(scope="module")
 def stages(spark, tree):
     lines = experiment_lines(spark, tree, "job_output.log")
-    return stage_metrics(parse_progress_lines(lines)).cache()
+    return stage_metrics(parse_progress_lines(lines))
 
 
 def test_both_layouts_discovered(tree):
@@ -172,18 +172,52 @@ def test_sweep_harness_wordcount(spark):
     assert sum(1 for r in rep if r["is_best"]) >= 1
 
 
-def test_read_text_ordered_rejects_oversized_file(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("scheme", ["", "file:"], ids=["plain", "file-uri"])
+def test_read_text_ordered_rejects_oversized_file(spark, tmp_path, monkeypatch, scheme):
     """A file larger than maxPartitionBytes would be split and its
-    line numbering silently corrupted — must raise instead."""
-    import pytest
-
+    line numbering silently corrupted — must raise instead, also when
+    the path carries a ``file:`` scheme."""
     from mapreduce511_spark.sources import text_logs
 
     big = tmp_path / "big.log"
     big.write_text("x\n" * 10)
     monkeypatch.setattr(text_logs, "_max_partition_bytes", lambda s: 5)
     with pytest.raises(ValueError, match="maxPartitionBytes"):
-        text_logs.read_text_ordered(spark, [str(big)])
+        text_logs.read_text_ordered(spark, [scheme + str(big)])
+
+
+@pytest.mark.parametrize("scheme", ["file:", "file://"])
+def test_experiment_files_strips_file_scheme(tree, scheme):
+    """A ``file:`` tree root lists the same files as the bare path."""
+    plain = experiment_files(tree, "monitor.log")
+    assert plain
+    assert experiment_files(scheme + tree, "monitor.log") == plain
+
+
+def test_reports_read_pinned_aggregates_not_logs(spark, tree):
+    """``stage_metrics`` and ``averaged_series`` are materialized, so
+    the reports built on them plan no text-file scan: every report
+    reads the parsed rows, not the logs."""
+    from mapreduce511_spark.plans import (
+        averaged_series,
+        config_metric_mean,
+        result_raw,
+        stage_summary,
+        wide_report,
+    )
+
+    stg = stage_metrics(
+        parse_progress_lines(experiment_lines(spark, tree, "job_output.log"))
+    )
+    series = averaged_series(
+        parse_monitor_lines(experiment_lines(spark, tree, "monitor.log")), "cpu"
+    )
+    for report in (
+        result_raw(stage_summary(stg), config_metric_mean(series, "cpu")),
+        wide_report(stage_summary(stg), "total_s", "min"),
+    ):
+        plan = report._jdf.queryExecution().executedPlan().toString()
+        assert "FileScan" not in plan, plan
 
 
 def test_read_text_ordered_line_numbers(spark, tmp_path):
