@@ -9,15 +9,14 @@ Convention
 ----------
 ``content: binary`` + ``media: struct<kind, fmt, width, height,
 n_frames>``. Decode / feature-extraction runs in ``mapInPandas``
-(Arrow batches, never per-row Python). The decode step is REAL for
-uncompressed BMP and 16-bit PCM WAV (``multimodal/codecs.py`` —
-dependency-free struct parsing, oracle-verified round-trips via
-``extract_decoded_features``) and for non-interlaced 8-bit RGB PNG
-(stdlib zlib inflate + all five row unfilters); the remaining
-compressed formats (JPEG/MP3/H.264/…) stay behind an honest
-``NotImplementedError`` gate until codec libraries exist here, with
-the deterministic fake byte-histogram decoder exercising the same
-schema / partitioning / batch shape.
+(Arrow batches, never per-row Python). The decode step is REAL:
+``codecs.decode_real`` natively decodes BMP, PCM WAV, PNG, JPEG
+(baseline SOF0, progressive SOF2 and arithmetic-coded SOF9), baseline
+TIFF, FLAC and GIF, with oracle-verified round-trips via
+``extract_decoded_features``; MP3/H.264 stay behind an honest
+``NotImplementedError`` gate, with the deterministic fake
+byte-histogram decoder exercising the same schema / partitioning /
+batch shape.
 
 Scale notes: binary payloads dominate row size — keep
 ``spark.sql.files.maxPartitionBytes`` small enough that a batch of
@@ -29,12 +28,14 @@ need the key (semi-join first, fetch bytes after).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from mapreduce511_spark.multimodal.codecs import decode_real
 
 N_HIST_BINS = 16
 
@@ -88,16 +89,6 @@ def attach_fake_media(docs: DataFrame) -> DataFrame:
             ).alias("n_frames"),
         ).alias("media"),
     )
-
-
-def decode_real(payload: bytes, fmt: str) -> object:
-    """The real codec hook: uncompressed BMP, PCM WAV, and RGB8 PNG
-    decode natively (``multimodal.codecs``, dependency-free struct
-    parsing + stdlib zlib); the remaining compressed formats raise
-    until codec libraries exist."""
-    from mapreduce511_spark.multimodal import codecs
-
-    return codecs.decode_real(payload, fmt)
 
 
 # -- deterministic synthetic media with REAL encodings -----------------
@@ -173,8 +164,8 @@ TIFF_PX_RUN = 7
 TIFF_PX_STEP = 29
 
 
-def _synth_payload(doc_id: int) -> tuple[bytes, str, int, int]:
-    """(payload, fmt, width, height) for one doc. Image channel bytes
+def _synth_payload(doc_id: int) -> tuple[bytes, str]:
+    """(payload, fmt) for one doc. Image channel bytes
     are v(i) = (doc_id*31 + i*7) % 256 over w*h*3 positions; audio
     samples are s(i) = ((doc_id*13 + i*5) % 4096) - 2048 over
     256 + doc_id%64 positions."""
@@ -187,30 +178,58 @@ def _synth_payload(doc_id: int) -> tuple[bytes, str, int, int]:
         h = 8 + (doc_id * 3) % 9
         vals = (doc_id * 31 + np.arange(w * h * 3, dtype=np.int64) * 7) % 256
         payload = codecs.encode_bmp(vals.astype(np.uint8).reshape(h, w, 3))
-        return payload, codecs.BMP_FMT, w, h
+        return payload, codecs.BMP_FMT
     n = 256 + doc_id % 64
     s = ((doc_id * 13 + np.arange(n, dtype=np.int64) * 5) % 4096) - 2048
     payload = codecs.encode_wav(s.astype(np.int16))
-    return payload, codecs.WAV_FMT, 0, 0
+    return payload, codecs.WAV_FMT
+
+
+def _synth_media(
+    docs: DataFrame,
+    encode: Callable[[int], tuple[bytes, str]],
+    limit: int = SYNTH_DOC_LIMIT,
+) -> DataFrame:
+    """(doc_id, content, fmt) for every doc_id < ``limit``: the id
+    filter runs in the JVM, then one mapInPandas yields
+    ``(d, *encode(d))`` per Arrow batch (encode runs where the data
+    lives, same as a production transcode step). Spreading the small
+    input across cores is the caller's job (``spread_scan``)."""
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = [(int(d), *encode(int(d))) for d in pdf["doc_id"]]
+            yield pd.DataFrame(rows, columns=["doc_id", "content", "fmt"])
+
+    return (
+        docs.select("doc_id")
+        .filter(F.col("doc_id") < limit)
+        .mapInPandas(batches, schema="doc_id long, content binary, fmt string")
+    )
+
+
+def _jpeg_block_grid(d: int, block: int, channels: int):
+    """The JPEG fixtures' grid of CONSTANT block x block pixel blocks
+    (closed form above the JPEG_* constants): (h, w) uint8 for
+    ``channels == 1``, else (h, w, channels) with every channel = v."""
+    import numpy as np
+
+    wb = 1 + d % JPEG_GRID_WB_MOD
+    hb = 1 + (d * 5) % JPEG_GRID_HB_MOD
+    shape = (hb * block, wb * block) + ((channels,) if channels > 1 else ())
+    px = np.zeros(shape, dtype=np.uint8)
+    for by in range(hb):
+        for bx in range(wb):
+            v = (d * JPEG_PX_A + bx * JPEG_PX_BX + by * JPEG_PX_BY) % 256
+            px[by * block:(by + 1) * block, bx * block:(bx + 1) * block] = v
+    return px
 
 
 def synth_codec_media(docs: DataFrame) -> DataFrame:
     """(doc_id, content, fmt) with real BMP/WAV payloads for doc_id <
     SYNTH_DOC_LIMIT — built in mapInPandas (encode runs where the data
     lives, same as a production transcode step)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [
-                (int(d), *(_synth_payload(int(d))[:2]))
-                for d in pdf["doc_id"]
-                if int(d) < SYNTH_DOC_LIMIT
-            ]
-            yield pd.DataFrame(rows, columns=["doc_id", "content", "fmt"])
-
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="doc_id long, content binary, fmt string"
-    )
+    return _synth_media(docs, _synth_payload)
 
 
 def synth_png_media(docs: DataFrame) -> DataFrame:
@@ -226,26 +245,17 @@ def synth_png_media(docs: DataFrame) -> DataFrame:
 
     from mapreduce511_spark.multimodal import codecs
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for pdf in it:
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d >= SYNTH_DOC_LIMIT:
-                    continue
-                w = 6 + d % 11
-                h = 6 + (d * 5) % 7
-                vals = (d * 17 + np.arange(w * h * 3, dtype=np.int64) * 11) % 256
-                payload = codecs.encode_png(
-                    vals.astype(np.uint8).reshape(h, w, 3),
-                    row_filter=lambda r, d=d: (d + r) % 5,
-                )
-                rows.append((d, payload, codecs.PNG_FMT))
-        yield pd.DataFrame(rows, columns=["doc_id", "content", "fmt"])
+    def encode(d: int) -> tuple[bytes, str]:
+        w = 6 + d % 11
+        h = 6 + (d * 5) % 7
+        vals = (d * 17 + np.arange(w * h * 3, dtype=np.int64) * 11) % 256
+        payload = codecs.encode_png(
+            vals.astype(np.uint8).reshape(h, w, 3),
+            row_filter=lambda r: (d + r) % 5,
+        )
+        return payload, codecs.PNG_FMT
 
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="doc_id long, content binary, fmt string"
-    )
+    return _synth_media(docs, encode)
 
 
 def synth_tiff_media(docs: DataFrame) -> DataFrame:
@@ -264,36 +274,25 @@ def synth_tiff_media(docs: DataFrame) -> DataFrame:
 
     from mapreduce511_spark.multimodal import tiff
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for pdf in it:
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d >= SYNTH_DOC_LIMIT:
-                    continue
-                w = TIFF_W_BASE + d % TIFF_W_MOD
-                h = TIFF_H_BASE + (d * 5) % TIFF_H_MOD
-                spp = 1 if d % 2 == 0 else 3
-                vals = (
-                    d * TIFF_PX_A
-                    + (np.arange(w * h * spp, dtype=np.int64) // TIFF_PX_RUN)
-                    * TIFF_PX_STEP
-                ) % 256
-                px = vals.astype(np.uint8).reshape(
-                    (h, w) if spp == 1 else (h, w, 3)
-                )
-                payload = tiff.encode_tiff(
-                    px,
-                    compression=1 if d % 3 == 0 else 32773,
-                    byte_order=">" if d % 5 == 0 else "<",
-                    rows_per_strip=1 + d % 4,
-                )
-                rows.append((d, payload, tiff.TIFF_FMT))
-        yield pd.DataFrame(rows, columns=["doc_id", "content", "fmt"])
+    def encode(d: int) -> tuple[bytes, str]:
+        w = TIFF_W_BASE + d % TIFF_W_MOD
+        h = TIFF_H_BASE + (d * 5) % TIFF_H_MOD
+        spp = 1 if d % 2 == 0 else 3
+        vals = (
+            d * TIFF_PX_A
+            + (np.arange(w * h * spp, dtype=np.int64) // TIFF_PX_RUN)
+            * TIFF_PX_STEP
+        ) % 256
+        px = vals.astype(np.uint8).reshape((h, w) if spp == 1 else (h, w, 3))
+        payload = tiff.encode_tiff(
+            px,
+            compression=1 if d % 3 == 0 else 32773,
+            byte_order=">" if d % 5 == 0 else "<",
+            rows_per_strip=1 + d % 4,
+        )
+        return payload, tiff.TIFF_FMT
 
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="doc_id long, content binary, fmt string"
-    )
+    return _synth_media(docs, encode)
 
 
 def synth_jpeg_media(docs: DataFrame) -> DataFrame:
@@ -308,30 +307,12 @@ def synth_jpeg_media(docs: DataFrame) -> DataFrame:
     drive the DC-difference Huffman categories; the AC layer's
     exactness is proven coefficient-for-coefficient in
     tests/test_jpeg.py."""
-    import numpy as np
-
     from mapreduce511_spark.multimodal import jpeg
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for pdf in it:
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d >= SYNTH_DOC_LIMIT:
-                    continue
-                wb = 1 + d % JPEG_GRID_WB_MOD
-                hb = 1 + (d * 5) % JPEG_GRID_HB_MOD
-                px = np.zeros((hb * 8, wb * 8), dtype=np.uint8)
-                for by in range(hb):
-                    for bx in range(wb):
-                        v = (d * JPEG_PX_A + bx * JPEG_PX_BX + by * JPEG_PX_BY) % 256
-                        px[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8] = v
-                rows.append((d, jpeg.encode_jpeg(px), jpeg.JPEG_FMT))
-        yield pd.DataFrame(rows, columns=["doc_id", "content", "fmt"])
+    def encode(d: int) -> tuple[bytes, str]:
+        return jpeg.encode_jpeg(_jpeg_block_grid(d, 8, 1)), jpeg.JPEG_FMT
 
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="doc_id long, content binary, fmt string"
-    )
+    return _synth_media(docs, encode)
 
 
 def synth_jpeg_arith_media(docs: DataFrame) -> DataFrame:
@@ -349,41 +330,18 @@ def synth_jpeg_arith_media(docs: DataFrame) -> DataFrame:
     classification and Kx context split (decoded pixels are
     conditioning-invariant; a classification bug desyncs the QM
     decoder and the integer sums catch it)."""
-    import numpy as np
-
     from mapreduce511_spark.multimodal import jpeg_arith
 
     conds = ((0, 1, 5), (1, 3, 12), (0, 0, 1), (2, 8, 63))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for pdf in it:
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d >= SYNTH_DOC_LIMIT:
-                    continue
-                wb = 1 + d % JPEG_GRID_WB_MOD
-                hb = 1 + (d * 5) % JPEG_GRID_HB_MOD
-                px = np.zeros((hb * 8, wb * 8), dtype=np.uint8)
-                for by in range(hb):
-                    for bx in range(wb):
-                        v = (d * JPEG_PX_A + bx * JPEG_PX_BX + by * JPEG_PX_BY) % 256
-                        px[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8] = v
-                dc_l, dc_u, ac_kx = conds[d % 4]
-                rows.append(
-                    (
-                        d,
-                        jpeg_arith.encode_jpeg_arith(
-                            px, dc_l=dc_l, dc_u=dc_u, ac_kx=ac_kx
-                        ),
-                        "image/jpeg",
-                    )
-                )
-        yield pd.DataFrame(rows, columns=["doc_id", "content", "fmt"])
+    def encode(d: int) -> tuple[bytes, str]:
+        dc_l, dc_u, ac_kx = conds[d % 4]
+        payload = jpeg_arith.encode_jpeg_arith(
+            _jpeg_block_grid(d, 8, 1), dc_l=dc_l, dc_u=dc_u, ac_kx=ac_kx
+        )
+        return payload, "image/jpeg"
 
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="doc_id long, content binary, fmt string"
-    )
+    return _synth_media(docs, encode)
 
 
 def synth_jpeg420_media(docs: DataFrame) -> DataFrame:
@@ -399,32 +357,13 @@ def synth_jpeg420_media(docs: DataFrame) -> DataFrame:
     MCU interleave, chroma downsample, per-component DC prediction,
     replication upsampling, YCbCr round trip — under the exact DuckDB
     oracle gate while the oracle knows only the per-MCU formula."""
-    import numpy as np
-
     from mapreduce511_spark.multimodal import jpeg
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for pdf in it:
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d >= SYNTH_DOC_LIMIT:
-                    continue
-                wb = 1 + d % JPEG_GRID_WB_MOD
-                hb = 1 + (d * 5) % JPEG_GRID_HB_MOD
-                px = np.zeros((hb * 16, wb * 16, 3), dtype=np.uint8)
-                for by in range(hb):
-                    for bx in range(wb):
-                        v = (d * JPEG_PX_A + bx * JPEG_PX_BX + by * JPEG_PX_BY) % 256
-                        px[by * 16:(by + 1) * 16, bx * 16:(bx + 1) * 16, :] = v
-                rows.append(
-                    (d, jpeg.encode_jpeg(px, subsampling="420"), jpeg.JPEG_FMT)
-                )
-        yield pd.DataFrame(rows, columns=["doc_id", "content", "fmt"])
+    def encode(d: int) -> tuple[bytes, str]:
+        px = _jpeg_block_grid(d, 16, 3)
+        return jpeg.encode_jpeg(px, subsampling="420"), jpeg.JPEG_FMT
 
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="doc_id long, content binary, fmt string"
-    )
+    return _synth_media(docs, encode)
 
 
 def synth_jpeg_progressive_media(docs: DataFrame) -> DataFrame:
@@ -441,41 +380,18 @@ def synth_jpeg_progressive_media(docs: DataFrame) -> DataFrame:
     segment walk right to land on the SAME closed form as the
     baseline twin; general content is proven coefficient-exact in
     tests/test_jpeg.py."""
-    import numpy as np
-
     from mapreduce511_spark.multimodal import jpeg
     from mapreduce511_spark.multimodal.jpeg_progressive import (
         encode_jpeg_progressive,
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for pdf in it:
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d >= SYNTH_DOC_LIMIT:
-                    continue
-                wb = 1 + d % JPEG_GRID_WB_MOD
-                hb = 1 + (d * 5) % JPEG_GRID_HB_MOD
-                px = np.zeros((hb * 16, wb * 16, 3), dtype=np.uint8)
-                for by in range(hb):
-                    for bx in range(wb):
-                        v = (d * JPEG_PX_A + bx * JPEG_PX_BX + by * JPEG_PX_BY) % 256
-                        px[by * 16:(by + 1) * 16, bx * 16:(bx + 1) * 16, :] = v
-                rows.append(
-                    (
-                        d,
-                        encode_jpeg_progressive(
-                            px, subsampling="420", restart_interval=2
-                        ),
-                        jpeg.JPEG_FMT,
-                    )
-                )
-        yield pd.DataFrame(rows, columns=["doc_id", "content", "fmt"])
+    def encode(d: int) -> tuple[bytes, str]:
+        payload = encode_jpeg_progressive(
+            _jpeg_block_grid(d, 16, 3), subsampling="420", restart_interval=2
+        )
+        return payload, jpeg.JPEG_FMT
 
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="doc_id long, content binary, fmt string"
-    )
+    return _synth_media(docs, encode)
 
 
 DECODED_SCHEMA = (
@@ -497,32 +413,13 @@ def synth_flac_media(docs: DataFrame) -> DataFrame:
     fixtures' DC round-trip formula)."""
     from mapreduce511_spark.multimodal import flac
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for pdf in it:
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d >= SYNTH_DOC_LIMIT:
-                    continue
-                n = FLAC_N_BASE + (d % FLAC_N_MOD) * FLAC_N_STEP
-                pcm = [
-                    ((d * FLAC_PX_A + i * FLAC_PX_B) % 4096) - 2048
-                    for i in range(n)
-                ]
-                payload = flac.encode_flac(
-                    pcm, sample_rate=8000, block_size=FLAC_BLOCK
-                )
-                rows.append((d, payload, flac.FLAC_FMT))
-        yield pd.DataFrame(rows, columns=["doc_id", "content", "fmt"])
+    def encode(d: int) -> tuple[bytes, str]:
+        n = FLAC_N_BASE + (d % FLAC_N_MOD) * FLAC_N_STEP
+        pcm = [((d * FLAC_PX_A + i * FLAC_PX_B) % 4096) - 2048 for i in range(n)]
+        payload = flac.encode_flac(pcm, sample_rate=8000, block_size=FLAC_BLOCK)
+        return payload, flac.FLAC_FMT
 
-    # the source parquet is 1-2 files; without a repartition the
-    # pure-Python codec runs on 1-2 cores — spread the 400 assets
-    return (
-        docs.select("doc_id")
-        .filter(F.col("doc_id") < SYNTH_DOC_LIMIT)
-        .repartition(32)
-        .mapInPandas(batches, schema="doc_id long, content binary, fmt string")
-    )
+    return _synth_media(docs, encode)
 
 
 def synth_flac_stereo_media(docs: DataFrame) -> DataFrame:
@@ -536,35 +433,18 @@ def synth_flac_stereo_media(docs: DataFrame) -> DataFrame:
     oracle (lossless: the closed forms ARE the decoded output)."""
     from mapreduce511_spark.multimodal import flac
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for pdf in it:
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d >= SYNTH_DOC_LIMIT:
-                    continue
-                n = FLAC_N_BASE + (d % FLAC_N_MOD) * FLAC_N_STEP
-                left = [
-                    ((d * FLAC_PX_A + i * FLAC_PX_B) % 4096) - 2048
-                    for i in range(n)
-                ]
-                right = [
-                    ((d * FLAC_PX_A2 + i * FLAC_PX_B2) % 4096) - 2048
-                    for i in range(n)
-                ]
-                payload = flac.encode_flac_stereo(
-                    left, right, sample_rate=8000, block_size=FLAC_BLOCK
-                )
-                rows.append((d, payload, flac.FLAC_FMT))
-        yield pd.DataFrame(rows, columns=["doc_id", "content", "fmt"])
+    def encode(d: int) -> tuple[bytes, str]:
+        n = FLAC_N_BASE + (d % FLAC_N_MOD) * FLAC_N_STEP
+        left = [((d * FLAC_PX_A + i * FLAC_PX_B) % 4096) - 2048 for i in range(n)]
+        right = [
+            ((d * FLAC_PX_A2 + i * FLAC_PX_B2) % 4096) - 2048 for i in range(n)
+        ]
+        payload = flac.encode_flac_stereo(
+            left, right, sample_rate=8000, block_size=FLAC_BLOCK
+        )
+        return payload, flac.FLAC_FMT
 
-    # see synth_flac_media: spread the pure-Python codec across cores
-    return (
-        docs.select("doc_id")
-        .filter(F.col("doc_id") < SYNTH_DOC_LIMIT)
-        .repartition(32)
-        .mapInPandas(batches, schema="doc_id long, content binary, fmt string")
-    )
+    return _synth_media(docs, encode)
 
 
 def synth_flac_depth_media(docs: DataFrame) -> DataFrame:
@@ -581,37 +461,18 @@ def synth_flac_depth_media(docs: DataFrame) -> DataFrame:
     output, bit-exact at every depth."""
     from mapreduce511_spark.multimodal import flac
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for pdf in it:
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d >= SYNTH_DOC_LIMIT:
-                    continue
-                bits = FLAC_DEPTHS[d % len(FLAC_DEPTHS)]
-                step = (1 << bits) // FLAC_DEPTH_STEP_DIV
-                half = 1 << (bits - 1)
-                n = FLAC_N_BASE + (d % FLAC_N_MOD) * FLAC_N_STEP
-                pcm = [
-                    ((d * FLAC_PX_A + i * step) % (1 << bits)) - half
-                    for i in range(n)
-                ]
-                payload = flac.encode_flac(
-                    pcm,
-                    sample_rate=8000,
-                    block_size=FLAC_BLOCK,
-                    bps=bits,
-                )
-                rows.append((d, payload, flac.FLAC_FMT))
-        yield pd.DataFrame(rows, columns=["doc_id", "content", "fmt"])
+    def encode(d: int) -> tuple[bytes, str]:
+        bits = FLAC_DEPTHS[d % len(FLAC_DEPTHS)]
+        step = (1 << bits) // FLAC_DEPTH_STEP_DIV
+        half = 1 << (bits - 1)
+        n = FLAC_N_BASE + (d % FLAC_N_MOD) * FLAC_N_STEP
+        pcm = [((d * FLAC_PX_A + i * step) % (1 << bits)) - half for i in range(n)]
+        payload = flac.encode_flac(
+            pcm, sample_rate=8000, block_size=FLAC_BLOCK, bps=bits
+        )
+        return payload, flac.FLAC_FMT
 
-    # see synth_flac_media: spread the pure-Python codec across cores
-    return (
-        docs.select("doc_id")
-        .filter(F.col("doc_id") < SYNTH_DOC_LIMIT)
-        .repartition(32)
-        .mapInPandas(batches, schema="doc_id long, content binary, fmt string")
-    )
+    return _synth_media(docs, encode)
 
 
 def fingerprint_bands(hashes: DataFrame, keep_hash: bool = False) -> DataFrame:
@@ -649,9 +510,9 @@ def fingerprint_bands(hashes: DataFrame, keep_hash: bool = False) -> DataFrame:
 
 
 def extract_decoded_features(media_df: DataFrame) -> DataFrame:
-    """REAL decode + per-asset statistics via mapInPandas: BMP payloads
-    are parsed to pixel channel bytes (padding stripped, row order
-    normalized), WAV payloads to int16 samples; stats are integers so
+    """REAL decode + per-asset statistics via mapInPandas: every
+    payload goes through ``codecs.decode_real``; ``image/*`` decodes to
+    pixel channel bytes, ``audio/*`` to samples; stats are integers so
     external oracles compare exactly. Histogram is folded to a single
     checksum (sum of 1-based 16-level bin ids) to stay scalar.
 
@@ -662,49 +523,21 @@ def extract_decoded_features(media_df: DataFrame) -> DataFrame:
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        from mapreduce511_spark.multimodal import codecs
-
         for pdf in it:
             out = []
             for doc_id, payload, fmt in zip(
                 pdf["doc_id"], pdf["content"], pdf["fmt"]
             ):
-                if fmt == codecs.BMP_FMT:
-                    w, h, px = codecs.decode_bmp(bytes(payload))
+                kind = fmt.split("/", 1)[0]
+                if kind == "image":
+                    w, h, px = decode_real(bytes(payload), fmt)
                     vals = px.reshape(-1).astype(np.int64)
-                    kind, bins = "image", vals >> 4
-                elif fmt == codecs.PNG_FMT:
-                    w, h, px = codecs.decode_png(bytes(payload))
-                    vals = px.reshape(-1).astype(np.int64)
-                    kind, bins = "image", vals >> 4
-                elif fmt == "image/jpeg":
-                    from mapreduce511_spark.multimodal import jpeg, jpeg_arith
-
-                    pb = bytes(payload)
-                    if jpeg_arith.is_arith_jpeg(pb):
-                        w, h, px = jpeg_arith.decode_jpeg_arith(pb)
-                    else:
-                        w, h, px = jpeg.decode_jpeg(pb)
-                    vals = px.reshape(-1).astype(np.int64)
-                    kind, bins = "image", vals >> 4
-                elif fmt == "image/tiff":
-                    from mapreduce511_spark.multimodal import tiff
-
-                    w, h, px = tiff.decode_tiff(bytes(payload))
-                    vals = px.reshape(-1).astype(np.int64)
-                    kind, bins = "image", vals >> 4
-                elif fmt == codecs.WAV_FMT:
-                    _rate, _ch, samples = codecs.decode_wav(bytes(payload))
-                    vals = samples.astype(np.int64)
-                    w = h = 0
-                    kind, bins = "audio", (vals + 2048) >> 8
-                elif fmt == "audio/flac":
-                    from mapreduce511_spark.multimodal import flac
-
-                    _rate, _ch, samples = flac.decode_flac(bytes(payload))
+                    bins = vals >> 4
+                elif kind == "audio":
+                    _rate, _ch, samples = decode_real(bytes(payload), fmt)
                     vals = np.asarray(samples, dtype=np.int64)
                     w = h = 0
-                    kind, bins = "audio", (vals + 2048) >> 8
+                    bins = (vals + 2048) >> 8
                 else:
                     raise NotImplementedError(f"no decoder for {fmt!r}")
                 out.append(
@@ -888,6 +721,9 @@ def resize_assets(media_df: DataFrame, factor: int = 2) -> DataFrame:
 GIF_NCOLORS = 16
 GIF_PX_A = 11
 GIF_PX_B = 7
+GIF_PALETTE = tuple(
+    ((c * 37) % 256, (c * 59) % 256, (c * 83) % 256) for c in range(GIF_NCOLORS)
+)
 
 
 def synth_gif_media(docs: DataFrame) -> DataFrame:
@@ -901,42 +737,20 @@ def synth_gif_media(docs: DataFrame) -> DataFrame:
     (decoded pixels are placement-invariant)."""
     from mapreduce511_spark.multimodal import gif
 
-    palette = [
-        ((c * 37) % 256, (c * 59) % 256, (c * 83) % 256)
-        for c in range(GIF_NCOLORS)
-    ]
+    def encode(d: int) -> tuple[bytes, str]:
+        w = 6 + d % 9
+        h = 6 + (d * 5) % 7
+        grid = [
+            [(d * GIF_PX_A + (y * w + x) * GIF_PX_B) % GIF_NCOLORS for x in range(w)]
+            for y in range(h)
+        ]
+        payload = gif.encode_gif(
+            grid, GIF_PALETTE, interlace=(d % 4 == 1), local_table=(d % 2 == 1)
+        )
+        return payload, gif.GIF_FMT
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for pdf in it:
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d >= SYNTH_DOC_LIMIT:
-                    continue
-                w = 6 + d % 9
-                h = 6 + (d * 5) % 7
-                grid = [
-                    [
-                        (d * GIF_PX_A + (y * w + x) * GIF_PX_B) % GIF_NCOLORS
-                        for x in range(w)
-                    ]
-                    for y in range(h)
-                ]
-                payload = gif.encode_gif(
-                    grid,
-                    palette,
-                    interlace=(d % 4 == 1),
-                    local_table=(d % 2 == 1),
-                )
-                rows.append((d, payload, gif.GIF_FMT))
-        yield pd.DataFrame(rows, columns=["doc_id", "content", "fmt"])
+    return _synth_media(docs, encode)
 
-    return (
-        docs.select("doc_id")
-        .filter(F.col("doc_id") < SYNTH_DOC_LIMIT)
-        .repartition(32)
-        .mapInPandas(batches, schema="doc_id long, content binary, fmt string")
-    )
 
 
 # Animated-GIF fixture geometry — single definition shared by
@@ -966,57 +780,30 @@ def synth_gif_anim_media(docs: DataFrame) -> DataFrame:
     oracle."""
     from mapreduce511_spark.multimodal import gif
 
-    palette = [
-        ((c * 37) % 256, (c * 59) % 256, (c * 83) % 256)
-        for c in range(GIF_NCOLORS)
-    ]
+    def encode(d: int) -> tuple[bytes, str]:
+        ws = 6 + d % 5
+        hs = 6 + (d * 3) % 5
+        frames = []
+        for f in range(2 + d % 3):
+            patch = [
+                [
+                    (d * GIF_PX_A + f * GIF_ANIM_FR_MIX + (y * 3 + x) * GIF_PX_B)
+                    % GIF_NCOLORS
+                    for x in range(3)
+                ]
+                for y in range(3)
+            ]
+            t_idx = None
+            if (d + 2 * f) % 3 == 0:
+                i_t = (d + f) % 9
+                t_idx = patch[i_t // 3][i_t % 3]
+            frames.append(
+                (f % (ws - 3), (f * 2) % (hs - 3), patch, (d + f) % 4, t_idx)
+            )
+        payload = gif.encode_gif_animation(ws, hs, GIF_PALETTE, frames)
+        return payload, gif.GIF_FMT
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for pdf in it:
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d >= SYNTH_DOC_LIMIT:
-                    continue
-                ws = 6 + d % 5
-                hs = 6 + (d * 3) % 5
-                frames = []
-                for f in range(2 + d % 3):
-                    patch = [
-                        [
-                            (
-                                d * GIF_PX_A
-                                + f * GIF_ANIM_FR_MIX
-                                + (y * 3 + x) * GIF_PX_B
-                            )
-                            % GIF_NCOLORS
-                            for x in range(3)
-                        ]
-                        for y in range(3)
-                    ]
-                    t_idx = None
-                    if (d + 2 * f) % 3 == 0:
-                        i_t = (d + f) % 9
-                        t_idx = patch[i_t // 3][i_t % 3]
-                    frames.append(
-                        (
-                            f % (ws - 3),
-                            (f * 2) % (hs - 3),
-                            patch,
-                            (d + f) % 4,
-                            t_idx,
-                        )
-                    )
-                payload = gif.encode_gif_animation(ws, hs, palette, frames)
-                rows.append((d, payload, gif.GIF_FMT))
-        yield pd.DataFrame(rows, columns=["doc_id", "content", "fmt"])
-
-    return (
-        docs.select("doc_id")
-        .filter(F.col("doc_id") < SYNTH_DOC_LIMIT)
-        .repartition(32)
-        .mapInPandas(batches, schema="doc_id long, content binary, fmt string")
-    )
+    return _synth_media(docs, encode)
 
 
 # dHash fixture geometry — single definition shared by
@@ -1049,32 +836,29 @@ def _dhash_cells(doc_id: int):
     return c  # shape (8 rows, 9 cols)
 
 
+def _cells_bmp(cells) -> bytes:
+    """A 9x8 cell grid as a 36x16 grayscale BMP: each cell becomes a
+    constant 4x2-pixel box, all three channels equal."""
+    import numpy as np
+
+    from mapreduce511_spark.multimodal import codecs
+
+    px = np.repeat(np.repeat(cells, 2, axis=0), 4, axis=1)
+    img = np.stack([px, px, px], axis=2).astype(np.uint8)
+    return codecs.encode_bmp(img)
+
+
 def synth_dhash_media(docs: DataFrame) -> DataFrame:
     """(doc_id, content, fmt) with real 36x16 BMP payloads for doc_id <
     SYNTH_DOC_LIMIT; each 4x2-pixel box holds one constant grayscale
     cell value (all three channels equal), so decode + integer box
     averaging is lossless and the dHash bits have a closed form."""
+    from mapreduce511_spark.multimodal import codecs
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def encode(d: int) -> tuple[bytes, str]:
+        return _cells_bmp(_dhash_cells(d)), codecs.BMP_FMT
 
-        from mapreduce511_spark.multimodal import codecs
-
-        rows = []
-        for pdf in it:
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d >= SYNTH_DOC_LIMIT:
-                    continue
-                cells = _dhash_cells(d)  # (8, 9)
-                px = np.repeat(np.repeat(cells, 2, axis=0), 4, axis=1)
-                img = np.stack([px, px, px], axis=2).astype(np.uint8)
-                rows.append((d, codecs.encode_bmp(img), codecs.BMP_FMT))
-        yield pd.DataFrame(rows, columns=["doc_id", "content", "fmt"])
-
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="doc_id long, content binary, fmt string"
-    )
+    return _synth_media(docs, encode)
 
 
 def extract_dhash(media_df: DataFrame) -> DataFrame:
@@ -1131,28 +915,19 @@ def synth_png_native_deflate_media(docs: DataFrame) -> DataFrame:
 
     modes = ("dynamic", "fixed", "stored")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for pdf in it:
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d >= SYNTH_DOC_LIMIT:
-                    continue
-                w = 6 + d % 11
-                h = 6 + (d * 5) % 7
-                vals = (d * 17 + np.arange(w * h * 3, dtype=np.int64) * 11) % 256
-                mode = modes[d % 3]
-                payload = codecs.encode_png(
-                    vals.astype(np.uint8).reshape(h, w, 3),
-                    row_filter=lambda r, d=d: (d + r) % 5,
-                    compress=lambda b, m=mode: zlib_compress_native(b, m),
-                )
-                rows.append((d, payload, codecs.PNG_FMT))
-        yield pd.DataFrame(rows, columns=["doc_id", "content", "fmt"])
+    def encode(d: int) -> tuple[bytes, str]:
+        w = 6 + d % 11
+        h = 6 + (d * 5) % 7
+        vals = (d * 17 + np.arange(w * h * 3, dtype=np.int64) * 11) % 256
+        mode = modes[d % 3]
+        payload = codecs.encode_png(
+            vals.astype(np.uint8).reshape(h, w, 3),
+            row_filter=lambda r: (d + r) % 5,
+            compress=lambda b: zlib_compress_native(b, mode),
+        )
+        return payload, codecs.PNG_FMT
 
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="doc_id long, content binary, fmt string"
-    )
+    return _synth_media(docs, encode)
 
 
 # ---------------------------------------------------------------------------
@@ -1195,31 +970,17 @@ def synth_audio_fp_media(docs: DataFrame) -> DataFrame:
     closed form the DuckDB oracle restates. Variant classes of
     AFP_CLASS docs plant a pure volume change (v=1) and small spectral
     edits (v=2/3) around each base recording."""
+    import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    from mapreduce511_spark.multimodal import codecs
 
-        from mapreduce511_spark.multimodal import codecs
+    def encode(d: int) -> tuple[bytes, str]:
+        amps, gain = _afp_amplitudes(d)
+        tick = np.tile(np.arange(AFP_WIN_LEN, dtype=np.int64) % 2, AFP_WINDOWS)
+        samples = tick * np.repeat(amps * gain, AFP_WIN_LEN)
+        return codecs.encode_wav(samples.astype("<i2")), codecs.WAV_FMT
 
-        rows = []
-        for pdf in it:
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d >= SYNTH_DOC_LIMIT:
-                    continue
-                amps, gain = _afp_amplitudes(d)
-                tick = np.tile(
-                    np.arange(AFP_WIN_LEN, dtype=np.int64) % 2, AFP_WINDOWS
-                )
-                samples = tick * np.repeat(amps * gain, AFP_WIN_LEN)
-                rows.append(
-                    (d, codecs.encode_wav(samples.astype("<i2")), codecs.WAV_FMT)
-                )
-        yield pd.DataFrame(rows, columns=["doc_id", "content", "fmt"])
-
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="doc_id long, content binary, fmt string"
-    )
+    return _synth_media(docs, encode)
 
 
 def extract_audio_fingerprint(media_df: DataFrame) -> DataFrame:
@@ -1319,29 +1080,11 @@ def synth_video_media(docs: DataFrame) -> DataFrame:
     VID_CLASS docs plant a re-encode twin, a trimmed cut, and a
     trim+splice variant around each base video."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def encode(d: int) -> tuple[bytes, str]:
+        frames = [_cells_bmp(_vid_cells(key)) for key in _vid_frame_keys(d)]
+        return b"".join(frames), "video/bmpseq"
 
-        from mapreduce511_spark.multimodal import codecs
-
-        rows = []
-        for pdf in it:
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d >= VID_DOC_LIMIT:
-                    continue
-                frames = []
-                for key in _vid_frame_keys(d):
-                    cells = _vid_cells(key)
-                    px = np.repeat(np.repeat(cells, 2, axis=0), 4, axis=1)
-                    img = np.stack([px, px, px], axis=2).astype(np.uint8)
-                    frames.append(codecs.encode_bmp(img))
-                rows.append((d, b"".join(frames), "video/bmpseq"))
-        yield pd.DataFrame(rows, columns=["doc_id", "content", "fmt"])
-
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="doc_id long, content binary, fmt string"
-    )
+    return _synth_media(docs, encode, limit=VID_DOC_LIMIT)
 
 
 def extract_video_frame_hashes(media_df: DataFrame) -> DataFrame:

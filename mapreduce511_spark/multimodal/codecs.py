@@ -1,16 +1,17 @@
 """Dependency-free real codecs: uncompressed 24-bit BMP, 16-bit PCM
 WAV, and non-interlaced 8-bit RGB PNG (struct-parsed, stdlib zlib,
-numpy payloads).
+numpy payloads), plus ``decode_real``, the one decode dispatch.
 
-These make the multimodal path's decode step REAL — no image/audio
-libraries exist in this container, but all three formats are fully
-specified byte layouts a pure-Python parser handles: BMP's
-BITMAPFILEHEADER/BITMAPINFOHEADER with 4-byte-aligned bottom-up rows,
-WAV's RIFF chunk walk to a PCM ``data`` chunk, PNG's CRC-checked
-chunk stream with zlib-inflated IDAT and all five row unfilters
-(None/Sub/Up/Average/Paeth). The remaining compressed formats
-(JPEG/MP3/H.264) stay behind the honest ``NotImplementedError`` gate
-in ``decode_real`` — plumbing identical, codec genuinely absent.
+BMP, WAV and PNG are fully specified byte layouts a pure-Python
+parser handles: BMP's BITMAPFILEHEADER/BITMAPINFOHEADER with
+4-byte-aligned bottom-up rows, WAV's RIFF chunk walk to a PCM
+``data`` chunk, PNG's CRC-checked chunk stream with zlib-inflated
+IDAT and all five row unfilters (None/Sub/Up/Average/Paeth).
+``decode_real`` also routes to the sibling native decoders: JPEG
+(baseline SOF0, progressive SOF2, arithmetic-coded SOF9), baseline
+TIFF, FLAC and GIF. MP3/H.264 stay behind its honest
+``NotImplementedError`` gate — plumbing identical, codec genuinely
+absent.
 """
 
 from __future__ import annotations
@@ -149,9 +150,11 @@ def decode_real(payload: bytes, fmt: str):
     if fmt in (PNG_FMT, "png"):
         return decode_png(payload)
     if fmt in ("image/jpeg", "jpeg", "jpg"):
-        from mapreduce511_spark.multimodal.jpeg import decode_jpeg
+        from mapreduce511_spark.multimodal import jpeg, jpeg_arith
 
-        return decode_jpeg(payload)
+        if jpeg_arith.is_arith_jpeg(payload):
+            return jpeg_arith.decode_jpeg_arith(payload)
+        return jpeg.decode_jpeg(payload)
     if fmt in ("image/tiff", "tiff", "tif"):
         from mapreduce511_spark.multimodal.tiff import decode_tiff
 
@@ -160,7 +163,7 @@ def decode_real(payload: bytes, fmt: str):
         f"no native decoder for {fmt!r}: this environment has no "
         "image/audio codec libraries; BMP, WAV, FLAC, GIF, RGB8 PNG, "
         "baseline TIFF (gray/RGB, both byte orders, PackBits) "
-        "and JPEG (baseline + progressive) decode natively"
+        "and JPEG (baseline, progressive, arithmetic) decode natively"
     )
 
 

@@ -231,3 +231,16 @@ def test_conditioning_bounds_validated():
         encode_jpeg_arith(px, ac_kx=0)  # Kx < 1
     with pytest.raises(ValueError):
         encode_jpeg_arith(px, ac_kx=64)  # Kx > 63
+
+
+def test_decode_real_routes_arithmetic_jpeg():
+    """The one decode dispatch sends an SOF9 stream to the arithmetic
+    decoder (the Huffman decoder rejects SOF9), with the same pixels
+    as the direct decode."""
+    from mapreduce511_spark.multimodal import codecs
+
+    px = np.full((16, 16), 77, np.uint8)
+    payload = encode_jpeg_arith(px)
+    w, h, dec = codecs.decode_real(payload, "image/jpeg")
+    assert (w, h) == (16, 16)
+    np.testing.assert_array_equal(dec, decode_jpeg_arith(payload)[2])

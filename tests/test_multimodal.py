@@ -450,3 +450,73 @@ def test_video_near_dup_variant_classes(spark):
         assert (got[(d0, d0 + 2)].n_common, got[(d0, d0 + 2)].n_union) == (5, 6)
         assert (got[(d0, d0 + 3)].n_common, got[(d0, d0 + 3)].n_union) == (5, 7)
         assert (got[(d0 + 2, d0 + 3)].n_common, got[(d0 + 2, d0 + 3)].n_union) == (5, 6)
+
+
+# (rows, sha256 of the sorted "doc_id\tsha256(content)\tfmt" lines) per
+# generator over SF_SMOKE's 500 docs, so the 400/128 limits cut rows.
+# The oracles restate only the decoded closed forms; these pin the
+# encoded bytes themselves.
+SYNTH_DIGESTS = {
+    "synth_audio_fp_media": (400, "bcea3fcaf94330cfa7a43e8a40401047b4b7f3419d5198b6292f4d69724ca6fc"),
+    "synth_codec_media": (400, "6b3bcca0cfb7bf2915d06c78ccf038930f1e9a530cc6fd3c73a2b52e4a9ae0a9"),
+    "synth_dhash_media": (400, "1ce8a34a9256381822382d325c0fa228d92f22b5da5a86c137f03e79b2be2c2d"),
+    "synth_flac_depth_media": (400, "f37380c0b7ece394d5992fcc82e2b67b7ec6bcfcb05ca1e9b4c8e108c7fab7e0"),
+    "synth_flac_media": (400, "b4d8660b094907e1cc9c4bf1c1d3e099a7b41cfb7de842259f7d113974f6fddd"),
+    "synth_flac_stereo_media": (400, "743443ca564c8b08d153ea0e060a15af95947d8ebf1a476e93650b345ffefff5"),
+    "synth_gif_anim_media": (400, "bd427a8b4a9ab31d5ceecac2d8c5fde8ee910328439c0ca5f5cfb6e24f87b2f6"),
+    "synth_gif_media": (400, "28f5b695dc48638850c3c6a84dca465f528c3846e382aa4b0bbe43a9de7ad0c4"),
+    "synth_jpeg420_media": (400, "e37254aaf0d1acc524e338f30d0f368b65a51e3b71c0dbca8341eb8f42bc9d80"),
+    "synth_jpeg_arith_media": (400, "0a3cfc49713c3f513ee5754af5843c60673c14f155703e2d9e7419957df28a0d"),
+    "synth_jpeg_media": (400, "98b2c4d33025e6bd806e8d3c84d5d5a9b224cbb449823e594efc53efa9cc2944"),
+    "synth_jpeg_progressive_media": (400, "491b37034df72a74af51904c75671880488fe5e0b6789a81340829a0b6bf8d62"),
+    "synth_png_media": (400, "07b2710068a58990e6da3fd28fbdf3439887c7723a9e480e06ecc24ca2393fa8"),
+    "synth_png_native_deflate_media": (400, "f3c45fa042438894a072ee76fcb41a5ab8e1786fb7e491996e847ad4243bb8a4"),
+    "synth_tiff_media": (400, "d876223d71983bbb213d2fb54fad50b497d534633e5ad2f54bfa7c0e65ce20a7"),
+    "synth_video_media": (128, "344c42dfc40ab9bc490e2250f499c1b71b758d5c53ba8843ece251432a76904a"),
+}
+
+
+def test_synth_digests_cover_every_generator():
+    from mapreduce511_spark import multimodal as mm
+
+    gens = {n for n in dir(mm) if n.startswith("synth_") and n.endswith("_media")}
+    assert gens == set(SYNTH_DIGESTS)
+
+
+@pytest.mark.parametrize("name", sorted(SYNTH_DIGESTS))
+def test_synth_media_bytes_pinned(spark, name):
+    """Every generator's rows and payload bytes are pinned: same ids,
+    same fmt, same sha256 of every content blob."""
+    import hashlib
+
+    from mapreduce511_spark import multimodal as mm
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    rows = sorted(
+        (r.doc_id, r.h, r.fmt)
+        for r in getattr(mm, name)(docs)
+        .select("doc_id", F.sha2("content", 256).alias("h"), "fmt")
+        .collect()
+    )
+    text = "\n".join(f"{d}\t{h}\t{f}" for d, h, f in rows)
+    assert (len(rows), hashlib.sha256(text.encode()).hexdigest()) == SYNTH_DIGESTS[
+        name
+    ]
+
+
+@pytest.mark.parametrize("name", sorted(SYNTH_DIGESTS))
+def test_synth_media_filters_in_jvm_and_keeps_callers_spread(spark, name):
+    """The doc_id limit is a JVM Filter below the MapInPandas (ids at
+    or above it never reach Python), and the generator adds no
+    Repartition: the only exchange is the caller's ``spread_scan``."""
+    import re
+
+    from mapreduce511_spark import multimodal as mm
+    from mapreduce511_spark.sources.tables import spread_scan
+
+    limit = mm.VID_DOC_LIMIT if name == "synth_video_media" else mm.SYNTH_DOC_LIMIT
+    docs = spread_scan(load_table(spark, SF_SMOKE, "documents"), min_parts=3)
+    plan = getattr(mm, name)(docs)._jdf.queryExecution().optimizedPlan().toString()
+    below = plan.split("MapInPandas", 1)[1]
+    assert re.search(rf"Filter .*doc_id#\d+L < {limit}\)", below), plan
+    assert re.findall(r"Repartition.*", plan) == ["Repartition 3, true"], plan

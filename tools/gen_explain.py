@@ -88,7 +88,7 @@ PICKS = {
     "kll_compactor_quantile_census": "mapInPandas Arrow-batched partition sketches -> driver merge; exact-rank readout = one scan vs 3 broadcast rows",
     "bitext_margin_mining_ivf": "Lloyd-cell equi-join candidates; per-source rank window; no corpus-linear broadcast",
     "stream_kll_quantiles": "windowed sketch state; readout windows over <= k survivors per window",
-    "multimodal_flac_stereo_stats": "Arrow-batched stereo FLAC decode; 32-way repartitioned fixture synth",
+    "multimodal_flac_stereo_stats": "Arrow-batched stereo FLAC decode; fixture synth spread by the caller's `spread_scan`",
     # round 8
     "tfidf_cosine_pairs_exact_spec": "r8 rename of the plain tf-idf: exact-spec inverted index, unbounded candidates kept solely for the oracle",
     "bitext_margin_mining_ivf_indexed": "Persisted Lloyd index serves mining: PartitionFilters on probed cells, 16 broadcast centroid rows, cell equi-join candidates",

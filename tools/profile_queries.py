@@ -76,7 +76,7 @@ PICKS = {
     "tfidf_cosine_pairs_capped": "df-capped posting join; checkpointed tf/wts so the bigram explode runs once",
     "kll_quantile_census": "level-histogram shuffle <= 49 rows; survivor shuffle <= k; one readout scan",
     "ann_ivf_lloyd_indexed_topk": "steady path: partition-pruned index scan + 16-row centroid broadcast",
-    "multimodal_flac_stats": "Arrow-batched lossless decode; 32-way repartition spreads the codec",
+    "multimodal_flac_stats": "Arrow-batched lossless decode; spread by the caller's `spread_scan`",
     "bitext_margin_mining_ivf": "cell-id equi-join candidates (~nprobe/k of the block); Lloyd mean updates are the only wide shuffle",
     "stream_kll_quantiles": "windowed state = level counts + floored survivors; batch post-step over <= k rows/window",
     "decontamination_census": "gram-keyed equi-join; shuffle ~ distinct grams per side",
