@@ -11,11 +11,18 @@ catalog databases, staged dirs) belong to a stopped session and must
 not be served after a restart in the same process. An input that
 cannot be stat'ed (``hdfs://``, ``s3a://``, missing) would hide a
 rewrite, so those calls build every time instead of memoizing.
+
+Memo values that live on local disk (staged stream sources, fixture
+trees) sit in dirs from ``owned_tmpdir``, which the process removes
+when it exits.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 
 def stat_signature(paths) -> tuple | None:
@@ -47,3 +54,17 @@ def session_memo(store: dict, spark, paths, build, tag: tuple = ()):
         del store[k]
     store[key] = (sig, val)
     return val
+
+
+def owned_tmpdir(prefix: str) -> str:
+    """A new ``mr511_<prefix>_*`` dir that lives until the interpreter
+    exits. Only the creating pid removes it, so a forked child's exit
+    leaves its parent's dirs in place."""
+    path = tempfile.mkdtemp(prefix=f"mr511_{prefix}_")
+    atexit.register(_remove_owned, path, os.getpid())
+    return path
+
+
+def _remove_owned(path: str, pid: int) -> None:
+    if os.getpid() == pid:
+        shutil.rmtree(path, ignore_errors=True)

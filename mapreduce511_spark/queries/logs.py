@@ -8,17 +8,18 @@ reference's committed ``Analysis_Results/result_*.csv`` is asserted in
 
 The queries read the real reference tree at ``/root/reference/
 MapReduceLog`` when present (read-only), else a deterministic
-synthetic tree (``plans.fixtures``) in a temp dir.
+synthetic tree (``plans.fixtures``) in a temp dir that the process
+removes when it exits.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce511_spark.memo import owned_tmpdir
 from mapreduce511_spark.plans import (
     averaged_series,
     config_metric_mean,
@@ -43,7 +44,7 @@ def _tree() -> str:
     if os.path.isdir(_REFERENCE_TREE):
         return _REFERENCE_TREE
     if _fixture_root is None:
-        _fixture_root = build_fixture_tree(tempfile.mkdtemp(prefix="mr511_fixtures_"))
+        _fixture_root = build_fixture_tree(owned_tmpdir("fixtures"))
     return _fixture_root
 
 

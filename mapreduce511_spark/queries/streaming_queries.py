@@ -7,9 +7,12 @@ bit-for-bit: each query below materializes a real stream (file-source
 micro-batches, watermarks, state) into a memory sink and returns the
 result; the oracle states the equivalent batch semantics in SQL.
 
-Each invocation builds its own scratch source/checkpoint dirs (tmpdir)
-and a fresh memory-sink name, so repeated calls in one session (driver
-+ bench + tests) never collide.
+Two dir lifetimes: each invocation runs in its own per-run scratch dir
+(checkpoint, staging) with a fresh memory-sink name, removed when the
+query returns or raises (``_scratch_run``), so repeated calls in one
+session (driver + bench + tests) never collide. The staged sources and
+standing sides shared across invocations live in dirs the process
+removes when it exits (``memo.owned_tmpdir``).
 """
 
 from __future__ import annotations
@@ -17,15 +20,19 @@ from __future__ import annotations
 import itertools
 import shutil
 import tempfile
+from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce511_spark.memo import session_memo
+from mapreduce511_spark.memo import owned_tmpdir, session_memo
 from mapreduce511_spark.queries import register
 from mapreduce511_spark.sources.tables import load_table
 from mapreduce511_spark.streaming import (
+    click_purchase_full_join,
+    click_purchase_join,
+    click_purchase_left_join,
     dedup_events,
     prepare_events_dir,
     run_available_now,
@@ -37,18 +44,18 @@ from mapreduce511_spark.streaming import (
 _SEQ = itertools.count()
 
 
-def _scratch(prefix: str) -> tuple[str, str, str]:
-    """(source_dir, checkpoint_dir, unique sink name) for one run.
-    The caller removes the base dir after the drain (`_cleanup`) —
-    the memory sink holds the materialized rows, so the scratch
-    files are dead weight the moment the query returns."""
-    n = next(_SEQ)
+@contextmanager
+def _scratch_run(prefix: str):
+    """(checkpoint_dir, unique sink name) for one run. Sibling paths
+    (staging, a second checkpoint, a staged source) go under
+    ``Path(ckpt).parent``. The dir is removed when the block exits,
+    returned or raised: the memory sink or a pinned frame holds the
+    result, so the scratch files are dead weight by then."""
     base = tempfile.mkdtemp(prefix=f"mr511_{prefix}_")
-    return f"{base}/src", f"{base}/ckpt", f"{prefix}_{n}"
-
-
-def _cleanup(src: str) -> None:
-    shutil.rmtree(str(Path(src).parent), ignore_errors=True)
+    try:
+        yield f"{base}/ckpt", f"{prefix}_{next(_SEQ)}"
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 # Twelve streaming queries read the same µs-normalized staged copy of
@@ -56,8 +63,8 @@ def _cleanup(src: str) -> None:
 # per invocation. Each query still creates its own checkpoint dir and
 # memory sink, so its source offsets start fresh and the stream is
 # computed from scratch every time. Queries that stage a NON-plain
-# source (the doubled-events dedup census, the admission slices) keep
-# their own per-invocation scratch dirs.
+# source (the doubled-events dedup census, the admission slices) stage
+# it through ``_session_standing``.
 _EVENTS_SRC_MEMO: dict = {}
 
 
@@ -65,7 +72,7 @@ def _shared_events_src(spark: SparkSession, sf_dir: str) -> str:
     import os
 
     def stage() -> str:
-        src = f"{tempfile.mkdtemp(prefix='mr511_events_shared_')}/src"
+        src = f"{owned_tmpdir('events_shared')}/src"
         return prepare_events_dir(spark, sf_dir, src)
 
     paths = [os.path.join(sf_dir, "events.parquet")]
@@ -75,14 +82,6 @@ def _shared_events_src(spark: SparkSession, sf_dir: str) -> str:
     # a tmp cleaner removed the staged copy: stage it again
     _EVENTS_SRC_MEMO.clear()
     return session_memo(_EVENTS_SRC_MEMO, spark, paths, stage)
-
-
-def _scratch_ckpt(prefix: str) -> tuple[str, str]:
-    """(checkpoint_dir, unique sink name) for one run against the
-    shared staged events source."""
-    n = next(_SEQ)
-    base = tempfile.mkdtemp(prefix=f"mr511_{prefix}_")
-    return f"{base}/ckpt", f"{prefix}_{n}"
 
 
 # The admission/ingest streaming queries share their STANDING side: the
@@ -96,13 +95,20 @@ _STANDING_MEMO: dict = {}
 
 
 def _session_standing(spark: SparkSession, sf_dir: str, tag: str, builder):
+    """``builder(src)``'s value, memoized per session and corpus
+    snapshot; ``src`` is a fresh path in an owned dir for the builder
+    to stage its stream source at."""
     import glob
     import os
 
     d = sf_dir[len("file:"):] if sf_dir.startswith("file:") else sf_dir
     tables = sorted(glob.glob(os.path.join(glob.escape(d), "*.parquet")))
     return session_memo(
-        _STANDING_MEMO, spark, [sf_dir, *tables], builder, tag=(tag,)
+        _STANDING_MEMO,
+        spark,
+        [sf_dir, *tables],
+        lambda: builder(f"{owned_tmpdir(f'{tag}_standing')}/src"),
+        tag=(tag,),
     )
 
 
@@ -142,14 +148,11 @@ def stream_tumbling_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly. This is §2.9's S9/stream surface under the driver's
     oracle gate, not just a test."""
     src = _shared_events_src(spark, sf_dir)
-    ckpt, name = _scratch_ckpt("tumble")
-    try:
+    with _scratch_run("tumble") as (ckpt, name):
         stream = stream_events(spark, src, max_files_per_trigger=4)
         return _detach(
             run_available_now(tumbling_counts(stream), name, ckpt), name
         )
-    finally:
-        _cleanup(ckpt)
 
 
 @register(
@@ -168,17 +171,14 @@ def stream_dedup_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained census equals the batch census of ONE copy. Watermark is
     set past the data's span so nothing is dropped as late — the test
     isolates dedup-state behavior, not lateness."""
-    def _standing():
-        base = tempfile.mkdtemp(prefix="mr511_dedup_standing_")
-        s = f"{base}/src"
+    def _standing(s: str):
         prepare_events_dir(spark, sf_dir, s)
         # second full copy, arriving as separate files (-> later batches)
         load_table(spark, sf_dir, "events").write.mode("append").parquet(s)
         return s
 
     src = _session_standing(spark, sf_dir, "dedup", _standing)
-    ckpt, name = _scratch_ckpt("dedup")
-    try:
+    with _scratch_run("dedup") as (ckpt, name):
         stream = stream_events(spark, src, max_files_per_trigger=4)
         deduped = dedup_events(stream, watermark="400 days")
         drained = run_available_now(deduped, name, ckpt, mode="append")
@@ -186,8 +186,6 @@ def stream_dedup_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_events")
         )
         return _detach(census, name)
-    finally:
-        _cleanup(ckpt)
 
 
 @register(
@@ -239,8 +237,7 @@ def stream_closed_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit — stateful streaming under the driver gate, not just
     a stream-vs-batch test."""
     src = _shared_events_src(spark, sf_dir)
-    ckpt, name = _scratch_ckpt("sess")
-    try:
+    with _scratch_run("sess") as (ckpt, name):
         # NO max_files_per_trigger: all files MUST land in one data
         # batch. sessionize_stream consumes events in arrival order
         # within a batch but has no cross-batch reordering, so a
@@ -255,8 +252,6 @@ def stream_closed_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             name,
         )
-    finally:
-        _cleanup(ckpt)
 
 
 @register(
@@ -280,8 +275,7 @@ def stream_enriched_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce511_spark.streaming import enrich_with_users
 
     src = _shared_events_src(spark, sf_dir)
-    ckpt, name = _scratch_ckpt("enrich")
-    try:
+    with _scratch_run("enrich") as (ckpt, name):
         dim = (
             load_table(spark, sf_dir, "events")
             .select("user_id")
@@ -298,8 +292,6 @@ def stream_enriched_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("cents").alias("total_cents"),
         )
         return _detach(run_available_now(agg, name, ckpt), name)
-    finally:
-        _cleanup(ckpt)
 
 
 @register(
@@ -350,9 +342,7 @@ def stream_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
 
-    def _standing():
-        base = tempfile.mkdtemp(prefix="mr511_admit_standing_")
-        s = f"{base}/src"
+    def _standing(s: str):
         fp = docs.select(
             "doc_id", F.md5(normalize_text("text")).alias("f")
         )
@@ -380,8 +370,7 @@ def stream_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     src, idx, n_stream, n_novel = _session_standing(
         spark, sf_dir, "admit", _standing
     )
-    ckpt, name = _scratch_ckpt("admit")
-    try:
+    with _scratch_run("admit") as (ckpt, name):
         reader = (
             spark.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 1)
@@ -406,8 +395,6 @@ def stream_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_admitted_fp").cast("long").alias("admitted"),
         )
         return _detach(out, name)
-    finally:
-        _cleanup(ckpt)
 
 
 @register(
@@ -494,9 +481,7 @@ def stream_late_drop_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    def _standing():
-        base = tempfile.mkdtemp(prefix="mr511_latedrop_standing_")
-        s = f"{base}/src"
+    def _standing(s: str):
         ev = load_table(spark, sf_dir, "events")
         n = ev.count()
         # seed 1: the globally latest event; seed 2: the next latest.
@@ -529,8 +514,7 @@ def stream_late_drop_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         return s, n
 
     src, n_total = _session_standing(spark, sf_dir, "latedrop", _standing)
-    ckpt, name = _scratch_ckpt("latedrop")
-    try:
+    with _scratch_run("latedrop") as (ckpt, name):
         stream = stream_events(spark, src, max_files_per_trigger=1)
         agg = (
             stream.withWatermark("ts", "2 hours")
@@ -551,8 +535,20 @@ def stream_late_drop_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_dropped"),
         )
         return _detach(out, name)
-    finally:
-        _cleanup(ckpt)
+
+
+def _click_attribution(spark: SparkSession, sf_dir: str, prefix: str, join):
+    """Drain ``join(clicks, purchases)`` over the shared events source
+    in one data batch (no trigger cap), append mode."""
+    src = _shared_events_src(spark, sf_dir)
+    with _scratch_run(prefix) as (ckpt, name):
+        stream = stream_events(spark, src)
+        clicks = stream.filter(F.col("event_type") == "click")
+        purchases = stream.filter(F.col("event_type") == "purchase")
+        joined = join(clicks, purchases)
+        return _detach(
+            run_available_now(joined, name, ckpt, mode="append"), name
+        )
 
 
 @register(
@@ -602,20 +598,7 @@ def stream_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference basis: extension tier — streaming family (SURVEY.md
     §2.9)."""
-    from mapreduce511_spark.streaming import click_purchase_join
-
-    src = _shared_events_src(spark, sf_dir)
-    ckpt, name = _scratch_ckpt("attrib")
-    try:
-        stream = stream_events(spark, src)
-        clicks = stream.filter(F.col("event_type") == "click")
-        purchases = stream.filter(F.col("event_type") == "purchase")
-        joined = click_purchase_join(clicks, purchases)
-        return _detach(
-            run_available_now(joined, name, ckpt, mode="append"), name
-        )
-    finally:
-        _cleanup(ckpt)
+    return _click_attribution(spark, sf_dir, "attrib", click_purchase_join)
 
 
 @register(
@@ -650,14 +633,11 @@ def stream_sliding_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce511_spark.streaming import sliding_counts
 
     src = _shared_events_src(spark, sf_dir)
-    ckpt, name = _scratch_ckpt("slide")
-    try:
+    with _scratch_run("slide") as (ckpt, name):
         stream = stream_events(spark, src, max_files_per_trigger=4)
         return _detach(
             run_available_now(sliding_counts(stream), name, ckpt), name
         )
-    finally:
-        _cleanup(ckpt)
 
 
 @register(
@@ -689,8 +669,7 @@ def stream_user_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce511_spark.streaming import user_running_stats
 
     src = _shared_events_src(spark, sf_dir)
-    ckpt, name = _scratch_ckpt("ustats")
-    try:
+    with _scratch_run("ustats") as (ckpt, name):
         stream = stream_events(spark, src, max_files_per_trigger=4)
         drained = run_available_now(
             user_running_stats(stream), name, ckpt, mode="update"
@@ -701,8 +680,6 @@ def stream_user_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max_by("max_value", "n_events").alias("max_value"),
         )
         return _detach(final, name)
-    finally:
-        _cleanup(ckpt)
 
 
 @register(
@@ -742,8 +719,7 @@ def stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-2 per series; this is the windowed generalization under real
     stream execution)."""
     src = _shared_events_src(spark, sf_dir)
-    ckpt, name = _scratch_ckpt("topk")
-    try:
+    with _scratch_run("topk") as (ckpt, name):
         stream = stream_events(spark, src, max_files_per_trigger=4)
         drained = run_available_now(tumbling_counts(stream), name, ckpt)
         from pyspark.sql.window import Window
@@ -758,8 +734,6 @@ def stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("window_start", "rank")
         )
         return _detach(ranked, name)
-    finally:
-        _cleanup(ckpt)
 
 
 @register(
@@ -841,8 +815,7 @@ def stream_hourly_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = _shared_events_src(spark, sf_dir)
-    ckpt, name = _scratch_ckpt("hllstream")
-    try:
+    with _scratch_run("hllstream") as (ckpt, name):
         stream = stream_events(spark, src, max_files_per_trigger=4)
         reg, rho = _hll_reg_rho(F.md5(F.col("user_id").cast("string")))
         windowed = (
@@ -869,8 +842,19 @@ def stream_hourly_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("window_start")
         )
-    finally:
-        _cleanup(ckpt)
+
+
+def _events8_src(spark: SparkSession, sf_dir: str) -> str:
+    """The events table staged as exactly 8 parquet files, shared by
+    ``stream_incremental_mv`` and ``stream_state_metrics_census``: a
+    fixed file count gives a deterministic micro-batch sequence under
+    maxFilesPerTrigger=2."""
+
+    def stage(src: str) -> str:
+        load_table(spark, sf_dir, "events").repartition(8).write.parquet(src)
+        return src
+
+    return _session_standing(spark, sf_dir, "events8", stage)
 
 
 @register(
@@ -903,66 +887,54 @@ def stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference basis: SURVEY.md §2.9 (the monitor's append-only feed
     consumed incrementally) + the batch MV-refresh twin."""
-    def _standing():
-        sbase = tempfile.mkdtemp(prefix="mr511_imv_standing_")
-        s = f"{sbase}/src"
-        load_table(spark, sf_dir, "events").repartition(8).write.parquet(s)
-        return s
-
-    src = _session_standing(spark, sf_dir, "imv", _standing)
-    ckpt, _name = _scratch_ckpt("imv")
-    base = str(Path(ckpt).parent)
+    src = _events8_src(spark, sf_dir)
     stream = stream_events(spark, src, max_files_per_trigger=2)
-
     mv_versions: list[str] = []
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        delta = batch_df.groupBy("event_type").agg(
-            F.count("*").alias("n_events"),
-            F.sum("value").alias("sum_value"),
-        )
-        if mv_versions:
-            prev = spark.read.parquet(mv_versions[-1])
-            delta = (
-                prev.unionByName(delta)
-                .groupBy("event_type")
-                .agg(
-                    F.sum("n_events").alias("n_events"),
-                    F.sum("sum_value").alias("sum_value"),
-                )
-            )
-        target = f"{base}/mv_v{len(mv_versions)}"
-        delta.write.mode("overwrite").parquet(target)
-        mv_versions.append(target)
+    with _scratch_run("imv") as (ckpt, _name):
+        base = str(Path(ckpt).parent)
 
-    try:
-        q = (
+        def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+            delta = batch_df.groupBy("event_type").agg(
+                F.count("*").alias("n_events"),
+                F.sum("value").alias("sum_value"),
+            )
+            if mv_versions:
+                prev = spark.read.parquet(mv_versions[-1])
+                delta = (
+                    prev.unionByName(delta)
+                    .groupBy("event_type")
+                    .agg(
+                        F.sum("n_events").alias("n_events"),
+                        F.sum("sum_value").alias("sum_value"),
+                    )
+                )
+            target = f"{base}/mv_v{len(mv_versions)}"
+            delta.write.mode("overwrite").parquet(target)
+            mv_versions.append(target)
+
+        (
             stream.writeStream.foreachBatch(merge_batch)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
+            .awaitTermination()
         )
-        q.awaitTermination()
         if not mv_versions:  # empty source — empty MV
-            result = spark.createDataFrame(
+            return spark.createDataFrame(
                 [], "event_type string, n_events long, total_value double"
             )
-        else:
-            result = (
-                spark.read.parquet(mv_versions[-1])
-                .select(
-                    "event_type",
-                    "n_events",
-                    F.round("sum_value", 2).alias("total_value"),
-                )
-                .orderBy("event_type")
+        # pinned before the scratch dir (mv_v* versions) is removed
+        return (
+            spark.read.parquet(mv_versions[-1])
+            .select(
+                "event_type",
+                "n_events",
+                F.round("sum_value", 2).alias("total_value"),
             )
-        rows = result.collect()
-    finally:
-        # matches every sibling streaming query: a failed run must
-        # not leak the scratch dir (checkpoint + mv_v* versions)
-        _cleanup(ckpt)
-    return spark.createDataFrame(rows, result.schema)
+            .orderBy("event_type")
+            .localCheckpoint(eager=True)
+        )
 
 
 @register("stream_state_metrics_census")
@@ -981,18 +953,8 @@ def stream_state_metrics_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only by design: row COUNT and key metrics are deterministic
     (fixed 8-file source layout, maxFilesPerTrigger=2), but
     ``state_bytes`` is a JVM measurement no SQL oracle can restate."""
-    def _standing():
-        sbase = tempfile.mkdtemp(prefix="mr511_statemx_standing_")
-        s = f"{sbase}/src"
-        # fixed file count => deterministic micro-batch sequence
-        load_table(spark, sf_dir, "events").repartition(8).write.mode(
-            "overwrite"
-        ).parquet(s)
-        return s
-
-    src = _session_standing(spark, sf_dir, "statemx", _standing)
-    ckpt, _name = _scratch_ckpt("statemx")
-    try:
+    src = _events8_src(spark, sf_dir)
+    with _scratch_run("statemx") as (ckpt, _name):
         stream = stream_events(spark, src, max_files_per_trigger=2)
         q = (
             tumbling_counts(stream)
@@ -1016,8 +978,6 @@ def stream_state_metrics_census(spark: SparkSession, sf_dir: str) -> DataFrame:
                         int(op.get("memoryUsedBytes", 0)),
                     )
                 )
-    finally:
-        _cleanup(ckpt)
     return spark.createDataFrame(
         rows,
         "batch_id long, operator string, num_rows_total long,"
@@ -1070,20 +1030,7 @@ def stream_click_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFram
 
     Reference basis: extension tier — streaming family (SURVEY.md
     §2.9)."""
-    from mapreduce511_spark.streaming import click_purchase_left_join
-
-    src = _shared_events_src(spark, sf_dir)
-    ckpt, name = _scratch_ckpt("louter")
-    try:
-        stream = stream_events(spark, src)
-        clicks = stream.filter(F.col("event_type") == "click")
-        purchases = stream.filter(F.col("event_type") == "purchase")
-        joined = click_purchase_left_join(clicks, purchases)
-        return _detach(
-            run_available_now(joined, name, ckpt, mode="append"), name
-        )
-    finally:
-        _cleanup(ckpt)
+    return _click_attribution(spark, sf_dir, "louter", click_purchase_left_join)
 
 
 @register(
@@ -1138,8 +1085,7 @@ def stream_session_window_native(
     shuffle — and unlike the custom-state twin the merge logic runs
     JVM-side."""
     src = _shared_events_src(spark, sf_dir)
-    ckpt, name = _scratch_ckpt("sswin")
-    try:
+    with _scratch_run("sswin") as (ckpt, name):
         stream = stream_events(spark, src)
         agged = (
             stream.withWatermark("ts", "2 hours")
@@ -1163,8 +1109,6 @@ def stream_session_window_native(
         return _detach(
             run_available_now(agged, name, ckpt, mode="append"), name
         )
-    finally:
-        _cleanup(ckpt)
 
 
 @register(
@@ -1214,20 +1158,7 @@ def stream_click_attribution_full(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Reference basis: extension tier — streaming family (SURVEY.md
     §2.9)."""
-    from mapreduce511_spark.streaming import click_purchase_full_join
-
-    src = _shared_events_src(spark, sf_dir)
-    ckpt, name = _scratch_ckpt("fouter")
-    try:
-        stream = stream_events(spark, src)
-        clicks = stream.filter(F.col("event_type") == "click")
-        purchases = stream.filter(F.col("event_type") == "purchase")
-        joined = click_purchase_full_join(clicks, purchases)
-        return _detach(
-            run_available_now(joined, name, ckpt, mode="append"), name
-        )
-    finally:
-        _cleanup(ckpt)
+    return _click_attribution(spark, sf_dir, "fouter", click_purchase_full_join)
 
 
 _SKLL_K = 64  # per-window survivor budget
@@ -1311,8 +1242,7 @@ def stream_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce511_spark.queries.sketches import _hex_long
 
     src = _shared_events_src(spark, sf_dir)
-    ckpt, name = _scratch_ckpt("kllstream")
-    try:
+    with _scratch_run("kllstream") as (ckpt, name):
         stream = stream_events(spark, src, max_files_per_trigger=4)
         lv = (
             stream.filter(F.col("value").isNotNull())
@@ -1420,8 +1350,6 @@ def stream_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("window_start")
         )
-    finally:
-        _cleanup(ckpt)
 
 
 @register(
@@ -1521,9 +1449,7 @@ def stream_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     b = (hash60(F.col("doc_id").cast("string")) % 10).alias("b")
 
-    def _standing():
-        sbase = tempfile.mkdtemp(prefix="mr511_ingest_standing_")
-        s = f"{sbase}/src"
+    def _standing(s: str):
         toks_norm = tokenize(F.lower(F.col("text")))
         ev = (
             docs.select(b, toks_norm.alias("toks"))
@@ -1574,100 +1500,99 @@ def stream_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     src, ev_grams, idx, n_stream, n_qual, n_novel = _session_standing(
         spark, sf_dir, "ingest", _standing
     )
-    ckpt, name = _scratch_ckpt("ingest")
-    base = str(Path(ckpt).parent)
-    staging, ckpt2 = f"{base}/staging", f"{base}/ckpt2"
-    # Size the streaming state to the workload: the stateful
-    # dropDuplicates otherwise instantiates |shuffle.partitions| state
-    # stores PER MICRO-BATCH (32 on the bench session) for a
-    # batch-sized key set — a real deployment sizes state partitions
-    # to load, and both checkpoints here are fresh per invocation so
-    # the partition count is free to choose. Session-global for the
-    # pipeline's duration (no per-query knob exists); single-threaded
-    # session assumed — see streaming.run_available_now's docstring.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        # ---- hop 1: quality gate + dedup admission -> parquet staging
-        reader = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        s = (
-            reader.select(
-                "doc_id",
-                F.md5(normalize_text("text")).alias("f"),
-                tokenize(F.lower(F.col("text"))).alias("toks"),
+    with _scratch_run("ingest") as (ckpt, name):
+        base = str(Path(ckpt).parent)
+        staging, ckpt2 = f"{base}/staging", f"{base}/ckpt2"
+        # Size the streaming state to the workload: the stateful
+        # dropDuplicates otherwise instantiates |shuffle.partitions| state
+        # stores PER MICRO-BATCH (32 on the bench session) for a
+        # batch-sized key set — a real deployment sizes state partitions
+        # to load, and both checkpoints here are fresh per invocation so
+        # the partition count is free to choose. Session-global for the
+        # pipeline's duration (no per-query knob exists); single-threaded
+        # session assumed — see streaming.run_available_now's docstring.
+        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        try:
+            # ---- hop 1: quality gate + dedup admission -> parquet staging
+            reader = (
+                spark.readStream.schema(docs.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src)
             )
-            .withColumn("n_tok", F.size("toks"))
-            .withColumn(
-                "sum_len",
-                F.aggregate(
-                    "toks",
-                    F.lit(0).cast("long"),
-                    lambda a, x: a + F.length(x),
-                ),
+            s = (
+                reader.select(
+                    "doc_id",
+                    F.md5(normalize_text("text")).alias("f"),
+                    tokenize(F.lower(F.col("text"))).alias("toks"),
+                )
+                .withColumn("n_tok", F.size("toks"))
+                .withColumn(
+                    "sum_len",
+                    F.aggregate(
+                        "toks",
+                        F.lit(0).cast("long"),
+                        lambda a, x: a + F.length(x),
+                    ),
+                )
             )
-        )
-        qual = s.filter(
-            (F.col("n_tok") >= 20)
-            & (F.col("sum_len") <= 10 * F.col("n_tok"))
-        )
-        novel = qual.join(idx, "f", "left_anti")
-        # coalesce(1) per micro-batch: the admitted slice of a batch is
-        # small; without it every batch lands |shuffle.partitions| tiny
-        # files and hop 2 degenerates into ~100 micro-batches
-        cand = (
-            novel.dropDuplicates(["f"])
-            .select("doc_id", "f", "toks")
-            .coalesce(1)
-        )
-        (
-            cand.writeStream.format("parquet")
-            .option("path", staging)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+            qual = s.filter(
+                (F.col("n_tok") >= 20)
+                & (F.col("sum_len") <= 10 * F.col("n_tok"))
+            )
+            novel = qual.join(idx, "f", "left_anti")
+            # coalesce(1) per micro-batch: the admitted slice of a batch is
+            # small; without it every batch lands |shuffle.partitions| tiny
+            # files and hop 2 degenerates into ~100 micro-batches
+            cand = (
+                novel.dropDuplicates(["f"])
+                .select("doc_id", "f", "toks")
+                .coalesce(1)
+            )
+            (
+                cand.writeStream.format("parquet")
+                .option("path", staging)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
 
-        # ---- hop 2: stream the staging sink, decontaminate per batch
-        staged = spark.read.parquet(staging)
-        n_cand = staged.count()
-        # 2 files/trigger: hop 1 emits one coalesced file per batch, so
-        # this still exercises multiple hop-2 micro-batches while
-        # halving the trigger machinery (the suite's #3 steady line)
-        reader2 = (
-            spark.readStream.schema(staged.schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staging)
-        )
-        cont = (
-            reader2.select(
-                "f", F.explode(word_ngrams(F.col("toks"), 8)).alias("g")
+            # ---- hop 2: stream the staging sink, decontaminate per batch
+            staged = spark.read.parquet(staging)
+            n_cand = staged.count()
+            # 2 files/trigger: hop 1 emits one coalesced file per batch, so
+            # this still exercises multiple hop-2 micro-batches while
+            # halving the trigger machinery (the suite's #3 steady line)
+            reader2 = (
+                spark.readStream.schema(staged.schema)
+                .option("maxFilesPerTrigger", 2)
+                .parquet(staging)
             )
-            .join(ev_grams, "g", "left_semi")
-            .dropDuplicates(["f"])
-            .select("f")
-        )
-        drained = run_available_now(cont, name, ckpt2, mode="append")
-        n_cont = drained.count()
-        spark.catalog.dropTempView(name)
+            cont = (
+                reader2.select(
+                    "f", F.explode(word_ngrams(F.col("toks"), 8)).alias("g")
+                )
+                .join(ev_grams, "g", "left_semi")
+                .dropDuplicates(["f"])
+                .select("f")
+            )
+            drained = run_available_now(cont, name, ckpt2, mode="append")
+            n_cont = drained.count()
+            spark.catalog.dropTempView(name)
 
-        return spark.range(1).select(
-            F.lit(n_stream).cast("long").alias("n_stream"),
-            F.lit(n_stream - n_qual).cast("long").alias("rejected_quality"),
-            F.lit(n_qual - n_novel).cast("long").alias("rejected_known"),
-            F.lit(n_novel - n_cand)
-            .cast("long")
-            .alias("rejected_within_stream"),
-            F.lit(n_cont).cast("long").alias("rejected_contaminated"),
-            F.lit(n_cand - n_cont).cast("long").alias("admitted"),
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        _cleanup(ckpt)
+            return spark.range(1).select(
+                F.lit(n_stream).cast("long").alias("n_stream"),
+                F.lit(n_stream - n_qual).cast("long").alias("rejected_quality"),
+                F.lit(n_qual - n_novel).cast("long").alias("rejected_known"),
+                F.lit(n_novel - n_cand)
+                .cast("long")
+                .alias("rejected_within_stream"),
+                F.lit(n_cont).cast("long").alias("rejected_contaminated"),
+                F.lit(n_cand - n_cont).cast("long").alias("admitted"),
+            )
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 def _stream_admission_oracle() -> str:
@@ -1682,8 +1607,6 @@ def ensure_stream_admitted_lloyd_index(emb: DataFrame) -> tuple[str, list]:
     ``ingest_batch=-1``, then foreachBatch-admit the arriving slice
     (see ``stream_ann_admission_census`` for the full story).
     Returns (path, cent_rows)."""
-    import shutil
-
     from mapreduce511_spark.operators.ann import (
         _INDEX_CACHE,
         _cache_key,
@@ -1713,8 +1636,8 @@ def ensure_stream_admitted_lloyd_index(emb: DataFrame) -> tuple[str, list]:
         cent_rows = [(int(c), v) for c, v in model["cent_rows"]]
         _INDEX_CACHE[key] = (done_path, cent_rows)
         return _INDEX_CACHE[key]
-    src, ckpt, _name = _scratch("annadmit")
-    try:
+    with _scratch_run("annadmit") as (ckpt, _name):
+        src = f"{Path(ckpt).parent}/src"
         e = emb.select(
             "vec_id",
             F.col("embedding").cast("array<double>").alias("v"),
@@ -1766,8 +1689,6 @@ def ensure_stream_admitted_lloyd_index(emb: DataFrame) -> tuple[str, list]:
         retain_latest_artifact(path, origin, legacy_source(emb))
         _INDEX_CACHE[key] = (path, cent_rows)
         return path, cent_rows
-    finally:
-        _cleanup(src)
 
 
 @register("stream_ann_admission_census", oracle=_stream_admission_oracle())
@@ -1991,9 +1912,7 @@ def stream_dsir_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("s")
     )
 
-    def _standing():
-        base = tempfile.mkdtemp(prefix="mr511_sdsir_standing_")
-        s = f"{base}/src"
+    def _standing(s: str):
         toks = docs.select(
             "doc_id", "source", tokenize("text").alias("toks")
         )
@@ -2023,8 +1942,7 @@ def stream_dsir_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         return s, rows
 
     src, bstats = _session_standing(spark, sf_dir, "sdsir", _standing)
-    ckpt, name = _scratch_ckpt("sdsir")
-    try:
+    with _scratch_run("sdsir") as (ckpt, name):
         np_ = sum(r.cp for r in bstats)
         nq = sum(r.cq for r in bstats)
 
@@ -2075,8 +1993,106 @@ def stream_dsir_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("logw").cast("long").alias("sum_logw_micro"),
         )
         return _detach(run_available_now(census, name, ckpt), name)
-    finally:
-        _cleanup(ckpt)
+
+
+def _media_admission(
+    spark: SparkSession,
+    sf_dir: str,
+    *,
+    tag: str,
+    limit: int,
+    cls: int,
+    build_index,
+    kept,
+    rejected_col: str,
+) -> DataFrame:
+    """The staged-source -> foreachBatch -> census protocol of the media
+    admission gates. Standing side (once per session and snapshot):
+    ``build_index`` over the class-base docs (``doc_id % cls == 0``),
+    pinned, and the arriving slice staged as 4 parquet files. Each
+    micro-batch (one file) writes ``kept(batch_df, index)`` -- its
+    admitted rows -- to its own ``ingest_batch=<id>`` dir, an
+    idempotent overwrite per batch id; the census is (n_stream,
+    ``rejected_col``, admitted) over distinct admitted doc_ids."""
+    docs = load_table(spark, sf_dir, "documents").filter(
+        F.col("doc_id") < limit
+    )
+
+    def _standing(s: str):
+        idx = build_index(
+            docs.filter(F.col("doc_id") % cls == 0)
+        ).localCheckpoint(eager=True)
+        arriving = docs.filter(F.col("doc_id") % cls != 0)
+        n = arriving.count()
+        arriving.repartition(4).write.mode("overwrite").parquet(s)
+        return s, idx, n
+
+    src, idx, n_stream = _session_standing(spark, sf_dir, tag, _standing)
+    with _scratch_run(tag) as (ckpt, name):
+        staging = f"{Path(ckpt).parent}/admitted"
+        reader = (
+            spark.readStream.schema(docs.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+
+        def admit(batch_df: DataFrame, batch_id: int) -> None:
+            (
+                kept(batch_df, idx)
+                .coalesce(1)
+                .write.mode("overwrite")
+                .parquet(f"{staging}/ingest_batch={batch_id}")
+            )
+
+        (
+            reader.writeStream.foreachBatch(admit)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+        admitted = spark.read.parquet(staging)
+        out = admitted.agg(
+            F.countDistinct("doc_id").alias("n_admitted")
+        ).select(
+            F.lit(n_stream).cast("long").alias("n_stream"),
+            (F.lit(n_stream) - F.col("n_admitted"))
+            .cast("long")
+            .alias(rejected_col),
+            F.col("n_admitted").cast("long").alias("admitted"),
+        )
+        return _detach(out, name)
+
+
+def _hamming_gate(extract, t: int):
+    """(build_index, kept) for a 64-bit fingerprint gate: an arriving
+    doc is rejected when an indexed fingerprint lies within Hamming
+    ``t`` -- banded equi-join + verify, pigeonhole-exact for t <= 3."""
+    from mapreduce511_spark.multimodal import fingerprint_bands
+
+    def build_index(d: DataFrame) -> DataFrame:
+        return fingerprint_bands(extract(d), keep_hash=True).select(
+            F.col("band").alias("iband"),
+            F.col("val").alias("ival"),
+            F.col("h_lo").alias("i_lo"),
+            F.col("h_hi").alias("i_hi"),
+        )
+
+    def kept(batch_df: DataFrame, idx: DataFrame) -> DataFrame:
+        hashes = extract(batch_df)
+        cand = fingerprint_bands(hashes, keep_hash=True).join(
+            idx,
+            (F.col("band") == F.col("iband"))
+            & (F.col("val") == F.col("ival")),
+        )
+        hamming = (
+            F.bit_count(F.col("h_lo").bitwiseXOR(F.col("i_lo")))
+            + F.bit_count(F.col("h_hi").bitwiseXOR(F.col("i_hi")))
+        )
+        rejected = cand.filter(hamming <= t).select("doc_id").distinct()
+        return hashes.join(rejected, "doc_id", "left_anti")
+
+    return build_index, kept
 
 
 def _dhash_closed_form_cte() -> str:
@@ -2188,87 +2204,19 @@ def stream_image_dhash_admission(
         synth_dhash_media,
     )
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < SYNTH_DOC_LIMIT
+    build_index, kept = _hamming_gate(
+        lambda d: extract_dhash(synth_dhash_media(d)), DHASH_T
     )
-
-    from mapreduce511_spark.multimodal import fingerprint_bands
-
-    def bands(hashes: DataFrame) -> DataFrame:
-        return fingerprint_bands(hashes, keep_hash=True)
-
-    def _standing():
-        base = tempfile.mkdtemp(prefix="mr511_imgadmit_standing_")
-        s = f"{base}/src"
-        idx_hashes = extract_dhash(
-            synth_dhash_media(docs.filter(F.col("doc_id") % DHASH_CLASS == 0))
-        )
-        ib = bands(idx_hashes).select(
-            F.col("band").alias("iband"),
-            F.col("val").alias("ival"),
-            F.col("h_lo").alias("i_lo"),
-            F.col("h_hi").alias("i_hi"),
-        ).localCheckpoint(eager=True)
-        arriving = docs.filter(F.col("doc_id") % DHASH_CLASS != 0)
-        n = arriving.count()
-        arriving.repartition(4).write.mode("overwrite").parquet(s)
-        return s, ib, n
-
-    src, idx_bands, n_stream = _session_standing(
-        spark, sf_dir, "imgadmit", _standing
+    return _media_admission(
+        spark,
+        sf_dir,
+        tag="imgadmit",
+        limit=SYNTH_DOC_LIMIT,
+        cls=DHASH_CLASS,
+        build_index=build_index,
+        kept=kept,
+        rejected_col="rejected_near_dup",
     )
-    ckpt, name = _scratch_ckpt("imgadmit")
-    staging = f"{Path(ckpt).parent}/admitted"
-    try:
-        reader = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        def admit(batch_df: DataFrame, batch_id: int) -> None:
-            hashes = extract_dhash(synth_dhash_media(batch_df))
-            cand = bands(hashes).join(
-                idx_bands,
-                (F.col("band") == F.col("iband"))
-                & (F.col("val") == F.col("ival")),
-            )
-            hamming = (
-                F.bit_count(F.col("h_lo").bitwiseXOR(F.col("i_lo")))
-                + F.bit_count(F.col("h_hi").bitwiseXOR(F.col("i_hi")))
-            )
-            rejected = (
-                cand.filter(hamming <= DHASH_T)
-                .select("doc_id")
-                .distinct()
-            )
-            (
-                hashes.join(rejected, "doc_id", "left_anti")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(f"{staging}/ingest_batch={batch_id}")
-            )
-
-        (
-            reader.writeStream.foreachBatch(admit)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        admitted = spark.read.parquet(staging)
-        out = admitted.agg(
-            F.countDistinct("doc_id").alias("n_admitted")
-        ).select(
-            F.lit(n_stream).cast("long").alias("n_stream"),
-            (F.lit(n_stream) - F.col("n_admitted"))
-            .cast("long")
-            .alias("rejected_near_dup"),
-            F.col("n_admitted").cast("long").alias("admitted"),
-        )
-        return _detach(out, name)
-    finally:
-        _cleanup(ckpt)
 
 
 def _audio_admission_oracle() -> str:
@@ -2363,89 +2311,19 @@ def stream_audio_fp_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_audio_fp_media,
     )
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < SYNTH_DOC_LIMIT
+    build_index, kept = _hamming_gate(
+        lambda d: extract_audio_fingerprint(synth_audio_fp_media(d)), AFP_T
     )
-
-    from mapreduce511_spark.multimodal import fingerprint_bands
-
-    def bands(hashes: DataFrame) -> DataFrame:
-        return fingerprint_bands(hashes, keep_hash=True)
-
-    def _standing():
-        base = tempfile.mkdtemp(prefix="mr511_audadmit_standing_")
-        s = f"{base}/src"
-        idx_hashes = extract_audio_fingerprint(
-            synth_audio_fp_media(
-                docs.filter(F.col("doc_id") % AFP_CLASS == 0)
-            )
-        )
-        ib = bands(idx_hashes).select(
-            F.col("band").alias("iband"),
-            F.col("val").alias("ival"),
-            F.col("h_lo").alias("i_lo"),
-            F.col("h_hi").alias("i_hi"),
-        ).localCheckpoint(eager=True)
-        arriving = docs.filter(F.col("doc_id") % AFP_CLASS != 0)
-        n = arriving.count()
-        arriving.repartition(4).write.mode("overwrite").parquet(s)
-        return s, ib, n
-
-    src, idx_bands, n_stream = _session_standing(
-        spark, sf_dir, "audadmit", _standing
+    return _media_admission(
+        spark,
+        sf_dir,
+        tag="audadmit",
+        limit=SYNTH_DOC_LIMIT,
+        cls=AFP_CLASS,
+        build_index=build_index,
+        kept=kept,
+        rejected_col="rejected_near_dup",
     )
-    ckpt, name = _scratch_ckpt("audadmit")
-    staging = f"{Path(ckpt).parent}/admitted"
-    try:
-        reader = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        def admit(batch_df: DataFrame, batch_id: int) -> None:
-            hashes = extract_audio_fingerprint(
-                synth_audio_fp_media(batch_df)
-            )
-            cand = bands(hashes).join(
-                idx_bands,
-                (F.col("band") == F.col("iband"))
-                & (F.col("val") == F.col("ival")),
-            )
-            hamming = (
-                F.bit_count(F.col("h_lo").bitwiseXOR(F.col("i_lo")))
-                + F.bit_count(F.col("h_hi").bitwiseXOR(F.col("i_hi")))
-            )
-            rejected = (
-                cand.filter(hamming <= AFP_T).select("doc_id").distinct()
-            )
-            (
-                hashes.join(rejected, "doc_id", "left_anti")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(f"{staging}/ingest_batch={batch_id}")
-            )
-
-        (
-            reader.writeStream.foreachBatch(admit)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        admitted = spark.read.parquet(staging)
-        out = admitted.agg(
-            F.countDistinct("doc_id").alias("n_admitted")
-        ).select(
-            F.lit(n_stream).cast("long").alias("n_stream"),
-            (F.lit(n_stream) - F.col("n_admitted"))
-            .cast("long")
-            .alias("rejected_near_dup"),
-            F.col("n_admitted").cast("long").alias("admitted"),
-        )
-        return _detach(out, name)
-    finally:
-        _cleanup(ckpt)
 
 
 def _video_admission_oracle() -> str:
@@ -2554,10 +2432,6 @@ def stream_video_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_video_media,
     )
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < VID_DOC_LIMIT
-    )
-
     def sig(d: DataFrame) -> DataFrame:
         # frame identity = the full (h_lo, h_hi) pair (r10, r9
         # ADVICE: the old h_lo*1000003 + h_hi packing collides)
@@ -2567,72 +2441,34 @@ def stream_video_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    def _standing():
-        base = tempfile.mkdtemp(prefix="mr511_vidadmit_standing_")
-        s = f"{base}/src"
-        i = (
-            sig(docs.filter(F.col("doc_id") % VID_CLASS == 0))
-            .select("h_lo", "h_hi")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        arriving = docs.filter(F.col("doc_id") % VID_CLASS != 0)
-        n = arriving.count()
-        arriving.repartition(4).write.mode("overwrite").parquet(s)
-        return s, i, n
+    def build_index(d: DataFrame) -> DataFrame:
+        return sig(d).select("h_lo", "h_hi").distinct()
 
-    src, idx, n_stream = _session_standing(
-        spark, sf_dir, "vidadmit", _standing
+    def kept(batch_df: DataFrame, idx: DataFrame) -> DataFrame:
+        s = sig(batch_df).localCheckpoint(eager=True)
+        sizes = s.groupBy("doc_id").agg(F.count("*").alias("n"))
+        hits = (
+            s.join(idx, ["h_lo", "h_hi"])
+            .groupBy("doc_id")
+            .agg(F.count("*").alias("n_common"))
+        )
+        rejected = (
+            sizes.join(hits, "doc_id", "left")
+            .filter(
+                F.lit(2) * F.coalesce(F.col("n_common"), F.lit(0))
+                >= F.col("n")
+            )
+            .select("doc_id")
+        )
+        return s.join(rejected, "doc_id", "left_anti")
+
+    return _media_admission(
+        spark,
+        sf_dir,
+        tag="vidadmit",
+        limit=VID_DOC_LIMIT,
+        cls=VID_CLASS,
+        build_index=build_index,
+        kept=kept,
+        rejected_col="rejected_known_footage",
     )
-    ckpt, name = _scratch_ckpt("vidadmit")
-    staging = f"{Path(ckpt).parent}/admitted"
-    try:
-        reader = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        def admit(batch_df: DataFrame, batch_id: int) -> None:
-            s = sig(batch_df).localCheckpoint(eager=True)
-            sizes = s.groupBy("doc_id").agg(F.count("*").alias("n"))
-            hits = (
-                s.join(idx, ["h_lo", "h_hi"])
-                .groupBy("doc_id")
-                .agg(F.count("*").alias("n_common"))
-            )
-            rejected = (
-                sizes.join(hits, "doc_id", "left")
-                .filter(
-                    F.lit(2) * F.coalesce(F.col("n_common"), F.lit(0))
-                    >= F.col("n")
-                )
-                .select("doc_id")
-            )
-            (
-                s.join(rejected, "doc_id", "left_anti")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(f"{staging}/ingest_batch={batch_id}")
-            )
-
-        (
-            reader.writeStream.foreachBatch(admit)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        admitted = spark.read.parquet(staging)
-        out = admitted.agg(
-            F.countDistinct("doc_id").alias("n_admitted")
-        ).select(
-            F.lit(n_stream).cast("long").alias("n_stream"),
-            (F.lit(n_stream) - F.col("n_admitted"))
-            .cast("long")
-            .alias("rejected_known_footage"),
-            F.col("n_admitted").cast("long").alias("admitted"),
-        )
-        return _detach(out, name)
-    finally:
-        _cleanup(ckpt)

@@ -323,3 +323,52 @@ def test_bench_derived_steadies_are_min_of_3():
             and isinstance(v.func, ast.Name)
             and v.func.id == "_min3"
         ), f"{key} is not a _min3 measurement"
+
+
+def test_mkdtemp_only_in_the_two_dir_owners():
+    """Temp dirs have two owners: the per-run
+    ``streaming_queries._scratch_run`` (removed when the run ends) and
+    the process-lifetime ``memo.owned_tmpdir`` (removed at exit). A
+    ``mkdtemp`` anywhere else in the package is a dir nobody removes."""
+    import ast
+    from pathlib import Path
+
+    from tests.conftest import REPO
+
+    found = set()
+
+    class Finder(ast.NodeVisitor):
+        def __init__(self, rel):
+            self.rel, self.stack = rel, []
+
+        def visit_FunctionDef(self, node):
+            self.stack.append(node.name)
+            self.generic_visit(node)
+            self.stack.pop()
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def _hit(self):
+            found.add((self.rel, self.stack[-1] if self.stack else None))
+
+        def visit_Attribute(self, node):
+            if node.attr == "mkdtemp":
+                self._hit()
+            self.generic_visit(node)
+
+        def visit_Name(self, node):
+            if node.id == "mkdtemp":
+                self._hit()
+
+        def visit_ImportFrom(self, node):
+            if any(a.name == "mkdtemp" for a in node.names):
+                self._hit()
+
+    pkg = Path(REPO) / "mapreduce511_spark"
+    for f in sorted(pkg.rglob("*.py")):
+        rel = f.relative_to(REPO).as_posix()
+        Finder(rel).visit(ast.parse(f.read_text()))
+    assert found == {
+        ("mapreduce511_spark/memo.py", "owned_tmpdir"),
+        ("mapreduce511_spark/queries/streaming_queries.py", "_scratch_run"),
+    }

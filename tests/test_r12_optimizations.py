@@ -6,6 +6,8 @@ WHAT: these tests pin the equivalence plus the memo semantics.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -106,14 +108,15 @@ def test_unrolled_dot_matches_fold(spark):
 
 def test_session_standing_memo_semantics(spark):
     """_session_standing calls the builder once per (session, sf_dir,
-    tag), returns the memoized value on re-entry, and keys tags
-    independently."""
+    tag) with a fresh src path, returns the memoized value on re-entry,
+    and keys tags independently."""
     from mapreduce511_spark.queries import streaming_queries as sq
 
     calls = {"a": 0, "b": 0}
 
     def mk(tag):
-        def build():
+        def build(src):
+            assert src.endswith("/src") and not os.path.exists(src)
             calls[tag] += 1
             return ("payload", tag)
 
