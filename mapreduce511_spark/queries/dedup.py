@@ -34,6 +34,11 @@ from mapreduce511_spark.operators.dedup import (
     verify_jaccard,
 )
 from mapreduce511_spark.queries import register
+from mapreduce511_spark.queries.oracle_sql import (
+    _SQL_JACCARD,
+    _SQL_SHINGLES,
+    _SQL_TOKENS,
+)
 from mapreduce511_spark.sources.tables import load_table, spread_scan
 
 _JACCARD_T = 0.5
@@ -42,25 +47,9 @@ _JACCARD_T = 0.5
 
 _PERM_VALUES = ", ".join(f"({i}, {a}, {b})" for i, (a, b) in enumerate(PERMS))
 
-_SQL_SHINGLES = """
-    toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(text, '\\s+'), t -> t <> '') AS tokens
-        FROM documents
-    ), pos AS (
-        SELECT doc_id, unnest(tokens) AS w, unnest(range(len(tokens))) AS p
-        FROM toks
-    ), shingles AS (
-        SELECT DISTINCT a.doc_id, a.w || ' ' || b.w || ' ' || c.w AS sh
-        FROM pos a
-        JOIN pos b ON a.doc_id = b.doc_id AND b.p = a.p + 1
-        JOIN pos c ON a.doc_id = c.doc_id AND c.p = a.p + 2
-    )
-"""
-
 _SQL_MINHASH_LONG = f"""
-    WITH {_SQL_SHINGLES},
-    hashed AS (
+    WITH {_SQL_SHINGLES}
+    , hashed AS (
         SELECT doc_id,
                CAST(('0x' || substr(md5(sh), 1, 15)) AS BIGINT) % {MINHASH_P} AS h
         FROM shingles
@@ -93,7 +82,7 @@ _SQL_BANDS = f"""
 _SQL_SIMHASH = f"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\\s+'), t -> t <> '') AS tokens
+               {_SQL_TOKENS} AS tokens
         FROM documents
     ), wc AS (
         SELECT doc_id, w, count(*) AS cnt
@@ -159,9 +148,6 @@ _SQL_VERIFY = f"""
         GROUP BY c.doc_a, c.doc_b
     )
 """
-
-_SQL_JACCARD = "i.both * 1.0 / (sa.sz + sb.sz - i.both)"
-
 
 @register(
     "minhash_near_dup",

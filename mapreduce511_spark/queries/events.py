@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from mapreduce511_spark.queries import norm0, register
+from mapreduce511_spark.queries.oracle_sql import TUMBLING_HOUR_ORACLE
 from mapreduce511_spark.sources.tables import load_table
 
 SESSION_GAP_SECONDS = 1800
@@ -23,14 +24,7 @@ SESSION_GAP_SECONDS = 1800
 
 @register(
     "tumbling_event_counts",
-    oracle="""
-    SELECT date_trunc('hour', ts) AS window_start,
-           event_type,
-           count(*)               AS n_events,
-           round(sum(value), 2)   AS total_value
-    FROM events
-    GROUP BY window_start, event_type
-    """,
+    oracle=TUMBLING_HOUR_ORACLE,
 )
 def tumbling_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour tumbling-window counts per event type — the batch twin of

@@ -13,23 +13,11 @@ from pyspark.sql import functions as F
 
 from mapreduce511_spark.multimodal import (
     AFP_CLASS,
-    AFP_MIX,
     AFP_T,
-    AFP_WIN_LEN,
-    AFP_WINDOWS,
     DHASH_CLASS,
-    DHASH_MIX,
     DHASH_T,
     VID_CLASS,
     VID_DOC_LIMIT,
-    VID_FOREIGN,
-    VID_FRAMES,
-    VID_KEY_STRIDE,
-    JPEG_GRID_HB_MOD,
-    JPEG_GRID_WB_MOD,
-    JPEG_PX_A,
-    JPEG_PX_BX,
-    JPEG_PX_BY,
     SYNTH_DOC_LIMIT,
     TIFF_H_BASE,
     TIFF_H_MOD,
@@ -43,6 +31,15 @@ from mapreduce511_spark.multimodal import (
     sample_frames,
 )
 from mapreduce511_spark.queries import register
+from mapreduce511_spark.queries.oracle_sql import (
+    _SQL_TOKENS,
+    IMAGE_PX_STATS,
+    JPEG_BLOCK_PX,
+    PNG_STATS_ORACLE,
+    afp_ctes,
+    dhash_ctes,
+    video_ctes,
+)
 from mapreduce511_spark.sources.tables import load_table, spread_scan
 
 
@@ -157,27 +154,7 @@ def multimodal_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_png_stats",
-    oracle=f"""
-    WITH img AS (
-        SELECT doc_id,
-               CAST(6 + doc_id % 11 AS INT) AS w,
-               CAST(6 + (doc_id * 5) % 7 AS INT) AS h
-        FROM documents WHERE doc_id < {SYNTH_DOC_LIMIT}
-    ), idx AS (
-        SELECT doc_id, w, h,
-               unnest(generate_series(0, CAST(w * h * 3 - 1 AS BIGINT))) AS i
-        FROM img
-    ), px AS (
-        SELECT doc_id, w, h, (doc_id * 17 + i * 11) % 256 AS v FROM idx
-    )
-    SELECT doc_id, 'image' AS kind, w AS width, h AS height,
-           COUNT(*) AS n_vals,
-           CAST(SUM(v) AS BIGINT) AS sum_val,
-           CAST(MIN(v) AS BIGINT) AS min_val,
-           CAST(MAX(v) AS BIGINT) AS max_val,
-           CAST(SUM(v // 16 + 1) AS BIGINT) AS hist_sum
-    FROM px GROUP BY doc_id, w, h
-    """,
+    oracle=PNG_STATS_ORACLE,
 )
 def multimodal_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PNG codec round-trip under the oracle gate: synthesize real
@@ -206,29 +183,13 @@ def multimodal_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_decoded_features(synth_png_media(docs))
 
 
-@register(
-    "multimodal_jpeg_stats",
-    # f-string shares ONE definition of the fixture geometry/pixel
-    # formula with synth_jpeg_media (r5 ADVICE — a hardcoded copy here
-    # would desynchronize silently on any fixture change).
-    oracle=f"""
-    WITH img AS (
-        SELECT doc_id,
-               CAST(1 + doc_id % {JPEG_GRID_WB_MOD} AS INT) AS wb,
-               CAST(1 + (doc_id * 5) % {JPEG_GRID_HB_MOD} AS INT) AS hb
-        FROM documents WHERE doc_id < {SYNTH_DOC_LIMIT}
-    ), blk AS (
-        SELECT doc_id, wb, hb,
-               unnest(generate_series(0, CAST(wb * hb - 1 AS BIGINT))) AS bi
-        FROM img
-    ), px AS (
-        SELECT doc_id, wb, hb,
-               least(255, greatest(0,
-                 2 * CAST(floor(((doc_id * {JPEG_PX_A} + (bi % wb) * {JPEG_PX_BX}
-                                  + (bi // wb) * {JPEG_PX_BY}) % 256 - 128) / 2.0
-                                + 0.5) AS BIGINT) + 128)) AS p
-        FROM blk
-    )
+# The constant-block JPEG twins: Huffman and arithmetic decode 8x8
+# blocks of 64 values; the 4:2:0 baseline and progressive twins decode
+# 16x16 gray MCUs of 3 x 256 values. Within a pair only the entropy
+# layer differs, so each pair shares one oracle over the
+# oracle_sql.JPEG_BLOCK_PX closed form.
+_JPEG_STATS_ORACLE = f"""
+    WITH {JPEG_BLOCK_PX}
     SELECT doc_id, 'image' AS kind,
            CAST(8 * wb AS INT) AS width, CAST(8 * hb AS INT) AS height,
            64 * COUNT(*) AS n_vals,
@@ -237,7 +198,23 @@ def multimodal_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(MAX(p) AS BIGINT) AS max_val,
            CAST(64 * SUM(p // 16 + 1) AS BIGINT) AS hist_sum
     FROM px GROUP BY doc_id, wb, hb
-    """,
+    """
+_JPEG_MCU_STATS_ORACLE = f"""
+    WITH {JPEG_BLOCK_PX}
+    SELECT doc_id, 'image' AS kind,
+           CAST(16 * wb AS INT) AS width, CAST(16 * hb AS INT) AS height,
+           3 * 256 * COUNT(*) AS n_vals,
+           CAST(3 * 256 * SUM(p) AS BIGINT) AS sum_val,
+           CAST(MIN(p) AS BIGINT) AS min_val,
+           CAST(MAX(p) AS BIGINT) AS max_val,
+           CAST(3 * 256 * SUM(p // 16 + 1) AS BIGINT) AS hist_sum
+    FROM px GROUP BY doc_id, wb, hb
+    """
+
+
+@register(
+    "multimodal_jpeg_stats",
+    oracle=_JPEG_STATS_ORACLE,
 )
 def multimodal_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Baseline JPEG codec under the EXACT oracle gate (r4 VERDICT
@@ -272,33 +249,7 @@ def multimodal_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "multimodal_jpeg_arith_stats",
     # identical fixture geometry/closed form as the Huffman twin —
     # only the entropy layer differs, which is exactly the point
-    oracle=f"""
-    WITH img AS (
-        SELECT doc_id,
-               CAST(1 + doc_id % {JPEG_GRID_WB_MOD} AS INT) AS wb,
-               CAST(1 + (doc_id * 5) % {JPEG_GRID_HB_MOD} AS INT) AS hb
-        FROM documents WHERE doc_id < {SYNTH_DOC_LIMIT}
-    ), blk AS (
-        SELECT doc_id, wb, hb,
-               unnest(generate_series(0, CAST(wb * hb - 1 AS BIGINT))) AS bi
-        FROM img
-    ), px AS (
-        SELECT doc_id, wb, hb,
-               least(255, greatest(0,
-                 2 * CAST(floor(((doc_id * {JPEG_PX_A} + (bi % wb) * {JPEG_PX_BX}
-                                  + (bi // wb) * {JPEG_PX_BY}) % 256 - 128) / 2.0
-                                + 0.5) AS BIGINT) + 128)) AS p
-        FROM blk
-    )
-    SELECT doc_id, 'image' AS kind,
-           CAST(8 * wb AS INT) AS width, CAST(8 * hb AS INT) AS height,
-           64 * COUNT(*) AS n_vals,
-           CAST(64 * SUM(p) AS BIGINT) AS sum_val,
-           CAST(MIN(p) AS BIGINT) AS min_val,
-           CAST(MAX(p) AS BIGINT) AS max_val,
-           CAST(64 * SUM(p // 16 + 1) AS BIGINT) AS hist_sum
-    FROM px GROUP BY doc_id, wb, hb
-    """,
+    oracle=_JPEG_STATS_ORACLE,
 )
 def multimodal_jpeg_arith_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ARITHMETIC-CODED JPEG (SOF9) under the exact oracle gate (r8,
@@ -338,33 +289,7 @@ def multimodal_jpeg_arith_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Shares the 4:4:4 twin's grid/pixel constants (one definition in
     # multimodal/__init__.py); each MCU is 16x16 px and constant gray,
     # so every RGB channel decodes to the same DC closed form p.
-    oracle=f"""
-    WITH img AS (
-        SELECT doc_id,
-               CAST(1 + doc_id % {JPEG_GRID_WB_MOD} AS INT) AS wb,
-               CAST(1 + (doc_id * 5) % {JPEG_GRID_HB_MOD} AS INT) AS hb
-        FROM documents WHERE doc_id < {SYNTH_DOC_LIMIT}
-    ), blk AS (
-        SELECT doc_id, wb, hb,
-               unnest(generate_series(0, CAST(wb * hb - 1 AS BIGINT))) AS bi
-        FROM img
-    ), px AS (
-        SELECT doc_id, wb, hb,
-               least(255, greatest(0,
-                 2 * CAST(floor(((doc_id * {JPEG_PX_A} + (bi % wb) * {JPEG_PX_BX}
-                                  + (bi // wb) * {JPEG_PX_BY}) % 256 - 128) / 2.0
-                                + 0.5) AS BIGINT) + 128)) AS p
-        FROM blk
-    )
-    SELECT doc_id, 'image' AS kind,
-           CAST(16 * wb AS INT) AS width, CAST(16 * hb AS INT) AS height,
-           3 * 256 * COUNT(*) AS n_vals,
-           CAST(3 * 256 * SUM(p) AS BIGINT) AS sum_val,
-           CAST(MIN(p) AS BIGINT) AS min_val,
-           CAST(MAX(p) AS BIGINT) AS max_val,
-           CAST(3 * 256 * SUM(p // 16 + 1) AS BIGINT) AS hist_sum
-    FROM px GROUP BY doc_id, wb, hb
-    """,
+    oracle=_JPEG_MCU_STATS_ORACLE,
 )
 def multimodal_jpeg420_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """4:2:0 CHROMA-SUBSAMPLED JPEG under the exact oracle gate (r5
@@ -402,33 +327,7 @@ def multimodal_jpeg420_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Same fixture constants and closed form as the 4:2:0 baseline
     # twin — progressive changes only the entropy layer, and the full
     # scan script reconstructs every coefficient exactly.
-    oracle=f"""
-    WITH img AS (
-        SELECT doc_id,
-               CAST(1 + doc_id % {JPEG_GRID_WB_MOD} AS INT) AS wb,
-               CAST(1 + (doc_id * 5) % {JPEG_GRID_HB_MOD} AS INT) AS hb
-        FROM documents WHERE doc_id < {SYNTH_DOC_LIMIT}
-    ), blk AS (
-        SELECT doc_id, wb, hb,
-               unnest(generate_series(0, CAST(wb * hb - 1 AS BIGINT))) AS bi
-        FROM img
-    ), px AS (
-        SELECT doc_id, wb, hb,
-               least(255, greatest(0,
-                 2 * CAST(floor(((doc_id * {JPEG_PX_A} + (bi % wb) * {JPEG_PX_BX}
-                                  + (bi // wb) * {JPEG_PX_BY}) % 256 - 128) / 2.0
-                                + 0.5) AS BIGINT) + 128)) AS p
-        FROM blk
-    )
-    SELECT doc_id, 'image' AS kind,
-           CAST(16 * wb AS INT) AS width, CAST(16 * hb AS INT) AS height,
-           3 * 256 * COUNT(*) AS n_vals,
-           CAST(3 * 256 * SUM(p) AS BIGINT) AS sum_val,
-           CAST(MIN(p) AS BIGINT) AS min_val,
-           CAST(MAX(p) AS BIGINT) AS max_val,
-           CAST(3 * 256 * SUM(p // 16 + 1) AS BIGINT) AS hist_sum
-    FROM px GROUP BY doc_id, wb, hb
-    """,
+    oracle=_JPEG_MCU_STATS_ORACLE,
 )
 def multimodal_jpeg_progressive_stats(
     spark: SparkSession, sf_dir: str
@@ -480,14 +379,11 @@ from mapreduce511_spark.multimodal import (  # noqa: E402
 )
 
 
-@register(
-    "multimodal_flac_stats",
-    # FLAC is LOSSLESS: the oracle's closed form IS the decoded output
-    # bit-for-bit — no quantization round-trip argument needed (the
-    # JPEG twins' DC formula). Constants are the single definition in
-    # multimodal/__init__.py (r5 ADVICE discipline).
-    oracle=f"""
-    WITH a AS (
+# FLAC fixture sample index a -> s(doc_id, n, i) and the per-doc
+# census over px(doc_id, n, v): the mono and stereo oracles differ only
+# in px
+_FLAC_SAMPLES = f"""
+    a AS (
         SELECT doc_id,
                {FLAC_N_BASE} + (doc_id % {FLAC_N_MOD}) * {FLAC_N_STEP} AS n
         FROM documents WHERE doc_id < {SYNTH_DOC_LIMIT}
@@ -495,11 +391,8 @@ from mapreduce511_spark.multimodal import (  # noqa: E402
         SELECT doc_id, n,
                unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS i
         FROM a
-    ), px AS (
-        SELECT doc_id, n,
-               (doc_id * {FLAC_PX_A} + i * {FLAC_PX_B}) % 4096 - 2048 AS v
-        FROM s
-    )
+    )"""
+_FLAC_STATS = """
     SELECT doc_id, 'audio' AS kind,
            CAST(0 AS INT) AS width, CAST(0 AS INT) AS height,
            count(*) AS n_vals,
@@ -508,7 +401,22 @@ from mapreduce511_spark.multimodal import (  # noqa: E402
            CAST(max(v) AS BIGINT) AS max_val,
            CAST(sum((v + 2048) // 256 + 1) AS BIGINT) AS hist_sum
     FROM px GROUP BY doc_id, n
-    """,
+    """
+
+
+@register(
+    "multimodal_flac_stats",
+    # FLAC is LOSSLESS: the oracle's closed form IS the decoded output
+    # bit-for-bit — no quantization round-trip argument needed (the
+    # JPEG twins' DC formula). Constants are the single definition in
+    # multimodal/__init__.py (r5 ADVICE discipline).
+    oracle=f"""
+    WITH {_FLAC_SAMPLES}, px AS (
+        SELECT doc_id, n,
+               (doc_id * {FLAC_PX_A} + i * {FLAC_PX_B}) % 4096 - 2048 AS v
+        FROM s
+    )
+    {_FLAC_STATS}""",
 )
 def multimodal_flac_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native FLAC decode under the EXACT oracle gate — the first
@@ -545,15 +453,7 @@ def multimodal_flac_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # STEREO twin: both channel closed forms unioned; lossless, so
     # the oracle equals the interleaved decoded samples bit-for-bit.
     oracle=f"""
-    WITH a AS (
-        SELECT doc_id,
-               {FLAC_N_BASE} + (doc_id % {FLAC_N_MOD}) * {FLAC_N_STEP} AS n
-        FROM documents WHERE doc_id < {SYNTH_DOC_LIMIT}
-    ), s AS (
-        SELECT doc_id, n,
-               unnest(generate_series(0, CAST(n - 1 AS BIGINT))) AS i
-        FROM a
-    ), px AS (
+    WITH {_FLAC_SAMPLES}, px AS (
         SELECT doc_id, n,
                (doc_id * {FLAC_PX_A} + i * {FLAC_PX_B}) % 4096 - 2048 AS v
         FROM s
@@ -562,15 +462,7 @@ def multimodal_flac_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                (doc_id * {FLAC_PX_A2} + i * {FLAC_PX_B2}) % 4096 - 2048 AS v
         FROM s
     )
-    SELECT doc_id, 'audio' AS kind,
-           CAST(0 AS INT) AS width, CAST(0 AS INT) AS height,
-           count(*) AS n_vals,
-           CAST(sum(v) AS BIGINT) AS sum_val,
-           CAST(min(v) AS BIGINT) AS min_val,
-           CAST(max(v) AS BIGINT) AS max_val,
-           CAST(sum((v + 2048) // 256 + 1) AS BIGINT) AS hist_sum
-    FROM px GROUP BY doc_id, n
-    """,
+    {_FLAC_STATS}""",
 )
 def multimodal_flac_stereo_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STEREO FLAC decode under the exact oracle gate: the fixture
@@ -871,57 +763,32 @@ def gif_animation_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "image_dhash_near_dup",
-    # f-string shares the ONE fixture definition (DHASH_* constants +
-    # cell closed form) with synth_dhash_media, per the JPEG precedent
-    oracle=f"""
-    WITH img AS (
-        SELECT doc_id, doc_id // {DHASH_CLASS} AS base,
-               doc_id % {DHASH_CLASS} AS v
-        FROM documents WHERE doc_id < {SYNTH_DOC_LIMIT}
-    ), grid AS (
-        SELECT doc_id, base, v, cx.g AS cx, cy.g AS cy
-        FROM img,
-             (SELECT unnest(generate_series(0, 8)) AS g) cx,
-             (SELECT unnest(generate_series(0, 7)) AS g) cy
-    ), cells AS (
-        SELECT doc_id, cx, cy,
-               CASE WHEN v > 0 AND cx = v AND cy < v
-                    THEN (((base + 1) * (cx + 9 * cy + 1) * {DHASH_MIX}
-                           + base * (cx * cx + 3 * cy * cy)) % 256 + 128)
-                         % 256
-                    ELSE ((base + 1) * (cx + 9 * cy + 1) * {DHASH_MIX}
-                          + base * (cx * cx + 3 * cy * cy)) % 256
-               END AS c
-        FROM grid
-    ), bits AS (
-        SELECT a.doc_id, a.cy, a.cx,
-               CASE WHEN b.c > a.c THEN 1 ELSE 0 END AS bit
-        FROM cells a JOIN cells b
-          ON a.doc_id = b.doc_id AND a.cy = b.cy AND b.cx = a.cx + 1
-        WHERE a.cx < 8
-    ), h AS (
-        SELECT doc_id,
-               CAST(sum(CASE WHEN cy < 4
-                    THEN bit * (CAST(1 AS BIGINT) << (cy * 8 + cx))
-                    ELSE 0 END) AS BIGINT) AS h_lo,
-               CAST(sum(CASE WHEN cy >= 4
-                    THEN bit * (CAST(1 AS BIGINT) << ((cy - 4) * 8 + cx))
-                    ELSE 0 END) AS BIGINT) AS h_hi
-        FROM bits GROUP BY doc_id
-    ), pairs AS (
+def _hamming_pairs_oracle(hashes: str, cls: int, t: int) -> str:
+    """Oracle of the banded fingerprint near-dup queries: every pair
+    of the hash relation ``h`` (built by the ``hashes`` CTE chain)
+    within Hamming distance ``t``, flagged by planted variant class
+    of ``cls`` docs."""
+    return f"""
+    WITH {hashes}, pairs AS (
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                CAST(bit_count(xor(a.h_lo, b.h_lo))
                     + bit_count(xor(a.h_hi, b.h_hi)) AS BIGINT) AS hamming,
-               CASE WHEN a.doc_id // {DHASH_CLASS}
-                         = b.doc_id // {DHASH_CLASS}
+               CASE WHEN a.doc_id // {cls}
+                         = b.doc_id // {cls}
                     THEN 1 ELSE 0 END AS same_class
         FROM h a JOIN h b ON a.doc_id < b.doc_id
     )
     SELECT doc_a, doc_b, hamming, same_class
-    FROM pairs WHERE hamming <= {DHASH_T}
-    """,
+    FROM pairs WHERE hamming <= {t}
+    """
+
+
+@register(
+    "image_dhash_near_dup",
+    # the cell closed form is oracle_sql.dhash_ctes, shared with
+    # fingerprint_hamming_topk, stream_image_dhash_admission and
+    # cross_modal_dup_census
+    oracle=_hamming_pairs_oracle(dhash_ctes(), DHASH_CLASS, DHASH_T),
 )
 def image_dhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PERCEPTUAL-HASH IMAGE NEAR-DUP — the image-side analog of the
@@ -1013,27 +880,7 @@ def image_dhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "multimodal_png_deflate_stats",
     # same fixture closed form as multimodal_png_stats — only the
     # IDAT compressor differs, which is exactly the point
-    oracle=f"""
-    WITH img AS (
-        SELECT doc_id,
-               CAST(6 + doc_id % 11 AS INT) AS w,
-               CAST(6 + (doc_id * 5) % 7 AS INT) AS h
-        FROM documents WHERE doc_id < {SYNTH_DOC_LIMIT}
-    ), idx AS (
-        SELECT doc_id, w, h,
-               unnest(generate_series(0, CAST(w * h * 3 - 1 AS BIGINT))) AS i
-        FROM img
-    ), px AS (
-        SELECT doc_id, w, h, (doc_id * 17 + i * 11) % 256 AS v FROM idx
-    )
-    SELECT doc_id, 'image' AS kind, w AS width, h AS height,
-           COUNT(*) AS n_vals,
-           CAST(SUM(v) AS BIGINT) AS sum_val,
-           CAST(MIN(v) AS BIGINT) AS min_val,
-           CAST(MAX(v) AS BIGINT) AS max_val,
-           CAST(SUM(v // 16 + 1) AS BIGINT) AS hist_sum
-    FROM px GROUP BY doc_id, w, h
-    """,
+    oracle=PNG_STATS_ORACLE,
 )
 def multimodal_png_deflate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NATIVE DEFLATE (RFC 1951) under the exact oracle gate: the PNG
@@ -1075,55 +922,9 @@ def multimodal_png_deflate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "audio_fingerprint_near_dup",
-    # f-string shares the ONE fixture definition (AFP_* constants +
-    # the window-energy closed form) with synth_audio_fp_media
-    oracle=f"""
-    WITH aud AS (
-        SELECT doc_id, doc_id // {AFP_CLASS} AS base,
-               doc_id % {AFP_CLASS} AS v
-        FROM documents WHERE doc_id < {SYNTH_DOC_LIMIT}
-    ), win AS (
-        SELECT doc_id, base, v, ws.g AS w
-        FROM aud, (SELECT unnest(generate_series(0, {AFP_WINDOWS - 1})) AS g) ws
-    ), amp AS (
-        SELECT doc_id, w,
-               CASE WHEN (v = 2 AND w IN (2, 19))
-                      OR (v = 3 AND w IN (3, 20, 37))
-                    THEN (((base + 1) * (w + 1) * {AFP_MIX}
-                           + base * w * w) % 256 + 128) % 256
-                    ELSE ((base + 1) * (w + 1) * {AFP_MIX}
-                          + base * w * w) % 256
-               END
-               * (CASE v WHEN 1 THEN 3 WHEN 3 THEN 2 ELSE 1 END)
-               * {AFP_WIN_LEN - 1} AS e
-        FROM win
-    ), bits AS (
-        SELECT x.doc_id, x.w AS b,
-               CASE WHEN y.e > x.e THEN 1 ELSE 0 END AS bit
-        FROM amp x JOIN amp y
-          ON x.doc_id = y.doc_id AND y.w = x.w + 1
-        WHERE x.w < 64
-    ), h AS (
-        SELECT doc_id,
-               CAST(sum(CASE WHEN b < 32
-                    THEN bit * (CAST(1 AS BIGINT) << b)
-                    ELSE 0 END) AS BIGINT) AS h_lo,
-               CAST(sum(CASE WHEN b >= 32
-                    THEN bit * (CAST(1 AS BIGINT) << (b - 32))
-                    ELSE 0 END) AS BIGINT) AS h_hi
-        FROM bits GROUP BY doc_id
-    ), pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               CAST(bit_count(xor(a.h_lo, b.h_lo))
-                    + bit_count(xor(a.h_hi, b.h_hi)) AS BIGINT) AS hamming,
-               CASE WHEN a.doc_id // {AFP_CLASS}
-                         = b.doc_id // {AFP_CLASS}
-                    THEN 1 ELSE 0 END AS same_class
-        FROM h a JOIN h b ON a.doc_id < b.doc_id
-    )
-    SELECT doc_a, doc_b, hamming, same_class
-    FROM pairs WHERE hamming <= {AFP_T}
-    """,
+    # the window-energy closed form is oracle_sql.afp_ctes, shared with
+    # stream_audio_fp_admission and cross_modal_dup_census
+    oracle=_hamming_pairs_oracle(afp_ctes(), AFP_CLASS, AFP_T),
 )
 def audio_fingerprint_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PERCEPTUAL AUDIO NEAR-DUP — what a multimodal pipeline runs to
@@ -1217,49 +1018,11 @@ def audio_fingerprint_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "video_dhash_near_dup",
-    # the frame-hash closed form is the dhash oracle keyed by the
-    # frame KEY; the variant plan (re-encode / trim / trim+splice)
-    # lives in the fk CTE, mirroring _vid_frame_keys
+    # the frame-hash closed form is oracle_sql.video_ctes (the dHash
+    # cell form keyed by frame KEY; its fk CTE is the variant plan of
+    # _vid_frame_keys), shared with stream_video_admission
     oracle=f"""
-    WITH vid AS (
-        SELECT doc_id, doc_id // {VID_CLASS} AS base,
-               doc_id % {VID_CLASS} AS v
-        FROM documents WHERE doc_id < {VID_DOC_LIMIT}
-    ), fk AS (
-        SELECT doc_id, base * {VID_KEY_STRIDE} + os.o AS key
-        FROM vid, (SELECT unnest(generate_series(0, {VID_FRAMES - 1})) AS o) os
-        WHERE v IN (0, 1) OR os.o >= 1
-        UNION ALL
-        SELECT doc_id, base * {VID_KEY_STRIDE} + {VID_FOREIGN}
-        FROM vid WHERE v = 3
-    ), keys AS (
-        SELECT DISTINCT key FROM fk
-    ), grid AS (
-        SELECT key, cx.g AS cx, cy.g AS cy
-        FROM keys,
-             (SELECT unnest(generate_series(0, 8)) AS g) cx,
-             (SELECT unnest(generate_series(0, 7)) AS g) cy
-    ), cells AS (
-        SELECT key, cx, cy,
-               ((key + 1) * (cx + 9 * cy + 1) * {DHASH_MIX}
-                + key * (cx * cx + 3 * cy * cy)) % 256 AS c
-        FROM grid
-    ), bits AS (
-        SELECT a.key, a.cy, a.cx,
-               CASE WHEN b.c > a.c THEN 1 ELSE 0 END AS bit
-        FROM cells a JOIN cells b
-          ON a.key = b.key AND a.cy = b.cy AND b.cx = a.cx + 1
-        WHERE a.cx < 8
-    ), fh AS (
-        SELECT key,
-               CAST(sum(CASE WHEN cy < 4
-                    THEN bit * (CAST(1 AS BIGINT) << (cy * 8 + cx))
-                    ELSE 0 END) AS BIGINT) AS h_lo,
-               CAST(sum(CASE WHEN cy >= 4
-                    THEN bit * (CAST(1 AS BIGINT) << ((cy - 4) * 8 + cx))
-                    ELSE 0 END) AS BIGINT) AS h_hi
-        FROM bits GROUP BY key
-    ), sig AS (
+    WITH {video_ctes()}, sig AS (
         SELECT DISTINCT fk.doc_id, fh.h_lo, fh.h_hi
         FROM fk JOIN fh ON fk.key = fh.key
     ), sizes AS (
@@ -1377,41 +1140,7 @@ def video_dhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "fingerprint_hamming_topk",
     oracle=f"""
-    WITH img AS (
-        SELECT doc_id, doc_id // {DHASH_CLASS} AS base,
-               doc_id % {DHASH_CLASS} AS v
-        FROM documents WHERE doc_id < {SYNTH_DOC_LIMIT}
-    ), grid AS (
-        SELECT doc_id, base, v, cx.g AS cx, cy.g AS cy
-        FROM img,
-             (SELECT unnest(generate_series(0, 8)) AS g) cx,
-             (SELECT unnest(generate_series(0, 7)) AS g) cy
-    ), cells AS (
-        SELECT doc_id, cx, cy,
-               CASE WHEN v > 0 AND cx = v AND cy < v
-                    THEN (((base + 1) * (cx + 9 * cy + 1) * {DHASH_MIX}
-                           + base * (cx * cx + 3 * cy * cy)) % 256 + 128)
-                         % 256
-                    ELSE ((base + 1) * (cx + 9 * cy + 1) * {DHASH_MIX}
-                          + base * (cx * cx + 3 * cy * cy)) % 256
-               END AS c
-        FROM grid
-    ), bits AS (
-        SELECT a.doc_id, a.cy, a.cx,
-               CASE WHEN b.c > a.c THEN 1 ELSE 0 END AS bit
-        FROM cells a JOIN cells b
-          ON a.doc_id = b.doc_id AND a.cy = b.cy AND b.cx = a.cx + 1
-        WHERE a.cx < 8
-    ), h AS (
-        SELECT doc_id,
-               CAST(sum(CASE WHEN cy < 4
-                    THEN bit * (CAST(1 AS BIGINT) << (cy * 8 + cx))
-                    ELSE 0 END) AS BIGINT) AS h_lo,
-               CAST(sum(CASE WHEN cy >= 4
-                    THEN bit * (CAST(1 AS BIGINT) << ((cy - 4) * 8 + cx))
-                    ELSE 0 END) AS BIGINT) AS h_hi
-        FROM bits GROUP BY doc_id
-    ), probes AS (
+    WITH {dhash_ctes()}, probes AS (
         SELECT doc_id AS probe_id, h_lo AS p_lo, h_hi AS p_hi
         FROM h WHERE doc_id < 8
     ), scored AS (
@@ -1486,12 +1215,10 @@ def fingerprint_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Cross-modal dedup composition (r10) — one asset, four verdicts
 # ---------------------------------------------------------------------------
 
-_SQL_TOKENS = "list_filter(string_split_regex(text, '\\s+'), t -> t <> '')"
-
 # All three media fixtures share the class size (docs per planted
 # variant class), so "class representative" is one rule across
-# modalities: doc_id % VID_CLASS == 0. The token SQL must match
-# functions.text.tokenize.
+# modalities: doc_id % VID_CLASS == 0. The cross-modal census reads
+# the first VID_DOC_LIMIT docs of every modality.
 
 
 def _cross_modal_oracle() -> str:
@@ -1512,127 +1239,19 @@ def _cross_modal_oracle() -> str:
         JOIN t_sz sa ON sa.doc_id = c.da
         JOIN t_sz sb ON sb.doc_id = c.db
         WHERE 10 * c.c >= 7 * (sa.n + sb.n - c.c)
-    ), i_img AS (
-        SELECT doc_id, doc_id // {DHASH_CLASS} AS base,
-               doc_id % {DHASH_CLASS} AS v
-        FROM documents WHERE doc_id < {VID_DOC_LIMIT}
-    ), i_grid AS (
-        SELECT doc_id, base, v, cx.g AS cx, cy.g AS cy
-        FROM i_img,
-             (SELECT unnest(generate_series(0, 8)) AS g) cx,
-             (SELECT unnest(generate_series(0, 7)) AS g) cy
-    ), i_cells AS (
-        SELECT doc_id, cx, cy,
-               CASE WHEN v > 0 AND cx = v AND cy < v
-                    THEN (((base + 1) * (cx + 9 * cy + 1) * {DHASH_MIX}
-                           + base * (cx * cx + 3 * cy * cy)) % 256 + 128)
-                         % 256
-                    ELSE ((base + 1) * (cx + 9 * cy + 1) * {DHASH_MIX}
-                          + base * (cx * cx + 3 * cy * cy)) % 256
-               END AS c
-        FROM i_grid
-    ), i_bits AS (
-        SELECT a.doc_id, a.cy, a.cx,
-               CASE WHEN b.c > a.c THEN 1 ELSE 0 END AS bit
-        FROM i_cells a JOIN i_cells b
-          ON a.doc_id = b.doc_id AND a.cy = b.cy AND b.cx = a.cx + 1
-        WHERE a.cx < 8
-    ), i_h AS (
-        SELECT doc_id,
-               CAST(sum(CASE WHEN cy < 4
-                    THEN bit * (CAST(1 AS BIGINT) << (cy * 8 + cx))
-                    ELSE 0 END) AS BIGINT) AS h_lo,
-               CAST(sum(CASE WHEN cy >= 4
-                    THEN bit * (CAST(1 AS BIGINT) << ((cy - 4) * 8 + cx))
-                    ELSE 0 END) AS BIGINT) AS h_hi
-        FROM i_bits GROUP BY doc_id
-    ), i_flag AS (
+    ), {dhash_ctes("i_", VID_DOC_LIMIT)}, i_flag AS (
         SELECT DISTINCT s.doc_id
         FROM i_h s JOIN i_h i
           ON s.doc_id % {VID_CLASS} <> 0 AND i.doc_id % {VID_CLASS} = 0
          AND bit_count(xor(s.h_lo, i.h_lo))
              + bit_count(xor(s.h_hi, i.h_hi)) <= {DHASH_T}
-    ), a_aud AS (
-        SELECT doc_id, doc_id // {AFP_CLASS} AS base,
-               doc_id % {AFP_CLASS} AS v
-        FROM documents WHERE doc_id < {VID_DOC_LIMIT}
-    ), a_win AS (
-        SELECT doc_id, base, v, ws.g AS w
-        FROM a_aud,
-             (SELECT unnest(generate_series(0, {AFP_WINDOWS - 1})) AS g) ws
-    ), a_amp AS (
-        SELECT doc_id, w,
-               CASE WHEN (v = 2 AND w IN (2, 19))
-                      OR (v = 3 AND w IN (3, 20, 37))
-                    THEN (((base + 1) * (w + 1) * {AFP_MIX}
-                           + base * w * w) % 256 + 128) % 256
-                    ELSE ((base + 1) * (w + 1) * {AFP_MIX}
-                          + base * w * w) % 256
-               END
-               * (CASE v WHEN 1 THEN 3 WHEN 3 THEN 2 ELSE 1 END)
-               * {AFP_WIN_LEN - 1} AS e
-        FROM a_win
-    ), a_bits AS (
-        SELECT x.doc_id, x.w AS b,
-               CASE WHEN y.e > x.e THEN 1 ELSE 0 END AS bit
-        FROM a_amp x JOIN a_amp y
-          ON x.doc_id = y.doc_id AND y.w = x.w + 1
-        WHERE x.w < 64
-    ), a_h AS (
-        SELECT doc_id,
-               CAST(sum(CASE WHEN b < 32
-                    THEN bit * (CAST(1 AS BIGINT) << b)
-                    ELSE 0 END) AS BIGINT) AS h_lo,
-               CAST(sum(CASE WHEN b >= 32
-                    THEN bit * (CAST(1 AS BIGINT) << (b - 32))
-                    ELSE 0 END) AS BIGINT) AS h_hi
-        FROM a_bits GROUP BY doc_id
-    ), a_flag AS (
+    ), {afp_ctes("a_", VID_DOC_LIMIT)}, a_flag AS (
         SELECT DISTINCT s.doc_id
         FROM a_h s JOIN a_h i
           ON s.doc_id % {VID_CLASS} <> 0 AND i.doc_id % {VID_CLASS} = 0
          AND bit_count(xor(s.h_lo, i.h_lo))
              + bit_count(xor(s.h_hi, i.h_hi)) <= {AFP_T}
-    ), v_vid AS (
-        SELECT doc_id, doc_id // {VID_CLASS} AS base,
-               doc_id % {VID_CLASS} AS v
-        FROM documents WHERE doc_id < {VID_DOC_LIMIT}
-    ), v_fk AS (
-        SELECT doc_id, base * {VID_KEY_STRIDE} + os.o AS key
-        FROM v_vid,
-             (SELECT unnest(generate_series(0, {VID_FRAMES - 1})) AS o) os
-        WHERE v IN (0, 1) OR os.o >= 1
-        UNION ALL
-        SELECT doc_id, base * {VID_KEY_STRIDE} + {VID_FOREIGN}
-        FROM v_vid WHERE v = 3
-    ), v_keys AS (
-        SELECT DISTINCT key FROM v_fk
-    ), v_grid AS (
-        SELECT key, cx.g AS cx, cy.g AS cy
-        FROM v_keys,
-             (SELECT unnest(generate_series(0, 8)) AS g) cx,
-             (SELECT unnest(generate_series(0, 7)) AS g) cy
-    ), v_cells AS (
-        SELECT key, cx, cy,
-               ((key + 1) * (cx + 9 * cy + 1) * {DHASH_MIX}
-                + key * (cx * cx + 3 * cy * cy)) % 256 AS c
-        FROM v_grid
-    ), v_bits AS (
-        SELECT a.key, a.cy, a.cx,
-               CASE WHEN b.c > a.c THEN 1 ELSE 0 END AS bit
-        FROM v_cells a JOIN v_cells b
-          ON a.key = b.key AND a.cy = b.cy AND b.cx = a.cx + 1
-        WHERE a.cx < 8
-    ), v_fh AS (
-        SELECT key,
-               CAST(sum(CASE WHEN cy < 4
-                    THEN bit * (CAST(1 AS BIGINT) << (cy * 8 + cx))
-                    ELSE 0 END) AS BIGINT) AS h_lo,
-               CAST(sum(CASE WHEN cy >= 4
-                    THEN bit * (CAST(1 AS BIGINT) << ((cy - 4) * 8 + cx))
-                    ELSE 0 END) AS BIGINT) AS h_hi
-        FROM v_bits GROUP BY key
-    ), v_sig AS (
+    ), {video_ctes("v_")}, v_sig AS (
         SELECT DISTINCT fk.doc_id, fh.h_lo, fh.h_hi
         FROM v_fk fk JOIN v_fh fh ON fk.key = fh.key
     ), v_idx AS (
@@ -1968,13 +1587,7 @@ def multimodal_flac_depth_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + (i // {TIFF_PX_RUN}) * {TIFF_PX_STEP}) % 256 AS v
         FROM idx
     )
-    SELECT doc_id, 'image' AS kind, w AS width, h AS height,
-           COUNT(*) AS n_vals,
-           CAST(SUM(v) AS BIGINT) AS sum_val,
-           CAST(MIN(v) AS BIGINT) AS min_val,
-           CAST(MAX(v) AS BIGINT) AS max_val,
-           CAST(SUM(v // 16 + 1) AS BIGINT) AS hist_sum
-    FROM px GROUP BY doc_id, w, h
+    {IMAGE_PX_STATS}
     """,
 )
 def multimodal_tiff_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

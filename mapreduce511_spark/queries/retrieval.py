@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from mapreduce511_spark.functions.text import tokenize
 from mapreduce511_spark.queries import register
+from mapreduce511_spark.queries.oracle_sql import _SQL_TOKENS
 from mapreduce511_spark.sources.tables import load_table
 
 # Fixed ad-hoc query vocabulary: mid-to-high-frequency corpus terms so
@@ -32,7 +33,6 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 BM25_TOP_K = 20
 
-_SQL_TOKENS = "list_filter(string_split_regex(text, '\\s+'), t -> t <> '')"
 _SQL_TERMS = "('spark', 'vector', 'stream', 'hash')"
 
 

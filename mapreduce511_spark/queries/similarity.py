@@ -15,6 +15,13 @@ from pyspark.sql import functions as F
 from mapreduce511_spark.functions.text import tokenize, word_ngrams
 from mapreduce511_spark.functions.vectors import cosine_similarity, dot, l2_norm
 from mapreduce511_spark.queries import norm0, register
+from mapreduce511_spark.queries.dedup import _JACCARD_T
+from mapreduce511_spark.queries.oracle_sql import (
+    _SQL_JACCARD,
+    _SQL_SHINGLES,
+    _SQL_TOKEN_POS,
+    _SQL_TOKENS,
+)
 from mapreduce511_spark.sources.tables import load_table, spread_scan
 
 # DuckDB twin of functions.vectors.cosine_similarity — identical
@@ -341,39 +348,31 @@ def ann_ivf_label_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SHINGLE_WORDS = 3  # word-shingle width for near-dup detection
-_JACCARD_T = 0.5
 
-
-@register(
-    "near_dup_jaccard",
-    oracle=f"""
-    WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(text, '\\s+'), t -> t <> '') AS tokens
-        FROM documents
-    ), pos AS (
-        SELECT doc_id, unnest(tokens) AS w, unnest(range(len(tokens))) AS p
-        FROM toks
-    ), shingles AS (
-        SELECT DISTINCT a.doc_id, a.w || ' ' || b.w || ' ' || c.w AS sh
-        FROM pos a
-        JOIN pos b ON a.doc_id = b.doc_id AND b.p = a.p + 1
-        JOIN pos c ON a.doc_id = c.doc_id AND c.p = a.p + 2
-    ), sizes AS (
+# Word-trigram shingle sets, their sizes, and the shared-shingle count
+# of every pair sharing one: inter(doc_a, doc_b, both)
+_SHINGLE_OVERLAP = f"""{_SQL_SHINGLES}, sizes AS (
         SELECT doc_id, count(*) AS sz FROM shingles GROUP BY doc_id
     ), inter AS (
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS both
         FROM shingles a JOIN shingles b ON a.sh = b.sh AND a.doc_id < b.doc_id
         GROUP BY doc_a, doc_b
-    )
+    )"""
+
+# Exact shingle-Jaccard pairs: the oracle of near_dup_jaccard and of
+# its prefix-filtered twin (the filter prunes candidates, not answers)
+_JACCARD_PAIRS_ORACLE = f"""
+    WITH {_SHINGLE_OVERLAP}
     SELECT doc_a, doc_b,
-           round(i.both * 1.0 / (sa.sz + sb.sz - i.both), 4) AS jaccard
+           round({_SQL_JACCARD}, 4) AS jaccard
     FROM inter i
     JOIN sizes sa ON i.doc_a = sa.doc_id
     JOIN sizes sb ON i.doc_b = sb.doc_id
-    WHERE i.both * 1.0 / (sa.sz + sb.sz - i.both) >= {_JACCARD_T}
-    """,
-)
+    WHERE {_SQL_JACCARD} >= {_JACCARD_T}
+    """
+
+
+@register("near_dup_jaccard", oracle=_JACCARD_PAIRS_ORACLE)
 def near_dup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram-Jaccard near-dup pairs via an inverted shingle
     index: explode distinct word-trigram shingles → self-equi-join on
@@ -850,6 +849,20 @@ def _lloyd_centroids(e: DataFrame) -> DataFrame:
     return cent
 
 
+def _lloyd_cells_sql(train: str, assign: str, p: str = "") -> str:
+    """Oracle CTEs: seed cells from the first ``_LLOYD_K`` vectors of
+    ``train``, two unrolled Lloyd rounds over ``train`` (``{p}a1`` ..
+    ``{p}c2``), then ``{p}af``: every vector of ``assign`` in its cell
+    of the trained centroids ``{p}c2``."""
+    return f"""seeds AS (
+        SELECT vec_id AS cell, v AS cv FROM {train} WHERE vec_id < {_LLOYD_K}
+    ), {p}a1 AS {_lloyd_assign_sql(train, "seeds")},
+    {p}c1 AS {_lloyd_means_sql(p + "a1")},
+    {p}a2 AS {_lloyd_assign_sql(train, p + "c1")},
+    {p}c2 AS {_lloyd_means_sql(p + "a2")},
+    {p}af AS {_lloyd_assign_sql(assign, p + "c2")}"""
+
+
 def _lloyd_means_sql(assigned: str) -> str:
     """Oracle block: per-cell mean vectors via exact integer-micro
     sums — order-insensitive, so both engines get bit-identical
@@ -874,13 +887,7 @@ def _lloyd_means_sql(assigned: str) -> str:
     oracle=f"""
     WITH e AS (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), seeds AS (
-        SELECT vec_id AS cell, v AS cv FROM e WHERE vec_id < {_LLOYD_K}
-    ), a1 AS {_lloyd_assign_sql("e", "seeds")},
-    c1 AS {_lloyd_means_sql("a1")},
-    a2 AS {_lloyd_assign_sql("e", "c1")},
-    c2 AS {_lloyd_means_sql("a2")},
-    af AS {_lloyd_assign_sql("e", "c2")},
+    ), {_lloyd_cells_sql("e", "e")},
     probes AS (
         SELECT vec_id AS pid, v AS pv FROM e WHERE vec_id < {_N_PROBES}
     ), cells AS (
@@ -975,6 +982,28 @@ _BITEXT_TGT_LABEL = 1
 _BITEXT_MARGIN_MILLI = 1200  # keep pairs >= 1.2x the top-4 mean
 _BITEXT_MIN_COS = 0.1
 
+# Ratio margin over each source's top-4 targets s(src_id, tgt_id, c,
+# rn): g pivots the top 4, and a pair is kept at cos >= _BITEXT_MIN_COS
+# and margin >= _BITEXT_MARGIN_MILLI (exact and IVF-bounded miners)
+_BITEXT_MARGIN = f"""g AS (
+        SELECT src_id,
+               max(CASE WHEN rn = 1 THEN tgt_id END) AS tgt_id,
+               max(CASE WHEN rn = 1 THEN c END) AS c1,
+               max(CASE WHEN rn = 2 THEN c END) AS c2,
+               max(CASE WHEN rn = 3 THEN c END) AS c3,
+               max(CASE WHEN rn = 4 THEN c END) AS c4
+        FROM s WHERE rn <= 4 GROUP BY src_id
+    )
+    SELECT src_id, tgt_id,
+           round(c1, 4) AS cos_sim,
+           CAST(floor(1000.0 * 4.0 * c1 / (c1 + c2 + c3 + c4))
+                AS BIGINT) AS margin_milli
+    FROM g
+    WHERE c1 >= {_BITEXT_MIN_COS}
+      AND floor(1000.0 * 4.0 * c1 / (c1 + c2 + c3 + c4))
+          >= {_BITEXT_MARGIN_MILLI}
+    """
+
 
 @register(
     "bitext_margin_mining",
@@ -997,24 +1026,7 @@ _BITEXT_MIN_COS = 0.1
                             tgt_id
                ) AS rn
         FROM a, b
-    ), g AS (
-        SELECT src_id,
-               max(CASE WHEN rn = 1 THEN tgt_id END) AS tgt_id,
-               max(CASE WHEN rn = 1 THEN c END) AS c1,
-               max(CASE WHEN rn = 2 THEN c END) AS c2,
-               max(CASE WHEN rn = 3 THEN c END) AS c3,
-               max(CASE WHEN rn = 4 THEN c END) AS c4
-        FROM s WHERE rn <= 4 GROUP BY src_id
-    )
-    SELECT src_id, tgt_id,
-           round(c1, 4) AS cos_sim,
-           CAST(floor(1000.0 * 4.0 * c1 / (c1 + c2 + c3 + c4))
-                AS BIGINT) AS margin_milli
-    FROM g
-    WHERE c1 >= {_BITEXT_MIN_COS}
-      AND floor(1000.0 * 4.0 * c1 / (c1 + c2 + c3 + c4))
-          >= {_BITEXT_MARGIN_MILLI}
-    """,
+    ), {_BITEXT_MARGIN}""",
 )
 def bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MARGIN-BASED bitext/pair mining (Artetxe & Schwenk 2019 — the
@@ -1092,13 +1104,7 @@ def bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM embeddings
     ), ev AS (
         SELECT vec_id, v FROM e
-    ), seeds AS (
-        SELECT vec_id AS cell, v AS cv FROM ev WHERE vec_id < {_LLOYD_K}
-    ), la1 AS {{a1}},
-    lc1 AS {{c1}},
-    la2 AS {{a2}},
-    lc2 AS {{c2}},
-    laf AS {{af}},
+    ), {_lloyd_cells_sql("ev", "ev", "l")},
     src AS (
         SELECT vec_id AS src_id, v AS va FROM e
         WHERE label = {_BITEXT_SRC_LABEL}
@@ -1125,30 +1131,7 @@ def bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
                             t.tgt_id
                ) AS rn
         FROM cells cl JOIN tgt t ON t.cell = cl.cell
-    ), g AS (
-        SELECT src_id,
-               max(CASE WHEN rn = 1 THEN tgt_id END) AS tgt_id,
-               max(CASE WHEN rn = 1 THEN c END) AS c1,
-               max(CASE WHEN rn = 2 THEN c END) AS c2,
-               max(CASE WHEN rn = 3 THEN c END) AS c3,
-               max(CASE WHEN rn = 4 THEN c END) AS c4
-        FROM s WHERE rn <= 4 GROUP BY src_id
-    )
-    SELECT src_id, tgt_id,
-           round(c1, 4) AS cos_sim,
-           CAST(floor(1000.0 * 4.0 * c1 / (c1 + c2 + c3 + c4))
-                AS BIGINT) AS margin_milli
-    FROM g
-    WHERE c1 >= {_BITEXT_MIN_COS}
-      AND floor(1000.0 * 4.0 * c1 / (c1 + c2 + c3 + c4))
-          >= {_BITEXT_MARGIN_MILLI}
-    """.format(
-        a1=_lloyd_assign_sql("ev", "seeds"),
-        c1=_lloyd_means_sql("la1"),
-        a2=_lloyd_assign_sql("ev", "lc1"),
-        c2=_lloyd_means_sql("la2"),
-        af=_lloyd_assign_sql("ev", "lc2"),
-    ),
+    ), {_BITEXT_MARGIN}""",
 )
 def bitext_margin_mining_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-BOUNDED margin mining — the scale composition the exact
@@ -1322,19 +1305,7 @@ _DF_CAP = 25  # shingles appearing in more docs than this skip candidate gen
 @register(
     "near_dup_jaccard_capped",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(text, '\\s+'), t -> t <> '') AS tokens
-        FROM documents
-    ), pos AS (
-        SELECT doc_id, unnest(tokens) AS w, unnest(range(len(tokens))) AS p
-        FROM toks
-    ), shingles AS (
-        SELECT DISTINCT a.doc_id, a.w || ' ' || b.w || ' ' || c.w AS sh
-        FROM pos a
-        JOIN pos b ON a.doc_id = b.doc_id AND b.p = a.p + 1
-        JOIN pos c ON a.doc_id = c.doc_id AND c.p = a.p + 2
-    ), dfreq AS (
+    WITH {_SQL_SHINGLES}, dfreq AS (
         SELECT sh, count(*) AS dfc FROM shingles GROUP BY sh
     ), rare AS (
         SELECT s.doc_id, s.sh FROM shingles s JOIN dfreq USING (sh)
@@ -1352,11 +1323,11 @@ _DF_CAP = 25  # shingles appearing in more docs than this skip candidate gen
         GROUP BY c.doc_a, c.doc_b
     )
     SELECT i.doc_a, i.doc_b,
-           round(i.both * 1.0 / (sa.sz + sb.sz - i.both), 4) AS jaccard
+           round({_SQL_JACCARD}, 4) AS jaccard
     FROM inter i
     JOIN sizes sa ON i.doc_a = sa.doc_id
     JOIN sizes sb ON i.doc_b = sb.doc_id
-    WHERE i.both * 1.0 / (sa.sz + sb.sz - i.both) >= {_JACCARD_T}
+    WHERE {_SQL_JACCARD} >= {_JACCARD_T}
     """.replace("{cap}", "25"),
 )
 def near_dup_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1516,8 +1487,7 @@ def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE {_SQL_COS.format(a="a.v", b="b.v")} >= {_COS_DUP_T}
     ), toks AS (
         SELECT doc_id,
-               list_distinct(list_filter(string_split_regex(text, '\\s+'),
-                                         t -> t <> '')) AS tk
+               list_distinct({_SQL_TOKENS}) AS tk
         FROM documents
     )
     SELECT c.doc_a, c.doc_b, round(c.cos, 4) AS cos_sim,
@@ -1681,36 +1651,7 @@ def embedding_norm_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "near_dup_jaccard_prefix",
-    oracle=f"""
-    WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(text, '\\s+'), t -> t <> '') AS tokens
-        FROM documents
-    ), pos AS (
-        SELECT doc_id, unnest(tokens) AS w, unnest(range(len(tokens))) AS p
-        FROM toks
-    ), shingles AS (
-        SELECT DISTINCT a.doc_id, a.w || ' ' || b.w || ' ' || c.w AS sh
-        FROM pos a
-        JOIN pos b ON a.doc_id = b.doc_id AND b.p = a.p + 1
-        JOIN pos c ON a.doc_id = c.doc_id AND c.p = a.p + 2
-    ), sizes AS (
-        SELECT doc_id, count(*) AS sz FROM shingles GROUP BY doc_id
-    ), inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS both
-        FROM shingles a JOIN shingles b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY doc_a, doc_b
-    )
-    SELECT doc_a, doc_b,
-           round(i.both * 1.0 / (sa.sz + sb.sz - i.both), 4) AS jaccard
-    FROM inter i
-    JOIN sizes sa ON i.doc_a = sa.doc_id
-    JOIN sizes sb ON i.doc_b = sb.doc_id
-    WHERE i.both * 1.0 / (sa.sz + sb.sz - i.both) >= {_JACCARD_T}
-    """,
-)
+@register("near_dup_jaccard_prefix", oracle=_JACCARD_PAIRS_ORACLE)
 def near_dup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Jaccard near-dup via PREFIX FILTERING (the PPJoin/AllPairs
     candidate cut — Xiao et al., WWW'08; Bayardo et al., WWW'07):
@@ -1862,27 +1803,7 @@ _CONTAIN_T = 0.6
 @register(
     "near_dup_containment",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(text, '\\s+'), t -> t <> '')
-                   AS tokens
-        FROM documents
-    ), pos AS (
-        SELECT doc_id, unnest(tokens) AS w, unnest(range(len(tokens))) AS p
-        FROM toks
-    ), shingles AS (
-        SELECT DISTINCT a.doc_id, a.w || ' ' || b.w || ' ' || c.w AS sh
-        FROM pos a
-        JOIN pos b ON a.doc_id = b.doc_id AND b.p = a.p + 1
-        JOIN pos c ON a.doc_id = c.doc_id AND c.p = a.p + 2
-    ), sizes AS (
-        SELECT doc_id, count(*) AS sz FROM shingles GROUP BY doc_id
-    ), inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS both
-        FROM shingles a JOIN shingles b
-          ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY doc_a, doc_b
-    )
+    WITH {_SHINGLE_OVERLAP}
     SELECT doc_a, doc_b,
            round(i.both * 1.0 / sa.sz, 4) AS contain_ab,
            round(i.both * 1.0 / sb.sz, 4) AS contain_ba
@@ -2028,19 +1949,11 @@ def embedding_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "tfidf_cosine_pairs_exact_spec",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(text, '\\s+'), t -> t <> '')
-                   AS tokens
-        FROM documents
-    ), pos AS (
-        SELECT doc_id, unnest(tokens) AS w,
-               unnest(range(len(tokens))) AS p
-        FROM toks
-    ), tf AS (
+# Bigram TF-IDF integer weights wts(doc_id, g, wt) — terms in every doc
+# get idf 0 and drop — and the top-20 pairs at cosine >= 0.6 over
+# pairs(doc_a, doc_b, dot, n_shared_terms) and norms(doc_id, nrm): the
+# shared body and tail of the exact and capped TF-IDF pair oracles
+_TFIDF_WEIGHTS = f"""{_SQL_TOKEN_POS}, tf AS (
         SELECT a.doc_id, a.w || ' ' || b.w AS g, count(*) AS tf
         FROM pos a JOIN pos b
           ON a.doc_id = b.doc_id AND b.p = a.p + 1
@@ -2056,17 +1969,8 @@ def embedding_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
                    AS wt
         FROM tf JOIN dfreq USING (g) CROSS JOIN nd
         WHERE dfreq.df < nd.n
-    ), norms AS (
-        SELECT doc_id, CAST(sum(wt * wt) AS BIGINT) AS nrm
-        FROM wts GROUP BY doc_id
-    ), pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               CAST(sum(a.wt * b.wt) AS BIGINT) AS dot,
-               count(*) AS n_shared_terms
-        FROM wts a JOIN wts b
-          ON a.g = b.g AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
+    )"""
+_TFIDF_TOP20 = """
     SELECT doc_a, doc_b, n_shared_terms,
            round(dot / sqrt(CAST(na.nrm AS DOUBLE) * nb.nrm), 4) AS cosine
     FROM pairs
@@ -2077,7 +1981,24 @@ def embedding_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
           >= 36 * CAST(na.nrm AS HUGEINT) * nb.nrm
     ORDER BY cosine DESC, doc_a, doc_b
     LIMIT 20
-    """,
+    """
+
+
+@register(
+    "tfidf_cosine_pairs_exact_spec",
+    oracle=f"""
+    WITH {_TFIDF_WEIGHTS}, norms AS (
+        SELECT doc_id, CAST(sum(wt * wt) AS BIGINT) AS nrm
+        FROM wts GROUP BY doc_id
+    ), pairs AS (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+               CAST(sum(a.wt * b.wt) AS BIGINT) AS dot,
+               count(*) AS n_shared_terms
+        FROM wts a JOIN wts b
+          ON a.g = b.g AND a.doc_id < b.doc_id
+        GROUP BY 1, 2
+    )
+    {_TFIDF_TOP20}""",
 )
 def tfidf_cosine_pairs_exact_spec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WEIGHTED lexical near-dup: tf-idf cosine over word bigrams via
@@ -2238,32 +2159,7 @@ _TFIDF_DF_CAP = 20  # bigrams in more docs than this skip candidate gen
 @register(
     "tfidf_cosine_pairs_capped",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(text, '\\s+'), t -> t <> '')
-                   AS tokens
-        FROM documents
-    ), pos AS (
-        SELECT doc_id, unnest(tokens) AS w,
-               unnest(range(len(tokens))) AS p
-        FROM toks
-    ), tf AS (
-        SELECT a.doc_id, a.w || ' ' || b.w AS g, count(*) AS tf
-        FROM pos a JOIN pos b
-          ON a.doc_id = b.doc_id AND b.p = a.p + 1
-        GROUP BY 1, 2
-    ), dfreq AS (
-        SELECT g, count(*) AS df FROM tf GROUP BY g
-    ), nd AS (
-        SELECT count(DISTINCT doc_id) AS n FROM tf
-    ), wts AS (
-        SELECT tf.doc_id, tf.g,
-               tf.tf * CAST(floor(
-                   1000 * ln(CAST(nd.n AS DOUBLE) / dfreq.df)) AS BIGINT)
-                   AS wt
-        FROM tf JOIN dfreq USING (g) CROSS JOIN nd
-        WHERE dfreq.df < nd.n
-    ), rare AS (
+    WITH {_TFIDF_WEIGHTS}, rare AS (
         SELECT tf.doc_id, tf.g
         FROM tf JOIN dfreq USING (g)
         WHERE dfreq.df <= {_TFIDF_DF_CAP}
@@ -2282,17 +2178,7 @@ _TFIDF_DF_CAP = 20  # bigrams in more docs than this skip candidate gen
         JOIN wts b ON b.doc_id = c.doc_b AND b.g = a.g
         GROUP BY 1, 2
     )
-    SELECT doc_a, doc_b, n_shared_terms,
-           round(dot / sqrt(CAST(na.nrm AS DOUBLE) * nb.nrm), 4) AS cosine
-    FROM pairs
-    JOIN norms na ON doc_a = na.doc_id
-    JOIN norms nb ON doc_b = nb.doc_id
-    WHERE dot > 0
-      AND 100 * CAST(dot AS HUGEINT) * dot
-          >= 36 * CAST(na.nrm AS HUGEINT) * nb.nrm
-    ORDER BY cosine DESC, doc_a, doc_b
-    LIMIT 20
-    """,
+    {_TFIDF_TOP20}""",
 )
 def tfidf_cosine_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``tfidf_cosine_pairs_exact_spec`` with DF-CAPPED candidate
@@ -2659,13 +2545,7 @@ def semantic_dedup_kmeans_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH e AS (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), seeds AS (
-        SELECT vec_id AS cell, v AS cv FROM e WHERE vec_id < {_LLOYD_K}
-    ), a1 AS {_lloyd_assign_sql("e", "seeds")},
-    c1 AS {_lloyd_means_sql("a1")},
-    a2 AS {_lloyd_assign_sql("e", "c1")},
-    c2 AS {_lloyd_means_sql("a2")},
-    af AS {_lloyd_assign_sql("e", "c2")},
+    ), {_lloyd_cells_sql("e", "e")},
     members AS (
         SELECT cell, count(*) AS n_members FROM af GROUP BY cell
     ), pairs AS (
@@ -3009,21 +2889,19 @@ def _ensure_admitted_lloyd_index(emb: DataFrame) -> tuple[str, list]:
     return path, cent_rows
 
 
-# Shared oracle for the batch AND streaming admission censuses: the
-# final artifact is identical however the batch arrived (per-row
-# assignment against frozen centroids), so one SQL text gates both.
-ADMISSION_CENSUS_ORACLE = """
+# Lloyd trained on the base slice (vec_id % 10 <> 0), every vector
+# assigned to the frozen result: laf(vec_id, v, cell) and lc2(cell, cv)
+_ADMISSION_CELLS = f"""
     WITH e AS (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
     ), base AS (
         SELECT vec_id, v FROM e WHERE vec_id % 10 <> 0
-    ), seeds AS (
-        SELECT vec_id AS cell, v AS cv FROM base WHERE vec_id < {k}
-    ), la1 AS {a1},
-    lc1 AS {c1},
-    la2 AS {a2},
-    lc2 AS {c2},
-    laf AS {af}
+    ), {_lloyd_cells_sql("base", "e", "l")}"""
+
+# Shared oracle for the batch AND streaming admission censuses: the
+# final artifact is identical however the batch arrived (per-row
+# assignment against frozen centroids), so one SQL text gates both.
+ADMISSION_CENSUS_ORACLE = f"""{_ADMISSION_CELLS}
     SELECT cell,
            count(*) FILTER (WHERE vec_id % 10 <> 0) AS n_base,
            count(*) FILTER (WHERE vec_id % 10 = 0) AS n_admitted,
@@ -3031,14 +2909,7 @@ ADMISSION_CENSUS_ORACLE = """
     FROM laf
     GROUP BY cell
     ORDER BY cell
-    """.format(
-    k=_LLOYD_K,
-    a1=_lloyd_assign_sql("base", "seeds"),
-    c1=_lloyd_means_sql("la1"),
-    a2=_lloyd_assign_sql("base", "lc1"),
-    c2=_lloyd_means_sql("la2"),
-    af=_lloyd_assign_sql("e", "lc2"),
-)
+    """
 
 
 @register("ann_admission_census", oracle=ADMISSION_CENSUS_ORACLE)
@@ -3075,35 +2946,18 @@ def ann_admission_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ADMISSION_DRIFT_ORACLE = """
-    WITH e AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), base AS (
-        SELECT vec_id, v FROM e WHERE vec_id % 10 <> 0
-    ), seeds AS (
-        SELECT vec_id AS cell, v AS cv FROM base WHERE vec_id < {k}
-    ), la1 AS {a1},
-    lc1 AS {c1},
-    la2 AS {a2},
-    lc2 AS {c2},
-    laf AS {af}
+ADMISSION_DRIFT_ORACLE = f"""{_ADMISSION_CELLS}
     SELECT CASE WHEN laf.vec_id % 10 = 0 THEN 'admitted' ELSE 'base' END
                AS slice,
            count(*) AS n_vecs,
-           CAST(sum(CAST(floor(1000 * {cos}) AS BIGINT)) // count(*)
+           CAST(sum(CAST(floor(1000 *
+                               {_SQL_COS.format(a="laf.v", b="c.cv")})
+                         AS BIGINT)) // count(*)
                 AS BIGINT) AS mean_cos_milli
     FROM laf JOIN lc2 c ON laf.cell = c.cell
     GROUP BY slice
     ORDER BY slice
-    """.format(
-    k=_LLOYD_K,
-    a1=_lloyd_assign_sql("base", "seeds"),
-    c1=_lloyd_means_sql("la1"),
-    a2=_lloyd_assign_sql("base", "lc1"),
-    c2=_lloyd_means_sql("la2"),
-    af=_lloyd_assign_sql("e", "lc2"),
-    cos=_SQL_COS.format(a="laf.v", b="c.cv"),
-)
+    """
 
 
 @register("ann_admission_drift_census", oracle=ADMISSION_DRIFT_ORACLE)

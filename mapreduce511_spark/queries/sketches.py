@@ -39,9 +39,8 @@ from pyspark.sql.window import Window
 
 from mapreduce511_spark.functions.text import tokenize, word_ngrams
 from mapreduce511_spark.queries import register
+from mapreduce511_spark.queries.oracle_sql import _SQL_TOKEN_POS, _SQL_TOKENS
 from mapreduce511_spark.sources.tables import load_table, spread_scan
-
-_SQL_TOKENS = "list_filter(string_split_regex(text, '\\s+'), t -> t <> '')"
 
 # DuckDB CTE producing (doc_id, lang, g, p): word n-grams with gram
 # position, built by positional self-joins exactly like the bigram
@@ -307,12 +306,7 @@ _CMS_W = 256  # buckets per row
 @register(
     "cms_heavy_bigrams",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, {_SQL_TOKENS} AS tokens FROM documents
-    ), pos AS (
-        SELECT doc_id, unnest(tokens) AS w, unnest(range(len(tokens))) AS p
-        FROM toks
-    ), cnts AS (
+    WITH {_SQL_TOKEN_POS}, cnts AS (
         SELECT a.w || ' ' || b.w AS g, count(*) AS cnt
         FROM pos a JOIN pos b ON a.doc_id = b.doc_id AND b.p = a.p + 1
         GROUP BY g
@@ -538,11 +532,9 @@ def bloom_membership_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _WINNOW_W = 4  # grams per winnowing window
 
-
-@register(
-    "winnowing_fingerprints",
-    oracle=f"""
-    WITH {_SQL_TRIGRAMS}, hashed AS (
+# Winnowed trigram-hash fingerprints per doc: doc_fps(doc_id, fp) is
+# the distinct window minima of every _WINNOW_W consecutive gram hashes
+_WINNOW_FPS = f"""{_SQL_TRIGRAMS}, hashed AS (
         SELECT doc_id, p,
                CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT) AS h
         FROM grams
@@ -556,7 +548,13 @@ _WINNOW_W = 4  # grams per winnowing window
         QUALIFY p >= {_WINNOW_W - 1}
     ), doc_fps AS (
         SELECT DISTINCT doc_id, fp FROM winnowed
-    )
+    )"""
+
+
+@register(
+    "winnowing_fingerprints",
+    oracle=f"""
+    WITH {_WINNOW_FPS}
     SELECT fp, count(*) AS n_docs
     FROM doc_fps
     GROUP BY fp
@@ -708,21 +706,7 @@ _WINNOW_MIN_SHARED = 3  # candidate pair threshold
 @register(
     "winnow_near_dup_candidates",
     oracle=f"""
-    WITH {_SQL_TRIGRAMS}, hashed AS (
-        SELECT doc_id, p,
-               CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT) AS h
-        FROM grams
-    ), winnowed AS (
-        SELECT doc_id,
-               min(h) OVER (PARTITION BY doc_id ORDER BY p
-                            ROWS BETWEEN {_WINNOW_W - 1} PRECEDING
-                            AND CURRENT ROW) AS fp,
-               p
-        FROM hashed
-        QUALIFY p >= {_WINNOW_W - 1}
-    ), doc_fps AS (
-        SELECT DISTINCT doc_id, fp FROM winnowed
-    ), df AS (
+    WITH {_WINNOW_FPS}, df AS (
         SELECT fp, count(*) AS d FROM doc_fps GROUP BY fp
     ), rare AS (
         SELECT doc_fps.doc_id, doc_fps.fp

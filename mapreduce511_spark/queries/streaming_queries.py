@@ -27,7 +27,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce511_spark.memo import owned_tmpdir, session_memo
+from mapreduce511_spark.multimodal import (
+    AFP_CLASS,
+    AFP_T,
+    DHASH_CLASS,
+    DHASH_T,
+    VID_CLASS,
+)
 from mapreduce511_spark.queries import register
+from mapreduce511_spark.queries.oracle_sql import (
+    _SQL_TOKENS,
+    TUMBLING_HOUR_ORACLE,
+    afp_ctes,
+    dhash_ctes,
+    video_ctes,
+)
+from mapreduce511_spark.queries.similarity import ADMISSION_CENSUS_ORACLE
 from mapreduce511_spark.sources.tables import load_table
 from mapreduce511_spark.streaming import (
     click_purchase_full_join,
@@ -132,14 +147,7 @@ def _detach(df: DataFrame, name: str) -> DataFrame:
 
 @register(
     "stream_tumbling_event_counts",
-    oracle="""
-    SELECT date_trunc('hour', ts) AS window_start,
-           event_type,
-           count(*)               AS n_events,
-           round(sum(value), 2)   AS total_value
-    FROM events
-    GROUP BY window_start, event_type
-    """,
+    oracle=TUMBLING_HOUR_ORACLE,
 )
 def stream_tumbling_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked 1-hour tumbling windows computed BY THE STREAMING
@@ -1595,12 +1603,6 @@ def stream_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
-def _stream_admission_oracle() -> str:
-    from mapreduce511_spark.queries.similarity import ADMISSION_CENSUS_ORACLE
-
-    return ADMISSION_CENSUS_ORACLE
-
-
 def ensure_stream_admitted_lloyd_index(emb: DataFrame) -> tuple[str, list]:
     """Build the stream-admitted Lloyd artifact once per content
     fingerprint: train on the base slice, write it at
@@ -1691,7 +1693,7 @@ def ensure_stream_admitted_lloyd_index(emb: DataFrame) -> tuple[str, list]:
         return path, cent_rows
 
 
-@register("stream_ann_admission_census", oracle=_stream_admission_oracle())
+@register("stream_ann_admission_census", oracle=ADMISSION_CENSUS_ORACLE)
 def stream_ann_admission_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING ANN-index admission (r8) — the streaming twin of
     ``ann_admission_census`` and the completion of the incremental
@@ -1737,7 +1739,7 @@ def stream_ann_admission_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("ann_index_compaction_census", oracle=_stream_admission_oracle())
+@register("ann_index_compaction_census", oracle=ADMISSION_CENSUS_ORACLE)
 def ann_index_compaction_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INDEX COMPACTION (r8) — the third leg of the lifecycle the
     admission family creates: build -> admit -> COMPACT. Streaming
@@ -1810,14 +1812,11 @@ def ann_index_compaction_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming DSIR admission — importance-weighted ingest gate
 # ---------------------------------------------------------------------------
 
-_SDSIR_TOKENS = "list_filter(string_split_regex(text, '\\s+'), t -> t <> '')"
-
-
 @register(
     "stream_dsir_admission",
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id, source, {_SDSIR_TOKENS} AS tokens FROM documents
+        SELECT doc_id, source, {_SQL_TOKENS} AS tokens FROM documents
     ), roles AS (
         SELECT doc_id, source, tokens,
                CASE WHEN source IN ('src0', 'src1') THEN 'p'
@@ -2095,68 +2094,22 @@ def _hamming_gate(extract, t: int):
     return build_index, kept
 
 
-def _dhash_closed_form_cte() -> str:
-    """The image_dhash fixture's hash derivation as a reusable oracle
-    CTE chain ending in h(doc_id, h_lo, h_hi) — the SAME closed form
-    `queries/multimodal.py::image_dhash_near_dup` embeds."""
-    from mapreduce511_spark.multimodal import (
-        DHASH_CLASS,
-        DHASH_MIX,
-        SYNTH_DOC_LIMIT,
-    )
-
+def _hamming_admission_oracle(hashes: str, cls: int, t: int) -> str:
+    """Oracle of the ``_hamming_gate`` admissions: the class-base
+    hashes of ``h`` (built by the ``hashes`` CTE chain) are the
+    standing index, and every other doc is rejected when some index
+    hash lies within Hamming distance ``t``."""
     return f"""
-    img AS (
-        SELECT doc_id, doc_id // {DHASH_CLASS} AS base,
-               doc_id % {DHASH_CLASS} AS v
-        FROM documents WHERE doc_id < {SYNTH_DOC_LIMIT}
-    ), grid AS (
-        SELECT doc_id, base, v, cx.g AS cx, cy.g AS cy
-        FROM img,
-             (SELECT unnest(generate_series(0, 8)) AS g) cx,
-             (SELECT unnest(generate_series(0, 7)) AS g) cy
-    ), cells AS (
-        SELECT doc_id, cx, cy,
-               CASE WHEN v > 0 AND cx = v AND cy < v
-                    THEN (((base + 1) * (cx + 9 * cy + 1) * {DHASH_MIX}
-                           + base * (cx * cx + 3 * cy * cy)) % 256 + 128)
-                         % 256
-                    ELSE ((base + 1) * (cx + 9 * cy + 1) * {DHASH_MIX}
-                          + base * (cx * cx + 3 * cy * cy)) % 256
-               END AS c
-        FROM grid
-    ), bits AS (
-        SELECT a.doc_id, a.cy, a.cx,
-               CASE WHEN b.c > a.c THEN 1 ELSE 0 END AS bit
-        FROM cells a JOIN cells b
-          ON a.doc_id = b.doc_id AND a.cy = b.cy AND b.cx = a.cx + 1
-        WHERE a.cx < 8
-    ), h AS (
-        SELECT doc_id,
-               CAST(sum(CASE WHEN cy < 4
-                    THEN bit * (CAST(1 AS BIGINT) << (cy * 8 + cx))
-                    ELSE 0 END) AS BIGINT) AS h_lo,
-               CAST(sum(CASE WHEN cy >= 4
-                    THEN bit * (CAST(1 AS BIGINT) << ((cy - 4) * 8 + cx))
-                    ELSE 0 END) AS BIGINT) AS h_hi
-        FROM bits GROUP BY doc_id
-    )"""
-
-
-def _image_admission_oracle() -> str:
-    from mapreduce511_spark.multimodal import DHASH_CLASS, DHASH_T
-
-    return f"""
-    WITH {_dhash_closed_form_cte()},
+    WITH {hashes},
     idx AS (
-        SELECT h_lo, h_hi FROM h WHERE doc_id % {DHASH_CLASS} = 0
+        SELECT h_lo, h_hi FROM h WHERE doc_id % {cls} = 0
     ), stream AS (
         SELECT doc_id, h_lo, h_hi FROM h
-        WHERE doc_id % {DHASH_CLASS} <> 0
+        WHERE doc_id % {cls} <> 0
     ), flags AS (
         SELECT s.doc_id,
                max(CASE WHEN bit_count(xor(s.h_lo, i.h_lo))
-                           + bit_count(xor(s.h_hi, i.h_hi)) <= {DHASH_T}
+                           + bit_count(xor(s.h_hi, i.h_hi)) <= {t}
                         THEN 1 ELSE 0 END) AS dup
         FROM stream s, idx i
         GROUP BY s.doc_id
@@ -2168,7 +2121,10 @@ def _image_admission_oracle() -> str:
     """
 
 
-@register("stream_image_dhash_admission", oracle=_image_admission_oracle())
+@register(
+    "stream_image_dhash_admission",
+    oracle=_hamming_admission_oracle(dhash_ctes(), DHASH_CLASS, DHASH_T),
+)
 def stream_image_dhash_admission(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2197,8 +2153,6 @@ def stream_image_dhash_admission(
     Reference basis: extension tier — streaming x multimodal x dedup
     composed (SURVEY.md §2.9 / extensions)."""
     from mapreduce511_spark.multimodal import (
-        DHASH_CLASS,
-        DHASH_T,
         SYNTH_DOC_LIMIT,
         extract_dhash,
         synth_dhash_media,
@@ -2219,72 +2173,10 @@ def stream_image_dhash_admission(
     )
 
 
-def _audio_admission_oracle() -> str:
-    from mapreduce511_spark.multimodal import (
-        AFP_CLASS,
-        AFP_MIX,
-        AFP_T,
-        AFP_WIN_LEN,
-        AFP_WINDOWS,
-        SYNTH_DOC_LIMIT,
-    )
-
-    return f"""
-    WITH aud AS (
-        SELECT doc_id, doc_id // {AFP_CLASS} AS base,
-               doc_id % {AFP_CLASS} AS v
-        FROM documents WHERE doc_id < {SYNTH_DOC_LIMIT}
-    ), win AS (
-        SELECT doc_id, base, v, ws.g AS w
-        FROM aud, (SELECT unnest(generate_series(0, {AFP_WINDOWS - 1})) AS g) ws
-    ), amp AS (
-        SELECT doc_id, w,
-               CASE WHEN (v = 2 AND w IN (2, 19))
-                      OR (v = 3 AND w IN (3, 20, 37))
-                    THEN (((base + 1) * (w + 1) * {AFP_MIX}
-                           + base * w * w) % 256 + 128) % 256
-                    ELSE ((base + 1) * (w + 1) * {AFP_MIX}
-                          + base * w * w) % 256
-               END
-               * (CASE v WHEN 1 THEN 3 WHEN 3 THEN 2 ELSE 1 END)
-               * {AFP_WIN_LEN - 1} AS e
-        FROM win
-    ), bits AS (
-        SELECT x.doc_id, x.w AS b,
-               CASE WHEN y.e > x.e THEN 1 ELSE 0 END AS bit
-        FROM amp x JOIN amp y
-          ON x.doc_id = y.doc_id AND y.w = x.w + 1
-        WHERE x.w < 64
-    ), h AS (
-        SELECT doc_id,
-               CAST(sum(CASE WHEN b < 32
-                    THEN bit * (CAST(1 AS BIGINT) << b)
-                    ELSE 0 END) AS BIGINT) AS h_lo,
-               CAST(sum(CASE WHEN b >= 32
-                    THEN bit * (CAST(1 AS BIGINT) << (b - 32))
-                    ELSE 0 END) AS BIGINT) AS h_hi
-        FROM bits GROUP BY doc_id
-    ), idx AS (
-        SELECT h_lo, h_hi FROM h WHERE doc_id % {AFP_CLASS} = 0
-    ), stream AS (
-        SELECT doc_id, h_lo, h_hi FROM h
-        WHERE doc_id % {AFP_CLASS} <> 0
-    ), flags AS (
-        SELECT s.doc_id,
-               max(CASE WHEN bit_count(xor(s.h_lo, i.h_lo))
-                           + bit_count(xor(s.h_hi, i.h_hi)) <= {AFP_T}
-                        THEN 1 ELSE 0 END) AS dup
-        FROM stream s, idx i
-        GROUP BY s.doc_id
-    )
-    SELECT count(*) AS n_stream,
-           CAST(sum(dup) AS BIGINT) AS rejected_near_dup,
-           CAST(count(*) - sum(dup) AS BIGINT) AS admitted
-    FROM flags
-    """
-
-
-@register("stream_audio_fp_admission", oracle=_audio_admission_oracle())
+@register(
+    "stream_audio_fp_admission",
+    oracle=_hamming_admission_oracle(afp_ctes(), AFP_CLASS, AFP_T),
+)
 def stream_audio_fp_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING AUDIO-FINGERPRINT admission (r9) — completes the
     streaming x multimodal ingest-gate matrix (text:
@@ -2304,8 +2196,6 @@ def stream_audio_fp_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference basis: extension tier — streaming x multimodal x dedup
     composed (SURVEY.md §2.9 / extensions)."""
     from mapreduce511_spark.multimodal import (
-        AFP_CLASS,
-        AFP_T,
         SYNTH_DOC_LIMIT,
         extract_audio_fingerprint,
         synth_audio_fp_media,
@@ -2327,55 +2217,8 @@ def stream_audio_fp_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _video_admission_oracle() -> str:
-    from mapreduce511_spark.multimodal import (
-        DHASH_MIX,
-        VID_CLASS,
-        VID_DOC_LIMIT,
-        VID_FOREIGN,
-        VID_FRAMES,
-        VID_KEY_STRIDE,
-    )
-
     return f"""
-    WITH vid AS (
-        SELECT doc_id, doc_id // {VID_CLASS} AS base,
-               doc_id % {VID_CLASS} AS v
-        FROM documents WHERE doc_id < {VID_DOC_LIMIT}
-    ), fk AS (
-        SELECT doc_id, base * {VID_KEY_STRIDE} + os.o AS key
-        FROM vid, (SELECT unnest(generate_series(0, {VID_FRAMES - 1})) AS o) os
-        WHERE v IN (0, 1) OR os.o >= 1
-        UNION ALL
-        SELECT doc_id, base * {VID_KEY_STRIDE} + {VID_FOREIGN}
-        FROM vid WHERE v = 3
-    ), keys AS (
-        SELECT DISTINCT key FROM fk
-    ), grid AS (
-        SELECT key, cx.g AS cx, cy.g AS cy
-        FROM keys,
-             (SELECT unnest(generate_series(0, 8)) AS g) cx,
-             (SELECT unnest(generate_series(0, 7)) AS g) cy
-    ), cells AS (
-        SELECT key, cx, cy,
-               ((key + 1) * (cx + 9 * cy + 1) * {DHASH_MIX}
-                + key * (cx * cx + 3 * cy * cy)) % 256 AS c
-        FROM grid
-    ), bits AS (
-        SELECT a.key, a.cy, a.cx,
-               CASE WHEN b.c > a.c THEN 1 ELSE 0 END AS bit
-        FROM cells a JOIN cells b
-          ON a.key = b.key AND a.cy = b.cy AND b.cx = a.cx + 1
-        WHERE a.cx < 8
-    ), fh AS (
-        SELECT key,
-               CAST(sum(CASE WHEN cy < 4
-                    THEN bit * (CAST(1 AS BIGINT) << (cy * 8 + cx))
-                    ELSE 0 END) AS BIGINT) AS h_lo,
-               CAST(sum(CASE WHEN cy >= 4
-                    THEN bit * (CAST(1 AS BIGINT) << ((cy - 4) * 8 + cx))
-                    ELSE 0 END) AS BIGINT) AS h_hi
-        FROM bits GROUP BY key
-    ), sig AS (
+    WITH {video_ctes()}, sig AS (
         SELECT DISTINCT fk.doc_id, fh.h_lo, fh.h_hi
         FROM fk JOIN fh ON fk.key = fh.key
     ), idx AS (
@@ -2426,7 +2269,6 @@ def stream_video_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference basis: extension tier — streaming x multimodal x dedup
     composed (SURVEY.md §2.9 / extensions)."""
     from mapreduce511_spark.multimodal import (
-        VID_CLASS,
         VID_DOC_LIMIT,
         extract_video_frame_hashes,
         synth_video_media,

@@ -43,9 +43,8 @@ from mapreduce511_spark.operators.suffix_array import (
     repeated_phrases,
 )
 from mapreduce511_spark.queries import register
+from mapreduce511_spark.queries.oracle_sql import _SQL_TOKENS
 from mapreduce511_spark.sources.tables import load_table
-
-_SQL_TOKENS = "list_filter(string_split_regex(text, '\\s+'), t -> t <> '')"
 
 # The suffix array is the most expensive artifact in the repo, so the
 # finished (positions, sa) is also persisted as a content-fingerprinted
@@ -210,6 +209,37 @@ def _sfx_pairs(w: int) -> str:
 """
 
 
+# Repeated spans of >= 8 tokens (12-token LCP windows): every position
+# opening one gets its longest span end, and overlapping spans of a doc
+# are numbered into groups: grouped(doc_id, off, e, g)
+_SFX_SPANS = f"""{_SFX_BASE}, {_sfx_pairs(12)},
+    per_pos AS (
+        SELECT p, max(lcp) AS m
+        FROM (
+            SELECT pos AS p, lcp FROM lcps
+            UNION ALL
+            SELECT pos_b AS p, lcp FROM lcps
+        )
+        GROUP BY p
+        HAVING max(lcp) >= 8
+    ), starts AS (
+        SELECT n.doc_id, n.off, n.off + per_pos.m AS e
+        FROM per_pos JOIN numbered n ON n.pos_id = per_pos.p
+    ), flagged AS (
+        SELECT doc_id, off, e,
+               CASE WHEN off > coalesce(max(e) OVER (
+                        PARTITION BY doc_id ORDER BY off
+                        ROWS BETWEEN UNBOUNDED PRECEDING
+                                 AND 1 PRECEDING), -1)
+                    THEN 1 ELSE 0 END AS newg
+        FROM starts
+    ), grouped AS (
+        SELECT doc_id, off, e,
+               sum(newg) OVER (PARTITION BY doc_id ORDER BY off
+                               ROWS UNBOUNDED PRECEDING) AS g
+        FROM flagged
+    )"""
+
 @register(
     "suffix_array_census",
     oracle=f"""
@@ -272,33 +302,7 @@ def suffix_repeated_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "exact_duplicate_span_census",
     oracle=f"""
-    WITH {_SFX_BASE}, {_sfx_pairs(12)},
-    per_pos AS (
-        SELECT p, max(lcp) AS m
-        FROM (
-            SELECT pos AS p, lcp FROM lcps
-            UNION ALL
-            SELECT pos_b AS p, lcp FROM lcps
-        )
-        GROUP BY p
-        HAVING max(lcp) >= 8
-    ), starts AS (
-        SELECT n.doc_id, n.off, n.off + per_pos.m AS e
-        FROM per_pos JOIN numbered n ON n.pos_id = per_pos.p
-    ), flagged AS (
-        SELECT doc_id, off, e,
-               CASE WHEN off > coalesce(max(e) OVER (
-                        PARTITION BY doc_id ORDER BY off
-                        ROWS BETWEEN UNBOUNDED PRECEDING
-                                 AND 1 PRECEDING), -1)
-                    THEN 1 ELSE 0 END AS newg
-        FROM starts
-    ), grouped AS (
-        SELECT doc_id, off, e,
-               sum(newg) OVER (PARTITION BY doc_id ORDER BY off
-                               ROWS UNBOUNDED PRECEDING) AS g
-        FROM flagged
-    ), islands AS (
+    WITH {_SFX_SPANS}, islands AS (
         SELECT doc_id, g, max(e) - min(off) AS cov
         FROM grouped GROUP BY doc_id, g
     ), lens AS (
@@ -389,33 +393,7 @@ def _repeat_islands(positions: DataFrame, al: DataFrame) -> DataFrame:
 @register(
     "exact_duplicate_span_removal",
     oracle=f"""
-    WITH {_SFX_BASE}, {_sfx_pairs(12)},
-    per_pos AS (
-        SELECT p, max(lcp) AS m
-        FROM (
-            SELECT pos AS p, lcp FROM lcps
-            UNION ALL
-            SELECT pos_b AS p, lcp FROM lcps
-        )
-        GROUP BY p
-        HAVING max(lcp) >= 8
-    ), starts AS (
-        SELECT n.doc_id, n.off, n.off + per_pos.m AS e
-        FROM per_pos JOIN numbered n ON n.pos_id = per_pos.p
-    ), flagged AS (
-        SELECT doc_id, off, e,
-               CASE WHEN off > coalesce(max(e) OVER (
-                        PARTITION BY doc_id ORDER BY off
-                        ROWS BETWEEN UNBOUNDED PRECEDING
-                                 AND 1 PRECEDING), -1)
-                    THEN 1 ELSE 0 END AS newg
-        FROM starts
-    ), grouped AS (
-        SELECT doc_id, off, e,
-               sum(newg) OVER (PARTITION BY doc_id ORDER BY off
-                               ROWS UNBOUNDED PRECEDING) AS g
-        FROM flagged
-    ), islands AS (
+    WITH {_SFX_SPANS}, islands AS (
         SELECT doc_id, g, min(off) AS s, max(e) AS e
         FROM grouped GROUP BY doc_id, g
     ), lens AS (

@@ -14,11 +14,8 @@ from mapreduce511_spark.functions.text import normalize_text, tokenize, word_ngr
 from mapreduce511_spark.memo import session_memo
 from mapreduce511_spark.operators.wordcount import word_count
 from mapreduce511_spark.queries import norm0, register
+from mapreduce511_spark.queries.oracle_sql import _SQL_TOKEN_POS, _SQL_TOKENS
 from mapreduce511_spark.sources.tables import load_table, spread_scan
-
-# DuckDB-side tokenization identical to tokenize(): whitespace split,
-# empties dropped.
-_SQL_TOKENS = "list_filter(string_split_regex(text, '\\s+'), t -> t <> '')"
 
 
 @register(
@@ -522,12 +519,7 @@ def approx_distinct_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "repetition_score",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, {_SQL_TOKENS} AS tokens FROM documents
-    ), pos AS (
-        SELECT doc_id, unnest(tokens) AS w, unnest(range(len(tokens))) AS p
-        FROM toks
-    ), tri AS (
+    WITH {_SQL_TOKEN_POS}, tri AS (
         SELECT a.doc_id, a.w || ' ' || b.w || ' ' || c.w AS g
         FROM pos a
         JOIN pos b ON a.doc_id = b.doc_id AND b.p = a.p + 1
@@ -589,12 +581,7 @@ _CONTAMINATION_PROBES = (
 @register(
     "contamination_screen",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, {_SQL_TOKENS} AS tokens FROM documents
-    ), pos AS (
-        SELECT doc_id, unnest(tokens) AS w, unnest(range(len(tokens))) AS p
-        FROM toks
-    ), tri AS (
+    WITH {_SQL_TOKEN_POS}, tri AS (
         SELECT DISTINCT a.doc_id, a.w || ' ' || b.w || ' ' || c.w AS g
         FROM pos a
         JOIN pos b ON a.doc_id = b.doc_id AND b.p = a.p + 1
@@ -667,7 +654,7 @@ def deterministic_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pipeline_clean_corpus",
-    oracle="""
+    oracle=f"""
     WITH survivors AS (
         SELECT doc_id, lang, text
         FROM (
@@ -681,7 +668,7 @@ def deterministic_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE rn = 1
     ), gated AS (
         SELECT doc_id, lang,
-               len(list_filter(string_split_regex(text, '\\s+'), t -> t <> '')) AS n_tok
+               len({_SQL_TOKENS}) AS n_tok
         FROM survivors
     ), assigned AS (
         SELECT lang, n_tok,
@@ -874,6 +861,41 @@ def repeated_span_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Removal census over rem(doc_id, p, pe), the removed token ranges:
+# overlapping ranges of a doc merge into islands, and the SELECT list
+# reports removed occurrences and tokens against the caller's token
+# list t(doc_id, tokens), which the caller joins after it
+_SPAN_REMOVAL = """marked AS (
+        SELECT doc_id, p, pe,
+               CASE WHEN max(pe) OVER (PARTITION BY doc_id ORDER BY p
+                        ROWS BETWEEN UNBOUNDED PRECEDING
+                        AND 1 PRECEDING) >= p
+                    THEN 0 ELSE 1 END AS new_island
+        FROM rem
+    ), islands AS (
+        SELECT doc_id, p, pe,
+               sum(new_island) OVER (PARTITION BY doc_id ORDER BY p
+                   ROWS BETWEEN UNBOUNDED PRECEDING
+                   AND CURRENT ROW) AS island
+        FROM marked
+    ), per_doc AS (
+        SELECT doc_id,
+               CAST(sum(n_occ) AS BIGINT) AS removed_occurrences,
+               CAST(sum(width) AS BIGINT) AS tokens_removed
+        FROM (
+            SELECT doc_id, island,
+                   count(*) AS n_occ,
+                   max(pe) - min(p) + 1 AS width
+            FROM islands GROUP BY doc_id, island
+        ) GROUP BY doc_id
+    )
+    SELECT d.doc_id,
+           CAST(len(t.tokens) AS BIGINT) AS n_tokens,
+           d.removed_occurrences,
+           d.tokens_removed,
+           CAST(len(t.tokens) - d.tokens_removed AS BIGINT) AS tokens_kept"""
+
+
 @register(
     "duplicate_span_removal",
     oracle=f"""
@@ -903,35 +925,7 @@ def repeated_span_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT s.doc_id, s.p, s.p + 7 AS pe
         FROM spans s JOIN dup d ON s.h = d.h
         WHERE s.doc_id <> d.keeper
-    ), marked AS (
-        SELECT doc_id, p, pe,
-               CASE WHEN max(pe) OVER (PARTITION BY doc_id ORDER BY p
-                        ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND 1 PRECEDING) >= p
-                    THEN 0 ELSE 1 END AS new_island
-        FROM rem
-    ), islands AS (
-        SELECT doc_id, p, pe,
-               sum(new_island) OVER (PARTITION BY doc_id ORDER BY p
-                   ROWS BETWEEN UNBOUNDED PRECEDING
-                   AND CURRENT ROW) AS island
-        FROM marked
-    ), per_doc AS (
-        SELECT doc_id,
-               CAST(sum(n_occ) AS BIGINT) AS removed_occurrences,
-               CAST(sum(width) AS BIGINT) AS tokens_removed
-        FROM (
-            SELECT doc_id, island,
-                   count(*) AS n_occ,
-                   max(pe) - min(p) + 1 AS width
-            FROM islands GROUP BY doc_id, island
-        ) GROUP BY doc_id
-    )
-    SELECT d.doc_id,
-           CAST(len(t.tokens) AS BIGINT) AS n_tokens,
-           d.removed_occurrences,
-           d.tokens_removed,
-           CAST(len(t.tokens) - d.tokens_removed AS BIGINT) AS tokens_kept
+    ), {_SPAN_REMOVAL}
     FROM per_doc d JOIN toklist t ON d.doc_id = t.doc_id
     """,
 )
@@ -1473,7 +1467,7 @@ def unigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH h AS (
         SELECT doc_id,
-               len(list_filter(string_split_regex(text, '\\s+'), t -> t <> ''))
+               len({_SQL_TOKENS})
                    AS n_tok,
                CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
                     AS BIGINT) % 16 AS shard
@@ -2754,12 +2748,7 @@ def bigram_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "collocation_pmi_top20",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, {_SQL_TOKENS} AS tokens FROM documents
-    ), pos AS (
-        SELECT doc_id, unnest(tokens) AS w, unnest(range(len(tokens))) AS p
-        FROM toks
-    ), uni AS (
+    WITH {_SQL_TOKEN_POS}, uni AS (
         SELECT w, count(*) AS c FROM pos GROUP BY w
     ), ut AS (SELECT sum(c) AS t FROM uni),
     allbi AS (
@@ -3201,10 +3190,11 @@ def _build_heldout_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-@register(
-    "heldout_bigram_ppl",
-    oracle=f"""
-    WITH split AS (
+# Bigrams big(lang, b, w1, w2) with the doc's md5 bucket b (< 80
+# train, 80-89 validation) and the train counts bfreq(lang, w1, w2,
+# bc); the per-lang perplexity of scored(lang, nll_micro). Shared by
+# the add-one and Kneser-Ney held-out models
+_HELDOUT_BIGRAMS = f"""split AS (
         SELECT doc_id, lang, {_SQL_TOKENS} AS tokens,
                CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
                     AS BIGINT) % 100 AS b
@@ -3220,7 +3210,22 @@ def _build_heldout_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), bfreq AS (
         SELECT lang, w1, w2, count(*) AS bc
         FROM big WHERE b < 80 GROUP BY lang, w1, w2
-    ), ufreq AS (
+    )"""
+_PPL_BY_LANG = """
+    SELECT lang,
+           count(*) AS n_val_bigrams,
+           round(CAST(sum(nll_micro) AS DOUBLE)
+                 / (1000000.0 * count(*)), 4) AS cross_entropy,
+           round(exp(CAST(sum(nll_micro) AS DOUBLE)
+                 / (1000000.0 * count(*))), 2) AS perplexity
+    FROM scored GROUP BY lang
+    """
+
+
+@register(
+    "heldout_bigram_ppl",
+    oracle=f"""
+    WITH {_HELDOUT_BIGRAMS}, ufreq AS (
         SELECT lang, w1, CAST(sum(bc) AS BIGINT) AS uc
         FROM bfreq GROUP BY lang, w1
     ), vocab AS (
@@ -3234,15 +3239,7 @@ def _build_heldout_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
           ON g.lang = f.lang AND g.w1 = f.w1 AND g.w2 = f.w2
         LEFT JOIN ufreq u ON g.lang = u.lang AND g.w1 = u.w1
         JOIN vocab vo ON g.lang = vo.lang
-    )
-    SELECT lang,
-           count(*) AS n_val_bigrams,
-           round(CAST(sum(nll_micro) AS DOUBLE)
-                 / (1000000.0 * count(*)), 4) AS cross_entropy,
-           round(exp(CAST(sum(nll_micro) AS DOUBLE)
-                 / (1000000.0 * count(*))), 2) AS perplexity
-    FROM scored GROUP BY lang
-    """,
+    ){_PPL_BY_LANG}""",
 )
 def heldout_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HELD-OUT perplexity per language: a Laplace-smoothed bigram LM
@@ -3311,23 +3308,7 @@ def heldout_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "heldout_kneser_ney_ppl",
     oracle=f"""
-    WITH split AS (
-        SELECT doc_id, lang, {_SQL_TOKENS} AS tokens,
-               CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                    AS BIGINT) % 100 AS b
-        FROM documents
-    ), pos AS (
-        SELECT doc_id, lang, b, unnest(tokens) AS w,
-               unnest(range(len(tokens))) AS p
-        FROM split
-    ), big AS (
-        SELECT a.lang, a.b, a.w AS w1, x.w AS w2
-        FROM pos a JOIN pos x
-          ON a.doc_id = x.doc_id AND x.p = a.p + 1
-    ), bfreq AS (
-        SELECT lang, w1, w2, count(*) AS bc
-        FROM big WHERE b < 80 GROUP BY lang, w1, w2
-    ), pref AS (
+    WITH {_HELDOUT_BIGRAMS}, pref AS (
         SELECT lang, w1, CAST(sum(bc) AS BIGINT) AS uc,
                count(*) AS f1
         FROM bfreq GROUP BY lang, w1
@@ -3353,15 +3334,7 @@ def heldout_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
         LEFT JOIN pref p ON g.lang = p.lang AND g.w1 = p.w1
         LEFT JOIN cont c ON g.lang = c.lang AND g.w2 = c.w2
         JOIN tot t ON g.lang = t.lang
-    )
-    SELECT lang,
-           count(*) AS n_val_bigrams,
-           round(CAST(sum(nll_micro) AS DOUBLE)
-                 / (1000000.0 * count(*)), 4) AS cross_entropy,
-           round(exp(CAST(sum(nll_micro) AS DOUBLE)
-                 / (1000000.0 * count(*))), 2) AS perplexity
-    FROM scored GROUP BY lang
-    """,
+    ){_PPL_BY_LANG}""",
 )
 def heldout_kneser_ney_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated Kneser–Ney bigram perplexity on the held-out shard
@@ -3488,19 +3461,15 @@ def doc_quality_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "quality_classifier_score",
-    oracle=f"""
-    WITH feat AS (
-        SELECT doc_id, lang,
-               len({_SQL_TOKENS}) AS n_tokens,
+# Quality-classifier features of each document (n_tokens, n_glyph,
+# n_upper, n_digit) and their fixed linear logit in milli units: the
+# scorer, its calibration census and the curriculum manifest share both
+_QUALITY_FEATURES = f"""len({_SQL_TOKENS}) AS n_tokens,
                length(regexp_replace(text, '\\s', '', 'g'))    AS n_glyph,
                length(regexp_replace(text, '[^A-Z]', '', 'g')) AS n_upper,
                length(regexp_replace(text, '[^0-9]', '', 'g')) AS n_digit
-        FROM documents
-    ), scored AS (
-        SELECT lang,
-               5 * least(n_tokens, 300)
+        FROM documents"""
+_QUALITY_LOGIT = """5 * least(n_tokens, 300)
                - 2 * (CASE WHEN n_glyph > 0
                            THEN (1000 * n_upper) // n_glyph ELSE 1000 END)
                - 3 * (CASE WHEN n_glyph > 0
@@ -3509,7 +3478,18 @@ def doc_quality_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                         AND n_glyph >= 3 * n_tokens
                         AND n_glyph <= 12 * n_tokens
                        THEN 500 ELSE -500 END)
-               - 800 AS logit_milli
+               - 800 AS logit_milli"""
+
+
+@register(
+    "quality_classifier_score",
+    oracle=f"""
+    WITH feat AS (
+        SELECT doc_id, lang,
+               {_QUALITY_FEATURES}
+    ), scored AS (
+        SELECT lang,
+               {_QUALITY_LOGIT}
         FROM feat
     )
     SELECT lang,
@@ -3588,22 +3568,9 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     "quality_calibration_census",
     oracle=f"""
     WITH feat AS (
-        SELECT len({_SQL_TOKENS}) AS n_tokens,
-               length(regexp_replace(text, '\\s', '', 'g'))    AS n_glyph,
-               length(regexp_replace(text, '[^A-Z]', '', 'g')) AS n_upper,
-               length(regexp_replace(text, '[^0-9]', '', 'g')) AS n_digit
-        FROM documents
+        SELECT {_QUALITY_FEATURES}
     ), scored AS (
-        SELECT 5 * least(n_tokens, 300)
-               - 2 * (CASE WHEN n_glyph > 0
-                           THEN (1000 * n_upper) // n_glyph ELSE 1000 END)
-               - 3 * (CASE WHEN n_glyph > 0
-                           THEN (1000 * n_digit) // n_glyph ELSE 1000 END)
-               + (CASE WHEN n_tokens > 0
-                        AND n_glyph >= 3 * n_tokens
-                        AND n_glyph <= 12 * n_tokens
-                       THEN 500 ELSE -500 END)
-               - 800 AS logit_milli,
+        SELECT {_QUALITY_LOGIT},
                CASE WHEN n_tokens >= 60
                      AND n_tokens > 0
                      AND abs(n_glyph * 1.0 / n_tokens - 4.5) <= 0.2
@@ -4007,23 +3974,10 @@ def mixture_epochs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH feat AS (
         SELECT doc_id,
-               len({_SQL_TOKENS}) AS n_tokens,
-               length(regexp_replace(text, '\\s', '', 'g'))    AS n_glyph,
-               length(regexp_replace(text, '[^A-Z]', '', 'g')) AS n_upper,
-               length(regexp_replace(text, '[^0-9]', '', 'g')) AS n_digit
-        FROM documents
+               {_QUALITY_FEATURES}
     ), scored AS (
         SELECT doc_id,
-               5 * least(n_tokens, 300)
-               - 2 * (CASE WHEN n_glyph > 0
-                           THEN (1000 * n_upper) // n_glyph ELSE 1000 END)
-               - 3 * (CASE WHEN n_glyph > 0
-                           THEN (1000 * n_digit) // n_glyph ELSE 1000 END)
-               + (CASE WHEN n_tokens > 0
-                        AND n_glyph >= 3 * n_tokens
-                        AND n_glyph <= 12 * n_tokens
-                       THEN 500 ELSE -500 END)
-               - 800 AS logit_milli
+               {_QUALITY_LOGIT}
         FROM feat
     ), ranked AS (
         SELECT doc_id, logit_milli,
@@ -4195,12 +4149,12 @@ _DECON_N = 8  # n-gram width (PaLM/Llama-class decontamination uses 8-13)
 _DECON_EVAL_BUCKETS = 10  # md5 bucket 0 of 10 = the held-out eval split
 
 
-@register(
-    "decontamination_census",
-    oracle=f"""
-    WITH toks AS (
+# Token lists with their doc's eval bucket b (b = 0 is the held-out
+# eval split), and pos(doc_id, b, i, tokens): the 1-based start i of
+# every _DECON_N-gram
+_DECON_TOKS = f"""toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\\s+'), t -> t <> '')
+               {_SQL_TOKENS}
                    AS tokens,
                CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
                     AS BIGINT) % {_DECON_EVAL_BUCKETS} AS b
@@ -4210,7 +4164,13 @@ _DECON_EVAL_BUCKETS = 10  # md5 bucket 0 of 10 = the held-out eval split
                unnest(range(1, len(tokens) - {_DECON_N - 2})) AS i,
                tokens
         FROM toks WHERE len(tokens) >= {_DECON_N}
-    ), g AS (
+    )"""
+
+
+@register(
+    "decontamination_census",
+    oracle=f"""
+    WITH {_DECON_TOKS}, g AS (
         SELECT DISTINCT doc_id, b,
                array_to_string(tokens[i : i + {_DECON_N - 1}], ' ') AS g
         FROM pos
@@ -4317,19 +4277,7 @@ def decontamination_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "decontamination_span_removal",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(text, '\\s+'), t -> t <> '')
-                   AS tokens,
-               CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                    AS BIGINT) % {_DECON_EVAL_BUCKETS} AS b
-        FROM documents
-    ), pos AS (
-        SELECT doc_id, b,
-               unnest(range(1, len(tokens) - {_DECON_N - 2})) AS i,
-               tokens
-        FROM toks WHERE len(tokens) >= {_DECON_N}
-    ), g AS (
+    WITH {_DECON_TOKS}, g AS (
         SELECT doc_id, b, i,
                array_to_string(tokens[i : i + {_DECON_N - 1}], ' ') AS g
         FROM pos
@@ -4339,35 +4287,7 @@ def decontamination_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT g.doc_id, g.i AS p, g.i + {_DECON_N - 1} AS pe
         FROM g JOIN ev USING (g)
         WHERE g.b <> 0
-    ), marked AS (
-        SELECT doc_id, p, pe,
-               CASE WHEN max(pe) OVER (PARTITION BY doc_id ORDER BY p
-                        ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND 1 PRECEDING) >= p
-                    THEN 0 ELSE 1 END AS new_island
-        FROM rem
-    ), islands AS (
-        SELECT doc_id, p, pe,
-               sum(new_island) OVER (PARTITION BY doc_id ORDER BY p
-                   ROWS BETWEEN UNBOUNDED PRECEDING
-                   AND CURRENT ROW) AS island
-        FROM marked
-    ), per_doc AS (
-        SELECT doc_id,
-               CAST(sum(n_occ) AS BIGINT) AS removed_occurrences,
-               CAST(sum(width) AS BIGINT) AS tokens_removed
-        FROM (
-            SELECT doc_id, island,
-                   count(*) AS n_occ,
-                   max(pe) - min(p) + 1 AS width
-            FROM islands GROUP BY doc_id, island
-        ) GROUP BY doc_id
-    )
-    SELECT d.doc_id,
-           CAST(len(t.tokens) AS BIGINT) AS n_tokens,
-           d.removed_occurrences,
-           d.tokens_removed,
-           CAST(len(t.tokens) - d.tokens_removed AS BIGINT) AS tokens_kept
+    ), {_SPAN_REMOVAL}
     FROM per_doc d JOIN toks t ON d.doc_id = t.doc_id
     """,
 )
@@ -5083,6 +5003,19 @@ _SQL_HEAPS_GRID = f"""grid AS (
         SELECT CAST(nd AS BIGINT) FROM mx
     )"""
 
+# Heaps points per (lang, cutoff) of that grid: vocab_at.v distinct
+# tokens first seen below the cutoff, tokens_at.t running tokens, from
+# firsts(lang, token, first_doc) and lens(lang, doc_id, ts)
+_SQL_HEAPS_POINTS = """vocab_at AS (
+        SELECT f.lang, g.cutoff, count(*) AS v
+        FROM firsts f JOIN grid g ON f.first_doc < g.cutoff
+        GROUP BY f.lang, g.cutoff
+    ), tokens_at AS (
+        SELECT l.lang, g.cutoff, sum(len(l.ts)) AS t
+        FROM lens l JOIN grid g ON l.doc_id < g.cutoff
+        GROUP BY l.lang, g.cutoff
+    )"""
+
 # Token variance-to-mean ratio over per-document counts (Church &
 # Gale burstiness) from (df, sc, scc) integer moments — shared by
 # ``token_burstiness_census`` and ``corpus_health_census`` on both
@@ -5347,15 +5280,7 @@ def token_burstiness_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT lang, token, min(doc_id) AS first_doc
         FROM (SELECT lang, doc_id, unnest(ts) AS token FROM lens)
         GROUP BY lang, token
-    ), vocab_at AS (
-        SELECT f.lang, g.cutoff, count(*) AS v
-        FROM firsts f JOIN grid g ON f.first_doc < g.cutoff
-        GROUP BY f.lang, g.cutoff
-    ), tokens_at AS (
-        SELECT l.lang, g.cutoff, sum(len(l.ts)) AS t
-        FROM lens l JOIN grid g ON l.doc_id < g.cutoff
-        GROUP BY l.lang, g.cutoff
-    ), xy AS (
+    ), {_SQL_HEAPS_POINTS}, xy AS (
         SELECT v.lang, ln(t.t) AS x, ln(v.v) AS y
         FROM vocab_at v JOIN tokens_at t USING (lang, cutoff)
     ), {_sql_ols_tail("n_points", "heaps_beta", "heaps_logk")}
@@ -5466,15 +5391,7 @@ def _heaps_xy_from(spark, firsts, doclens):
     ), {_SQL_HEAPS_GRID}, firsts AS (
         SELECT lang, token, min(doc_id) AS first_doc
         FROM toks GROUP BY lang, token
-    ), vocab_at AS (
-        SELECT f.lang, g.cutoff, count(*) AS v
-        FROM firsts f JOIN grid g ON f.first_doc < g.cutoff
-        GROUP BY f.lang, g.cutoff
-    ), tokens_at AS (
-        SELECT l.lang, g.cutoff, sum(len(l.ts)) AS t
-        FROM lens l JOIN grid g ON l.doc_id < g.cutoff
-        GROUP BY l.lang, g.cutoff
-    ), hxy AS (
+    ), {_SQL_HEAPS_POINTS}, hxy AS (
         SELECT v.lang, ln(t.t) AS x, ln(v.v) AS y
         FROM vocab_at v JOIN tokens_at t USING (lang, cutoff)
     ), {_sql_ols_cte("hxy", "hfit", "h_points", "heaps_beta", "heaps_logk")},

@@ -372,3 +372,37 @@ def test_mkdtemp_only_in_the_two_dir_owners():
         ("mapreduce511_spark/memo.py", "owned_tmpdir"),
         ("mapreduce511_spark/queries/streaming_queries.py", "_scratch_run"),
     }
+
+
+# Text that states a closed form (tokenizer, dHash cell, video frame
+# cell, JPEG block pixel) or defines a shared oracle constant.
+_ORACLE_ANCHORS = (
+    "string_split_regex(text",
+    "THEN (((base + 1) * (cx + 9 * cy + 1) * {DHASH_MIX}",
+    "((key + 1) * (cx + 9 * cy + 1) * {DHASH_MIX}",
+    "(bi % wb) * {JPEG_PX_BX}",
+    "_SQL_TOKENS =",
+    "_JACCARD_T =",
+)
+
+
+def test_oracle_closed_forms_are_written_once():
+    """Each oracle closed form is written on exactly one source line
+    under ``queries/`` (``queries/oracle_sql.py`` holds the forms more
+    than one module states), so no copy can drift from the others. The
+    Python generators in ``multimodal/__init__.py`` restate the fixture
+    formulas on purpose — they are the independent spec the oracles are
+    checked against — and sit outside the scanned tree."""
+    from pathlib import Path
+
+    from tests.conftest import REPO
+
+    hits = {a: [] for a in _ORACLE_ANCHORS}
+    for f in sorted((Path(REPO) / "mapreduce511_spark" / "queries").glob("*.py")):
+        for n, line in enumerate(f.read_text().splitlines(), 1):
+            for a in _ORACLE_ANCHORS:
+                if a in line:
+                    hits[a].append(f"{f.name}:{n}")
+    assert {a: len(h) for a, h in hits.items()} == dict.fromkeys(
+        _ORACLE_ANCHORS, 1
+    ), hits

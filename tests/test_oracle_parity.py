@@ -7,7 +7,9 @@ sf0.01 dir to mirror the driver exactly.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import re
 
 import pytest
 
@@ -28,6 +30,24 @@ def _suite():
 def test_every_oracle_has_query():
     q, o = _suite()
     assert set(o) <= set(q)
+
+
+def test_oracle_text_is_pinned():
+    """The registered oracle text, whitespace-folded, hashes to a fixed
+    digest: refactoring how an oracle is assembled (shared forms in
+    ``queries/oracle_sql.py``, module constants) must not change a
+    single character of what DuckDB runs. A change that alters an
+    oracle on purpose updates the count and digest here and says why
+    in CHANGES.md."""
+    fold = lambda s: re.sub(r"\s+", " ", s).strip()  # noqa: E731
+    _, o = _suite()
+    h = hashlib.sha256()
+    for name in sorted(o):
+        h.update(name.encode() + b"\0" + fold(o[name]).encode() + b"\0")
+    assert len(o) == 288
+    assert h.hexdigest() == (
+        "4e757d6be4decfcef3fd7a8cc74c3d19f4b8def65b8dcf8373bb9f23b7311d29"
+    )
 
 
 @pytest.mark.parametrize("name", sorted(_suite()[1]))
