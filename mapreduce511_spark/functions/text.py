@@ -8,8 +8,12 @@ job_output.log:97-98``; invoked via ``/root/reference/wheel/
 run_mr_real.sh:53-57``.
 
 Everything here returns Column expressions built from
-``pyspark.sql.functions`` so the hot path stays inside whole-stage
-codegen — no Python UDFs.
+``pyspark.sql.functions`` — no Python UDFs. Spark 4.1.2 interprets
+every higher-order lambda (``filter``/``transform``/``zip_with`` are
+``CodegenFallback``), so ``tokenize`` is compiled ``split`` +
+``array_remove``; the per-token fallbacks left are ``word_ngrams``
+(``zip_with`` for n = 2, ``transform`` for n >= 3), ``char_ngrams`` and
+``language_id``'s ``F.transform(tokenize("text"), F.lower)``.
 """
 
 from __future__ import annotations
@@ -19,9 +23,10 @@ from pyspark.sql import functions as F
 
 
 def tokenize(text: Column | str) -> Column:
-    """Whitespace tokens, empties dropped (StringTokenizer semantics)."""
+    """Runs between StringTokenizer's delimiters, as non-null ``array<string>``
+    (``regexp_extract_all``'s nullable elements cost joins their exchange reuse)."""
     col = F.col(text) if isinstance(text, str) else text
-    return F.filter(F.split(col, r"\s+"), lambda t: t != F.lit(""))
+    return F.array_remove(F.split(col, r"[ \t\n\r\f]+"), "")
 
 
 def normalize_text(text: Column | str) -> Column:

@@ -4,7 +4,7 @@ Reference pipeline (``/root/reference/wheel/run_mr_real.sh:53-57``):
 map(tokenize → (word,1)) → combine(partial sum) → shuffle by
 hash(word) → sort-merge → reduce(final sum) → sorted TSV.
 
-Spark expression: ``explode(tokenize) → groupBy(word).count()``.
+Spark expression: ``explode(tokenize = array_remove(split)) → groupBy(word).count()``.
 Catalyst plans HashAggregate(partial) → Exchange → HashAggregate(final)
 — the combiner and shuffle come for free (SURVEY.md §4.2), and AQE
 coalesces the post-shuffle partitions. At 100 TB the explode inflates

@@ -406,3 +406,39 @@ def test_oracle_closed_forms_are_written_once():
     assert {a: len(h) for a, h in hits.items()} == dict.fromkeys(
         _ORACLE_ANCHORS, 1
     ), hits
+
+
+def test_tokenizer_is_written_once():
+    """``functions/text.py::tokenize`` is the package's one tokenizer: a
+    compiled ``split`` + ``array_remove`` over StringTokenizer's delimiters.
+    Elsewhere under ``mapreduce511_spark/`` no ``split`` call may take a
+    whitespace-class pattern and no string may restate the delimiter class,
+    so a hand-inlined (and interpreted) split-then-filter cannot return."""
+    import ast
+    import re
+    from pathlib import Path
+
+    from tests.conftest import REPO
+
+    # a \s escape or a bracket class holding whitespace; splitting an
+    # array_join-ed phrase on its one " " separator is not tokenizing
+    ws_pattern = re.compile(r"\\s|\[[^]]*\s")
+    delims = (" \\t\\n\\r\\f", " \t\n\r\f")
+    found = []
+    pkg = Path(REPO) / "mapreduce511_spark"
+    for f in sorted(pkg.rglob("*.py")):
+        rel = f.relative_to(REPO).as_posix()
+        if rel == "mapreduce511_spark/functions/text.py":
+            continue
+        for node in ast.walk(ast.parse(f.read_text())):
+            if isinstance(node, ast.Call):
+                name = getattr(node.func, "attr", getattr(node.func, "id", None))
+                args = node.args[1:2]
+                args += [k.value for k in node.keywords if k.arg == "pattern"]
+                pat = args[0] if name == "split" and args else None
+                if isinstance(pat, ast.Constant) and ws_pattern.search(f"{pat.value}"):
+                    found.append((rel, node.lineno, "split"))
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                if any(d in node.value for d in delims):
+                    found.append((rel, node.lineno, "delimiter class"))
+    assert found == []

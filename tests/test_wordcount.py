@@ -1,8 +1,11 @@
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from mapreduce511_spark.functions.text import tokenize
 from mapreduce511_spark.operators.wordcount import word_count
 from mapreduce511_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
@@ -11,8 +14,6 @@ from tests.conftest import SF_SMOKE
 def test_wordcount_token_invariant(spark):
     """FIXTURES.md F1: sum(cnt) == total token count."""
     docs = load_table(spark, SF_SMOKE, "documents")
-    from mapreduce511_spark.functions.text import tokenize
-
     total_tokens = docs.select(
         F.sum(F.size(tokenize("text"))).alias("n")
     ).collect()[0]["n"]
@@ -39,3 +40,43 @@ def test_wordcount_sorted_sink(spark):
     out = word_count(docs, sort=True).collect()
     assert [r["word"] for r in out] == ["a", "b", "c"]
     assert [r["cnt"] for r in out] == [2, 1, 1]
+
+
+# StringTokenizer's delimiters are " \t\n\r\f", as are RE2's (the
+# DuckDB oracle's) \s; Java's \s adds U+000B, and U+00A0 is in none.
+_DELIM_CASES = ["a\x0bb c", "x\ty\nz\rw\fv", "g\xa0h i  j", "", "   ", None]
+
+
+def test_tokenize_delimiters_match_oracle(spark):
+    """``tokenize`` splits on exactly the oracle tokenizer's delimiters,
+    and ``word_count`` keeps F1 (sum(cnt) == token count) on those rows."""
+    import duckdb
+
+    from mapreduce511_spark.queries.oracle_sql import _SQL_TOKENS
+
+    rows = list(enumerate(_DELIM_CASES))
+    docs = spark.createDataFrame(rows, "i int, text string")
+    ordered = docs.orderBy("i").select(tokenize("text").alias("t"))
+    got = [r["t"] for r in ordered.collect()]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (i INTEGER, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    sql = f"SELECT {_SQL_TOKENS} FROM documents ORDER BY i"
+    want = [r[0] for r in con.execute(sql).fetchall()]
+    assert got == want
+    counts = {r["word"]: r["cnt"] for r in word_count(docs).collect()}
+    assert counts == dict(Counter(w for t in want if t for w in t))
+    assert sum(counts.values()) == sum(len(t) for t in want if t) == 10
+
+
+def test_tokenize_plan_has_no_interpreted_lambda(spark):
+    """Higher-order-function lambdas are interpreted (CodegenFallback);
+    the tokenizer must stay compiled. Its elements stay non-nullable:
+    nullable tokens let Catalyst infer per-branch ``isnotnull`` filters
+    that break exchange reuse in self-joins over tokens."""
+    docs = spark.createDataFrame([Row(text="a b")])
+    tokens = docs.select(F.explode(tokenize("text")))
+    plan = tokens._jdf.queryExecution().optimizedPlan().toString()
+    assert "lambdafunction" not in plan.lower()
+    schema = docs.select(tokenize("text").alias("t")).schema
+    assert not schema["t"].dataType.containsNull
