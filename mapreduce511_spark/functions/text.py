@@ -22,16 +22,21 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
+# StringTokenizer's delimiters, which are also RE2's \s in the DuckDB
+# oracles; Java's \s adds U+000B.
+_DELIMS = r"[ \t\n\r\f]"
+
+
 def tokenize(text: Column | str) -> Column:
     """Runs between StringTokenizer's delimiters, as non-null ``array<string>``
     (``regexp_extract_all``'s nullable elements cost joins their exchange reuse)."""
     col = F.col(text) if isinstance(text, str) else text
-    return F.array_remove(F.split(col, r"[ \t\n\r\f]+"), "")
+    return F.array_remove(F.split(col, _DELIMS + "+"), "")
 
 
 def normalize_text(text: Column | str) -> Column:
     """Canonical form for exact-dup fingerprinting: lowercase,
-    collapse whitespace runs to single spaces, trim.
+    collapse runs of ``tokenize``'s delimiters to single spaces, trim.
 
     Collapse-then-trim (not trim-then-collapse): Spark's ``trim``
     strips only ' ', so a leading "\\r" would survive trimming, become
@@ -39,7 +44,14 @@ def normalize_text(text: Column | str) -> Column:
     non-idempotent (caught by hypothesis in tests/test_properties.py).
     """
     col = F.col(text) if isinstance(text, str) else text
-    return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
+    return F.trim(F.regexp_replace(F.lower(col), _DELIMS + "+", " "))
+
+
+def glyph_count(text: Column | str) -> Column:
+    """Characters that are not delimiters: the oracles'
+    ``length(regexp_replace(text, '\\s', '', 'g'))``."""
+    col = F.col(text) if isinstance(text, str) else text
+    return F.length(F.regexp_replace(col, _DELIMS, ""))
 
 
 def word_ngrams(tokens: Column, n: int) -> Column:

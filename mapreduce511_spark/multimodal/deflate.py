@@ -28,6 +28,8 @@ from __future__ import annotations
 
 from bisect import bisect_right
 
+from mapreduce511_spark.multimodal.bitio import LsbWriter
+
 # --- RFC 1951 §3.2.5 tables -------------------------------------------------
 
 # length code: (code, extra_bits, base) for match lengths 3..258
@@ -100,37 +102,6 @@ def _rev_bits(code: int, n: int) -> int:
         rev = (rev << 1) | (code & 1)
         code >>= 1
     return rev
-
-
-class _BitWriter:
-    """DEFLATE bit packing: data element bits go LSB-first; Huffman
-    codes go MSB-first (RFC 1951 §3.1.1) — ``huff`` reverses."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.bitbuf = 0
-        self.nbits = 0
-
-    def bits(self, value: int, n: int) -> None:
-        self.bitbuf |= (value & ((1 << n) - 1)) << self.nbits
-        self.nbits += n
-        while self.nbits >= 8:
-            self.out.append(self.bitbuf & 0xFF)
-            self.bitbuf >>= 8
-            self.nbits -= 8
-
-    def huff(self, code: int, n: int) -> None:
-        self.bits(_rev_bits(code, n), n)
-
-    def align(self) -> None:
-        if self.nbits:
-            self.out.append(self.bitbuf & 0xFF)
-            self.bitbuf = 0
-            self.nbits = 0
-
-    def getvalue(self) -> bytes:
-        self.align()
-        return bytes(self.out)
 
 
 def _lz77(data: bytes, max_chain: int = 64) -> list[tuple]:
@@ -242,36 +213,36 @@ def _rev_table(codes) -> dict:
     return {s: (_rev_bits(c, nb), nb) for s, (c, nb) in codes.items()}
 
 
-def _emit_tokens(w: _BitWriter, tokens: list[tuple],
+def _emit_tokens(w: LsbWriter, tokens: list[tuple],
                  rlit, rdst) -> None:
     """Emit the token stream under PRE-REVERSED (code, nbits) lookups.
 
     r12: the per-symbol MSB-first bit reversal is hoisted out of the
     loop — both code tables are pre-reversed and every symbol goes
-    through the plain LSB-first ``bits`` writer (identical bitstream:
-    huff(code, n) == bits(rev_bits(code, n), n)). r13 (ADVICE):
+    through the plain LSB-first ``write`` (a Huffman code is
+    ``write(_rev_bits(code, n), n)``). r13 (ADVICE):
     callers pass already-reversed tables, so the static §3.2.6 fixed
     tables are reversed ONCE at module init instead of per block
     (dynamic-Huffman tables legitimately stay per-block)."""
-    bits = w.bits
+    write = w.write
     for t in tokens:
         if t[0] == "lit":
             rev, nb = rlit[t[1]]
-            bits(rev, nb)
+            write(rev, nb)
         else:
             _, ln, dist = t
             lcode, lextra, lebits = _LENGTH_TABLE[ln]
             rev, nb = rlit[lcode]
-            bits(rev, nb)
+            write(rev, nb)
             if lextra:
-                bits(lebits, lextra)
+                write(lebits, lextra)
             dcode, dextra, debits = _dist_code(dist)
             rev, nb = rdst[dcode]
-            bits(rev, nb)
+            write(rev, nb)
             if dextra:
-                bits(debits, dextra)
+                write(debits, dextra)
     rev, nb = rlit[256]  # end of block
-    bits(rev, nb)
+    write(rev, nb)
 
 
 # static §3.2.6 code tables in the dict form _emit_tokens consumes,
@@ -284,9 +255,9 @@ _FIXED_RDST = _rev_table(_FIXED_DIST_CODES)
 
 def deflate_fixed(data: bytes) -> bytes:
     """One fixed-Huffman block (BTYPE=01) holding all of ``data``."""
-    w = _BitWriter()
-    w.bits(1, 1)  # BFINAL
-    w.bits(1, 2)  # BTYPE=01
+    w = LsbWriter()
+    w.write(1, 1)  # BFINAL
+    w.write(1, 2)  # BTYPE=01
     _emit_tokens(w, _lz77(data), _FIXED_RLIT, _FIXED_RDST)
     return w.getvalue()
 
@@ -448,19 +419,19 @@ def deflate_dynamic(data: bytes) -> bytes:
     hclen_syms = list(_CLCL_ORDER)
     while len(hclen_syms) > 4 and cllen.get(hclen_syms[-1], 0) == 0:
         hclen_syms.pop()
-    w = _BitWriter()
-    w.bits(1, 1)  # BFINAL
-    w.bits(2, 2)  # BTYPE=10
-    w.bits(hlit - 257, 5)
-    w.bits(hdist - 1, 5)
-    w.bits(len(hclen_syms) - 4, 4)
+    w = LsbWriter()
+    w.write(1, 1)  # BFINAL
+    w.write(2, 2)  # BTYPE=10
+    w.write(hlit - 257, 5)
+    w.write(hdist - 1, 5)
+    w.write(len(hclen_syms) - 4, 4)
     for s in hclen_syms:
-        w.bits(cllen.get(s, 0), 3)
+        w.write(cllen.get(s, 0), 3)
     for sym, extra, val in rle:
         code, nb = clcodes[sym]
-        w.huff(code, nb)
+        w.write(_rev_bits(code, nb), nb)
         if extra:
-            w.bits(val, extra)
+            w.write(val, extra)
 
     _emit_tokens(w, tokens, _rev_table(lcodes), _rev_table(dcodes))
     return w.getvalue()
@@ -469,20 +440,10 @@ def deflate_dynamic(data: bytes) -> bytes:
 def deflate_stored(data: bytes) -> bytes:
     """Stored blocks (BTYPE=00) — the incompressible fallback."""
     out = bytearray()
-    w = _BitWriter()
-    i = 0
-    n = len(data)
-    first = True
-    while i < n or first:
-        first = False
+    for i in range(0, max(len(data), 1), 65535):
         chunk = data[i : i + 65535]
-        i += len(chunk)
-        final = 1 if i >= n else 0
-        w.bits(final, 1)
-        w.bits(0, 2)
-        w.align()
-        out += w.getvalue()
-        w = _BitWriter()
+        # BFINAL, BTYPE=00 and the padding to the byte boundary
+        out.append(1 if i + 65535 >= len(data) else 0)
         ln = len(chunk)
         out += bytes(
             (ln & 0xFF, ln >> 8, (~ln) & 0xFF, ((~ln) >> 8) & 0xFF)

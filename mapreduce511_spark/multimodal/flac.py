@@ -49,7 +49,10 @@ from __future__ import annotations
 import hashlib
 import struct
 
+from mapreduce511_spark.multimodal.bitio import MsbReader, MsbWriter
+
 FLAC_FMT = "audio/flac"
+_TRUNCATED = "FLAC bitstream truncated"
 
 _FIXED_COEFS = {
     0: [],
@@ -119,82 +122,6 @@ def _utf8_number(n: int) -> bytes:
     return bytes(out)
 
 
-class _BitWriter:
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, bits: int) -> None:
-        if bits == 0:
-            return
-        value &= (1 << bits) - 1
-        self.acc = (self.acc << bits) | value
-        self.nbits += bits
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.buf.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def write_signed(self, value: int, bits: int) -> None:
-        self.write(value & ((1 << bits) - 1), bits)
-
-    def write_unary(self, q: int) -> None:
-        while q >= 32:
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)  # q zeros then a one
-
-    def write_bytes(self, data: bytes) -> None:
-        assert self.nbits == 0, "byte write must be aligned"
-        self.buf += data
-
-    def align(self) -> None:
-        if self.nbits:
-            self.write(0, 8 - self.nbits)
-
-    def getvalue(self) -> bytes:
-        assert self.nbits == 0
-        return bytes(self.buf)
-
-
-class _BitReader:
-    def __init__(self, data: bytes, pos: int = 0) -> None:
-        self.data = data
-        self.byte = pos
-        self.bit = 0
-
-    def read(self, bits: int) -> int:
-        v = 0
-        for _ in range(bits):
-            if self.byte >= len(self.data):
-                raise ValueError("FLAC bitstream truncated")
-            b = (self.data[self.byte] >> (7 - self.bit)) & 1
-            v = (v << 1) | b
-            self.bit += 1
-            if self.bit == 8:
-                self.bit = 0
-                self.byte += 1
-        return v
-
-    def read_signed(self, bits: int) -> int:
-        v = self.read(bits)
-        if v >= 1 << (bits - 1):
-            v -= 1 << bits
-        return v
-
-    def read_unary(self) -> int:
-        q = 0
-        while self.read(1) == 0:
-            q += 1
-        return q
-
-    def align(self) -> None:
-        if self.bit:
-            self.bit = 0
-            self.byte += 1
-
-
 def _rice_param(residuals: list[int]) -> int:
     """Smallest-cost 4-bit Rice parameter estimate (mean-based)."""
     if not residuals:
@@ -216,7 +143,7 @@ def _unzigzag(u: int) -> int:
 
 
 def _write_residual(
-    w: _BitWriter,
+    w: MsbWriter,
     residuals: list[int],
     block_size: int | None = None,
     order: int = 0,
@@ -247,7 +174,7 @@ def _write_residual(
             w.write(0xF, 4)  # escape
             w.write(nbits, 5)
             for r in part:
-                w.write_signed(r, nbits)
+                w.write(r, nbits)
             continue
         w.write(p, 4)
         for r in part:
@@ -256,7 +183,7 @@ def _write_residual(
             w.write(u & ((1 << p) - 1), p)
 
 
-def _read_residual(r: _BitReader, block_size: int, order: int) -> list[int]:
+def _read_residual(r: MsbReader, block_size: int, order: int) -> list[int]:
     """Per spec: the block splits into 2^po partitions of
     block_size >> po samples each, except the FIRST partition, which
     is short by the predictor order (warmup samples are not residual-
@@ -317,7 +244,7 @@ def _wasted_bits(blk: list[int], bits: int) -> int:
     return k
 
 
-def _write_wasted(w: _BitWriter, k: int) -> None:
+def _write_wasted(w: MsbWriter, k: int) -> None:
     """The 1-bit flag, then (k-1) in unary when set (spec example:
     k=3 -> flag 1 then '001')."""
     if k == 0:
@@ -328,7 +255,7 @@ def _write_wasted(w: _BitWriter, k: int) -> None:
 
 
 def _write_subframe(
-    w: _BitWriter,
+    w: MsbWriter,
     blk: list[int],
     bits: int,
     use_lpc: bool,
@@ -345,7 +272,7 @@ def _write_subframe(
         w.write(0, 1)
         w.write(0b000000, 6)  # CONSTANT
         w.write(0, 1)
-        w.write_signed(blk[0], bits)
+        w.write(blk[0], bits)
         return
     k = _wasted_bits(blk, bits)
     if k:
@@ -357,11 +284,11 @@ def _write_subframe(
         w.write(0b100000 | (order - 1), 6)  # LPC, order bits+1
         _write_wasted(w, k)
         for s in blk[:order]:
-            w.write_signed(s, eff)
+            w.write(s, eff)
         w.write(prec - 1, 4)
-        w.write_signed(shift, 5)
+        w.write(shift, 5)
         for c in coefs:
-            w.write_signed(c, prec)
+            w.write(c, prec)
         res = [
             blk[i]
             - ((sum(coefs[j] * blk[i - 1 - j] for j in range(order))) >> shift)
@@ -380,7 +307,7 @@ def _write_subframe(
     w.write(0b001000 | best_order, 6)  # FIXED
     _write_wasted(w, k)
     for s in blk[:best_order]:
-        w.write_signed(s, eff)
+        w.write(s, eff)
     po = _usable_po(partition_order, bs, best_order)
     _write_residual(w, best_res, bs, best_order, po)
 
@@ -394,7 +321,7 @@ def _stream_header(
     bps: int = 16,
 ) -> bytes:
     out = bytearray(b"fLaC")
-    si = _BitWriter()
+    si = MsbWriter()
     si.write(block_size, 16)
     si.write(block_size, 16)
     si.write(0, 24)  # min frame size unknown
@@ -409,7 +336,7 @@ def _stream_header(
 
 
 def _frame_header(
-    w: _BitWriter, chan_code: int, frame_idx: int, bs: int, bps: int = 16
+    w: MsbWriter, chan_code: int, frame_idx: int, bs: int, bps: int = 16
 ) -> None:
     w.write(0b11111111111110, 14)
     w.write(0, 1)  # reserved
@@ -422,8 +349,7 @@ def _frame_header(
     for b in _utf8_number(frame_idx):
         w.write(b, 8)
     w.write(bs - 1, 16)
-    header_so_far = w.getvalue()  # all fields above are whole bytes
-    w.write(_crc8(header_so_far), 8)
+    w.write(_crc8(w.getvalue()), 8)  # the fields above fill whole bytes
 
 
 def encode_flac(
@@ -457,11 +383,10 @@ def encode_flac(
     pos = 0
     while pos < n:
         blk = samples[pos : pos + block_size]
-        w = _BitWriter()
+        w = MsbWriter()
         _frame_header(w, 0b0000, frame_idx, len(blk), bps)
         use_lpc = lpc_every > 0 and frame_idx % lpc_every == 1
         _write_subframe(w, blk, bps, use_lpc, partition_order)
-        w.align()
         frame = w.getvalue()
         out += frame + struct.pack(">H", _crc16(frame))
         frame_idx += 1
@@ -526,12 +451,11 @@ def encode_flac_stereo(
             side = [lv - rv for lv, rv in zip(lb, rb)]
             mid = [(lv + rv) >> 1 for lv, rv in zip(lb, rb)]
             chans = [(mid, bps), (side, bps + 1)]
-        w = _BitWriter()
+        w = MsbWriter()
         _frame_header(w, code, frame_idx, len(lb), bps)
         use_lpc = lpc_every > 0 and frame_idx % lpc_every == 1
         for blk, bits in chans:
             _write_subframe(w, blk, bits, use_lpc, partition_order)
-        w.align()
         frame = w.getvalue()
         out += frame + struct.pack(">H", _crc16(frame))
         frame_idx += 1
@@ -539,7 +463,7 @@ def encode_flac_stereo(
     return bytes(out)
 
 
-def _read_subframe(br: _BitReader, bs: int, bits: int) -> list[int]:
+def _read_subframe(br: MsbReader, bs: int, bits: int) -> list[int]:
     """One subframe at ``bits`` effective sample width."""
     if br.read(1) != 0:
         raise ValueError("bad subframe padding bit")
@@ -615,7 +539,7 @@ def decode_flac(payload: bytes) -> tuple[int, int, list[int]]:
             break
     if streaminfo is None or len(streaminfo) != 34:
         raise ValueError("missing STREAMINFO")
-    r = _BitReader(streaminfo)
+    r = MsbReader(streaminfo, _TRUNCATED)
     r.read(16)  # min block size
     max_bs = r.read(16)
     r.read(24)
@@ -634,7 +558,7 @@ def decode_flac(payload: bytes) -> tuple[int, int, list[int]]:
     samples: list[int] = []
     while pos < len(payload) and len(samples) < total * n_channels:
         frame_start = pos
-        br = _BitReader(payload, pos)
+        br = MsbReader(payload, _TRUNCATED, pos)
         if br.read(14) != 0b11111111111110:
             raise ValueError("lost frame sync")
         br.read(1)
@@ -686,7 +610,7 @@ def decode_flac(payload: bytes) -> tuple[int, int, list[int]]:
         elif sr_code in (0b1101, 0b1110):
             br.read(16)
         crc8 = br.read(8)
-        header_bytes = payload[frame_start : br.byte]
+        header_bytes = payload[frame_start : br.pos]
         # CRC-8 covers the header up to (not including) its own byte
         if _crc8(header_bytes[:-1]) != crc8:
             raise ValueError("frame header CRC-8 mismatch")
@@ -723,11 +647,11 @@ def decode_flac(payload: bytes) -> tuple[int, int, list[int]]:
                     rch.append((mm - s) >> 1)
             blk = [x for pair in zip(lch, rch) for x in pair]
         br.align()
-        frame_bytes = payload[frame_start : br.byte]
-        crc16 = int.from_bytes(payload[br.byte : br.byte + 2], "big")
+        frame_bytes = payload[frame_start : br.pos]
+        crc16 = int.from_bytes(payload[br.pos : br.pos + 2], "big")
         if _crc16(frame_bytes) != crc16:
             raise ValueError("frame CRC-16 mismatch")
-        pos = br.byte + 2
+        pos = br.pos + 2
         samples.extend(blk)
 
     if len(samples) != total * n_channels:

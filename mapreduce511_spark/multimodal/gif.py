@@ -36,53 +36,11 @@ from __future__ import annotations
 
 import struct
 
+from mapreduce511_spark.multimodal.bitio import LsbReader, LsbWriter
+
 GIF_FMT = "image/gif"
 
 _MAX_CODE = 4096  # 12-bit LZW ceiling
-
-
-class _LsbBitWriter:
-    """LZW code packer: codes fill bytes least-significant-bit first."""
-
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, code: int, bits: int) -> None:
-        self.acc |= code << self.nbits
-        self.nbits += bits
-        while self.nbits >= 8:
-            self.buf.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.nbits -= 8
-
-    def flush(self) -> bytes:
-        if self.nbits:
-            self.buf.append(self.acc & 0xFF)
-            self.acc = 0
-            self.nbits = 0
-        return bytes(self.buf)
-
-
-class _LsbBitReader:
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.nbits = 0
-
-    def read(self, bits: int) -> int:
-        while self.nbits < bits:
-            if self.pos >= len(self.data):
-                raise ValueError("GIF LZW stream truncated")
-            self.acc |= self.data[self.pos] << self.nbits
-            self.pos += 1
-            self.nbits += 8
-        v = self.acc & ((1 << bits) - 1)
-        self.acc >>= bits
-        self.nbits -= bits
-        return v
 
 
 def _interlace_rows(h: int) -> list[int]:
@@ -100,7 +58,7 @@ def _lzw_encode(indices: list[int], min_code_size: int) -> bytes:
     start and whenever the table reaches 4096."""
     clear = 1 << min_code_size
     eoi = clear + 1
-    w = _LsbBitWriter()
+    w = LsbWriter()
 
     def reset():
         return {(i,): i for i in range(clear)}, eoi + 1, min_code_size + 1
@@ -133,13 +91,13 @@ def _lzw_encode(indices: list[int], min_code_size: int) -> bytes:
         if next_code == (1 << width) and width < 12:
             width += 1
     w.write(eoi, width)
-    return w.flush()
+    return w.getvalue()
 
 
 def _lzw_decode(data: bytes, min_code_size: int, n_expected: int) -> list[int]:
     clear = 1 << min_code_size
     eoi = clear + 1
-    r = _LsbBitReader(data)
+    r = LsbReader(data, "GIF LZW stream truncated")
     out: list[int] = []
 
     def reset():

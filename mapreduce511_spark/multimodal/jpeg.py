@@ -34,6 +34,8 @@ import struct
 
 import numpy as np
 
+from mapreduce511_spark.multimodal.bitio import JpegReader, JpegWriter
+
 JPEG_FMT = "image/jpeg"
 
 # ITU-T T.81 Annex K.1 — luminance quantization table (quality 50),
@@ -133,108 +135,6 @@ def _build_decoder(bits: list[int], vals: list[int]) -> dict[tuple[int, int], in
     }
 
 
-class _BitWriter:
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, length: int) -> None:
-        self.acc = (self.acc << length) | (value & ((1 << length) - 1))
-        self.nbits += length
-        while self.nbits >= 8:
-            byte = (self.acc >> (self.nbits - 8)) & 0xFF
-            self.buf.append(byte)
-            if byte == 0xFF:  # byte stuffing
-                self.buf.append(0x00)
-            self.nbits -= 8
-        self.acc &= (1 << self.nbits) - 1
-
-    def pad_to_byte(self) -> None:
-        if self.nbits:
-            pad = 8 - self.nbits
-            self.write((1 << pad) - 1, pad)  # 1-fill per spec
-
-    def marker(self, byte2: int) -> None:
-        """Append a bare marker (0xFF <byte2>) — byte-aligned and
-        NEVER stuffed, per F.1.2.3 (restart markers interleave with
-        entropy data at byte boundaries)."""
-        self.pad_to_byte()
-        self.buf.append(0xFF)
-        self.buf.append(byte2)
-
-    def flush(self) -> bytes:
-        self.pad_to_byte()
-        return bytes(self.buf)
-
-
-class _BitReader:
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.nbits = 0
-
-    def read_bit(self) -> int:
-        if self.nbits == 0:
-            if self.pos >= len(self.data):
-                raise ValueError("JPEG entropy stream truncated")
-            b = self.data[self.pos]
-            self.pos += 1
-            if b == 0xFF:
-                if self.pos >= len(self.data):
-                    raise ValueError("JPEG entropy stream truncated at 0xFF")
-                marker = self.data[self.pos]
-                self.pos += 1
-                if marker != 0x00:
-                    raise ValueError(
-                        f"unexpected marker 0xFF{marker:02X} in entropy"
-                        " data (a restart marker is only legal at the"
-                        " declared interval boundary)"
-                    )
-            self.acc = b
-            self.nbits = 8
-        self.nbits -= 1
-        return (self.acc >> self.nbits) & 1
-
-    def read_bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.read_bit()
-        return v
-
-    def restart(self, expect: int) -> None:
-        """Consume an RSTn at an interval boundary: discard the
-        padding bits of the current byte, then require the marker
-        with the expected modulo-8 sequence number."""
-        self.acc = 0
-        self.nbits = 0
-        if (
-            self.pos + 1 >= len(self.data)
-            or self.data[self.pos] != 0xFF
-            or not (0xD0 <= self.data[self.pos + 1] <= 0xD7)
-        ):
-            raise ValueError(
-                "expected a restart marker at the declared interval"
-            )
-        got = self.data[self.pos + 1] & 0x7
-        if got != expect & 0x7:
-            raise ValueError(
-                f"restart marker out of sequence (RST{got}, "
-                f"expected RST{expect & 0x7})"
-            )
-        self.pos += 2
-
-    def read_symbol(self, table: dict[tuple[int, int], int]) -> int:
-        code = 0
-        for length in range(1, 17):
-            code = (code << 1) | self.read_bit()
-            sym = table.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid Huffman code in JPEG stream")
-
-
 def _magnitude(v: int) -> tuple[int, int]:
     """(category s, s-bit code) for a coefficient value (T.81 F.1.2)."""
     if v == 0:
@@ -272,7 +172,7 @@ def block_coefficients(pixels: np.ndarray, q: np.ndarray = QTABLE_LUM) -> np.nda
 
 
 def _encode_channel_coeffs(
-    coeffs: np.ndarray, writer: _BitWriter, dc_codes, ac_codes, pred: int
+    coeffs: np.ndarray, writer: JpegWriter, dc_codes, ac_codes, pred: int
 ) -> int:
     by, bx = coeffs.shape[:2]
     for r in range(by):
@@ -427,7 +327,7 @@ def encode_jpeg(
 
     dc_codes = _build_codes(DC_BITS, DC_VALS)
     ac_codes = _build_codes(AC_BITS, AC_VALS)
-    writer = _BitWriter()
+    writer = JpegWriter()
     coeffs = [
         block_coefficients(np.asarray(ch, dtype=np.float64), q)
         for ch in channels
@@ -454,7 +354,7 @@ def encode_jpeg(
                             ac_codes,
                             preds[ci],
                         )
-    out += writer.flush()
+    out += writer.getvalue()
     out += b"\xff\xd9"  # EOI
     return bytes(out)
 
@@ -622,7 +522,7 @@ def _decode_baseline_scan(
     for si in range(ns):
         cs, tt = sos[1 + 2 * si], sos[2 + 2 * si]
         tabsel[cs] = (tt >> 4, tt & 0xF)
-    reader = _BitReader(data)
+    reader = JpegReader(data)
     preds = [0] * nc
     n_mcu = 0
     for my in range(mcu_y):
@@ -636,9 +536,7 @@ def _decode_baseline_scan(
                 for byi in range(vi):
                     for bxi in range(hi):
                         s = reader.read_symbol(dc_dec[td])
-                        diff = (
-                            _extend(reader.read_bits(s), s) if s else 0
-                        )
+                        diff = _extend(reader.read(s), s) if s else 0
                         preds[ci] += diff
                         zz = np.zeros(64, dtype=np.int64)
                         zz[0] = preds[ci]
@@ -654,7 +552,7 @@ def _decode_baseline_scan(
                             k += run
                             if k > 63:
                                 raise ValueError("AC run overflows block")
-                            zz[k] = _extend(reader.read_bits(size), size)
+                            zz[k] = _extend(reader.read(size), size)
                             k += 1
                         blk = np.zeros((8, 8), dtype=np.int64)
                         for kk, (i, j) in enumerate(_ZZ):
@@ -667,7 +565,7 @@ def _refine_nonzero(blk, i, j, reader, p1, m1):
     coefficient (T.81 G.2 / the jdphuff algorithm): a 1-bit moves the
     value one quantum AWAY from zero iff the p1 bit is not already
     set; two's-complement += works for both signs."""
-    if reader.read_bit() and (blk[i, j] & p1) == 0:
+    if reader.read(1) and (blk[i, j] & p1) == 0:
         blk[i, j] += p1 if blk[i, j] >= 0 else m1
 
 
@@ -693,7 +591,7 @@ def _decode_progressive_scan(
     ah, al = ahal >> 4, ahal & 0xF
     if se > 63 or ss > se:
         raise ValueError(f"bad spectral selection {ss}..{se}")
-    reader = _BitReader(data)
+    reader = JpegReader(data)
     if ss == 0:
         if se != 0:
             raise ValueError("progressive DC scan must have Se = 0")
@@ -757,12 +655,11 @@ def _decode_progressive_scan(
 def _dc_one(grid, r, c, reader, dc_table, preds, idx, ah, al):
     if ah == 0:  # first DC scan: baseline diff coding at >> Al
         s = reader.read_symbol(dc_table)
-        diff = _extend(reader.read_bits(s), s) if s else 0
+        diff = _extend(reader.read(s), s) if s else 0
         preds[idx] += diff
         grid[r, c][0, 0] = preds[idx] << al
     else:  # refinement: one raw bit per block
-        if reader.read_bit():
-            grid[r, c][0, 0] |= 1 << al
+        grid[r, c][0, 0] |= reader.read(1) << al
 
 
 def _ac_first_block(blk, reader, table, ss, se, al, eobrun):
@@ -780,13 +677,13 @@ def _ac_first_block(blk, reader, table, ss, se, al, eobrun):
                 continue
             eobrun = (1 << run) - 1  # this block consumes one
             if run:
-                eobrun += reader.read_bits(run)
+                eobrun += reader.read(run)
             return eobrun
         k += run
         if k > se:
             raise ValueError("AC run overflows spectral band")
         i, j = _ZZ[k]
-        blk[i, j] = _extend(reader.read_bits(size), size) << al
+        blk[i, j] = _extend(reader.read(size), size) << al
         k += 1
     return 0
 
@@ -808,11 +705,11 @@ def _ac_refine_block(blk, reader, table, ss, se, p1, m1, eobrun):
                     raise ValueError(
                         "AC refinement symbol with size > 1"
                     )
-                newval = p1 if reader.read_bit() else m1
+                newval = p1 if reader.read(1) else m1
             elif run != 15:
                 eobrun = 1 << run  # current block handled below
                 if run:
-                    eobrun += reader.read_bits(run)
+                    eobrun += reader.read(run)
                 break
             # advance over `run` zero-history coefficients, emitting
             # correction bits for nonzero-history ones along the way

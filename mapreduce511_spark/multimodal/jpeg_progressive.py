@@ -41,11 +41,11 @@ import struct
 
 import numpy as np
 
+from mapreduce511_spark.multimodal.bitio import JpegWriter
 from mapreduce511_spark.multimodal.jpeg import (
     DC_BITS,
     DC_VALS,
     QTABLE_LUM,
-    _BitWriter,
     _ZZ,
     _build_codes,
     _magnitude,
@@ -92,14 +92,13 @@ class _ScanWriter:
     where the decoder's advance loop reads them."""
 
     def __init__(self, ac_codes) -> None:
-        self.w = _BitWriter()
+        self.w = JpegWriter()
         self.ac_codes = ac_codes
         self.eobrun = 0
         self.run_bits: list[int] = []
 
     def sym(self, s: int) -> None:
-        code, ln = self.ac_codes[s]
-        self.w.write(code, ln)
+        self.w.write(*self.ac_codes[s])
 
     def emit_eobrun(self) -> None:
         if self.eobrun > 0:
@@ -114,7 +113,7 @@ class _ScanWriter:
 
     def end_scan(self) -> bytes:
         self.emit_eobrun()
-        return self.w.flush()
+        return self.w.getvalue()
 
 
 def _dc_first(sw: _ScanWriter, dc_codes, blk, preds, idx, al) -> None:

@@ -10,7 +10,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce511_spark.functions.text import normalize_text, tokenize, word_ngrams
+from mapreduce511_spark.functions.text import (
+    glyph_count,
+    normalize_text,
+    tokenize,
+    word_ngrams,
+)
 from mapreduce511_spark.memo import session_memo
 from mapreduce511_spark.operators.wordcount import word_count
 from mapreduce511_spark.queries import norm0, register
@@ -197,7 +202,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     char_len = F.length("text")
     n_tok = F.size(tokenize("text"))
     punct = char_len - F.length(
-        F.regexp_replace("text", r"[^\p{Alnum}\s]", "")
+        F.regexp_replace("text", r"[^\p{Alnum}\p{Space}]", "")
     )
     scored = docs.select(
         "lang",
@@ -2986,7 +2991,7 @@ def gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = docs.select(
         "lang",
         F.size(tokenize("text")).alias("n_words"),
-        F.length(F.regexp_replace("text", r"\s", "")).alias("n_glyph"),
+        glyph_count("text").alias("n_glyph"),
         F.length(F.regexp_replace("text", "[^A-Z]", "")).alias("n_upper"),
         F.length(F.regexp_replace("text", "[^0-9]", "")).alias("n_digit"),
     )
@@ -3441,7 +3446,7 @@ def doc_quality_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     M7)."""
     docs = load_table(spark, sf_dir, "documents")
     n_tok = F.size(tokenize("text")).cast("long")
-    n_glyph = F.length(F.regexp_replace("text", r"\s", "")).cast("long")
+    n_glyph = glyph_count("text").cast("long")
     return docs.select(
         "doc_id",
         "lang",
@@ -3525,7 +3530,7 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``quality_weighted_sample``)."""
     docs = load_table(spark, sf_dir, "documents")
     n_tok = F.size(tokenize("text"))
-    n_glyph = F.length(F.regexp_replace("text", r"\s", ""))
+    n_glyph = glyph_count("text")
     n_upper = F.length(F.regexp_replace("text", "[^A-Z]", ""))
     n_digit = F.length(F.regexp_replace("text", "[^0-9]", ""))
     # integer milli-ratios with the oracle's floor-division semantics
@@ -3608,7 +3613,7 @@ def quality_calibration_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-bucket aggregate."""
     docs = load_table(spark, sf_dir, "documents")
     n_tok = F.size(tokenize("text"))
-    n_glyph = F.length(F.regexp_replace("text", r"\s", ""))
+    n_glyph = glyph_count("text")
     n_upper = F.length(F.regexp_replace("text", "[^A-Z]", ""))
     n_digit = F.length(F.regexp_replace("text", "[^0-9]", ""))
     um = F.when(n_glyph > 0, F.floor((1000 * n_upper) / n_glyph)).otherwise(
@@ -3691,7 +3696,7 @@ def quality_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     n_tok = F.size(tokenize("text"))
-    n_glyph = F.length(F.regexp_replace("text", r"\s", ""))
+    n_glyph = glyph_count("text")
     n_vowel = F.length(F.regexp_replace("text", "[^aeiou]", ""))
     mwl = (
         F.when(n_tok > 0, n_glyph.cast("double") / n_tok)
@@ -3785,7 +3790,7 @@ def token_fertility_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(tokenize("text")).alias("n_tokens"),
         F.length("text").alias("n_chars"),
         F.octet_length("text").alias("n_bytes"),
-        F.length(F.regexp_replace("text", r"\s", "")).alias("n_glyph"),
+        glyph_count("text").alias("n_glyph"),
     )
     return (
         d.groupBy("lang")
@@ -4016,7 +4021,7 @@ def curriculum_order_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     n_tok = F.size(tokenize("text"))
-    n_glyph = F.length(F.regexp_replace("text", r"\s", ""))
+    n_glyph = glyph_count("text")
     n_upper = F.length(F.regexp_replace("text", "[^A-Z]", ""))
     n_digit = F.length(F.regexp_replace("text", "[^0-9]", ""))
     um = F.when(n_glyph > 0, F.floor((1000 * n_upper) / n_glyph)).otherwise(

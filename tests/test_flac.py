@@ -367,6 +367,7 @@ def test_size_code_zero_defers_to_streaminfo():
     import struct
 
     from mapreduce511_spark.multimodal import flac as m
+    from mapreduce511_spark.multimodal.bitio import MsbWriter
 
     pcm = [((i * 7) % 4096) - 2048 for i in range(900)]
     bs = 256
@@ -377,7 +378,7 @@ def test_size_code_zero_defers_to_streaminfo():
         blk = pcm[pos : pos + bs]
         # re-derive this frame's bytes (the encoder is deterministic)
         # to learn its length, then patch the ORIGINAL stream in place
-        w = m._BitWriter()
+        w = MsbWriter()
         m._frame_header(w, 0b0000, frame_idx, len(blk), 16)
         use_lpc = frame_idx % 2 == 1  # encode_flac default lpc_every=2
         m._write_subframe(w, blk, 16, use_lpc, 0)

@@ -411,9 +411,12 @@ def test_oracle_closed_forms_are_written_once():
 def test_tokenizer_is_written_once():
     """``functions/text.py::tokenize`` is the package's one tokenizer: a
     compiled ``split`` + ``array_remove`` over StringTokenizer's delimiters.
-    Elsewhere under ``mapreduce511_spark/`` no ``split`` call may take a
-    whitespace-class pattern and no string may restate the delimiter class,
-    so a hand-inlined (and interpreted) split-then-filter cannot return."""
+    Elsewhere under ``mapreduce511_spark/`` no ``split`` or ``regexp_replace``
+    call may take a whitespace-class pattern and no string may restate the
+    delimiter class, so a hand-inlined (and interpreted) split-then-filter
+    cannot return, and no query strips or collapses Java's ``\\s`` (which
+    adds U+000B to the oracles' class) in place of ``normalize_text`` or
+    ``glyph_count``."""
     import ast
     import re
     from pathlib import Path
@@ -435,10 +438,41 @@ def test_tokenizer_is_written_once():
                 name = getattr(node.func, "attr", getattr(node.func, "id", None))
                 args = node.args[1:2]
                 args += [k.value for k in node.keywords if k.arg == "pattern"]
-                pat = args[0] if name == "split" and args else None
+                pat = args[0] if name in ("split", "regexp_replace") and args else None
                 if isinstance(pat, ast.Constant) and ws_pattern.search(f"{pat.value}"):
-                    found.append((rel, node.lineno, "split"))
+                    found.append((rel, node.lineno, name))
             elif isinstance(node, ast.Constant) and isinstance(node.value, str):
                 if any(d in node.value for d in delims):
                     found.append((rel, node.lineno, "delimiter class"))
+    assert found == []
+
+
+def test_bit_io_is_written_once():
+    """The codecs' bit packing lives in ``multimodal/bitio.py``. Elsewhere
+    under ``multimodal/`` no class may keep a bit accumulator (assign
+    ``self.nbits`` or ``self.bitbuf``), so a hand-copied reader or writer
+    cannot return. ``jpeg_arith.py``'s Annex D byte I/O (carry propagation,
+    zero fill past the end) is the one exception."""
+    import ast
+    from pathlib import Path
+
+    from tests.conftest import REPO
+
+    found = []
+    pkg = Path(REPO) / "mapreduce511_spark" / "multimodal"
+    for f in sorted(pkg.glob("*.py")):
+        if f.name in ("bitio.py", "jpeg_arith.py"):
+            continue
+        for cls in ast.walk(ast.parse(f.read_text())):
+            if not isinstance(cls, ast.ClassDef):
+                continue
+            for node in ast.walk(cls):
+                if (
+                    isinstance(node, ast.Attribute)
+                    and isinstance(node.ctx, ast.Store)
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id == "self"
+                    and node.attr in ("nbits", "bitbuf")
+                ):
+                    found.append((f.name, cls.name, node.lineno))
     assert found == []

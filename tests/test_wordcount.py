@@ -5,7 +5,7 @@ from collections import Counter
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from mapreduce511_spark.functions.text import tokenize
+from mapreduce511_spark.functions.text import glyph_count, normalize_text, tokenize
 from mapreduce511_spark.operators.wordcount import word_count
 from mapreduce511_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
@@ -48,22 +48,33 @@ _DELIM_CASES = ["a\x0bb c", "x\ty\nz\rw\fv", "g\xa0h i  j", "", "   ", None]
 
 
 def test_tokenize_delimiters_match_oracle(spark):
-    """``tokenize`` splits on exactly the oracle tokenizer's delimiters,
-    and ``word_count`` keeps F1 (sum(cnt) == token count) on those rows."""
+    """``tokenize``, ``normalize_text`` (under ``md5``, as the exact-dup
+    fingerprint) and ``glyph_count`` treat exactly the oracles' RE2 ``\\s``
+    as whitespace, and ``word_count`` keeps F1 (sum(cnt) == token count) on
+    those rows."""
     import duckdb
 
     from mapreduce511_spark.queries.oracle_sql import _SQL_TOKENS
 
     rows = list(enumerate(_DELIM_CASES))
     docs = spark.createDataFrame(rows, "i int, text string")
-    ordered = docs.orderBy("i").select(tokenize("text").alias("t"))
-    got = [r["t"] for r in ordered.collect()]
     con = duckdb.connect()
     con.execute("CREATE TABLE documents (i INTEGER, text VARCHAR)")
     con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
-    sql = f"SELECT {_SQL_TOKENS} FROM documents ORDER BY i"
-    want = [r[0] for r in con.execute(sql).fetchall()]
-    assert got == want
+
+    def oracle(expr):
+        sql = f"SELECT {expr} FROM documents ORDER BY i"
+        return [r[0] for r in con.execute(sql).fetchall()]
+
+    for ours, expr in [
+        (tokenize("text"), _SQL_TOKENS),
+        (F.md5(normalize_text("text")),
+         "md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))"),
+        (glyph_count("text"), "length(regexp_replace(text, '\\s', '', 'g'))"),
+    ]:
+        got = [r[0] for r in docs.orderBy("i").select(ours).collect()]
+        assert got == oracle(expr), expr
+    want = oracle(_SQL_TOKENS)
     counts = {r["word"]: r["cnt"] for r in word_count(docs).collect()}
     assert counts == dict(Counter(w for t in want if t for w in t))
     assert sum(counts.values()) == sum(len(t) for t in want if t) == 10
