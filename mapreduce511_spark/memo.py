@@ -25,13 +25,23 @@ import shutil
 import tempfile
 
 
+def local_path(p: str) -> str:
+    """``p`` with a ``file:`` scheme stripped; other paths unchanged."""
+    return p[len("file:"):] if p.startswith("file:") else p
+
+
+def warehouse_path(spark) -> str:
+    """The session's ``spark.sql.warehouse.dir`` as a local path."""
+    return local_path(spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse"))
+
+
 def stat_signature(paths) -> tuple | None:
     """``(mtime_ns, size)`` per path (a ``file:`` scheme is stripped),
     or None when any path cannot be stat'ed."""
     sig = []
     for p in paths:
         try:
-            st = os.stat(p[len("file:"):] if p.startswith("file:") else p)
+            st = os.stat(local_path(p))
         except OSError:
             return None
         sig.append((st.st_mtime_ns, st.st_size))
@@ -61,8 +71,14 @@ def owned_tmpdir(prefix: str) -> str:
     exits. Only the creating pid removes it, so a forked child's exit
     leaves its parent's dirs in place."""
     path = tempfile.mkdtemp(prefix=f"mr511_{prefix}_")
-    atexit.register(_remove_owned, path, os.getpid())
+    remove_at_exit(path)
     return path
+
+
+def remove_at_exit(path: str) -> None:
+    """Remove the local ``path`` when this process exits; a forked
+    child's exit leaves it in place."""
+    atexit.register(_remove_owned, path, os.getpid())
 
 
 def _remove_owned(path: str, pid: int) -> None:

@@ -202,7 +202,10 @@ def _read_residual(r: MsbReader, block_size: int, order: int) -> list[int]:
         param = r.read(plen)
         if param == (1 << plen) - 1:
             nbits = r.read(5)
-            out.extend(r.read_signed(nbits) for _ in range(count))
+            if nbits:
+                out.extend(r.read_signed(nbits) for _ in range(count))
+            else:  # 0 bits per sample: every residual is 0
+                out.extend([0] * count)
         else:
             for _ in range(count):
                 q = r.read_unary()

@@ -27,7 +27,7 @@ from mapreduce511_spark.functions.vectors import (
     lit_doubles,
     lit_doubles_nested,
 )
-from mapreduce511_spark.memo import stat_signature
+from mapreduce511_spark.memo import stat_signature, warehouse_path
 
 K_CELLS = 16
 KMEANS_ITERS = 3
@@ -443,23 +443,13 @@ def ivf_search_pruned(
 # --- persisted index artifacts (build once, query many) -------------
 #
 # r5 VERDICT item 2: in-query training + encode misstates the 100 TB
-# cost model — nobody trains per query. These helpers write the
-# encoded corpus to parquet ONCE per corpus snapshot (content-
-# fingerprint keyed, like _TRAIN_CACHE) so the registered PQ queries'
-# steady cost is candidates-only, mirroring the IVF parquet index
-# (ivf_write_partitioned/ivf_search_pruned) that already worked this
-# way. Index artifacts live under the session warehouse dir
-# (gitignored; overwritten per content key).
+# cost model — nobody trains per query. Each index is written to
+# parquet ONCE per corpus snapshot (content-fingerprint keyed, like
+# _TRAIN_CACHE) under <warehouse>/ann_index/<prefix>_<tag>, so a
+# query's steady cost is the search alone. ``ensure_index`` owns the
+# lifecycle; the helpers defined before it are its steps.
 
-_INDEX_CACHE: dict = {}
-
-
-def _artifact_root(spark) -> str:
-    import os
-
-    raw = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    path = raw[len("file:"):] if raw.startswith("file:") else raw
-    return os.path.join(path, "ann_index")
+_INDEX_CACHE: dict = {}  # cache key -> (path, model)
 
 
 def _index_path(spark, key: tuple, prefix: str) -> str:
@@ -467,7 +457,7 @@ def _index_path(spark, key: tuple, prefix: str) -> str:
     import os
 
     tag = hashlib.sha1(repr(key).encode()).hexdigest()[:16]
-    return os.path.join(_artifact_root(spark), f"{prefix}_{tag}")
+    return os.path.join(warehouse_path(spark), "ann_index", f"{prefix}_{tag}")
 
 
 _MODEL_SIDECAR = "_mr511_model.json"
@@ -580,11 +570,7 @@ def retain_latest_artifact(
             # (byte-for-byte data reverts re-produce old keys); evict
             # so the next hit rebuilds instead of reading a deleted
             # path (r11 review)
-            for k in [
-                k
-                for k, v in _INDEX_CACHE.items()
-                if isinstance(v, tuple) and v and v[0] == d
-            ]:
+            for k in [k for k, v in _INDEX_CACHE.items() if v[0] == d]:
                 del _INDEX_CACHE[k]
 
 
@@ -603,6 +589,34 @@ def write_model_sidecar(path: str, model) -> None:
     os.replace(tmp, os.path.join(path, _MODEL_SIDECAR))
 
 
+def ensure_index(
+    emb: DataFrame, key: tuple, prefix: str, build, *,
+    require_success: bool = True,
+) -> tuple[str, dict]:
+    """``(path, model)`` of the index artifact for ``key``: from the
+    session cache, else a complete artifact on disk (sidecar, plus the
+    root ``_SUCCESS`` when ``require_success``), else ``build(path)``,
+    which writes every parquet file into the emptied ``path`` and
+    returns the JSON model. The publish order is fixed here: parquet,
+    then the atomic sidecar (with the retention group as ``source``),
+    then keep-latest retention. ``key`` names the directory."""
+    import shutil
+
+    if key in _INDEX_CACHE:
+        return _INDEX_CACHE[key]
+    path = _index_path(emb.sparkSession, key, prefix)
+    model = load_model_sidecar(path, require_success)
+    if model is None:
+        shutil.rmtree(path, ignore_errors=True)  # a torn earlier build
+        model = build(path)
+        src = artifact_source(emb, key)
+        model["source"] = src
+        write_model_sidecar(path, model)
+        retain_latest_artifact(path, src, legacy_source(emb))
+    _INDEX_CACHE[key] = (path, model)
+    return path, model
+
+
 def ensure_ivf_index(
     emb: DataFrame, k: int = K_CELLS, iters: int = KMEANS_ITERS
 ) -> tuple[str, list[list[float]]]:
@@ -610,21 +624,15 @@ def ensure_ivf_index(
     index ONCE per corpus snapshot; returns (path, centroids). Repeat
     invocations (bench steady passes, repeated queries) hit the
     content-keyed cache and pay only the partition-pruned search."""
+
+    def build(path):
+        centroids = train_centroids(emb, k, iters)
+        ivf_write_partitioned(emb, centroids, path)
+        return {"centroids": centroids}
+
     key = _cache_key(emb, "ivf_index", k, iters)
-    if key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
-    path = _index_path(emb.sparkSession, key, "ivf")
-    model = load_model_sidecar(path)
-    if model is not None:
-        _INDEX_CACHE[key] = (path, model["centroids"])
-        return _INDEX_CACHE[key]
-    centroids = train_centroids(emb, k, iters)
-    ivf_write_partitioned(emb, centroids, path)
-    src = artifact_source(emb, key)
-    write_model_sidecar(path, {"centroids": centroids, "source": src})
-    retain_latest_artifact(path, src, legacy_source(emb))
-    _INDEX_CACHE[key] = (path, centroids)
-    return path, centroids
+    path, model = ensure_index(emb, key, "ivf", build)
+    return path, model["centroids"]
 
 
 def ensure_pq_index(
@@ -642,33 +650,18 @@ def ensure_pq_index(
     the ADC scan partition-prunes; either way the ADC stage reads
     only the (vec_id, codes) columns (parquet column pruning) and the
     float embeddings are fetched solely for the re-rank pool."""
+
+    def build(path):  # admit the whole corpus into the empty index
+        books = train_pq_codebooks(emb, m, k, iters)
+        centroids = train_centroids(emb, k_cells) if with_cells else None
+        admit_batch_pq(emb.sparkSession, path, books, emb, centroids)
+        return {"books": books, "centroids": centroids}
+
     key = _cache_key(emb, "pq_index", m, k, iters, with_cells, k_cells)
-    if key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
-    path = _index_path(emb.sparkSession, key, "ivfpq" if with_cells else "pq")
-    model = load_model_sidecar(path)
-    if model is not None:
-        _INDEX_CACHE[key] = (path, model["books"], model["centroids"])
-        return _INDEX_CACHE[key]
-    books = train_pq_codebooks(emb, m, k, iters)
-    centroids = train_centroids(emb, k_cells) if with_cells else None
-    coded = pq_encode(emb, books)
-    if with_cells:
-        tagged = _with_best_cell(
-            emb.select("vec_id", "embedding"), "embedding", centroids
-        ).select("vec_id", "cell")
-        coded.join(tagged, "vec_id").write.mode("overwrite").partitionBy(
-            "cell"
-        ).parquet(path)
-    else:
-        coded.write.mode("overwrite").parquet(path)
-    src = artifact_source(emb, key)
-    write_model_sidecar(
-        path, {"books": books, "centroids": centroids, "source": src}
+    path, model = ensure_index(
+        emb, key, "ivfpq" if with_cells else "pq", build
     )
-    retain_latest_artifact(path, src, legacy_source(emb))
-    _INDEX_CACHE[key] = (path, books, centroids)
-    return path, books, centroids
+    return path, model["books"], model["centroids"]
 
 
 def ensure_pq_residual_index(
@@ -682,25 +675,17 @@ def ensure_pq_residual_index(
     coarse centroids + residual codebooks + cell-partitioned encoded
     corpus, persisted once per corpus snapshot. Returns (path, books,
     centroids)."""
+
+    def build(path):
+        centroids = train_centroids(emb, k_cells)
+        books = train_pq_residual_codebooks(emb, centroids, m, k, iters)
+        coded = pq_encode_residual(emb, centroids, books)
+        coded.write.mode("overwrite").partitionBy("cell").parquet(path)
+        return {"books": books, "centroids": centroids}
+
     key = _cache_key(emb, "pq_res_index", m, k, iters, k_cells)
-    if key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
-    path = _index_path(emb.sparkSession, key, "ivfpqr")
-    model = load_model_sidecar(path)
-    if model is not None:
-        _INDEX_CACHE[key] = (path, model["books"], model["centroids"])
-        return _INDEX_CACHE[key]
-    centroids = train_centroids(emb, k_cells)
-    books = train_pq_residual_codebooks(emb, centroids, m, k, iters)
-    coded = pq_encode_residual(emb, centroids, books)
-    coded.write.mode("overwrite").partitionBy("cell").parquet(path)
-    src = artifact_source(emb, key)
-    write_model_sidecar(
-        path, {"books": books, "centroids": centroids, "source": src}
-    )
-    retain_latest_artifact(path, src, legacy_source(emb))
-    _INDEX_CACHE[key] = (path, books, centroids)
-    return path, books, centroids
+    path, model = ensure_index(emb, key, "ivfpqr", build)
+    return path, model["books"], model["centroids"]
 
 
 def admit_batch_lloyd(

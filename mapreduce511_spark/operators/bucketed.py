@@ -26,6 +26,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mapreduce511_spark.memo import local_path, remove_at_exit
+
+_SESSION_TABLES: set = set()  # tables this process removes at exit
+
 
 def _hadoop_delete(spark: SparkSession, location: str) -> None:
     """Recursively delete ``location`` through the Hadoop FileSystem
@@ -92,8 +96,15 @@ def session_table_name(spark: SparkSession, base: str) -> str:
     """A table name unique to this SparkSession (suffix = sanitized
     applicationId): two sessions sharing a warehouse dir never race
     on the same managed location, while repeated calls within one
-    session reuse (overwrite) the same table."""
+    session reuse (overwrite) the same table. Like a
+    ``memo.owned_tmpdir`` dir, a local warehouse's copy of the table is
+    removed when the creating process exits, so these names do not
+    pile up."""
     app = "".join(
         c if c.isalnum() else "_" for c in spark.sparkContext.applicationId
     )
-    return f"{base}_{app}"
+    table = f"{base}_{app}"
+    if table not in _SESSION_TABLES:
+        _SESSION_TABLES.add(table)
+        remove_at_exit(local_path(_default_location(spark, table)))
+    return table

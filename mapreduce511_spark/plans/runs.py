@@ -23,6 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce511_spark.memo import local_path
 from mapreduce511_spark.sources.text_logs import read_text_ordered
 
 # Reference key regex (common_utils.py:180), case-insensitive.
@@ -46,7 +47,7 @@ def experiment_files(base_dir: str, filename: str) -> list[str]:
     ``file://`` root lists the same plain paths as the bare path.
     """
     if base_dir.startswith("file:"):
-        base_dir = os.path.normpath(base_dir[len("file:"):])
+        base_dir = os.path.normpath(local_path(base_dir))
     out: list[str] = []
     for cfg in sorted(_glob.glob(os.path.join(base_dir, "*"))):
         if not os.path.isdir(cfg):

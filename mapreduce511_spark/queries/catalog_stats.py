@@ -21,7 +21,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from mapreduce511_spark.memo import session_memo, stat_signature
+from mapreduce511_spark.memo import session_memo, stat_signature, warehouse_path
 from mapreduce511_spark.queries import register
 from mapreduce511_spark.sources.tables import load_table
 
@@ -59,8 +59,7 @@ def _create_cbo_db(spark: SparkSession, sf_dir: str, paths: list) -> str:
     tag = hashlib.sha1(repr((sf_dir, sig)).encode()).hexdigest()[:12]
     db = f"cbo_demo_{tag}"
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
-    raw = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    wh = raw[len("file:") :] if raw.startswith("file:") else raw
+    wh = warehouse_path(spark)
     for t, col in CBO_TABLES:
         spark.sql(f"DROP TABLE IF EXISTS {db}.{t}")
         # A fresh session's in-memory catalog forgets prior managed

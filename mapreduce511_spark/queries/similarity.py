@@ -2624,43 +2624,26 @@ def _ensure_lloyd_index(emb: DataFrame) -> tuple[str, list]:
     in-query twins use, and centroids round-trip through the driver
     as IEEE doubles, so indexed search results are bit-identical to
     the oracled in-query variants (asserted in tests/test_ann.py)."""
-    from mapreduce511_spark.operators.ann import (
-        _INDEX_CACHE,
-        _cache_key,
-        _index_path,
-        artifact_source,
-        legacy_source,
-        load_model_sidecar,
-        retain_latest_artifact,
-        write_model_sidecar,
-    )
+    from mapreduce511_spark.operators.ann import _cache_key, ensure_index
+
+    def build(path):
+        e = emb.select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("v")
+        )
+        cent = _lloyd_centroids(e)
+        (
+            _lloyd_assign(e, cent)
+            .select("vec_id", "v", "cell")
+            .write.mode("overwrite")
+            .partitionBy("cell")
+            .parquet(path)
+        )
+        cent_rows = [(int(r.cell), [float(x) for x in r.cv]) for r in cent.collect()]
+        return {"cent_rows": cent_rows}
 
     key = _cache_key(emb, "lloyd_index", _LLOYD_K, _LLOYD_ITERS)
-    if key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
-    path = _index_path(emb.sparkSession, key, "lloyd")
-    model = load_model_sidecar(path)
-    if model is not None:
-        cent_rows = [(int(c), v) for c, v in model["cent_rows"]]
-        _INDEX_CACHE[key] = (path, cent_rows)
-        return _INDEX_CACHE[key]
-    e = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    cent = _lloyd_centroids(e)
-    (
-        _lloyd_assign(e, cent)
-        .select("vec_id", "v", "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(path)
-    )
-    cent_rows = [(int(r.cell), [float(x) for x in r.cv]) for r in cent.collect()]
-    src = artifact_source(emb, key)
-    write_model_sidecar(path, {"cent_rows": cent_rows, "source": src})
-    retain_latest_artifact(path, src, legacy_source(emb))
-    _INDEX_CACHE[key] = (path, cent_rows)
-    return path, cent_rows
+    path, model = ensure_index(emb, key, "lloyd", build)
+    return path, [(int(c), v) for c, v in model["cent_rows"]]
 
 
 @register("ann_ivf_lloyd_indexed_topk")
@@ -2831,62 +2814,46 @@ def bitext_margin_mining_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-def _ensure_admitted_lloyd_index(emb: DataFrame) -> tuple[str, list]:
-    """Build-then-ADMIT index lifecycle, persisted once per
-    content-fingerprinted corpus snapshot: train Lloyd centroids on
-    the BASE slice (vec_id % 10 != 0 — the 'nightly build'), write
-    its cell-partitioned assignment, then ``admit_batch_lloyd`` the
-    held-out batch (vec_id % 10 == 0 — the 'arriving day') against
-    the FROZEN centroids. Returns (path, cent_rows). Both the base
-    write and the admission assign through the same driver-round-
-    tripped centroid rows, so the final artifact is row-identical to
-    an assignment-only rebuild over the full corpus (asserted in
-    tests/test_ann.py)."""
-    from mapreduce511_spark.operators.ann import (
-        _INDEX_CACHE,
-        _cache_key,
-        _index_path,
-        admit_batch_lloyd,
-        artifact_source,
-        legacy_source,
-        load_model_sidecar,
-        retain_latest_artifact,
-        write_model_sidecar,
-    )
+def _write_base_lloyd(emb: DataFrame, out: str) -> tuple[list, DataFrame]:
+    """The build half of build-then-admit: train Lloyd centroids on
+    the BASE slice (vec_id % 10 != 0 — the 'nightly build') and admit
+    that slice into the empty index dir ``out`` against the frozen
+    centroid rows. Returns (cent_rows, batch), ``batch`` being the
+    held-out vec_id % 10 == 0 slice (the 'arriving day') to admit."""
+    from mapreduce511_spark.operators.ann import admit_batch_lloyd
 
-    key = _cache_key(emb, "lloyd_admitted", _LLOYD_K, _LLOYD_ITERS)
-    if key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
-    spark = emb.sparkSession
-    path = _index_path(spark, key, "lloyd_admit")
-    # sidecar is written AFTER the admission append, so its presence
-    # means build + admit both completed
-    model = load_model_sidecar(path)
-    if model is not None:
-        cent_rows = [(int(c), v) for c, v in model["cent_rows"]]
-        _INDEX_CACHE[key] = (path, cent_rows)
-        return _INDEX_CACHE[key]
     e = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     base = e.filter(F.col("vec_id") % 10 != 0)
-    batch = e.filter(F.col("vec_id") % 10 == 0)
     cent = _lloyd_centroids(base)
     cent_rows = [(int(r.cell), [float(x) for x in r.cv]) for r in cent.collect()]
-    cent_df = spark.createDataFrame(cent_rows, ["cell", "cv"])
-    (
-        _lloyd_assign(base, cent_df)
-        .select("vec_id", "v", "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(path)
+    admit_batch_lloyd(emb.sparkSession, out, cent_rows, base)
+    return cent_rows, e.filter(F.col("vec_id") % 10 == 0)
+
+
+def _ensure_admitted_lloyd_index(emb: DataFrame) -> tuple[str, list]:
+    """Build-then-ADMIT index lifecycle, persisted once per
+    content-fingerprinted corpus snapshot: ``_write_base_lloyd``, then
+    ``admit_batch_lloyd`` the held-out batch against the same FROZEN
+    centroid rows, so the final artifact is row-identical to an
+    assignment-only rebuild over the full corpus (asserted in
+    tests/test_ann.py). Returns (path, cent_rows); the sidecar follows
+    the admission append, so it marks build + admit both complete."""
+    from mapreduce511_spark.operators.ann import (
+        _cache_key,
+        admit_batch_lloyd,
+        ensure_index,
     )
-    admit_batch_lloyd(spark, path, cent_rows, batch)
-    src = artifact_source(emb, key)
-    write_model_sidecar(path, {"cent_rows": cent_rows, "source": src})
-    retain_latest_artifact(path, src, legacy_source(emb))
-    _INDEX_CACHE[key] = (path, cent_rows)
-    return path, cent_rows
+
+    def build(path):
+        cent_rows, batch = _write_base_lloyd(emb, path)
+        admit_batch_lloyd(emb.sparkSession, path, cent_rows, batch)
+        return {"cent_rows": cent_rows}
+
+    key = _cache_key(emb, "lloyd_admitted", _LLOYD_K, _LLOYD_ITERS)
+    path, model = ensure_index(emb, key, "lloyd_admit", build)
+    return path, [(int(c), v) for c, v in model["cent_rows"]]
 
 
 # Lloyd trained on the base slice (vec_id % 10 <> 0), every vector
@@ -2912,6 +2879,24 @@ ADMISSION_CENSUS_ORACLE = f"""{_ADMISSION_CELLS}
     """
 
 
+def admission_census(spark: SparkSession, path: str) -> DataFrame:
+    """The Spark side of ``ADMISSION_CENSUS_ORACLE``: per-cell base /
+    admitted / total row counts of the admitted Lloyd artifact at
+    ``path``, however it was admitted or laid out."""
+    from mapreduce511_spark.sources.tables import read_parquet_checked
+
+    return (
+        read_parquet_checked(spark, path)
+        .groupBy(F.col("cell").cast("long").alias("cell"))
+        .agg(
+            F.count(F.when(F.col("vec_id") % 10 != 0, 1)).alias("n_base"),
+            F.count(F.when(F.col("vec_id") % 10 == 0, 1)).alias("n_admitted"),
+            F.count(F.lit(1)).alias("n_total"),
+        )
+        .orderBy("cell")
+    )
+
+
 @register("ann_admission_census", oracle=ADMISSION_CENSUS_ORACLE)
 def ann_admission_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental ANN-index ADMISSION under the exact oracle (r8,
@@ -2930,20 +2915,8 @@ def ann_admission_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan + appended files in existing cell dirs — vs the O(corpus)
     retrain+rewrite of a snapshot rebuild; SCALING.md carries the
     measured admit-vs-rebuild ratio."""
-    from mapreduce511_spark.sources.tables import read_parquet_checked
-
     emb = load_table(spark, sf_dir, "embeddings")
-    path, _ = _ensure_admitted_lloyd_index(emb)
-    af = read_parquet_checked(spark, path)
-    return (
-        af.groupBy(F.col("cell").cast("long").alias("cell"))
-        .agg(
-            F.count(F.when(F.col("vec_id") % 10 != 0, 1)).alias("n_base"),
-            F.count(F.when(F.col("vec_id") % 10 == 0, 1)).alias("n_admitted"),
-            F.count(F.lit(1)).alias("n_total"),
-        )
-        .orderBy("cell")
-    )
+    return admission_census(spark, _ensure_admitted_lloyd_index(emb)[0])
 
 
 ADMISSION_DRIFT_ORACLE = f"""{_ADMISSION_CELLS}

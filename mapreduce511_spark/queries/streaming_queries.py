@@ -26,7 +26,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce511_spark.memo import owned_tmpdir, session_memo
+from mapreduce511_spark.memo import local_path, owned_tmpdir, session_memo
 from mapreduce511_spark.multimodal import (
     AFP_CLASS,
     AFP_T,
@@ -42,7 +42,10 @@ from mapreduce511_spark.queries.oracle_sql import (
     dhash_ctes,
     video_ctes,
 )
-from mapreduce511_spark.queries.similarity import ADMISSION_CENSUS_ORACLE
+from mapreduce511_spark.queries.similarity import (
+    ADMISSION_CENSUS_ORACLE,
+    admission_census,
+)
 from mapreduce511_spark.sources.tables import load_table
 from mapreduce511_spark.streaming import (
     click_purchase_full_join,
@@ -116,8 +119,9 @@ def _session_standing(spark: SparkSession, sf_dir: str, tag: str, builder):
     import glob
     import os
 
-    d = sf_dir[len("file:"):] if sf_dir.startswith("file:") else sf_dir
-    tables = sorted(glob.glob(os.path.join(glob.escape(d), "*.parquet")))
+    tables = sorted(
+        glob.glob(os.path.join(glob.escape(local_path(sf_dir)), "*.parquet"))
+    )
     return session_memo(
         _STANDING_MEMO,
         spark,
@@ -1605,67 +1609,24 @@ def stream_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ensure_stream_admitted_lloyd_index(emb: DataFrame) -> tuple[str, list]:
     """Build the stream-admitted Lloyd artifact once per content
-    fingerprint: train on the base slice, write it at
-    ``ingest_batch=-1``, then foreachBatch-admit the arriving slice
-    (see ``stream_ann_admission_census`` for the full story).
-    Returns (path, cent_rows)."""
-    from mapreduce511_spark.operators.ann import (
-        _INDEX_CACHE,
-        _cache_key,
-        _index_path,
-        artifact_source,
-        legacy_source,
-        load_model_sidecar,
-        retain_latest_artifact,
-        write_model_sidecar,
-    )
+    fingerprint: train on the base slice, write it at ``ingest_batch=-1``,
+    then foreachBatch-admit the arriving slice (see
+    ``stream_ann_admission_census``). Returns (path, cent_rows). Each
+    ``ingest_batch`` dir carries its own commit marker and the root has
+    no ``_SUCCESS``: the sidecar, written after the drain, marks it done."""
+    from mapreduce511_spark.operators.ann import _cache_key, ensure_index
     from mapreduce511_spark.queries.similarity import (
         _LLOYD_ITERS,
         _LLOYD_K,
         _lloyd_assign,
-        _lloyd_centroids,
+        _write_base_lloyd,
     )
 
     spark = emb.sparkSession
-    key = _cache_key(emb, "lloyd_stream_admitted", _LLOYD_K, _LLOYD_ITERS)
-    if key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
-    # per-batch partition dirs carry their own commit markers; the
-    # sidecar (written after the drain) is the artifact-complete mark
-    done_path = _index_path(spark, key, "lloyd_stream")
-    model = load_model_sidecar(done_path, require_success=False)
-    if model is not None:
-        cent_rows = [(int(c), v) for c, v in model["cent_rows"]]
-        _INDEX_CACHE[key] = (done_path, cent_rows)
-        return _INDEX_CACHE[key]
-    with _scratch_run("annadmit") as (ckpt, _name):
-        src = f"{Path(ckpt).parent}/src"
-        e = emb.select(
-            "vec_id",
-            F.col("embedding").cast("array<double>").alias("v"),
-        )
-        base = e.filter(F.col("vec_id") % 10 != 0)
-        arriving = e.filter(F.col("vec_id") % 10 == 0)
-        cent = _lloyd_centroids(base)
-        cent_rows = [
-            (int(r.cell), [float(x) for x in r.cv]) for r in cent.collect()
-        ]
+
+    def build(path):
+        cent_rows, arriving = _write_base_lloyd(emb, f"{path}/ingest_batch=-1")
         cent_df = spark.createDataFrame(cent_rows, ["cell", "cv"])
-        path = _index_path(spark, key, "lloyd_stream")
-        shutil.rmtree(path, ignore_errors=True)  # torn prior build
-        (
-            _lloyd_assign(base, cent_df)
-            .select("vec_id", "v", "cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(f"{path}/ingest_batch=-1")
-        )
-        arriving.repartition(4).write.mode("overwrite").parquet(src)
-        reader = (
-            spark.readStream.schema(arriving.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
 
         def admit(batch_df: DataFrame, batch_id: int) -> None:
             (
@@ -1677,20 +1638,45 @@ def ensure_stream_admitted_lloyd_index(emb: DataFrame) -> tuple[str, list]:
                 .parquet(f"{path}/ingest_batch={batch_id}")
             )
 
-        (
-            reader.writeStream.foreachBatch(admit)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        origin = artifact_source(emb, key)
-        write_model_sidecar(
-            path, {"cent_rows": cent_rows, "source": origin}
-        )
-        retain_latest_artifact(path, origin, legacy_source(emb))
-        _INDEX_CACHE[key] = (path, cent_rows)
-        return path, cent_rows
+        with _scratch_run("annadmit") as (ckpt, _name):
+            src = f"{Path(ckpt).parent}/src"
+            arriving.repartition(4).write.mode("overwrite").parquet(src)
+            (
+                spark.readStream.schema(arriving.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src)
+                .writeStream.foreachBatch(admit)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
+        return {"cent_rows": cent_rows}
+
+    key = _cache_key(emb, "lloyd_stream_admitted", _LLOYD_K, _LLOYD_ITERS)
+    path, model = ensure_index(
+        emb, key, "lloyd_stream", build, require_success=False
+    )
+    return path, [(int(c), v) for c, v in model["cent_rows"]]
+
+
+def ensure_compacted_lloyd_index(emb: DataFrame) -> tuple[str, list]:
+    """The stream-admitted artifact rewritten by
+    ``operators/maintenance.py::compact_parquet`` into target-sized
+    files partitioned by cell only, once per content fingerprint (see
+    ``ann_index_compaction_census``). Returns (path, cent_rows)."""
+    from mapreduce511_spark.operators.ann import _cache_key, ensure_index
+    from mapreduce511_spark.operators.maintenance import compact_parquet
+    from mapreduce511_spark.queries.similarity import _LLOYD_ITERS, _LLOYD_K
+
+    def build(path):
+        spath, cent_rows = ensure_stream_admitted_lloyd_index(emb)
+        compact_parquet(emb.sparkSession, spath, path, partition_by=["cell"])
+        return {"cent_rows": cent_rows}
+
+    key = _cache_key(emb, "lloyd_compacted", _LLOYD_K, _LLOYD_ITERS)
+    path, model = ensure_index(emb, key, "lloyd_compact", build)
+    return path, [(int(c), v) for c, v in model["cent_rows"]]
 
 
 @register("stream_ann_admission_census", oracle=ADMISSION_CENSUS_ORACLE)
@@ -1723,20 +1709,8 @@ def stream_ann_admission_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     costs one map-only assignment scan + an append-sized write; the
     `ingest_batch` partition level doubles as the retention/rollback
     unit (drop a day = drop its dirs)."""
-    from mapreduce511_spark.sources.tables import read_parquet_checked
-
     emb = load_table(spark, sf_dir, "embeddings")
-    path, _ = ensure_stream_admitted_lloyd_index(emb)
-    af = read_parquet_checked(spark, path)
-    return (
-        af.groupBy(F.col("cell").cast("long").alias("cell"))
-        .agg(
-            F.count(F.when(F.col("vec_id") % 10 != 0, 1)).alias("n_base"),
-            F.count(F.when(F.col("vec_id") % 10 == 0, 1)).alias("n_admitted"),
-            F.count(F.lit(1)).alias("n_total"),
-        )
-        .orderBy("cell")
-    )
+    return admission_census(spark, ensure_stream_admitted_lloyd_index(emb)[0])
 
 
 @register("ann_index_compaction_census", oracle=ADMISSION_CENSUS_ORACLE)
@@ -1762,50 +1736,8 @@ def ann_index_compaction_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     admissions); the steady query is one census scan of the
     compacted layout. The driver-local dir swap stands in for a
     table-format commit (Iceberg/Delta rewrite), noted honestly."""
-    from mapreduce511_spark.operators.ann import (
-        _INDEX_CACHE,
-        _cache_key,
-        _index_path,
-    )
-    from mapreduce511_spark.operators.maintenance import compact_parquet
-    from mapreduce511_spark.queries.similarity import _LLOYD_ITERS, _LLOYD_K
-    from mapreduce511_spark.sources.tables import read_parquet_checked
-
     emb = load_table(spark, sf_dir, "embeddings")
-    key = _cache_key(emb, "lloyd_compacted", _LLOYD_K, _LLOYD_ITERS)
-    if key not in _INDEX_CACHE:
-        from mapreduce511_spark.operators.ann import (
-            artifact_source,
-            legacy_source,
-            load_model_sidecar,
-            retain_latest_artifact,
-            write_model_sidecar,
-        )
-
-        cpath = _index_path(spark, key, "lloyd_compact")
-        model = load_model_sidecar(cpath)
-        if model is not None:
-            _INDEX_CACHE[key] = (cpath, [(int(c), v) for c, v in model["cent_rows"]])
-        else:
-            spath, cent_rows = ensure_stream_admitted_lloyd_index(emb)
-            compact_parquet(spark, spath, cpath, partition_by=["cell"])
-            origin = artifact_source(emb, key)
-            write_model_sidecar(
-                cpath, {"cent_rows": cent_rows, "source": origin}
-            )
-            retain_latest_artifact(cpath, origin, legacy_source(emb))
-            _INDEX_CACHE[key] = (cpath, cent_rows)
-    cpath, _ = _INDEX_CACHE[key]
-    af = read_parquet_checked(spark, cpath)
-    return (
-        af.groupBy(F.col("cell").cast("long").alias("cell"))
-        .agg(
-            F.count(F.when(F.col("vec_id") % 10 != 0, 1)).alias("n_base"),
-            F.count(F.when(F.col("vec_id") % 10 == 0, 1)).alias("n_admitted"),
-            F.count(F.lit(1)).alias("n_total"),
-        )
-        .orderBy("cell")
-    )
+    return admission_census(spark, ensure_compacted_lloyd_index(emb)[0])
 
 
 # ---------------------------------------------------------------------------

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from mapreduce511_spark.memo import session_memo, stat_signature
+from mapreduce511_spark.memo import session_memo, stat_signature, warehouse_path
 from mapreduce511_spark.operators.suffix_array import (
     adjacent_lcp,
     build_suffix_array,
@@ -61,10 +61,8 @@ def _sa_artifact_path(spark: SparkSession, sig: tuple) -> str:
     import hashlib
     import os
 
-    raw = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    root = raw[len("file:"):] if raw.startswith("file:") else raw
     tag = hashlib.sha1(repr(sig).encode()).hexdigest()[:16]
-    return os.path.join(root, "sa_index", f"sa_{tag}")
+    return os.path.join(warehouse_path(spark), "sa_index", f"sa_{tag}")
 
 
 def _sa_artifact_complete(art: str) -> bool:

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from mapreduce511_spark.memo import local_path
+
 _DEFAULT_MAX_PARTITION_BYTES = 128 * 1024 * 1024
 
 
@@ -55,7 +57,7 @@ def _concrete_local_files(path: str | list[str], recursive: bool) -> list[str]:
     paths = path if isinstance(path, list) else [path]
     out: list[str] = []
     for p in paths:
-        local = p[len("file:"):] if p.startswith("file:") else p
+        local = local_path(p)
         if "://" in local:
             out.append(p)  # remote scheme — caller's contract
         elif os.path.isdir(local):

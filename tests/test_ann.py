@@ -839,28 +839,66 @@ def test_index_artifacts_reused_across_processes(spark):
     retraining and REWRITING in place (mode 'overwrite' deletes part
     files under any concurrent reader; this is the race a parallel
     session hit). The sidecar is written last + atomically, so its
-    presence implies the artifact is complete."""
+    presence implies the artifact is complete. Every persisted index
+    goes through ``ensure_index``; each is checked here."""
+    import functools
     import glob
+    import os
+    import shutil
 
-    from mapreduce511_spark.operators.ann import _INDEX_CACHE, ensure_ivf_index
-    from mapreduce511_spark.queries.similarity import _ensure_lloyd_index
+    from mapreduce511_spark.operators.ann import (
+        _INDEX_CACHE,
+        ensure_ivf_index,
+        ensure_pq_index,
+        ensure_pq_residual_index,
+    )
+    from mapreduce511_spark.queries.similarity import (
+        _ensure_admitted_lloyd_index,
+        _ensure_lloyd_index,
+    )
+    from mapreduce511_spark.queries.streaming_queries import (
+        ensure_compacted_lloyd_index,
+        ensure_stream_admitted_lloyd_index,
+    )
     from mapreduce511_spark.sources.tables import load_table
     from tests.conftest import SF_SMOKE
 
+    def parts(path):
+        return {
+            f: os.stat(f).st_mtime_ns
+            for f in glob.glob(f"{path}/**/*.parquet", recursive=True)
+        }
+
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    for build in (ensure_ivf_index, _ensure_lloyd_index):
-        path, model1 = build(emb)
-        files1 = sorted(glob.glob(f"{path}/**/*.parquet", recursive=True))
-        assert files1, path
-        # simulate a brand-new process: in-memory cache gone
+    builders = (
+        ensure_ivf_index,
+        ensure_pq_index,
+        functools.partial(ensure_pq_index, with_cells=True),
+        ensure_pq_residual_index,
+        _ensure_lloyd_index,
+        _ensure_admitted_lloyd_index,
+        ensure_stream_admitted_lloyd_index,
+        ensure_compacted_lloyd_index,
+    )
+    def forget(path):  # simulate a brand-new process: cache entry gone
         stale = [k for k in _INDEX_CACHE if _INDEX_CACHE[k][0] == path]
+        assert stale, path
         for k in stale:
             del _INDEX_CACHE[k]
-        path2, model2 = build(emb)
+
+    for build in builders:
+        path = build(emb)[0]
+        shutil.rmtree(path)  # an earlier run's artifact: build afresh
+        forget(path)
+        path1, *model1 = build(emb)
+        files1 = parts(path)
+        assert path1 == path and files1, path
+        forget(path)
+        path2, *model2 = build(emb)
         assert path2 == path
         assert model2 == model1  # JSON round-trips IEEE doubles exactly
-        files2 = sorted(glob.glob(f"{path}/**/*.parquet", recursive=True))
-        assert files2 == files1  # no rewrite: same part files, untouched
+        # no rewrite: same part files, untouched
+        assert parts(path) == files1, path
 
 
 def test_retain_latest_artifact_scopes_prefix_and_source(tmp_path):

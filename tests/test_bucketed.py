@@ -5,9 +5,14 @@ the unbucketed twin shuffles both sides."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import textwrap
+
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import REPO, SF_SMOKE
 
 
 def _canon(rows):
@@ -70,3 +75,39 @@ def test_bucketed_write_is_repeatable(spark):
     write_bucketed(cust, "mr511_bucketed_rewrite_probe", "c_custkey", 4)
     assert spark.table("mr511_bucketed_rewrite_probe").count() == cust.count()
     spark.sql("DROP TABLE mr511_bucketed_rewrite_probe")
+
+
+def test_session_tables_removed_at_exit(tmp_path):
+    """The two per-session tables ``bucketed_join_revenue`` writes
+    (names suffixed with the applicationId) are removed when the
+    process that wrote them exits. Runs in a subprocess with its own
+    warehouse."""
+    wh = tmp_path / "wh"
+    script = textwrap.dedent(
+        f"""
+        import os
+        from mapreduce511_spark.queries.relational import bucketed_join_revenue
+        from mapreduce511_spark.session import get_spark
+
+        spark = get_spark(
+            "bucketed-exit", cpus=2, shuffle_partitions=4,
+            extra_conf={{"spark.sql.warehouse.dir": {str(wh)!r}}},
+        )
+        bucketed_join_revenue(spark, {SF_SMOKE!r}).collect()
+        print("live", sorted(os.listdir({str(wh)!r})))
+        """
+    )
+    path = os.pathsep.join(
+        filter(None, [str(REPO), os.environ.get("PYTHONPATH")])
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=str(tmp_path),
+        env={**os.environ, "PYTHONPATH": path, "SPARK_GRAFT_DRIVER_MEM": "1g"},
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.count("mr511_bucketed_") == 2, proc.stdout
+    assert [p.name for p in wh.glob("mr511_bucketed_*")] == []

@@ -56,6 +56,36 @@ def test_roundtrip_random_pcm_exercises_escape():
     _roundtrip(pcm, block_size=512)
 
 
+@pytest.mark.parametrize(
+    "nbits,residuals", [(0, [0] * 7), (4, [3, -8, 7, 0, -1, 2, -5])]
+)
+def test_escaped_partition_decodes(nbits, residuals):
+    """A hand-built order-1 fixed subframe whose one Rice partition
+    uses the raw-bits escape: ``nbits`` per residual, including the
+    0-bit case a conforming encoder may emit for an all-zero
+    partition (libFLAC decodes it as zeros)."""
+    from mapreduce511_spark.multimodal import flac as m
+    from mapreduce511_spark.multimodal.bitio import MsbReader, MsbWriter
+
+    w = MsbWriter()
+    w.write(0, 1)  # padding bit
+    w.write(0b001001, 6)  # FIXED, order 1
+    w.write(0, 1)  # no wasted bits
+    w.write(100, 16)  # warmup sample
+    w.write(0, 2)  # Rice, 4-bit parameters
+    w.write(0, 4)  # partition order 0
+    w.write(0b1111, 4)  # escape code
+    w.write(nbits, 5)
+    for r in residuals:
+        w.write(r, nbits)
+    w.align()
+    want = [100]
+    for r in residuals:
+        want.append(want[-1] + r)
+    got = m._read_subframe(MsbReader(w.getvalue(), "cut"), len(want), 16)
+    assert got == want
+
+
 @pytest.mark.parametrize("po", [0, 1, 2, 3])
 def test_partition_orders_roundtrip(po):
     """Rice partition orders 0-3 (per-partition params, short first

@@ -476,3 +476,57 @@ def test_bit_io_is_written_once():
                 ):
                     found.append((f.name, cls.name, node.lineno))
     assert found == []
+
+
+def test_index_lifecycle_is_written_once():
+    """``operators/ann.py::ensure_index`` owns the build-once lifecycle
+    of the content-keyed index artifacts (session cache, path, reuse
+    check, build, sidecar published last, keep-latest retention). No
+    other module may touch the cache or the path and retention-group
+    helpers, and only the suffix-array artifact (stat-keyed, memoizes
+    checkpointed frames) may use the sidecar primitives directly."""
+    import ast
+    from pathlib import Path
+
+    from tests.conftest import REPO
+
+    ann_only = {"_INDEX_CACHE", "_index_path", "artifact_source", "legacy_source"}
+    sidecar = {"load_model_sidecar", "write_model_sidecar", "retain_latest_artifact"}
+    found = []
+    pkg = Path(REPO) / "mapreduce511_spark"
+    for f in sorted(pkg.rglob("*.py")):
+        rel = f.relative_to(pkg).as_posix()
+        if rel == "operators/ann.py":
+            continue
+        used = {
+            getattr(node, "id", None) or getattr(node, "attr", None)
+            or node.name
+            for node in ast.walk(ast.parse(f.read_text()))
+            if isinstance(node, (ast.Name, ast.Attribute, ast.alias))
+        }
+        allowed = set() if rel != "queries/suffix.py" else sidecar
+        found += [(rel, n) for n in sorted(used & (ann_only | sidecar) - allowed)]
+    assert found == []
+
+
+def test_file_scheme_is_stripped_once():
+    """``memo.local_path`` is the one ``file:`` -> local-path rule; a
+    ``len("file:")`` slice anywhere else in the package is a copy."""
+    import ast
+    from pathlib import Path
+
+    from tests.conftest import REPO
+
+    found = []
+    pkg = Path(REPO) / "mapreduce511_spark"
+    for f in sorted(pkg.rglob("*.py")):
+        if f.relative_to(pkg).as_posix() == "memo.py":
+            continue
+        for node in ast.walk(ast.parse(f.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "id", None) == "len"
+                and [getattr(a, "value", None) for a in node.args] == ["file:"]
+            ):
+                found.append((f.name, node.lineno))
+    assert found == []
