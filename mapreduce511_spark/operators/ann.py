@@ -211,6 +211,44 @@ def train_centroids(
     return centroids
 
 
+def nearest_cells(probes: DataFrame, cent: DataFrame, nprobe: int) -> DataFrame:
+    """(pid, pv, cell): each probe's ``nprobe`` best cells. ``probes``
+    has (pid, pv) and ``cent`` the broadcast (cell, cv) centroid rows;
+    cells rank by exact cosine, ties to the lower cell id."""
+    from pyspark.sql.window import Window
+
+    w_cell = Window.partitionBy("pid").orderBy(F.desc("csim"), F.asc("cell"))
+    return (
+        probes.join(F.broadcast(cent))
+        .withColumn("csim", cosine_similarity(F.col("pv"), F.col("cv")))
+        .withColumn("rn", F.row_number().over(w_cell))
+        .filter(F.col("rn") <= nprobe)
+        .select("pid", "pv", "cell")
+    )
+
+
+def exact_topk(cand: DataFrame, topk: int, vec: str = "embedding") -> DataFrame:
+    """(probe_id, rank, vec_id, cos_sim): the exact re-rank every ANN
+    search ends in. ``cand`` holds (pid, pv, vec_id, <vec>) candidate
+    rows; each probe keeps its ``topk`` best by exact cosine, ties to
+    the lower vec_id, ranked 1..topk (no gaps, no shared ranks), cosine
+    rounded to 4 places."""
+    from pyspark.sql.window import Window
+
+    w_rank = Window.partitionBy("pid").orderBy(F.desc("s"), F.asc("vec_id"))
+    return (
+        cand.withColumn("s", cosine_similarity(F.col("pv"), F.col(vec)))
+        .withColumn("rank", F.row_number().over(w_rank))
+        .filter(F.col("rank") <= topk)
+        .select(
+            F.col("pid").alias("probe_id"),
+            "rank",
+            "vec_id",
+            F.round("s", 4).alias("cos_sim"),
+        )
+    )
+
+
 def ivf_search(
     emb: DataFrame,
     probes: DataFrame,
@@ -224,35 +262,18 @@ def ivf_search(
     to tag cells (in a real deployment the cell id is precomputed and
     the corpus parquet is partitioned by it -> partition pruning makes
     this a fractional scan)."""
-    from pyspark.sql.window import Window
-
     tagged = _with_best_cell(
         emb.select("vec_id", "embedding"), "embedding", centroids
     )
-    cent_rows = [(i, c) for i, c in enumerate(centroids)]
-    spark = emb.sparkSession
-    cent_df = spark.createDataFrame(cent_rows, ["cell", "cv"])
-    w_cell = Window.partitionBy("pid").orderBy(F.desc("csim"), F.asc("cell"))
-    probe_cells = (
-        probes.join(F.broadcast(cent_df))
-        .withColumn("csim", cosine_similarity(F.col("pv"), F.col("cv")))
-        .withColumn("rn", F.row_number().over(w_cell))
-        .filter(F.col("rn") <= nprobe)
-        .select("pid", "pv", "cell")
+    cent_df = emb.sparkSession.createDataFrame(
+        list(enumerate(centroids)), ["cell", "cv"]
     )
-    w_rank = Window.partitionBy("pid").orderBy(F.desc("s"), F.asc("vec_id"))
-    return (
-        tagged.join(F.broadcast(probe_cells), "cell")
-        .filter(F.col("vec_id") != F.col("pid"))
-        .withColumn("s", cosine_similarity(F.col("pv"), F.col("embedding")))
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= topk)
-        .select(
-            F.col("pid").alias("probe_id"),
-            "rank",
-            "vec_id",
-            F.round("s", 4).alias("cos_sim"),
-        )
+    probe_cells = nearest_cells(probes, cent_df, nprobe)
+    return exact_topk(
+        tagged.join(F.broadcast(probe_cells), "cell").filter(
+            F.col("vec_id") != F.col("pid")
+        ),
+        topk,
     )
 
 
@@ -337,12 +358,11 @@ def cosine_pairs_blocked(
 
 
 def cosine_pairs_broadcast(emb: DataFrame, threshold: float) -> DataFrame:
-    """corpus_fits_driver fast path of :func:`cosine_pairs_blocked`:
-    collect + broadcast the whole corpus as matrix B, then each Arrow
-    batch of A-rows is one GEMM against it. One scan, zero shuffle —
-    the right plan while B fits comfortably on the driver and
-    executors (~1M x 64 float64 = 512 MB). Beyond that, use
-    ``cosine_pairs_blocked``."""
+    """Broadcast-matrix twin of :func:`cosine_pairs_blocked`: collect
+    the whole corpus as matrix B, then each Arrow batch of A-rows is one
+    GEMM against it. No query selects it — it needs the corpus on the
+    driver — so it stays as the test reference the blocked path's pairs
+    are checked against (``tests/test_ann.py``)."""
     import numpy as np
     import pandas as pd
 
@@ -402,41 +422,20 @@ def ivf_search_pruned(
     Spark turns into PartitionFilters (only those directories are
     listed/read — assert via plan in tests). Scoring is the same exact
     cosine over candidates as ``ivf_search``."""
-    from pyspark.sql.window import Window
+    from mapreduce511_spark.sources.tables import read_parquet_checked
 
-    from mapreduce511_spark.functions.vectors import cosine_similarity
-
-    cent_df = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)], ["cell", "cv"]
-    )
-    w_cell = Window.partitionBy("pid").orderBy(F.desc("csim"), F.asc("cell"))
-    probe_cells = (
-        probes.join(F.broadcast(cent_df))
-        .withColumn("csim", cosine_similarity(F.col("pv"), F.col("cv")))
-        .withColumn("rn", F.row_number().over(w_cell))
-        .filter(F.col("rn") <= nprobe)
-        .select("pid", "pv", "cell")
-    )
+    cent_df = spark.createDataFrame(list(enumerate(centroids)), ["cell", "cv"])
+    probe_cells = nearest_cells(probes, cent_df, nprobe)
     # partition-pruning filter: the distinct probed cells (collected —
     # nprobe * |probes| ints, trivially driver-sized; at scale this is
     # the metadata-only step every vector DB performs per query batch)
     cells = [r.cell for r in probe_cells.select("cell").distinct().collect()]
-    from mapreduce511_spark.sources.tables import read_parquet_checked
-
     corpus = read_parquet_checked(spark, index_path).filter(F.col("cell").isin(cells))
-    w_rank = Window.partitionBy("pid").orderBy(F.desc("s"), F.asc("vec_id"))
-    return (
-        corpus.join(F.broadcast(probe_cells), "cell")
-        .filter(F.col("vec_id") != F.col("pid"))
-        .withColumn("s", cosine_similarity(F.col("pv"), F.col("embedding")))
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= topk)
-        .select(
-            F.col("pid").alias("probe_id"),
-            "rank",
-            "vec_id",
-            F.round("s", 4).alias("cos_sim"),
-        )
+    return exact_topk(
+        corpus.join(F.broadcast(probe_cells), "cell").filter(
+            F.col("vec_id") != F.col("pid")
+        ),
+        topk,
     )
 
 
@@ -776,9 +775,6 @@ def ivf_pq_residual_search_indexed(
     same code budget (residuals concentrate near 0)."""
     import math
 
-    from pyspark.sql.window import Window
-
-    from mapreduce511_spark.functions.vectors import cosine_similarity
     from mapreduce511_spark.sources.tables import read_parquet_checked
 
     def _dot(a, b):
@@ -787,14 +783,9 @@ def ivf_pq_residual_search_indexed(
             d += x * y
         return d
 
+    prows = _unit_probes(probes)
     rows = []
-    for r in probes.select("pid", "pv").collect():
-        pv = [float(x) for x in r.pv]
-        acc = 0.0
-        for x in pv:
-            acc += x * x
-        nrm = math.sqrt(acc)
-        pu = [x / nrm for x in pv]
+    for pid, _pv, pu in prows:
         ranked = sorted(
             (
                 (
@@ -808,8 +799,7 @@ def ivf_pq_residual_search_indexed(
             key=lambda t: (-t[0], t[2]),
         )
         rows.extend(
-            (int(r.pid), int(ci), float(pcdot))
-            for _cs, pcdot, ci in ranked[:nprobe]
+            (pid, int(ci), float(pcdot)) for _cs, pcdot, ci in ranked[:nprobe]
         )
     probe_cells = spark.createDataFrame(
         rows, "pid long, cell int, pcdot double"
@@ -818,37 +808,16 @@ def ivf_pq_residual_search_indexed(
     idx = read_parquet_checked(spark, index_path).filter(
         F.col("cell").isin(cells)
     )
-    ptbl = _probe_tables_df(probes, books)
-    w_adc = Window.partitionBy("pid").orderBy(F.desc("adc"), F.asc("vec_id"))
-    cand_ids = (
+    ptbl = _probe_tables_df(spark, prows, books)
+    cand_ids = adc_shortlist(
         idx.select("cell", "vec_id", "codes")
         .join(F.broadcast(probe_cells), "cell")
         .join(F.broadcast(ptbl), "pid")
-        .filter(F.col("vec_id") != F.col("pid"))
-        .withColumn("adc", F.col("pcdot") + _pq_adc_col(len(books)))
-        .withColumn("arank", F.row_number().over(w_adc))
-        .filter(F.col("arank") <= rerank * topk)
-        .select("pid", "vec_id")
+        .filter(F.col("vec_id") != F.col("pid")),
+        F.col("pcdot") + _pq_adc_col(len(books)),
+        rerank * topk,
     )
-    cand = (
-        idx.select("vec_id", "embedding")
-        .join(F.broadcast(cand_ids), "vec_id")
-        .join(F.broadcast(probes.select("pid", "pv")), "pid")
-    )
-    w_rank = Window.partitionBy("pid").orderBy(F.desc("s"), F.asc("vec_id"))
-    return (
-        cand.withColumn(
-            "s", cosine_similarity(F.col("pv"), F.col("embedding"))
-        )
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= topk)
-        .select(
-            F.col("pid").alias("probe_id"),
-            "rank",
-            "vec_id",
-            F.round("s", 4).alias("cos_sim"),
-        )
-    )
+    return rerank_exact(idx, cand_ids, probes, topk)
 
 
 # --- product quantization (the memory-bound ANN scale path) ---------
@@ -1107,30 +1076,43 @@ def _pq_probe_table_col(books: list[list[list[float]]], pv_col: str = "pv") -> C
     )
 
 
-def _probe_tables_df(probes: DataFrame, books: list[list[list[float]]]) -> DataFrame:
-    """(pid, tbl) with each probe's m x k dot table computed DRIVER-
-    SIDE in pure Python — bit-identical to ``_pq_probe_table_col``
-    (same left-to-right IEEE fold order as zip_with/aggregate, same
-    0.0 init, same x/sqrt(fold(x*x)) normalization), but as literal
-    DATA instead of an m*k-fold expression tree. The expression twin
-    costs seconds of Catalyst analysis + codegen PER QUERY (measured:
-    the dominant cost of the indexed search path at toy scale); the
-    probe side is tiny by construction (|probes| rows), so computing
-    its tables on the driver is the standard query-side prep every
-    ANN system does, and the executors see only lookups."""
+def _unit_probes(probes: DataFrame) -> list[tuple[int, list[float], list[float]]]:
+    """[(pid, pv, pu)] for the probe set, collected once: ``pv`` the
+    probe as Python floats, ``pu`` = pv / sqrt(fold(x*x)) with the same
+    left-to-right 0.0-initialized fold as ``l2_norm``, so driver-side
+    arithmetic on ``pu`` matches the expression twins bit for bit."""
     import math
 
-    m = len(books)
-    k = len(books[0])
-    d_sub = 64 // m
-    rows = []
+    out = []
     for r in probes.select("pid", "pv").collect():
         pv = [float(x) for x in r.pv]
         acc = 0.0
         for x in pv:
             acc += x * x
         nrm = math.sqrt(acc)
-        pu = [x / nrm for x in pv]
+        out.append((int(r.pid), pv, [x / nrm for x in pv]))
+    return out
+
+
+def _probe_tables_df(
+    spark, probe_rows: list, books: list[list[list[float]]]
+) -> DataFrame:
+    """(pid, tbl) with each probe's m x k dot table computed DRIVER-
+    SIDE in pure Python from ``_unit_probes`` rows — bit-identical to
+    ``_pq_probe_table_col`` (same left-to-right IEEE fold order as
+    zip_with/aggregate, same 0.0 init, same x/sqrt(fold(x*x))
+    normalization), but as literal DATA instead of an m*k-fold
+    expression tree. The expression twin costs seconds of Catalyst
+    analysis + codegen PER QUERY (measured: the dominant cost of the
+    indexed search path at toy scale); the probe side is tiny by
+    construction (|probes| rows), so computing its tables on the driver
+    is the standard query-side prep every ANN system does, and the
+    executors see only lookups."""
+    m = len(books)
+    k = len(books[0])
+    d_sub = 64 // m
+    rows = []
+    for pid, _pv, pu in probe_rows:
         tbl = []
         for s in range(m):
             row = []
@@ -1140,10 +1122,8 @@ def _probe_tables_df(probes: DataFrame, books: list[list[list[float]]]) -> DataF
                     d += pu[s * d_sub + t] * books[s][j][t]
                 row.append(d)
             tbl.append(row)
-        rows.append((int(r.pid), tbl))
-    return probes.sparkSession.createDataFrame(
-        rows, "pid long, tbl array<array<double>>"
-    )
+        rows.append((pid, tbl))
+    return spark.createDataFrame(rows, "pid long, tbl array<array<double>>")
 
 
 def _pq_adc_col(m: int) -> Column:
@@ -1153,6 +1133,36 @@ def _pq_adc_col(m: int) -> Column:
         term = F.element_at(F.element_at("tbl", s + 1), F.col("codes")[s] + 1)
         approx = term if approx is None else approx + term
     return approx
+
+
+def adc_shortlist(cand: DataFrame, adc: Column, n: int) -> DataFrame:
+    """(pid, vec_id): each probe's ``n`` best candidates of ``cand`` by
+    the approximate score ``adc``, ties to the lower vec_id — the pool
+    the exact re-rank reads."""
+    from pyspark.sql.window import Window
+
+    w_adc = Window.partitionBy("pid").orderBy(F.desc("adc"), F.asc("vec_id"))
+    return (
+        cand.withColumn("adc", adc)
+        .withColumn("arank", F.row_number().over(w_adc))
+        .filter(F.col("arank") <= n)
+        .select("pid", "vec_id")
+    )
+
+
+def rerank_exact(
+    vecs: DataFrame, cand_ids: DataFrame, probes: DataFrame, topk: int
+) -> DataFrame:
+    """``exact_topk`` over a shortlist: fetch the float embeddings of
+    the (pid, vec_id) pairs in ``cand_ids`` from ``vecs`` by key and the
+    probe vectors from ``probes`` (pid, pv) — both bounded sides
+    broadcast — so only shortlisted vectors leave the scan."""
+    return exact_topk(
+        vecs.select("vec_id", "embedding")
+        .join(F.broadcast(cand_ids), "vec_id")
+        .join(F.broadcast(probes.select("pid", "pv")), "pid"),
+        topk,
+    )
 
 
 def pq_search(
@@ -1172,48 +1182,20 @@ def pq_search(
     the m-byte codes column; |probes| x n score rows fold through a
     per-pid TakeOrdered; exact re-rank reads rerank*topk*|probes|
     embeddings."""
-    from pyspark.sql.window import Window
-
-    from mapreduce511_spark.functions.vectors import cosine_similarity
-
-    m = len(books)
     coded = pq_encode(emb, books)
     ptbl = probes.select("pid", "pv", _pq_probe_table_col(books).alias("tbl"))
-    approx = _pq_adc_col(m)
-    w_adc = Window.partitionBy("pid").orderBy(F.desc("adc"), F.asc("vec_id"))
     # the ADC stage scans ONLY (vec_id, codes) — the float embeddings
     # never enter the |probes| x n stage (that's the PQ memory story);
     # the rerank*topk survivors fetch their embedding by key.
-    cand_ids = (
-        coded.select("vec_id", "codes")
-        .join(
+    cand_ids = adc_shortlist(
+        coded.select("vec_id", "codes").join(
             F.broadcast(ptbl.select("pid", "tbl")),
             F.col("vec_id") != F.col("pid"),
-        )
-        .withColumn("adc", approx)
-        .withColumn("arank", F.row_number().over(w_adc))
-        .filter(F.col("arank") <= rerank * topk)
-        .select("pid", "vec_id")
+        ),
+        _pq_adc_col(len(books)),
+        rerank * topk,
     )
-    cand = (
-        emb.select("vec_id", "embedding")
-        .join(F.broadcast(cand_ids), "vec_id")
-        .join(F.broadcast(probes.select("pid", "pv")), "pid")
-    )
-    w_rank = Window.partitionBy("pid").orderBy(F.desc("s"), F.asc("vec_id"))
-    return (
-        cand.withColumn(
-            "s", cosine_similarity(F.col("pv"), F.col("embedding"))
-        )
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= topk)
-        .select(
-            F.col("pid").alias("probe_id"),
-            "rank",
-            "vec_id",
-            F.round("s", 4).alias("cos_sim"),
-        )
-    )
+    return rerank_exact(emb, cand_ids, probes, topk)
 
 
 def pq_search_indexed(
@@ -1231,41 +1213,18 @@ def pq_search_indexed(
     columns of the index parquet (column pruning — the m-byte codes
     story holds at the IO layer, not just in the plan); the float
     embeddings column is read solely for the rerank*topk survivors."""
-    from pyspark.sql.window import Window
-
-    from mapreduce511_spark.functions.vectors import cosine_similarity
     from mapreduce511_spark.sources.tables import read_parquet_checked
 
     idx = read_parquet_checked(spark, index_path)
-    ptbl = _probe_tables_df(probes, books)
-    w_adc = Window.partitionBy("pid").orderBy(F.desc("adc"), F.asc("vec_id"))
-    cand_ids = (
-        idx.select("vec_id", "codes")
-        .join(F.broadcast(ptbl), F.col("vec_id") != F.col("pid"))
-        .withColumn("adc", _pq_adc_col(len(books)))
-        .withColumn("arank", F.row_number().over(w_adc))
-        .filter(F.col("arank") <= rerank * topk)
-        .select("pid", "vec_id")
+    ptbl = _probe_tables_df(spark, _unit_probes(probes), books)
+    cand_ids = adc_shortlist(
+        idx.select("vec_id", "codes").join(
+            F.broadcast(ptbl), F.col("vec_id") != F.col("pid")
+        ),
+        _pq_adc_col(len(books)),
+        rerank * topk,
     )
-    cand = (
-        idx.select("vec_id", "embedding")
-        .join(F.broadcast(cand_ids), "vec_id")
-        .join(F.broadcast(probes.select("pid", "pv")), "pid")
-    )
-    w_rank = Window.partitionBy("pid").orderBy(F.desc("s"), F.asc("vec_id"))
-    return (
-        cand.withColumn(
-            "s", cosine_similarity(F.col("pv"), F.col("embedding"))
-        )
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= topk)
-        .select(
-            F.col("pid").alias("probe_id"),
-            "rank",
-            "vec_id",
-            F.round("s", 4).alias("cos_sim"),
-        )
-    )
+    return rerank_exact(idx, cand_ids, probes, topk)
 
 
 def ivf_pq_search_indexed(
@@ -1286,9 +1245,6 @@ def ivf_pq_search_indexed(
     listed/read) and the ADC scan reads only the codes column."""
     import math
 
-    from pyspark.sql.window import Window
-
-    from mapreduce511_spark.functions.vectors import cosine_similarity
     from mapreduce511_spark.sources.tables import read_parquet_checked
 
     # probe -> cell assignment DRIVER-SIDE (|probes| x k cosines in
@@ -1307,50 +1263,29 @@ def ivf_pq_search_indexed(
             nb += b * b
         return d / (math.sqrt(na) * math.sqrt(nb))
 
+    prows = _unit_probes(probes)
     pairs = []
-    for r in probes.select("pid", "pv").collect():
-        pv = [float(x) for x in r.pv]
+    for pid, pv, _pu in prows:
         ranked = sorted(
             ((_cos(pv, cv), ci) for ci, cv in enumerate(centroids)),
             key=lambda t: (-t[0], t[1]),
         )
-        pairs.extend((int(r.pid), int(ci)) for _, ci in ranked[:nprobe])
+        pairs.extend((pid, int(ci)) for _, ci in ranked[:nprobe])
     probe_cells = spark.createDataFrame(pairs, "pid long, cell int")
     cells = sorted({c for _, c in pairs})
     idx = read_parquet_checked(spark, index_path).filter(
         F.col("cell").isin(cells)
     )
-    ptbl = _probe_tables_df(probes, books)
-    w_adc = Window.partitionBy("pid").orderBy(F.desc("adc"), F.asc("vec_id"))
-    cand_ids = (
+    ptbl = _probe_tables_df(spark, prows, books)
+    cand_ids = adc_shortlist(
         idx.select("cell", "vec_id", "codes")
         .join(F.broadcast(probe_cells), "cell")
         .join(F.broadcast(ptbl), "pid")
-        .filter(F.col("vec_id") != F.col("pid"))
-        .withColumn("adc", _pq_adc_col(len(books)))
-        .withColumn("arank", F.row_number().over(w_adc))
-        .filter(F.col("arank") <= rerank * topk)
-        .select("pid", "vec_id")
+        .filter(F.col("vec_id") != F.col("pid")),
+        _pq_adc_col(len(books)),
+        rerank * topk,
     )
-    cand = (
-        idx.select("vec_id", "embedding")
-        .join(F.broadcast(cand_ids), "vec_id")
-        .join(F.broadcast(probes.select("pid", "pv")), "pid")
-    )
-    w_rank = Window.partitionBy("pid").orderBy(F.desc("s"), F.asc("vec_id"))
-    return (
-        cand.withColumn(
-            "s", cosine_similarity(F.col("pv"), F.col("embedding"))
-        )
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= topk)
-        .select(
-            F.col("pid").alias("probe_id"),
-            "rank",
-            "vec_id",
-            F.round("s", 4).alias("cos_sim"),
-        )
-    )
+    return rerank_exact(idx, cand_ids, probes, topk)
 
 
 def ivf_pq_search(
@@ -1368,64 +1303,30 @@ def ivf_pq_search(
     survivors re-rank exactly. This is the standard billion-scale
     layout (Jégou et al. 2011) minus residual encoding — codes
     quantize the raw unit vectors, which costs some ADC fidelity but
-    keeps one codebook corpus-wide; the residual refinement is a
-    documented upgrade, not a structural change.
+    keeps one codebook corpus-wide. The residual refinement is
+    ``ivf_pq_residual_search_indexed`` over
+    ``ensure_pq_residual_index``.
 
     ``probes`` needs (pid, pv). At 100 TB the cell tag is the parquet
     partition key (see ``ivf_write_partitioned``) so the ADC scan is
     partition-pruned file IO, and the codes column is the only thing
     read."""
-    from pyspark.sql.window import Window
-
-    from mapreduce511_spark.functions.vectors import cosine_similarity
-
-    m = len(books)
-    spark = emb.sparkSession
     coded = pq_encode(emb, books).select("vec_id", "codes")
     tagged = _with_best_cell(
         emb.select("vec_id", "embedding"), "embedding", centroids
     ).select("vec_id", "cell")
     coded = coded.join(tagged, "vec_id")
 
-    cent_df = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)], ["cell", "cv"]
+    cent_df = emb.sparkSession.createDataFrame(
+        list(enumerate(centroids)), ["cell", "cv"]
     )
-    w_cell = Window.partitionBy("pid").orderBy(F.desc("csim"), F.asc("cell"))
-    probe_cells = (
-        probes.join(F.broadcast(cent_df))
-        .withColumn("csim", cosine_similarity(F.col("pv"), F.col("cv")))
-        .withColumn("rn", F.row_number().over(w_cell))
-        .filter(F.col("rn") <= nprobe)
-        .select("pid", "cell")
-    )
+    probe_cells = nearest_cells(probes, cent_df, nprobe).select("pid", "cell")
     ptbl = probes.select("pid", _pq_probe_table_col(books).alias("tbl"))
-    approx = _pq_adc_col(m)
-    w_adc = Window.partitionBy("pid").orderBy(F.desc("adc"), F.asc("vec_id"))
-    cand_ids = (
+    cand_ids = adc_shortlist(
         coded.join(F.broadcast(probe_cells), "cell")
         .join(F.broadcast(ptbl), "pid")
-        .filter(F.col("vec_id") != F.col("pid"))
-        .withColumn("adc", approx)
-        .withColumn("arank", F.row_number().over(w_adc))
-        .filter(F.col("arank") <= rerank * topk)
-        .select("pid", "vec_id")
+        .filter(F.col("vec_id") != F.col("pid")),
+        _pq_adc_col(len(books)),
+        rerank * topk,
     )
-    cand = (
-        emb.select("vec_id", "embedding")
-        .join(F.broadcast(cand_ids), "vec_id")
-        .join(F.broadcast(probes.select("pid", "pv")), "pid")
-    )
-    w_rank = Window.partitionBy("pid").orderBy(F.desc("s"), F.asc("vec_id"))
-    return (
-        cand.withColumn(
-            "s", cosine_similarity(F.col("pv"), F.col("embedding"))
-        )
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= topk)
-        .select(
-            F.col("pid").alias("probe_id"),
-            "rank",
-            "vec_id",
-            F.round("s", 4).alias("cos_sim"),
-        )
-    )
+    return rerank_exact(emb, cand_ids, probes, topk)

@@ -166,6 +166,14 @@ _IVF_TOPK = 5
 _N_PROBES = 10
 
 
+def _probe_set(emb: DataFrame) -> DataFrame:
+    """(pid, pv): the first ``_N_PROBES`` vectors, the probe set every
+    ANN query of this module searches for."""
+    return emb.filter(F.col("vec_id") < _N_PROBES).select(
+        F.col("vec_id").alias("pid"), F.col("embedding").alias("pv")
+    )
+
+
 @register(
     "embedding_near_dup_exact_spec",
     oracle=f"""
@@ -302,15 +310,16 @@ def ann_ivf_label_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning if the corpus is written bucketed/partitioned by cell);
     per-probe top-k is a windowed rank over candidates only — the full
     corpus is never cross-joined against probes."""
-    from pyspark.sql.window import Window
+    from mapreduce511_spark.operators.ann import exact_topk, nearest_cells
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # centroids per label: posexplode -> per-dim mean -> re-assemble
+    # centroids per label (the label is the cell id): posexplode ->
+    # per-dim mean -> re-assemble
     cent = (
         emb.select("label", F.posexplode("embedding").alias("dim", "x"))
         .groupBy("label", "dim")
         .agg(F.avg(F.col("x").cast("double")).alias("c"))
-        .groupBy("label")
+        .groupBy(F.col("label").alias("cell"))
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("dim", "c"))),
@@ -318,32 +327,14 @@ def ann_ivf_label_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cv")
         )
     )
-    probes = emb.filter(F.col("vec_id") < _N_PROBES).select(
-        F.col("vec_id").alias("pid"), F.col("embedding").alias("pv")
+    cells = nearest_cells(_probe_set(emb), cent, _IVF_NPROBE).withColumnRenamed(
+        "cell", "label"
     )
-    w_cell = Window.partitionBy("pid").orderBy(
-        F.desc("cell_sim"), F.asc("label")
-    )
-    cells = (
-        probes.join(F.broadcast(cent))
-        .withColumn("cell_sim", cosine_similarity(F.col("pv"), F.col("cv")))
-        .withColumn("rn", F.row_number().over(w_cell))
-        .filter(F.col("rn") <= _IVF_NPROBE)
-        .select("pid", "pv", "label")
-    )
-    w_rank = Window.partitionBy("pid").orderBy(F.desc("s"), F.asc("vec_id"))
-    return (
-        emb.join(F.broadcast(cells), "label")
-        .filter(F.col("vec_id") != F.col("pid"))
-        .withColumn("s", cosine_similarity(F.col("pv"), F.col("embedding")))
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= _IVF_TOPK)
-        .select(
-            F.col("pid").alias("probe_id"),
-            "rank",
-            "vec_id",
-            F.round("s", 4).alias("cos_sim"),
-        )
+    return exact_topk(
+        emb.join(F.broadcast(cells), "label").filter(
+            F.col("vec_id") != F.col("pid")
+        ),
+        _IVF_TOPK,
     )
 
 
@@ -663,7 +654,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall ~ candidate_fraction + 0.25 here. The data-adaptive path
     is ``ann_ivf_kmeans_topk`` (0.96 recall @ ~25% scanned): reach
     for it when the corpus has learnable cluster structure."""
-    from pyspark.sql.window import Window
+    from mapreduce511_spark.operators.ann import rerank_exact
 
     emb = load_table(spark, sf_dir, "embeddings")
     # band join and dedup carry ONLY integers — the 64-float arrays
@@ -679,26 +670,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("pid", "vec_id")
         .distinct()
     )
-    probe_vecs = emb.filter(F.col("vec_id") < _N_PROBES).select(
-        F.col("vec_id").alias("pid"), F.col("embedding").alias("pv")
-    )
-    cand = (
-        emb.select("vec_id", "embedding")
-        .join(F.broadcast(cand_ids), "vec_id")
-        .join(F.broadcast(probe_vecs), "pid")
-    )
-    w = Window.partitionBy("pid").orderBy(F.desc("s"), F.asc("vec_id"))
-    return (
-        cand.withColumn("s", cosine_similarity(F.col("pv"), F.col("embedding")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _IVF_TOPK)
-        .select(
-            F.col("pid").alias("probe_id"),
-            "rank",
-            "vec_id",
-            F.round("s", 4).alias("cos_sim"),
-        )
-    )
+    return rerank_exact(emb, cand_ids, _probe_set(emb), _IVF_TOPK)
 
 
 @register("ann_ivf_kmeans_topk")
@@ -713,10 +685,9 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     centroids = train_centroids(emb)
-    probes = emb.filter(F.col("vec_id") < _N_PROBES).select(
-        F.col("vec_id").alias("pid"), F.col("embedding").alias("pv")
+    return ivf_search(
+        emb, _probe_set(emb), centroids, nprobe=_IVF_NPROBE, topk=_IVF_TOPK
     )
-    return ivf_search(emb, probes, centroids, nprobe=4, topk=_IVF_TOPK)
 
 
 @register("ann_ivf_indexed_topk")
@@ -739,11 +710,9 @@ def ann_ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     path, centroids = ensure_ivf_index(emb)
-    probes = emb.filter(F.col("vec_id") < _N_PROBES).select(
-        F.col("vec_id").alias("pid"), F.col("embedding").alias("pv")
-    )
     return ivf_search_pruned(
-        spark, path, probes, centroids, nprobe=4, topk=_IVF_TOPK
+        spark, path, _probe_set(emb), centroids, nprobe=_IVF_NPROBE,
+        topk=_IVF_TOPK,
     )
 
 
@@ -943,37 +912,21 @@ def ann_ivf_lloyd_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition). No driver collect anywhere in training or search —
     unlike ``train_centroids`` this never materializes centroids on
     the driver."""
-    from pyspark.sql.window import Window
+    from mapreduce511_spark.operators.ann import exact_topk, nearest_cells
 
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     cent = _lloyd_centroids(e)
-
-    probes = e.filter(F.col("vec_id") < _N_PROBES).select(
-        F.col("vec_id").alias("pid"), F.col("v").alias("pv")
+    probes = _probe_set(emb).select(
+        "pid", F.col("pv").cast("array<double>").alias("pv")
     )
-    w_cell = Window.partitionBy("pid").orderBy(F.desc("csim"), F.asc("cell"))
-    probe_cells = (
-        probes.join(F.broadcast(cent))
-        .withColumn("csim", cosine_similarity(F.col("pv"), F.col("cv")))
-        .withColumn("rn", F.row_number().over(w_cell))
-        .filter(F.col("rn") <= _IVF_NPROBE)
-        .select("pid", "pv", "cell")
-    )
-    w_rank = Window.partitionBy("pid").orderBy(F.desc("s"), F.asc("vec_id"))
-    return (
+    probe_cells = nearest_cells(probes, cent, _IVF_NPROBE)
+    return exact_topk(
         _lloyd_assign(e, cent)
         .join(F.broadcast(probe_cells), "cell")
-        .filter(F.col("vec_id") != F.col("pid"))
-        .withColumn("s", cosine_similarity(F.col("pv"), F.col("v")))
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= _IVF_TOPK)
-        .select(
-            F.col("pid").alias("probe_id"),
-            "rank",
-            "vec_id",
-            F.round("s", 4).alias("cos_sim"),
-        )
+        .filter(F.col("vec_id") != F.col("pid")),
+        _IVF_TOPK,
+        vec="v",
     )
 
 
@@ -1003,6 +956,46 @@ _BITEXT_MARGIN = f"""g AS (
       AND floor(1000.0 * 4.0 * c1 / (c1 + c2 + c3 + c4))
           >= {_BITEXT_MARGIN_MILLI}
     """
+
+
+def _bitext_margin(pairs: DataFrame) -> DataFrame:
+    """(src_id, tgt_id, cos_sim, margin_milli): the Spark twin of
+    ``_BITEXT_MARGIN`` over candidate pairs (pid, pv, tgt_id, vb), pid
+    being the source vector. Each source's top 4 targets by exact
+    cosine (ties to the lower tgt_id) pivot into fixed columns c1..c4;
+    a pair is kept at c1 >= ``_BITEXT_MIN_COS`` and floor-milli margin
+    >= ``_BITEXT_MARGIN_MILLI``."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("pid").orderBy(F.desc("c"), F.asc("tgt_id"))
+    ranked = (
+        pairs.withColumn("c", cosine_similarity(F.col("pv"), F.col("vb")))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= 4)
+    )
+    g = ranked.groupBy(F.col("pid").alias("src_id")).agg(
+        F.max(F.when(F.col("rn") == 1, F.col("tgt_id"))).alias("tgt_id"),
+        F.max(F.when(F.col("rn") == 1, F.col("c"))).alias("c1"),
+        F.max(F.when(F.col("rn") == 2, F.col("c"))).alias("c2"),
+        F.max(F.when(F.col("rn") == 3, F.col("c"))).alias("c3"),
+        F.max(F.when(F.col("rn") == 4, F.col("c"))).alias("c4"),
+    )
+    margin = F.floor(
+        1000.0 * 4.0 * F.col("c1")
+        / (F.col("c1") + F.col("c2") + F.col("c3") + F.col("c4"))
+    )
+    return (
+        g.filter(
+            (F.col("c1") >= _BITEXT_MIN_COS)
+            & (margin >= _BITEXT_MARGIN_MILLI)
+        )
+        .select(
+            "src_id",
+            "tgt_id",
+            F.round("c1", 4).alias("cos_sim"),
+            margin.cast("long").alias("margin_milli"),
+        )
+    )
 
 
 @register(
@@ -1052,48 +1045,17 @@ def bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the top-4 window is unchanged. Pair volume here is
     |label-0| x |label-1|, the in-block cost that composition
     bounds."""
-    from pyspark.sql.window import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
     )
     a = e.filter(F.col("label") == _BITEXT_SRC_LABEL).select(
-        F.col("vec_id").alias("src_id"), F.col("v").alias("va")
+        F.col("vec_id").alias("pid"), F.col("v").alias("pv")
     )
     b = e.filter(F.col("label") == _BITEXT_TGT_LABEL).select(
         F.col("vec_id").alias("tgt_id"), F.col("v").alias("vb")
     )
-    w = Window.partitionBy("src_id").orderBy(F.desc("c"), F.asc("tgt_id"))
-    ranked = (
-        a.join(F.broadcast(b))
-        .withColumn("c", cosine_similarity(F.col("va"), F.col("vb")))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 4)
-    )
-    g = ranked.groupBy("src_id").agg(
-        F.max(F.when(F.col("rn") == 1, F.col("tgt_id"))).alias("tgt_id"),
-        F.max(F.when(F.col("rn") == 1, F.col("c"))).alias("c1"),
-        F.max(F.when(F.col("rn") == 2, F.col("c"))).alias("c2"),
-        F.max(F.when(F.col("rn") == 3, F.col("c"))).alias("c3"),
-        F.max(F.when(F.col("rn") == 4, F.col("c"))).alias("c4"),
-    )
-    margin = F.floor(
-        1000.0 * 4.0 * F.col("c1")
-        / (F.col("c1") + F.col("c2") + F.col("c3") + F.col("c4"))
-    )
-    return (
-        g.filter(
-            (F.col("c1") >= _BITEXT_MIN_COS)
-            & (margin >= _BITEXT_MARGIN_MILLI)
-        )
-        .select(
-            "src_id",
-            "tgt_id",
-            F.round("c1", 4).alias("cos_sim"),
-            margin.cast("long").alias("margin_milli"),
-        )
-    )
+    return _bitext_margin(a.join(F.broadcast(b)))
 
 
 @register(
@@ -1164,7 +1126,7 @@ def bitext_margin_mining_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     restate it — it is the correctness twin. The steady production
     path is ``bitext_margin_mining_ivf_indexed`` (r8), which serves
     the same mining pass from the persisted Lloyd index."""
-    from pyspark.sql.window import Window
+    from mapreduce511_spark.operators.ann import nearest_cells
 
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select(
@@ -1174,17 +1136,7 @@ def bitext_margin_mining_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = _lloyd_centroids(ev)
     af = _lloyd_assign(ev, cent)
     src = e.filter(F.col("label") == _BITEXT_SRC_LABEL).select(
-        F.col("vec_id").alias("src_id"), F.col("v").alias("va")
-    )
-    w_cell = Window.partitionBy("src_id").orderBy(
-        F.desc("csim"), F.asc("cell")
-    )
-    probe_cells = (
-        src.join(F.broadcast(cent))
-        .withColumn("csim", cosine_similarity(F.col("va"), F.col("cv")))
-        .withColumn("rn", F.row_number().over(w_cell))
-        .filter(F.col("rn") <= _IVF_NPROBE)
-        .select("src_id", "va", "cell")
+        F.col("vec_id").alias("pid"), F.col("v").alias("pv")
     )
     tgt = (
         af.join(
@@ -1193,36 +1145,7 @@ def bitext_margin_mining_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("vec_id").alias("tgt_id"), F.col("v").alias("vb"), "cell")
     )
-    w = Window.partitionBy("src_id").orderBy(F.desc("c"), F.asc("tgt_id"))
-    ranked = (
-        probe_cells.join(tgt, "cell")
-        .withColumn("c", cosine_similarity(F.col("va"), F.col("vb")))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 4)
-    )
-    g = ranked.groupBy("src_id").agg(
-        F.max(F.when(F.col("rn") == 1, F.col("tgt_id"))).alias("tgt_id"),
-        F.max(F.when(F.col("rn") == 1, F.col("c"))).alias("c1"),
-        F.max(F.when(F.col("rn") == 2, F.col("c"))).alias("c2"),
-        F.max(F.when(F.col("rn") == 3, F.col("c"))).alias("c3"),
-        F.max(F.when(F.col("rn") == 4, F.col("c"))).alias("c4"),
-    )
-    margin = F.floor(
-        1000.0 * 4.0 * F.col("c1")
-        / (F.col("c1") + F.col("c2") + F.col("c3") + F.col("c4"))
-    )
-    return (
-        g.filter(
-            (F.col("c1") >= _BITEXT_MIN_COS)
-            & (margin >= _BITEXT_MARGIN_MILLI)
-        )
-        .select(
-            "src_id",
-            "tgt_id",
-            F.round("c1", 4).alias("cos_sim"),
-            margin.cast("long").alias("margin_milli"),
-        )
-    )
+    return _bitext_margin(nearest_cells(src, cent, _IVF_NPROBE).join(tgt, "cell"))
 
 
 @register("ann_pq_topk")
@@ -1259,10 +1182,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     path, books, _ = ensure_pq_index(emb)
-    probes = emb.filter(F.col("vec_id") < _N_PROBES).select(
-        F.col("vec_id").alias("pid"), F.col("embedding").alias("pv")
-    )
-    return pq_search_indexed(spark, path, probes, books, topk=_IVF_TOPK)
+    return pq_search_indexed(spark, path, _probe_set(emb), books, topk=_IVF_TOPK)
 
 
 @register(
@@ -2658,42 +2578,25 @@ def ann_ivf_lloyd_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     session state DuckDB can't see); set-equality against the oracled
     in-query twin is asserted in tests/test_ann.py, which is the
     stronger check anyway (bit-identical cells + cosines)."""
-    from pyspark.sql.window import Window
-
+    from mapreduce511_spark.operators.ann import exact_topk, nearest_cells
     from mapreduce511_spark.sources.tables import read_parquet_checked
 
     emb = load_table(spark, sf_dir, "embeddings")
     path, cent_rows = _ensure_lloyd_index(emb)
     cent = spark.createDataFrame(cent_rows, ["cell", "cv"])
-    probes = emb.filter(F.col("vec_id") < _N_PROBES).select(
-        F.col("vec_id").alias("pid"),
-        F.col("embedding").cast("array<double>").alias("pv"),
+    probes = _probe_set(emb).select(
+        "pid", F.col("pv").cast("array<double>").alias("pv")
     )
-    w_cell = Window.partitionBy("pid").orderBy(F.desc("csim"), F.asc("cell"))
-    probe_cells = (
-        probes.join(F.broadcast(cent))
-        .withColumn("csim", cosine_similarity(F.col("pv"), F.col("cv")))
-        .withColumn("rn", F.row_number().over(w_cell))
-        .filter(F.col("rn") <= _IVF_NPROBE)
-        .select("pid", "pv", "cell")
-    )
+    probe_cells = nearest_cells(probes, cent, _IVF_NPROBE)
     cells = [r.cell for r in probe_cells.select("cell").distinct().collect()]
     corpus = read_parquet_checked(spark, path).filter(
         F.col("cell").isin(cells)
     )
-    w_rank = Window.partitionBy("pid").orderBy(F.desc("s"), F.asc("vec_id"))
-    return (
+    return exact_topk(
         corpus.join(F.broadcast(probe_cells), "cell")
-        .filter(F.col("vec_id") != F.col("pid"))
-        .withColumn("s", cosine_similarity(F.col("pv"), F.col("v")))
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= _IVF_TOPK)
-        .select(
-            F.col("pid").alias("probe_id"),
-            "rank",
-            "vec_id",
-            F.round("s", 4).alias("cos_sim"),
-        )
+        .filter(F.col("vec_id") != F.col("pid")),
+        _IVF_TOPK,
+        vec="v",
     )
 
 
@@ -2751,8 +2654,7 @@ def bitext_margin_mining_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFr
     against the ORACLED in-query twin is asserted in
     tests/test_ann.py — the stronger check, since the twin itself is
     hash-green against the exact SQL restatement."""
-    from pyspark.sql.window import Window
-
+    from mapreduce511_spark.operators.ann import nearest_cells
     from mapreduce511_spark.sources.tables import read_parquet_checked
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2761,19 +2663,10 @@ def bitext_margin_mining_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFr
     # doubles), so probe-cell argmax matches the in-query twin bitwise
     cent = spark.createDataFrame(cent_rows, ["cell", "cv"])
     src = emb.filter(F.col("label") == _BITEXT_SRC_LABEL).select(
-        F.col("vec_id").alias("src_id"),
-        F.col("embedding").cast("array<double>").alias("va"),
+        F.col("vec_id").alias("pid"),
+        F.col("embedding").cast("array<double>").alias("pv"),
     )
-    w_cell = Window.partitionBy("src_id").orderBy(
-        F.desc("csim"), F.asc("cell")
-    )
-    probe_cells = (
-        src.join(F.broadcast(cent))
-        .withColumn("csim", cosine_similarity(F.col("va"), F.col("cv")))
-        .withColumn("rn", F.row_number().over(w_cell))
-        .filter(F.col("rn") <= _IVF_NPROBE)
-        .select("src_id", "va", "cell")
-    )
+    probe_cells = nearest_cells(src, cent, _IVF_NPROBE)
     cells = [r.cell for r in probe_cells.select("cell").distinct().collect()]
     tgt_ids = emb.filter(F.col("label") == _BITEXT_TGT_LABEL).select("vec_id")
     tgt = (
@@ -2782,36 +2675,7 @@ def bitext_margin_mining_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFr
         .join(tgt_ids, "vec_id")
         .select(F.col("vec_id").alias("tgt_id"), F.col("v").alias("vb"), "cell")
     )
-    w = Window.partitionBy("src_id").orderBy(F.desc("c"), F.asc("tgt_id"))
-    ranked = (
-        probe_cells.join(tgt, "cell")
-        .withColumn("c", cosine_similarity(F.col("va"), F.col("vb")))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 4)
-    )
-    g = ranked.groupBy("src_id").agg(
-        F.max(F.when(F.col("rn") == 1, F.col("tgt_id"))).alias("tgt_id"),
-        F.max(F.when(F.col("rn") == 1, F.col("c"))).alias("c1"),
-        F.max(F.when(F.col("rn") == 2, F.col("c"))).alias("c2"),
-        F.max(F.when(F.col("rn") == 3, F.col("c"))).alias("c3"),
-        F.max(F.when(F.col("rn") == 4, F.col("c"))).alias("c4"),
-    )
-    margin = F.floor(
-        1000.0 * 4.0 * F.col("c1")
-        / (F.col("c1") + F.col("c2") + F.col("c3") + F.col("c4"))
-    )
-    return (
-        g.filter(
-            (F.col("c1") >= _BITEXT_MIN_COS)
-            & (margin >= _BITEXT_MARGIN_MILLI)
-        )
-        .select(
-            "src_id",
-            "tgt_id",
-            F.round("c1", 4).alias("cos_sim"),
-            margin.cast("long").alias("margin_milli"),
-        )
-    )
+    return _bitext_margin(probe_cells.join(tgt, "cell"))
 
 
 def _write_base_lloyd(emb: DataFrame, out: str) -> tuple[list, DataFrame]:
@@ -3008,11 +2872,9 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     path, books, centroids = ensure_pq_index(emb, with_cells=True)
-    probes = emb.filter(F.col("vec_id") < _N_PROBES).select(
-        F.col("vec_id").alias("pid"), F.col("embedding").alias("pv")
-    )
     return ivf_pq_search_indexed(
-        spark, path, probes, centroids, books, nprobe=4, topk=_IVF_TOPK
+        spark, path, _probe_set(emb), centroids, books, nprobe=_IVF_NPROBE,
+        topk=_IVF_TOPK,
     )
 
 
@@ -3039,9 +2901,7 @@ def ann_ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     path, books, centroids = ensure_pq_residual_index(emb)
-    probes = emb.filter(F.col("vec_id") < _N_PROBES).select(
-        F.col("vec_id").alias("pid"), F.col("embedding").alias("pv")
-    )
     return ivf_pq_residual_search_indexed(
-        spark, path, probes, centroids, books, nprobe=4, topk=_IVF_TOPK
+        spark, path, _probe_set(emb), centroids, books, nprobe=_IVF_NPROBE,
+        topk=_IVF_TOPK,
     )

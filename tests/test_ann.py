@@ -398,6 +398,76 @@ def test_ann_ivf_indexed_matches_kmeans_twin(spark):
     assert idx == mem and idx
 
 
+def test_search_helpers_pin_tie_rules(spark):
+    """The shared search steps on a hand-built frame whose cosines tie
+    exactly (power-of-two multiples of one direction): equal cosines
+    rank the lower vec_id first, equal cell similarities pick the lower
+    cell, equal ADC scores keep the lower vec_id, and ranks run 1..topk
+    with no gaps or shared ranks."""
+    from mapreduce511_spark.operators.ann import (
+        adc_shortlist,
+        exact_topk,
+        nearest_cells,
+    )
+
+    probes = spark.createDataFrame([(100, [1.0, 0.0])], "pid long, pv array<double>")
+    corpus = spark.createDataFrame(
+        [
+            (5, [2.0, 0.0]),  # cos 1
+            (3, [1.0, 0.0]),  # cos 1: ties with 5, ranks first
+            (4, [1.0, 1.0]),  # cos 1/sqrt(2)
+            (1, [2.0, 2.0]),  # ties with 4, ranks first
+            (2, [0.0, 1.0]),  # cos 0
+            (0, [-1.0, 0.0]),  # cos -1
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    cand = corpus.crossJoin(probes)
+    got = [
+        (r.probe_id, r.rank, r.vec_id, r.cos_sim)
+        for r in exact_topk(cand, 3).orderBy("rank").collect()
+    ]
+    assert got == [(100, 1, 3, 1.0), (100, 2, 5, 1.0), (100, 3, 1, 0.7071)]
+    renamed = cand.withColumnRenamed("embedding", "v")
+    assert [tuple(r) for r in exact_topk(renamed, 3, vec="v").orderBy("rank").collect()] == got
+
+    cent = spark.createDataFrame(
+        [(2, [1.0, 0.0]), (1, [4.0, 0.0]), (0, [0.0, 1.0]), (3, [1.0, 1.0])],
+        "cell int, cv array<double>",
+    )
+    assert [r.cell for r in nearest_cells(probes, cent, 1).collect()] == [1]
+    assert {r.cell for r in nearest_cells(probes, cent, 3).collect()} == {1, 2, 3}
+
+    pool = adc_shortlist(cand, F.lit(0.5), 2)
+    assert sorted(r.vec_id for r in pool.collect()) == [0, 1]
+
+
+def test_ivf_pq_indexed_builds_collect_probes_once(spark):
+    """The driver-side IVF-PQ searches (raw and residual) rank cells and
+    build the ADC tables from ONE collect of the probe set: with the
+    index built, each query's build starts as many Spark jobs as
+    ``ann_pq_topk``'s (one probe collect plus the corpus and index
+    schema reads) — a second collect would add one."""
+    from mapreduce511_spark import queries as suite
+
+    registry = suite.all_queries()
+    sc = spark.sparkContext
+
+    def build_jobs(name: str) -> int:
+        registry[name](spark, SF_CHECK)  # index built, fingerprint memoized
+        group = f"build-jobs-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            registry[name](spark, SF_CHECK)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    pq = build_jobs("ann_pq_topk")
+    names = ("ann_ivf_pq_topk", "ann_ivf_pq_residual_topk")
+    assert {q: build_jobs(q) for q in names} == dict.fromkeys(names, pq)
+
+
 def test_ann_ivf_pq_recall(spark, exact_topk):
     """Cell pruning (recall ceiling ~ the kmeans-IVF 0.88-0.96) and
     ADC ranking compose: the combined index must still recover most

@@ -530,3 +530,38 @@ def test_file_scheme_is_stripped_once():
             ):
                 found.append((f.name, node.lineno))
     assert found == []
+
+
+def test_ann_search_is_written_once():
+    """The ANN family's ranking policy lives in four helpers:
+    ``operators/ann.py::nearest_cells`` (probe cells by cosine, ties to
+    the lower cell), ``exact_topk`` (exact cosine, ties to the lower
+    vec_id, rounded), ``adc_shortlist`` (the ADC re-rank pool) and
+    ``queries/similarity.py::_bitext_margin`` (the top-4 ratio margin).
+    Under ``mapreduce511_spark/`` each of their windows, and the margin's
+    4th pivot column, is written exactly once, so no search can restate
+    (and drift from) the policy. Tests and ``bench.py`` keep their own
+    exact references on purpose and sit outside the scanned tree."""
+    import ast
+    from pathlib import Path
+
+    from tests.conftest import REPO
+
+    anchors = {
+        "orderBy(F.desc('s'), F.asc('vec_id'))": [],
+        "orderBy(F.desc('csim'), F.asc('cell'))": [],
+        "orderBy(F.desc('adc'), F.asc('vec_id'))": [],
+        "F.col('rn') == 4": [],
+    }
+    pkg = Path(REPO) / "mapreduce511_spark"
+    for f in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(f.read_text())):
+            if isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "orderBy":
+                text = "orderBy(" + ", ".join(ast.unparse(a) for a in node.args) + ")"
+            elif isinstance(node, ast.Compare):
+                text = ast.unparse(node)
+            else:
+                continue
+            if text in anchors:
+                anchors[text].append(f"{f.relative_to(pkg).as_posix()}:{node.lineno}")
+    assert {a: len(h) for a, h in anchors.items()} == dict.fromkeys(anchors, 1), anchors

@@ -399,29 +399,19 @@ _BROADCAST_ALLOWLIST: dict[tuple[str, str, str], str] = {
     # --- ANN operators: probes / centroids / ADC tables / candidates
     ("operators/ann.py", "_train_subspace_codebooks", "spark.createDataFrame(cb_rows, ['s', 'j', 'cv'])"): "const: m*k codebook rows",
     ("operators/ann.py", "cosine_pairs_blocked", "partners"): "const: n_blocks^2 partner rows",
-    ("operators/ann.py", "ivf_pq_residual_search_indexed", "cand_ids"): "candidate: nprobe cells' survivors",
     ("operators/ann.py", "ivf_pq_residual_search_indexed", "probe_cells"): "k-rows: probes x nprobe",
-    ("operators/ann.py", "ivf_pq_residual_search_indexed", "probes.select('pid', 'pv')"): "k-rows: probe set",
     ("operators/ann.py", "ivf_pq_residual_search_indexed", "ptbl"): "k-rows: per-probe ADC tables",
-    ("operators/ann.py", "ivf_pq_search", "cand_ids"): "candidate: nprobe cells' survivors",
-    ("operators/ann.py", "ivf_pq_search", "cent_df"): "k-rows: coarse centroids",
     ("operators/ann.py", "ivf_pq_search", "probe_cells"): "k-rows: probes x nprobe",
-    ("operators/ann.py", "ivf_pq_search", "probes.select('pid', 'pv')"): "k-rows: probe set",
     ("operators/ann.py", "ivf_pq_search", "ptbl"): "k-rows: per-probe ADC tables",
-    ("operators/ann.py", "ivf_pq_search_indexed", "cand_ids"): "candidate: nprobe cells' survivors",
     ("operators/ann.py", "ivf_pq_search_indexed", "probe_cells"): "k-rows: probes x nprobe",
-    ("operators/ann.py", "ivf_pq_search_indexed", "probes.select('pid', 'pv')"): "k-rows: probe set",
     ("operators/ann.py", "ivf_pq_search_indexed", "ptbl"): "k-rows: per-probe ADC tables",
-    ("operators/ann.py", "ivf_search", "cent_df"): "k-rows: coarse centroids",
     ("operators/ann.py", "ivf_search", "probe_cells"): "k-rows: probes x nprobe",
-    ("operators/ann.py", "ivf_search_pruned", "cent_df"): "k-rows: coarse centroids",
     ("operators/ann.py", "ivf_search_pruned", "probe_cells"): "k-rows: probes x nprobe",
-    ("operators/ann.py", "pq_search", "cand_ids"): "candidate: ADC top-rerank pool",
-    ("operators/ann.py", "pq_search", "probes.select('pid', 'pv')"): "k-rows: probe set",
+    ("operators/ann.py", "nearest_cells", "cent"): "k-rows: coarse centroids (learned, Lloyd or label cells; 16 cached rows when read from a persisted index)",
     ("operators/ann.py", "pq_search", "ptbl.select('pid', 'tbl')"): "k-rows: per-probe ADC tables",
-    ("operators/ann.py", "pq_search_indexed", "cand_ids"): "candidate: ADC top-rerank pool",
-    ("operators/ann.py", "pq_search_indexed", "probes.select('pid', 'pv')"): "k-rows: probe set",
     ("operators/ann.py", "pq_search_indexed", "ptbl"): "k-rows: per-probe ADC tables",
+    ("operators/ann.py", "rerank_exact", "cand_ids"): "candidate: ADC top-rerank pool (rerank*topk per probe), or capped LSH buckets",
+    ("operators/ann.py", "rerank_exact", "probes.select('pid', 'pv')"): "k-rows: probe set",
     # --- charts / plans / sweep
     ("plans/charts.py", "truncated_series", "limits"): "k-rows: one row per dataset series",
     ("sweep.py", "sweep_report", "best"): "k-rows: one argmin row per config",
@@ -430,18 +420,11 @@ _BROADCAST_ALLOWLIST: dict[tuple[str, str, str], str] = {
     ("queries/dedup.py", "lsh_recall_curve", "thresholds"): "const: 8 threshold rows",
     ("queries/similarity.py", "_lloyd_assign", "cent_arr"): "k-rows: Lloyd centroids",
     ("queries/similarity.py", "ann_ivf_label_baseline", "cells"): "k-rows: probes x nprobe",
-    ("queries/similarity.py", "ann_ivf_label_baseline", "cent"): "k-rows: label centroids",
-    ("queries/similarity.py", "ann_ivf_lloyd_topk", "cent"): "k-rows: Lloyd centroids",
     ("queries/similarity.py", "ann_ivf_lloyd_topk", "probe_cells"): "k-rows: probes x nprobe",
-    ("queries/similarity.py", "ann_ivf_lloyd_indexed_topk", "cent"): "k-rows: Lloyd centroids",
     ("queries/similarity.py", "ann_ivf_lloyd_indexed_topk", "probe_cells"): "k-rows: probes x nprobe",
-    ("queries/similarity.py", "ann_lsh_topk", "cand_ids"): "candidate: capped LSH buckets",
     ("queries/similarity.py", "ann_lsh_topk", "probe_bands"): "k-rows: probes x bands x flips",
-    ("queries/similarity.py", "ann_lsh_topk", "probe_vecs"): "k-rows: probe set",
     ("queries/similarity.py", "ann_quantized_topk", "probe"): "1-row: single probe vector",
     ("queries/similarity.py", "bitext_margin_mining", "b"): "exact-spec: one cross-label block; docstring names the IVF-bounded scale path",
-    ("queries/similarity.py", "bitext_margin_mining_ivf", "cent"): "k-rows: Lloyd centroids",
-    ("queries/similarity.py", "bitext_margin_mining_ivf_indexed", "cent"): "k-rows: 16 cached centroid rows from the persisted Lloyd index",
     ("queries/similarity.py", "ann_admission_drift_census", "cent"): "k-rows: 16 cached centroid rows from the admitted Lloyd index",
     ("queries/similarity.py", "embedding_random_projection", "spark.createDataFrame(_RP_SIGNS, ['i', 'j', 's'])"): "const: projection sign matrix",
     ("queries/similarity.py", "nearest_neighbor_sample", "probes"): "k-rows: 50 probes",
