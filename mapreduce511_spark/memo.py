@@ -23,6 +23,7 @@ import atexit
 import os
 import shutil
 import tempfile
+from contextlib import contextmanager
 
 
 def local_path(p: str) -> str:
@@ -64,6 +65,23 @@ def session_memo(store: dict, spark, paths, build, tag: tuple = ()):
         del store[k]
     store[key] = (sig, val)
     return val
+
+
+@contextmanager
+def session_conf(spark, key: str, value: str | None):
+    """Run the block with the session conf ``key`` set to ``value``
+    (left as it is when ``value`` is None), then put back the value it
+    had before, or unset it when it had none."""
+    prev = spark.conf.get(key, None)
+    if value is not None:
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def owned_tmpdir(prefix: str) -> str:

@@ -31,7 +31,7 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -507,6 +507,35 @@ def fingerprint_bands(hashes: DataFrame, keep_hash: bool = False) -> DataFrame:
             )
         ).alias("b"),
     ).select(*out_cols)
+
+
+def hamming64(a: str, b: str) -> Column:
+    """Hamming distance between the 64-bit fingerprints held in the
+    ``{a}_lo``/``{a}_hi`` and ``{b}_lo``/``{b}_hi`` 32-bit halves."""
+    return F.bit_count(
+        F.col(f"{a}_lo").bitwiseXOR(F.col(f"{b}_lo"))
+    ) + F.bit_count(F.col(f"{a}_hi").bitwiseXOR(F.col(f"{b}_hi")))
+
+
+def fingerprint_index(hashes: DataFrame) -> DataFrame:
+    """The standing side of a banded Hamming gate: the bands of
+    ``hashes`` as ``(iband, ival, i_lo, i_hi)``."""
+    return fingerprint_bands(hashes, keep_hash=True).select(
+        F.col("band").alias("iband"),
+        F.col("val").alias("ival"),
+        F.col("h_lo").alias("i_lo"),
+        F.col("h_hi").alias("i_hi"),
+    )
+
+
+def near_indexed(hashes: DataFrame, idx: DataFrame, t: int) -> DataFrame:
+    """The distinct ``doc_id`` of ``hashes`` with a ``fingerprint_index``
+    fingerprint within Hamming ``t`` (pigeonhole-exact for t <= 3)."""
+    cand = fingerprint_bands(hashes, keep_hash=True).join(
+        idx,
+        (F.col("band") == F.col("iband")) & (F.col("val") == F.col("ival")),
+    )
+    return cand.filter(hamming64("h", "i") <= t).select("doc_id").distinct()
 
 
 def extract_decoded_features(media_df: DataFrame) -> DataFrame:

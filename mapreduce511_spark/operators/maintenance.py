@@ -15,6 +15,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from mapreduce511_spark.memo import session_conf
+
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
 
@@ -96,10 +98,7 @@ def backfill_partitions(df, out_path: str, partition_col: str) -> None:
     duplicate appends). Static overwrite mode — the Spark default —
     would silently DELETE every other partition of the table, which is
     the classic backfill footgun this wrapper exists to avoid."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with session_conf(
+        df.sparkSession, "spark.sql.sources.partitionOverwriteMode", "dynamic"
+    ):
         df.write.mode("overwrite").partitionBy(partition_col).parquet(out_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)

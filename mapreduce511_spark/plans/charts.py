@@ -68,15 +68,13 @@ def _smooth(ds: str, ss: float, xs: list[float], ys: list[float]) -> Series:
     """P7: cubic-spline 300-pt resample + clip when >10 points — the
     reference's ``make_interp_spline(k=3)`` recipe, reproduced by the
     pure-numpy not-a-knot solver (no scipy needed; values match scipy
-    to float round-off, see tests/test_spline.py)."""
+    to float round-off, see tests/test_spline.py). ``xs`` must be
+    unique and ascending, as every ``averaged_series`` series is."""
     if len(xs) > 10:
-        try:
-            from mapreduce511_spark.functions.spline import smooth_resample
+        from mapreduce511_spark.functions.spline import smooth_resample
 
-            x_smooth, y_smooth = smooth_resample(xs, ys)
-            return Series(ds, ss, x_smooth.tolist(), y_smooth.tolist(), True)
-        except Exception:
-            pass
+        x_smooth, y_smooth = smooth_resample(xs, ys)
+        return Series(ds, ss, x_smooth.tolist(), y_smooth.tolist(), True)
     return Series(ds, ss, xs, ys, False)
 
 
@@ -302,18 +300,11 @@ def smooth_series_distributed(series_df: DataFrame, metric: str = "cpu") -> Data
         pdf = pdf.sort_values("time_step")
         xs = pdf["time_step"].to_numpy(dtype=float)
         ys = pdf[value_col].to_numpy(dtype=float)
-        ds = pdf["dataset"].iloc[0]
-        ss = float(pdf["slowstart"].iloc[0])
-        if len(xs) > 10:
-            from mapreduce511_spark.functions.spline import smooth_resample
-
-            x_s, y_s = smooth_resample(xs, ys)
-            return pd.DataFrame(
-                {"dataset": ds, "slowstart": ss, "x": x_s, "y": y_s,
-                 "smoothed": True}
-            )
+        ds, ss = pdf["dataset"].iloc[0], float(pdf["slowstart"].iloc[0])
+        s = _smooth(ds, ss, xs, ys)
         return pd.DataFrame(
-            {"dataset": ds, "slowstart": ss, "x": xs, "y": ys, "smoothed": False}
+            {"dataset": s.dataset, "slowstart": s.slowstart, "x": s.x,
+             "y": s.y, "smoothed": s.smoothed}
         )
 
     return series_df.groupBy("dataset", "slowstart").applyInPandas(

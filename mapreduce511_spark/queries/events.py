@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 from mapreduce511_spark.queries import norm0, register
 from mapreduce511_spark.queries.oracle_sql import TUMBLING_HOUR_ORACLE
 from mapreduce511_spark.sources.tables import load_table
+from mapreduce511_spark.streaming import window_counts
 
 SESSION_GAP_SECONDS = 1800
 
@@ -30,19 +31,7 @@ def tumbling_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour tumbling-window counts per event type — the batch twin of
     the monitor's per-cycle cluster average (SURVEY.md §2.9)."""
     events = load_table(spark, sf_dir, "events")
-    return (
-        events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
+    return window_counts(events, F.window("ts", "1 hour"))
 
 
 @register(

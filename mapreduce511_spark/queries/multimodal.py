@@ -28,6 +28,10 @@ from mapreduce511_spark.multimodal import (
     TIFF_W_MOD,
     attach_fake_media,
     extract_features,
+    fingerprint_bands,
+    fingerprint_index,
+    hamming64,
+    near_indexed,
     sample_frames,
 )
 from mapreduce511_spark.queries import register
@@ -783,6 +787,55 @@ def _hamming_pairs_oracle(hashes: str, cls: int, t: int) -> str:
     """
 
 
+def _hamming_pairs(hashes: DataFrame, cls: int, t: int) -> DataFrame:
+    """The Spark side of ``_hamming_pairs_oracle``: every pair of
+    ``hashes(doc_id, h_lo, h_hi)`` within Hamming ``t``, found through
+    the banded equi-join (pigeonhole-exact for t <= 3), flagged by
+    planted variant class of ``cls`` docs."""
+    bands = fingerprint_bands(hashes)
+    cand = (
+        bands.alias("x")
+        .join(
+            bands.alias("y"),
+            (F.col("x.band") == F.col("y.band"))
+            & (F.col("x.val") == F.col("y.val"))
+            & (F.col("x.doc_id") < F.col("y.doc_id")),
+        )
+        .select(
+            F.col("x.doc_id").alias("doc_a"),
+            F.col("y.doc_id").alias("doc_b"),
+        )
+        .distinct()
+    )
+    ha = hashes.select(
+        F.col("doc_id").alias("doc_a"),
+        F.col("h_lo").alias("a_lo"),
+        F.col("h_hi").alias("a_hi"),
+    )
+    hb = hashes.select(
+        F.col("doc_id").alias("doc_b"),
+        F.col("h_lo").alias("b_lo"),
+        F.col("h_hi").alias("b_hi"),
+    )
+    return (
+        cand.join(ha, "doc_a")
+        .join(hb, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            hamming64("a", "b").cast("long").alias("hamming"),
+            F.when(
+                (F.col("doc_a") - F.col("doc_a") % cls)
+                == (F.col("doc_b") - F.col("doc_b") % cls),
+                1,
+            )
+            .otherwise(0)
+            .alias("same_class"),
+        )
+        .filter(F.col("hamming") <= t)
+    )
+
+
 @register(
     "image_dhash_near_dup",
     # the cell closed form is oracle_sql.dhash_ctes, shared with
@@ -826,54 +879,7 @@ def image_dhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes = extract_dhash(synth_dhash_media(docs)).localCheckpoint(
         eager=True
     )
-    from mapreduce511_spark.multimodal import fingerprint_bands
-
-    bands = fingerprint_bands(hashes)
-    cand = (
-        bands.alias("x")
-        .join(
-            bands.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.val") == F.col("y.val"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    ha = hashes.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("h_lo").alias("a_lo"),
-        F.col("h_hi").alias("a_hi"),
-    )
-    hb = hashes.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("h_lo").alias("b_lo"),
-        F.col("h_hi").alias("b_hi"),
-    )
-    hamming = (
-        F.bit_count(F.col("a_lo").bitwiseXOR(F.col("b_lo")))
-        + F.bit_count(F.col("a_hi").bitwiseXOR(F.col("b_hi")))
-    ).cast("long")
-    return (
-        cand.join(ha, "doc_a")
-        .join(hb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            hamming.alias("hamming"),
-            F.when(
-                (F.col("doc_a") - F.col("doc_a") % DHASH_CLASS)
-                == (F.col("doc_b") - F.col("doc_b") % DHASH_CLASS),
-                1,
-            )
-            .otherwise(0)
-            .alias("same_class"),
-        )
-        .filter(F.col("hamming") <= DHASH_T)
-    )
+    return _hamming_pairs(hashes, DHASH_CLASS, DHASH_T)
 
 
 @register(
@@ -961,54 +967,7 @@ def audio_fingerprint_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes = extract_audio_fingerprint(
         synth_audio_fp_media(docs)
     ).localCheckpoint(eager=True)
-    from mapreduce511_spark.multimodal import fingerprint_bands
-
-    bands = fingerprint_bands(hashes)
-    cand = (
-        bands.alias("x")
-        .join(
-            bands.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.val") == F.col("y.val"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    ha = hashes.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("h_lo").alias("a_lo"),
-        F.col("h_hi").alias("a_hi"),
-    )
-    hb = hashes.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("h_lo").alias("b_lo"),
-        F.col("h_hi").alias("b_hi"),
-    )
-    hamming = (
-        F.bit_count(F.col("a_lo").bitwiseXOR(F.col("b_lo")))
-        + F.bit_count(F.col("a_hi").bitwiseXOR(F.col("b_hi")))
-    ).cast("long")
-    return (
-        cand.join(ha, "doc_a")
-        .join(hb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            hamming.alias("hamming"),
-            F.when(
-                (F.col("doc_a") - F.col("doc_a") % AFP_CLASS)
-                == (F.col("doc_b") - F.col("doc_b") % AFP_CLASS),
-                1,
-            )
-            .otherwise(0)
-            .alias("same_class"),
-        )
-        .filter(F.col("hamming") <= AFP_T)
-    )
+    return _hamming_pairs(hashes, AFP_CLASS, AFP_T)
 
 
 # ---------------------------------------------------------------------------
@@ -1194,14 +1153,7 @@ def fingerprint_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = hashes.join(
         F.broadcast(probes), F.col("doc_id") != F.col("probe_id")
     ).select(
-        "probe_id",
-        "doc_id",
-        (
-            F.bit_count(F.col("p_lo").bitwiseXOR(F.col("h_lo")))
-            + F.bit_count(F.col("p_hi").bitwiseXOR(F.col("h_hi")))
-        )
-        .cast("long")
-        .alias("hamming"),
+        "probe_id", "doc_id", hamming64("p", "h").cast("long").alias("hamming")
     )
     w = Window.partitionBy("probe_id").orderBy("hamming", "doc_id")
     return (
@@ -1369,34 +1321,11 @@ def cross_modal_dup_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("text_dup", F.lit(1))
     )
 
-    from mapreduce511_spark.multimodal import fingerprint_bands
-
-    def bands(hashes: DataFrame) -> DataFrame:
-        return fingerprint_bands(hashes, keep_hash=True)
-
     def banded_flag(hashes: DataFrame, t: int, out: str) -> DataFrame:
-        """Arriving-vs-index banded Hamming gate, pigeonhole-exact at
-        t <= 3 over 4 x 16-bit bands."""
-        idx = bands(hashes.filter(~is_arr)).select(
-            F.col("band").alias("iband"),
-            F.col("val").alias("ival"),
-            F.col("h_lo").alias("i_lo"),
-            F.col("h_hi").alias("i_hi"),
-        )
-        cand = bands(hashes.filter(is_arr)).join(
-            idx,
-            (F.col("band") == F.col("iband"))
-            & (F.col("val") == F.col("ival")),
-        )
-        hamming = F.bit_count(
-            F.col("h_lo").bitwiseXOR(F.col("i_lo"))
-        ) + F.bit_count(F.col("h_hi").bitwiseXOR(F.col("i_hi")))
-        return (
-            cand.filter(hamming <= t)
-            .select("doc_id")
-            .distinct()
-            .withColumn(out, F.lit(1))
-        )
+        """Arriving-vs-index banded Hamming gate."""
+        return near_indexed(
+            hashes.filter(is_arr), fingerprint_index(hashes.filter(~is_arr)), t
+        ).withColumn(out, F.lit(1))
 
     i_flag = banded_flag(
         extract_dhash(synth_dhash_media(docs)), DHASH_T, "image_dup"

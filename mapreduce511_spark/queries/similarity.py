@@ -9,7 +9,7 @@ correctness oracles for the approximate scale paths.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce511_spark.functions.text import tokenize, word_ngrams
@@ -1904,6 +1904,124 @@ _TFIDF_TOP20 = """
     """
 
 
+def _tfidf_weights(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The Spark side of ``_TFIDF_WEIGHTS``: (tf, dfreq, wts, norms)
+    over the documents' word bigrams — ``tf(doc_id, g, tf)``,
+    ``dfreq(g, df)``, the integer weights ``wts(doc_id, g, wt)`` and
+    ``norms(doc_id, nrm)``; tf and wts are checkpointed."""
+    docs = load_table(spark, sf_dir, "documents")
+    # tf fans out to dfreq, the weights and (via wts) both join sides
+    # and the norms — checkpoint so tokenize + bigram explode + count
+    # executes once, not 4x (without the r6-era forced broadcasts the
+    # recomputation cost became visible: 48 s vs 11 s at sf0.1).
+    # spread_scan (r13): the single-row-group testdata file plans as
+    # ONE scan task, serializing the tokenize+explode map stage
+    # (4.2 s -> 0.9 s at 32 cores); no-op on any multi-split input.
+    tf = (
+        spread_scan(docs).select(
+            "doc_id",
+            F.explode(word_ngrams(tokenize("text"), 2)).alias("g"),
+        )
+        .groupBy("doc_id", "g")
+        .agg(F.count("*").alias("tf"))
+        .localCheckpoint(eager=True)
+    )
+    dfreq = tf.groupBy("g").agg(F.count("*").alias("df"))
+    nd = tf.agg(F.countDistinct("doc_id").alias("n"))
+    # dfreq is one row per distinct bigram — corpus-linear, NO
+    # broadcast hint (r6 VERDICT: a forced broadcast of an unbounded
+    # side is a driver OOM at scale; the term-keyed shuffle join is
+    # the co-partitioned 100 TB plan, and AQE broadcasts the side at
+    # runtime when it is actually small). nd is a 1-row aggregate:
+    # hint is safe and correct.
+    # r13 (guide §2.5/§2.2): AQE sizes post-shuffle partitions by INPUT
+    # bytes, but the exact query's g-keyed pair self-join expands to Σ df²
+    # candidate rows (36.5M from 256k input rows at sf0.1) — so the
+    # checkpointed wts inherited an AQE-coalesced 4-partition layout
+    # and the suite's most expensive stage (pair generation + partial
+    # aggregation) ran on 4 tasks at ANY core count (measured: the
+    # 8→32-core ratio was 0.95 and the query was the suite's #1 at
+    # 21.4 s in the driver bench). Repartition by g to a core-derived
+    # width BEFORE the checkpoint: the pair stage then parallelizes
+    # with the machine, and hash(g) is the co-partitioned layout the
+    # join would want at cluster scale (931 distinct bigrams into ≤64
+    # partitions keeps per-partition Σ df² balanced — ~29x more keys
+    # than partitions, guide §2.5). Placement-only change: every sum
+    # here is an exact integer aggregate, so results are bit-identical.
+    n_pair_parts = max(spark.sparkContext.defaultParallelism, 8)
+    wts = (
+        tf.join(dfreq, "g")
+        .crossJoin(F.broadcast(nd))
+        .filter(F.col("df") < F.col("n"))
+        .select(
+            "doc_id",
+            "g",
+            (
+                F.col("tf")
+                * F.floor(
+                    1000 * F.log(F.col("n").cast("double") / F.col("df"))
+                )
+            ).alias("wt"),
+        )
+        .repartition(n_pair_parts, "g")
+        .localCheckpoint(eager=True)
+    )
+    norms = wts.groupBy("doc_id").agg(
+        F.sum(F.col("wt") * F.col("wt")).cast("long").alias("nrm")
+    )
+    return tf, dfreq, wts, norms
+
+
+def _tfidf_top20(pairs: DataFrame, norms: DataFrame) -> DataFrame:
+    """The Spark side of ``_TFIDF_TOP20``: the 20 best candidate
+    ``pairs(doc_a, doc_b, dot, n_shared_terms)`` at cosine >= 0.6."""
+    na = norms.select(
+        F.col("doc_id").alias("doc_a"), F.col("nrm").alias("na")
+    )
+    nb = norms.select(
+        F.col("doc_id").alias("doc_b"), F.col("nrm").alias("nb")
+    )
+    # norms is one row per document (corpus-linear): no broadcast hint
+    return (
+        pairs.join(na, "doc_a")
+        .join(nb, "doc_b")
+        .filter(
+            (F.col("dot") > 0)
+            # exact integer gate while 100·dot² fits DECIMAL(38)
+            # (dot < 1e18 — holds for any realistic idf-weighted doc;
+            # the oracle's HUGEINT is 128-bit so it never overflows).
+            # Under Spark's non-ANSI default an overflow yields NULL,
+            # which would silently DROP the pair — so coalesce to a
+            # double compare for that astronomic regime, where a
+            # ~1e-16 relative boundary error is the documented cost.
+            & F.coalesce(
+                F.expr(
+                    "100 * CAST(dot AS DECIMAL(38,0)) * dot"
+                    " >= 36 * CAST(na AS DECIMAL(38,0)) * nb"
+                ),
+                F.expr(
+                    "100.0 * CAST(dot AS DOUBLE) * CAST(dot AS DOUBLE)"
+                    " >= 36.0 * CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)"
+                ),
+            )
+        )
+        .select(
+            "doc_a",
+            "doc_b",
+            "n_shared_terms",
+            F.round(
+                F.col("dot")
+                / F.sqrt(F.col("na").cast("double") * F.col("nb")),
+                4,
+            ).alias("cosine"),
+        )
+        .orderBy(F.desc("cosine"), "doc_a", "doc_b")
+        .limit(20)
+    )
+
+
 @register(
     "tfidf_cosine_pairs_exact_spec",
     oracle=f"""
@@ -1952,66 +2070,7 @@ def tfidf_cosine_pairs_exact_spec(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Reference basis: extension tier — near-dup detection
     (SURVEY.md §7 M7 dedup family)."""
-    docs = load_table(spark, sf_dir, "documents")
-    # tf fans out to dfreq, the weights and (via wts) both join sides
-    # and the norms — checkpoint so tokenize + bigram explode + count
-    # executes once, not 4x (without the r6-era forced broadcasts the
-    # recomputation cost became visible: 48 s vs 11 s at sf0.1).
-    # spread_scan (r13): the single-row-group testdata file plans as
-    # ONE scan task, serializing the tokenize+explode map stage
-    # (4.2 s -> 0.9 s at 32 cores); no-op on any multi-split input.
-    tf = (
-        spread_scan(docs).select(
-            "doc_id",
-            F.explode(word_ngrams(tokenize("text"), 2)).alias("g"),
-        )
-        .groupBy("doc_id", "g")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=True)
-    )
-    dfreq = tf.groupBy("g").agg(F.count("*").alias("df"))
-    nd = tf.agg(F.countDistinct("doc_id").alias("n"))
-    # dfreq is one row per distinct bigram — corpus-linear, NO
-    # broadcast hint (r6 VERDICT: a forced broadcast of an unbounded
-    # side is a driver OOM at scale; the term-keyed shuffle join is
-    # the co-partitioned 100 TB plan, and AQE broadcasts the side at
-    # runtime when it is actually small). nd is a 1-row aggregate:
-    # hint is safe and correct.
-    # r13 (guide §2.5/§2.2): AQE sizes post-shuffle partitions by INPUT
-    # bytes, but the g-keyed pair self-join below expands to Σ df²
-    # candidate rows (36.5M from 256k input rows at sf0.1) — so the
-    # checkpointed wts inherited an AQE-coalesced 4-partition layout
-    # and the suite's most expensive stage (pair generation + partial
-    # aggregation) ran on 4 tasks at ANY core count (measured: the
-    # 8→32-core ratio was 0.95 and the query was the suite's #1 at
-    # 21.4 s in the driver bench). Repartition by g to a core-derived
-    # width BEFORE the checkpoint: the pair stage then parallelizes
-    # with the machine, and hash(g) is the co-partitioned layout the
-    # join would want at cluster scale (931 distinct bigrams into ≤64
-    # partitions keeps per-partition Σ df² balanced — ~29x more keys
-    # than partitions, guide §2.5). Placement-only change: every sum
-    # here is an exact integer aggregate, so results are bit-identical.
-    n_pair_parts = max(spark.sparkContext.defaultParallelism, 8)
-    wts = (
-        tf.join(dfreq, "g")
-        .crossJoin(F.broadcast(nd))
-        .filter(F.col("df") < F.col("n"))
-        .select(
-            "doc_id",
-            "g",
-            (
-                F.col("tf")
-                * F.floor(
-                    1000 * F.log(F.col("n").cast("double") / F.col("df"))
-                )
-            ).alias("wt"),
-        )
-        .repartition(n_pair_parts, "g")
-        .localCheckpoint(eager=True)
-    )
-    norms = wts.groupBy("doc_id").agg(
-        F.sum(F.col("wt") * F.col("wt")).cast("long").alias("nrm")
-    )
+    _, _, wts, norms = _tfidf_weights(spark, sf_dir)
     a, b = wts.alias("a"), wts.alias("b")
     pairs = (
         a.join(
@@ -2028,49 +2087,7 @@ def tfidf_cosine_pairs_exact_spec(spark: SparkSession, sf_dir: str) -> DataFrame
             F.count("*").alias("n_shared_terms"),
         )
     )
-    na = norms.select(
-        F.col("doc_id").alias("doc_a"), F.col("nrm").alias("na")
-    )
-    nb = norms.select(
-        F.col("doc_id").alias("doc_b"), F.col("nrm").alias("nb")
-    )
-    # norms is one row per document (corpus-linear): no broadcast hint
-    return (
-        pairs.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .filter(
-            (F.col("dot") > 0)
-            # exact integer gate while 100·dot² fits DECIMAL(38)
-            # (dot < 1e18 — holds for any realistic idf-weighted doc;
-            # the oracle's HUGEINT is 128-bit so it never overflows).
-            # Under Spark's non-ANSI default an overflow yields NULL,
-            # which would silently DROP the pair — so coalesce to a
-            # double compare for that astronomic regime, where a
-            # ~1e-16 relative boundary error is the documented cost.
-            & F.coalesce(
-                F.expr(
-                    "100 * CAST(dot AS DECIMAL(38,0)) * dot"
-                    " >= 36 * CAST(na AS DECIMAL(38,0)) * nb"
-                ),
-                F.expr(
-                    "100.0 * CAST(dot AS DOUBLE) * CAST(dot AS DOUBLE)"
-                    " >= 36.0 * CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)"
-                ),
-            )
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_shared_terms",
-            F.round(
-                F.col("dot")
-                / F.sqrt(F.col("na").cast("double") * F.col("nb")),
-                4,
-            ).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), "doc_a", "doc_b")
-        .limit(20)
-    )
+    return _tfidf_top20(pairs, norms)
 
 
 _TFIDF_DF_CAP = 20  # bigrams in more docs than this skip candidate gen
@@ -2126,40 +2143,7 @@ def tfidf_cosine_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches only df<=cap postings; the verify joins are
     candidate-bounded; no broadcast hint touches a corpus-linear
     side."""
-    docs = load_table(spark, sf_dir, "documents")
-    # spread_scan + g-keyed repartition of the checkpointed weights:
-    # same r13 treatment as the exact-spec twin (serial scan task;
-    # AQE-coalesced checkpoint partitioning starving the candidate /
-    # verify joins) — see the comments there.
-    tf = (
-        spread_scan(docs).select(
-            "doc_id",
-            F.explode(word_ngrams(tokenize("text"), 2)).alias("g"),
-        )
-        .groupBy("doc_id", "g")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=True)
-    )
-    dfreq = tf.groupBy("g").agg(F.count("*").alias("df"))
-    nd = tf.agg(F.countDistinct("doc_id").alias("n"))
-    wts = (
-        tf.join(dfreq, "g")
-        .crossJoin(F.broadcast(nd))  # 1-row aggregate: hint is safe
-        .filter(F.col("df") < F.col("n"))
-        .select(
-            "doc_id",
-            "g",
-            (
-                F.col("tf")
-                * F.floor(
-                    1000 * F.log(F.col("n").cast("double") / F.col("df"))
-                )
-            ).alias("wt"),
-        )
-    )
-    wts = wts.repartition(
-        max(spark.sparkContext.defaultParallelism, 8), "g"
-    ).localCheckpoint(eager=True)  # 3 consumers: wa, wb, norms
+    tf, dfreq, wts, norms = _tfidf_weights(spark, sf_dir)
     rare = tf.join(dfreq.filter(F.col("df") <= _TFIDF_DF_CAP), "g").select(
         "doc_id", "g"
     )
@@ -2190,40 +2174,7 @@ def tfidf_cosine_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_shared_terms"),
         )
     )
-    norms = wts.groupBy("doc_id").agg(
-        F.sum(F.col("wt") * F.col("wt")).cast("long").alias("nrm")
-    )
-    na = norms.select(F.col("doc_id").alias("doc_a"), F.col("nrm").alias("na"))
-    nb = norms.select(F.col("doc_id").alias("doc_b"), F.col("nrm").alias("nb"))
-    return (
-        pairs.join(na, "doc_a")  # norms: corpus-linear, no hint
-        .join(nb, "doc_b")
-        .filter(
-            (F.col("dot") > 0)
-            & F.coalesce(
-                F.expr(
-                    "100 * CAST(dot AS DECIMAL(38,0)) * dot"
-                    " >= 36 * CAST(na AS DECIMAL(38,0)) * nb"
-                ),
-                F.expr(
-                    "100.0 * CAST(dot AS DOUBLE) * CAST(dot AS DOUBLE)"
-                    " >= 36.0 * CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)"
-                ),
-            )
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_shared_terms",
-            F.round(
-                F.col("dot")
-                / F.sqrt(F.col("na").cast("double") * F.col("nb")),
-                4,
-            ).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), "doc_a", "doc_b")
-        .limit(20)
-    )
+    return _tfidf_top20(pairs, norms)
 
 
 _SEM_K = 8  # frozen coarse centroids (vec_id < K)
@@ -2302,6 +2253,17 @@ def semantic_dedup_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("cn"),
     )
     memb = with_norm.filter(F.col("vec_id") >= _SEM_K)
+    return _sem_census(
+        _nearest_centroid(memb, cent),
+        "cid",
+        dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
+    )
+
+
+def _nearest_centroid(memb: DataFrame, cent: DataFrame) -> DataFrame:
+    """Each ``memb(vec_id, embedding, nrm)`` row assigned to the
+    ``cent(cid, cv, cn)`` centroid of highest cosine, ties to the lower
+    cid: ``(vec_id, cid, v, nrm)``, checkpointed."""
     sims = memb.join(F.broadcast(cent)).select(
         "vec_id",
         "embedding",
@@ -2311,7 +2273,7 @@ def semantic_dedup_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s"
         ),
     )
-    assign = (
+    return (
         sims.groupBy("vec_id")
         .agg(
             F.max_by(
@@ -2329,34 +2291,38 @@ def semantic_dedup_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    members = assign.groupBy("cid").agg(F.count("*").alias("n_members"))
-    a = assign.select(
-        F.col("cid"), F.col("vec_id").alias("ia"),
-        F.col("v").alias("va"), F.col("nrm").alias("na"),
-    )
-    b = assign.select(
-        F.col("cid"), F.col("vec_id").alias("ib"),
-        F.col("v").alias("vb"), F.col("nrm").alias("nb"),
-    )
+
+
+def _sem_census(assign: DataFrame, cell: str, sim: Column) -> DataFrame:
+    """The SemDeDup census over ``assign(vec_id, <cell>, v[, nrm])``:
+    pairs inside one cell with ``sim >= _SEM_T`` are duplicates of the
+    lower vec_id. ``sim`` reads the pair sides ``va``/``vb`` (and
+    ``na``/``nb`` when ``assign`` carries ``nrm``). Per cluster: member,
+    dup-pair and flagged counts and the keep ratio in basis points."""
+
+    def side(s: str) -> DataFrame:
+        cols = [
+            F.col(cell),
+            F.col("vec_id").alias(f"i{s}"),
+            F.col("v").alias(f"v{s}"),
+        ]
+        if "nrm" in assign.columns:
+            cols.append(F.col("nrm").alias(f"n{s}"))
+        return assign.select(*cols)
+
+    members = assign.groupBy(cell).agg(F.count("*").alias("n_members"))
     pairs = (
-        a.join(b, ["cid"])
+        side("a").join(side("b"), [cell])
         .filter(F.col("ia") < F.col("ib"))
-        .filter(
-            dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")) >= _SEM_T
-        )
+        .filter(sim >= _SEM_T)
     )
-    dup = pairs.groupBy("cid").agg(
+    dup = pairs.groupBy(cell).agg(
         F.count("*").alias("dup_pairs"),
         F.countDistinct("ib").alias("n_flagged"),
     )
-    return _sem_census_rollup(members, dup)
-
-
-def _sem_census_rollup(members: DataFrame, dup: DataFrame) -> DataFrame:
-    """Shared census tail: per cluster, member/dup/flagged counts and
-    the keep ratio in basis points."""
     return (
-        members.join(dup, "cid", "left")
+        members.withColumnRenamed(cell, "cid")
+        .join(dup.withColumnRenamed(cell, "cid"), "cid", "left")
         .select(
             F.col("cid").alias("cluster_id"),
             "n_members",
@@ -2402,62 +2368,17 @@ def semantic_dedup_kmeans_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     centroids = train_centroids(emb)
     cent_rows = [(i, c) for i, c in enumerate(centroids)]
-    cent = F.broadcast(
-        spark.createDataFrame(cent_rows, ["cid", "cv"]).select(
-            "cid", "cv", l2_norm(F.col("cv")).alias("cn")
-        )
+    cent = spark.createDataFrame(cent_rows, ["cid", "cv"]).select(
+        "cid", "cv", l2_norm(F.col("cv")).alias("cn")
     )
     with_norm = emb.select(
         "vec_id", "embedding", l2_norm(F.col("embedding")).alias("nrm")
     )
-    sims = with_norm.join(cent).select(
-        "vec_id",
-        "embedding",
-        "nrm",
+    return _sem_census(
+        _nearest_centroid(with_norm, cent),
         "cid",
-        (
-            dot(F.col("embedding"), F.col("cv"))
-            / (F.col("nrm") * F.col("cn"))
-        ).alias("s"),
+        dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
     )
-    assign = (
-        sims.groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.struct("cid", "embedding", "nrm"),
-                F.struct(F.col("s"), (-F.col("cid")).alias("neg")),
-            ).alias("best")
-        )
-        .select(
-            "vec_id",
-            F.col("best.cid").alias("cid"),
-            F.col("best.embedding").alias("v"),
-            F.col("best.nrm").alias("nrm"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    members = assign.groupBy("cid").agg(F.count("*").alias("n_members"))
-    a = assign.select(
-        F.col("cid"), F.col("vec_id").alias("ia"),
-        F.col("v").alias("va"), F.col("nrm").alias("na"),
-    )
-    b = assign.select(
-        F.col("cid"), F.col("vec_id").alias("ib"),
-        F.col("v").alias("vb"), F.col("nrm").alias("nb"),
-    )
-    pairs = (
-        a.join(b, ["cid"])
-        .filter(F.col("ia") < F.col("ib"))
-        .filter(
-            dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-            >= _SEM_T
-        )
-    )
-    dup = pairs.groupBy("cid").agg(
-        F.count("*").alias("dup_pairs"),
-        F.countDistinct("ib").alias("n_flagged"),
-    )
-    return _sem_census_rollup(members, dup)
 
 
 @register(
@@ -2511,25 +2432,8 @@ def semantic_dedup_lloyd_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "v", "cell")
         .localCheckpoint(eager=True)
     )
-    members = af.groupBy("cell").agg(F.count("*").alias("n_members"))
-    a = af.select(
-        "cell", F.col("vec_id").alias("ia"), F.col("v").alias("va")
-    )
-    b = af.select(
-        "cell", F.col("vec_id").alias("ib"), F.col("v").alias("vb")
-    )
-    pairs = (
-        a.join(b, ["cell"])
-        .filter(F.col("ia") < F.col("ib"))
-        .filter(cosine_similarity(F.col("va"), F.col("vb")) >= _SEM_T)
-    )
-    dup = pairs.groupBy("cell").agg(
-        F.count("*").alias("dup_pairs"),
-        F.countDistinct("ib").alias("n_flagged"),
-    )
-    return _sem_census_rollup(
-        members.withColumnRenamed("cell", "cid"),
-        dup.withColumnRenamed("cell", "cid"),
+    return _sem_census(
+        af, "cell", cosine_similarity(F.col("va"), F.col("vb"))
     )
 
 
@@ -2614,22 +2518,10 @@ def semantic_dedup_lloyd_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     path, _ = _ensure_lloyd_index(emb)
-    af = read_parquet_checked(spark, path)
-    members = af.groupBy("cell").agg(F.count("*").alias("n_members"))
-    a = af.select("cell", F.col("vec_id").alias("ia"), F.col("v").alias("va"))
-    b = af.select("cell", F.col("vec_id").alias("ib"), F.col("v").alias("vb"))
-    pairs = (
-        a.join(b, ["cell"])
-        .filter(F.col("ia") < F.col("ib"))
-        .filter(cosine_similarity(F.col("va"), F.col("vb")) >= _SEM_T)
-    )
-    dup = pairs.groupBy("cell").agg(
-        F.count("*").alias("dup_pairs"),
-        F.countDistinct("ib").alias("n_flagged"),
-    )
-    return _sem_census_rollup(
-        members.withColumnRenamed("cell", "cid"),
-        dup.withColumnRenamed("cell", "cid"),
+    return _sem_census(
+        read_parquet_checked(spark, path),
+        "cell",
+        cosine_similarity(F.col("va"), F.col("vb")),
     )
 
 

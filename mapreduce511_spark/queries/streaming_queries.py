@@ -26,13 +26,20 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce511_spark.memo import local_path, owned_tmpdir, session_memo
+from mapreduce511_spark.memo import (
+    local_path,
+    owned_tmpdir,
+    session_conf,
+    session_memo,
+)
 from mapreduce511_spark.multimodal import (
     AFP_CLASS,
     AFP_T,
     DHASH_CLASS,
     DHASH_T,
     VID_CLASS,
+    fingerprint_index,
+    near_indexed,
 )
 from mapreduce511_spark.queries import register
 from mapreduce511_spark.queries.oracle_sql import (
@@ -1523,9 +1530,7 @@ def stream_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the partition count is free to choose. Session-global for the
         # pipeline's duration (no per-query knob exists); single-threaded
         # session assumed — see streaming.run_available_now's docstring.
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
+        with session_conf(spark, "spark.sql.shuffle.partitions", "8"):
             # ---- hop 1: quality gate + dedup admission -> parquet staging
             reader = (
                 spark.readStream.schema(docs.schema)
@@ -1603,8 +1608,6 @@ def stream_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(n_cont).cast("long").alias("rejected_contaminated"),
                 F.lit(n_cand - n_cont).cast("long").alias("admitted"),
             )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 def ensure_stream_admitted_lloyd_index(emb: DataFrame) -> tuple[str, list]:
@@ -1999,29 +2002,13 @@ def _hamming_gate(extract, t: int):
     """(build_index, kept) for a 64-bit fingerprint gate: an arriving
     doc is rejected when an indexed fingerprint lies within Hamming
     ``t`` -- banded equi-join + verify, pigeonhole-exact for t <= 3."""
-    from mapreduce511_spark.multimodal import fingerprint_bands
 
     def build_index(d: DataFrame) -> DataFrame:
-        return fingerprint_bands(extract(d), keep_hash=True).select(
-            F.col("band").alias("iband"),
-            F.col("val").alias("ival"),
-            F.col("h_lo").alias("i_lo"),
-            F.col("h_hi").alias("i_hi"),
-        )
+        return fingerprint_index(extract(d))
 
     def kept(batch_df: DataFrame, idx: DataFrame) -> DataFrame:
         hashes = extract(batch_df)
-        cand = fingerprint_bands(hashes, keep_hash=True).join(
-            idx,
-            (F.col("band") == F.col("iband"))
-            & (F.col("val") == F.col("ival")),
-        )
-        hamming = (
-            F.bit_count(F.col("h_lo").bitwiseXOR(F.col("i_lo")))
-            + F.bit_count(F.col("h_hi").bitwiseXOR(F.col("i_hi")))
-        )
-        rejected = cand.filter(hamming <= t).select("doc_id").distinct()
-        return hashes.join(rejected, "doc_id", "left_anti")
+        return hashes.join(near_indexed(hashes, idx, t), "doc_id", "left_anti")
 
     return build_index, kept
 

@@ -7,7 +7,9 @@ expressions (codegen), never Python UDFs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce511_spark.functions.text import (
@@ -773,6 +775,34 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The 8-token rolling span hash of th(doc_id, p, h0) over WINDOW win
+# (PARTITION BY doc_id ORDER BY p): seven shift-xor folds of the next
+# token hash, the oracle side of _span_hashes
+_SQL_SPAN_HASH = reduce(
+    lambda acc, i: f"xor((({acc}) % 36028797018963968) * 32,"
+    f" lead(h0, {i}) OVER win)",
+    range(1, 8),
+    "h0",
+)
+
+
+def _span_hashes(th: DataFrame) -> DataFrame:
+    """``th(doc_id, p, h0, ...)`` plus ``h``, the rolling hash of the
+    8 tokens from ``p`` (``_SQL_SPAN_HASH``), and ``ok``, whether the
+    doc has all 8 of them."""
+    from pyspark.sql import Window
+
+    wdoc = Window.partitionBy("doc_id").orderBy("p")
+    acc = F.col("h0")
+    for i in range(1, 8):
+        acc = ((acc % F.lit(36028797018963968)) * 32).bitwiseXOR(
+            F.lead("h0", i).over(wdoc)
+        )
+    return th.withColumn("h", acc).withColumn(
+        "ok", F.lead("h0", 7).over(wdoc).isNotNull()
+    )
+
+
 @register(
     "repeated_span_screen",
     oracle=f"""
@@ -788,7 +818,7 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM tok
     ), sp AS (
         SELECT doc_id, lang,
-               xor(((xor(((xor(((xor(((xor(((xor(((xor(((h0) % 36028797018963968) * 32, lead(h0, 1) OVER win)) % 36028797018963968) * 32, lead(h0, 2) OVER win)) % 36028797018963968) * 32, lead(h0, 3) OVER win)) % 36028797018963968) * 32, lead(h0, 4) OVER win)) % 36028797018963968) * 32, lead(h0, 5) OVER win)) % 36028797018963968) * 32, lead(h0, 6) OVER win)) % 36028797018963968) * 32, lead(h0, 7) OVER win) AS h,
+               {_SQL_SPAN_HASH} AS h,
                lead(h0, 7) OVER win IS NOT NULL AS ok
         FROM th
         WINDOW win AS (PARTITION BY doc_id ORDER BY p)
@@ -827,8 +857,6 @@ def repeated_span_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
       checkpoint stops the expensive span stage from executing twice.
     Collisions at 60/55 bits are negligible and identical in the
     oracle, so parity is unaffected."""
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", "lang", F.posexplode(tokenize("text")).alias("p", "w")
@@ -836,15 +864,8 @@ def repeated_span_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce511_spark.operators.dedup import hash60
 
     th = toks.select("doc_id", "lang", "p", hash60(F.col("w")).alias("h0"))
-    wdoc = Window.partitionBy("doc_id").orderBy("p")
-    acc = F.col("h0")
-    for i in range(1, 8):
-        acc = ((acc % F.lit(36028797018963968)) * 32).bitwiseXOR(
-            F.lead("h0", i).over(wdoc)
-        )
     spans = (
-        th.withColumn("h", acc)
-        .withColumn("ok", F.lead("h0", 7).over(wdoc).isNotNull())
+        _span_hashes(th)
         .filter(F.col("ok") & (F.col("h") % 4 == 0))
         .select("doc_id", "lang", "h")
         .distinct()
@@ -901,6 +922,52 @@ _SPAN_REMOVAL = """marked AS (
            CAST(len(t.tokens) - d.tokens_removed AS BIGINT) AS tokens_kept"""
 
 
+def _span_removal(rem: DataFrame, docs: DataFrame, tokens: str) -> DataFrame:
+    """The Spark side of ``_SPAN_REMOVAL``: the closed removal ranges
+    ``rem(doc_id, p, pe)`` of a doc merge into islands where they
+    overlap, and each doc of ``docs`` with a range gets its token count
+    (the size of its ``tokens`` array), removed occurrences, removed
+    and kept tokens."""
+    from pyspark.sql import Window
+
+    w_prev = (
+        Window.partitionBy("doc_id")
+        .orderBy("p")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    w_run = (
+        Window.partitionBy("doc_id")
+        .orderBy("p")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    islands = rem.withColumn(
+        "new_island",
+        F.when(F.max("pe").over(w_prev) >= F.col("p"), 0).otherwise(1),
+    ).withColumn("island", F.sum("new_island").over(w_run))
+    per_doc = (
+        islands.groupBy("doc_id", "island")
+        .agg(
+            F.count("*").alias("n_occ"),
+            (F.max("pe") - F.min("p") + 1).alias("width"),
+        )
+        .groupBy("doc_id")
+        .agg(
+            F.sum("n_occ").cast("long").alias("removed_occurrences"),
+            F.sum("width").cast("long").alias("tokens_removed"),
+        )
+    )
+    return per_doc.join(
+        docs.select("doc_id", F.size(tokens).cast("long").alias("n_tokens")),
+        "doc_id",
+    ).select(
+        "doc_id",
+        "n_tokens",
+        "removed_occurrences",
+        "tokens_removed",
+        (F.col("n_tokens") - F.col("tokens_removed")).alias("tokens_kept"),
+    )
+
+
 @register(
     "duplicate_span_removal",
     oracle=f"""
@@ -916,7 +983,7 @@ _SPAN_REMOVAL = """marked AS (
         FROM tok
     ), sp AS (
         SELECT doc_id, p,
-               xor(((xor(((xor(((xor(((xor(((xor(((xor(((h0) % 36028797018963968) * 32, lead(h0, 1) OVER win)) % 36028797018963968) * 32, lead(h0, 2) OVER win)) % 36028797018963968) * 32, lead(h0, 3) OVER win)) % 36028797018963968) * 32, lead(h0, 4) OVER win)) % 36028797018963968) * 32, lead(h0, 5) OVER win)) % 36028797018963968) * 32, lead(h0, 6) OVER win)) % 36028797018963968) * 32, lead(h0, 7) OVER win) AS h,
+               {_SQL_SPAN_HASH} AS h,
                lead(h0, 7) OVER win IS NOT NULL AS ok
         FROM th
         WINDOW win AS (PARTITION BY doc_id ORDER BY p)
@@ -956,8 +1023,6 @@ def duplicate_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheap first-pass filter, this the rewrite-accounting pass.
     Hash collisions at 60/55 bits are negligible and identical in
     the oracle (hash equality IS the defined dup relation)."""
-    from pyspark.sql import Window
-
     from mapreduce511_spark.operators.dedup import hash60
 
     docs = load_table(spark, sf_dir, "documents")
@@ -966,15 +1031,8 @@ def duplicate_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.posexplode("tokens").alias("p", "w")
     )
     th = toks.select("doc_id", "p", hash60(F.col("w")).alias("h0"))
-    wdoc = Window.partitionBy("doc_id").orderBy("p")
-    acc = F.col("h0")
-    for i in range(1, 8):
-        acc = ((acc % F.lit(36028797018963968)) * 32).bitwiseXOR(
-            F.lead("h0", i).over(wdoc)
-        )
     spans = (
-        th.withColumn("h", acc)
-        .withColumn("ok", F.lead("h0", 7).over(wdoc).isNotNull())
+        _span_hashes(th)
         .filter("ok")
         .select("doc_id", "p", "h")
         .localCheckpoint(eager=True)
@@ -992,42 +1050,7 @@ def duplicate_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") != F.col("keeper"))
         .select("doc_id", "p", (F.col("p") + 7).alias("pe"))
     )
-    w_prev = (
-        Window.partitionBy("doc_id")
-        .orderBy("p")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_run = (
-        Window.partitionBy("doc_id")
-        .orderBy("p")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    islands = rem.withColumn(
-        "new_island",
-        F.when(F.max("pe").over(w_prev) >= F.col("p"), 0).otherwise(1),
-    ).withColumn("island", F.sum("new_island").over(w_run))
-    per_doc = (
-        islands.groupBy("doc_id", "island")
-        .agg(
-            F.count("*").alias("n_occ"),
-            (F.max("pe") - F.min("p") + 1).alias("width"),
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.sum("n_occ").cast("long").alias("removed_occurrences"),
-            F.sum("width").cast("long").alias("tokens_removed"),
-        )
-    )
-    return per_doc.join(
-        toklist.select("doc_id", F.size("tokens").cast("long").alias("n_tokens")),
-        "doc_id",
-    ).select(
-        "doc_id",
-        "n_tokens",
-        "removed_occurrences",
-        "tokens_removed",
-        (F.col("n_tokens") - F.col("tokens_removed")).alias("tokens_kept"),
-    )
+    return _span_removal(rem, toklist, "tokens")
 
 
 @register(
@@ -2988,12 +3011,13 @@ def gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference basis: extension tier — text quality scoring
     (SURVEY.md §7 M7)."""
     docs = load_table(spark, sf_dir, "documents")
+    n_tok, n_glyph, n_upper, n_digit = _quality_features()
     d = docs.select(
         "lang",
-        F.size(tokenize("text")).alias("n_words"),
-        glyph_count("text").alias("n_glyph"),
-        F.length(F.regexp_replace("text", "[^A-Z]", "")).alias("n_upper"),
-        F.length(F.regexp_replace("text", "[^0-9]", "")).alias("n_digit"),
+        n_tok.alias("n_words"),
+        n_glyph.alias("n_glyph"),
+        n_upper.alias("n_upper"),
+        n_digit.alias("n_digit"),
     )
     def cnt(cond):
         return F.sum(F.when(cond, 1).otherwise(0)).cast("long")
@@ -3227,6 +3251,47 @@ _PPL_BY_LANG = """
     """
 
 
+def _heldout_counts(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(bfreq, val): the train bigram counts ``(lang, w1, w2, bc)`` and
+    the validation bigram types ``(lang, w1, w2, vc)`` of the
+    session-shared count table (see ``_heldout_hist``)."""
+    hist = _heldout_hist(spark, sf_dir)
+    bfreq = hist.filter(F.col("tr")).select(
+        "lang", "w1", "w2", F.col("c").alias("bc")
+    )
+    val = hist.filter(~F.col("tr")).select(
+        "lang", "w1", "w2", F.col("c").alias("vc")
+    )
+    return bfreq, val
+
+
+def _ppl_by_lang(scored: DataFrame, prob: Column) -> DataFrame:
+    """The Spark side of ``_PPL_BY_LANG``: per-language held-out
+    cross-entropy and perplexity of the validation bigram types
+    ``scored(lang, vc, ...)`` under the model probability ``prob``."""
+    # per-bigram NLL quantized to FLOORED integer micro-nats before
+    # the aggregate: integer sums are order-independent, so Spark's
+    # nondeterministic partial-sum order can never move a rounding-
+    # boundary value (ADVICE r4); the double division happens once,
+    # on the exact integer total, identically in the oracle.
+    nll_micro = F.floor(-1_000_000 * F.log(prob)).cast("long")
+    n_val = F.sum("vc")
+    ce = F.sum(F.col("vc") * F.col("nll_micro")).cast("double") / (
+        1_000_000.0 * n_val
+    )
+    return (
+        scored.select("lang", "vc", nll_micro.alias("nll_micro"))
+        .groupBy("lang")
+        .agg(
+            n_val.alias("n_val_bigrams"),
+            F.round(ce, 4).alias("cross_entropy"),
+            F.round(F.exp(ce), 2).alias("perplexity"),
+        )
+    )
+
+
 @register(
     "heldout_bigram_ppl",
     oracle=f"""
@@ -3266,47 +3331,19 @@ def heldout_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference basis: extension tier — corpus statistics / quality
     family (companions: bigram_logprob_score, gopher_quality_rules,
     quality_weighted_sample)."""
-    # the count table is the session-shared standing relation (r13,
-    # VERDICT r12 item 4) — see _heldout_hist.
-    hist = _heldout_hist(spark, sf_dir)
-    bfreq = hist.filter(F.col("tr")).select(
-        "lang", "w1", "w2", F.col("c").alias("bc")
-    )
+    bfreq, val = _heldout_counts(spark, sf_dir)
     ufreq = bfreq.groupBy("lang", "w1").agg(F.sum("bc").alias("uc"))
     vocab = bfreq.select("lang", "w1").distinct().groupBy("lang").agg(
         F.count("*").alias("v")
     )
-    val = hist.filter(~F.col("tr")).select(
-        "lang", "w1", "w2", F.col("c").alias("vc")
+    prob = (F.coalesce(F.col("bc"), F.lit(0)) + 1) * 1.0 / (
+        F.coalesce(F.col("uc"), F.lit(0)) + F.col("v")
     )
-    # per-bigram NLL quantized to FLOORED integer micro-nats before
-    # the aggregate: integer sums are order-independent, so Spark's
-    # nondeterministic partial-sum order can never move a rounding-
-    # boundary value (ADVICE r4); the double division happens once,
-    # on the exact integer total, identically in the oracle.
-    nll_micro = F.floor(
-        -1_000_000
-        * F.log(
-            (F.coalesce(F.col("bc"), F.lit(0)) + 1)
-            * 1.0
-            / (F.coalesce(F.col("uc"), F.lit(0)) + F.col("v"))
-        )
-    ).cast("long")
-    n_val = F.sum("vc")
-    ce = F.sum(F.col("vc") * F.col("nll_micro")).cast("double") / (
-        1_000_000.0 * n_val
-    )
-    return (
+    return _ppl_by_lang(
         val.join(bfreq, ["lang", "w1", "w2"], "left")
         .join(ufreq, ["lang", "w1"], "left")
-        .join(F.broadcast(vocab), "lang")
-        .select("lang", "vc", nll_micro.alias("nll_micro"))
-        .groupBy("lang")
-        .agg(
-            n_val.alias("n_val_bigrams"),
-            F.round(ce, 4).alias("cross_entropy"),
-            F.round(F.exp(ce), 2).alias("perplexity"),
-        )
+        .join(F.broadcast(vocab), "lang"),
+        prob,
     )
 
 
@@ -3367,21 +3404,13 @@ def heldout_kneser_ney_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tc, v2) totals. Per-bigram NLL floors to integer micro-nats
     BEFORE the aggregate — integer sums are partial-order
     independent, identical to the oracle's arithmetic."""
-    # the count table is the session-shared standing relation (r13,
-    # VERDICT r12 item 4) — see _heldout_hist.
-    hist = _heldout_hist(spark, sf_dir)
-    bfreq = hist.filter(F.col("tr")).select(
-        "lang", "w1", "w2", F.col("c").alias("bc")
-    )
+    bfreq, val = _heldout_counts(spark, sf_dir)
     pref = bfreq.groupBy("lang", "w1").agg(
         F.sum("bc").alias("uc"), F.count("*").alias("f1")
     )
     cont = bfreq.groupBy("lang", "w2").agg(F.count("*").alias("cc"))
     tot = bfreq.groupBy("lang").agg(
         F.count("*").alias("tc"), F.countDistinct("w2").alias("v2")
-    )
-    val = hist.filter(~F.col("tr")).select(
-        "lang", "w1", "w2", F.col("c").alias("vc")
     )
     pcont = (F.coalesce(F.col("cc"), F.lit(0)) + 1.0) / (
         F.col("tc") + F.col("v2") + 1.0
@@ -3393,23 +3422,12 @@ def heldout_kneser_ney_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.col("uc")
         + (0.75 * F.col("f1") / F.col("uc")) * pcont
     )
-    nll_micro = F.floor(-1_000_000 * F.log(prob)).cast("long")
-    n_val = F.sum("vc")
-    ce = F.sum(F.col("vc") * F.col("nll_micro")).cast("double") / (
-        1_000_000.0 * n_val
-    )
-    return (
+    return _ppl_by_lang(
         val.join(bfreq, ["lang", "w1", "w2"], "left")
         .join(pref, ["lang", "w1"], "left")
         .join(cont, ["lang", "w2"], "left")
-        .join(F.broadcast(tot), "lang")
-        .select("lang", "vc", nll_micro.alias("nll_micro"))
-        .groupBy("lang")
-        .agg(
-            n_val.alias("n_val_bigrams"),
-            F.round(ce, 4).alias("cross_entropy"),
-            F.round(F.exp(ce), 2).alias("perplexity"),
-        )
+        .join(F.broadcast(tot), "lang"),
+        prob,
     )
 
 
@@ -3445,20 +3463,17 @@ def doc_quality_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference basis: extension tier — quality family (SURVEY.md §7
     M7)."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(tokenize("text")).cast("long")
-    n_glyph = glyph_count("text").cast("long")
+    n_tok, n_glyph, n_upper, n_digit = (
+        c.cast("long") for c in _quality_features()
+    )
     return docs.select(
         "doc_id",
         "lang",
         n_tok.alias("n_tokens"),
         F.length("text").cast("long").alias("n_chars"),
         n_glyph.alias("n_glyph"),
-        F.length(F.regexp_replace("text", "[^A-Z]", ""))
-        .cast("long")
-        .alias("n_upper"),
-        F.length(F.regexp_replace("text", "[^0-9]", ""))
-        .cast("long")
-        .alias("n_digit"),
+        n_upper.alias("n_upper"),
+        n_digit.alias("n_digit"),
         F.when(n_tok > 0, F.round(n_glyph * 1000.0 / n_tok))
         .otherwise(F.lit(0))
         .cast("long")
@@ -3484,6 +3499,41 @@ _QUALITY_LOGIT = """5 * least(n_tokens, 300)
                         AND n_glyph <= 12 * n_tokens
                        THEN 500 ELSE -500 END)
                - 800 AS logit_milli"""
+
+
+def _quality_features() -> tuple[Column, Column, Column, Column]:
+    """The Spark side of ``_QUALITY_FEATURES``: (n_tokens, n_glyph,
+    n_upper, n_digit) of the ``text`` column, as int columns."""
+    return (
+        F.size(tokenize("text")),
+        glyph_count("text"),
+        F.length(F.regexp_replace("text", "[^A-Z]", "")),
+        F.length(F.regexp_replace("text", "[^0-9]", "")),
+    )
+
+
+def _quality_logit(
+    n_tok: Column, n_glyph: Column, n_upper: Column, n_digit: Column
+) -> Column:
+    """The Spark side of ``_QUALITY_LOGIT``: the fixed linear quality
+    logit in integer milli units over ``_quality_features()``."""
+    # integer milli-ratios with the oracle's floor-division semantics
+    um = F.when(n_glyph > 0, F.floor((1000 * n_upper) / n_glyph)).otherwise(
+        F.lit(1000)
+    )
+    dm = F.when(n_glyph > 0, F.floor((1000 * n_digit) / n_glyph)).otherwise(
+        F.lit(1000)
+    )
+    wordlen_ok = (
+        (n_tok > 0) & (n_glyph >= 3 * n_tok) & (n_glyph <= 12 * n_tok)
+    )
+    return (
+        5 * F.least(n_tok, F.lit(300))
+        - 2 * um
+        - 3 * dm
+        + F.when(wordlen_ok, 500).otherwise(-500)
+        - 800
+    ).cast("long")
 
 
 @register(
@@ -3529,27 +3579,7 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``doc_quality_features``, ``gopher_quality_rules``,
     ``quality_weighted_sample``)."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(tokenize("text"))
-    n_glyph = glyph_count("text")
-    n_upper = F.length(F.regexp_replace("text", "[^A-Z]", ""))
-    n_digit = F.length(F.regexp_replace("text", "[^0-9]", ""))
-    # integer milli-ratios with the oracle's floor-division semantics
-    um = F.when(n_glyph > 0, F.floor((1000 * n_upper) / n_glyph)).otherwise(
-        F.lit(1000)
-    )
-    dm = F.when(n_glyph > 0, F.floor((1000 * n_digit) / n_glyph)).otherwise(
-        F.lit(1000)
-    )
-    wordlen_ok = (
-        (n_tok > 0) & (n_glyph >= 3 * n_tok) & (n_glyph <= 12 * n_tok)
-    )
-    logit = (
-        5 * F.least(n_tok, F.lit(300))
-        - 2 * um
-        - 3 * dm
-        + F.when(wordlen_ok, 500).otherwise(-500)
-        - 800
-    ).cast("long")
+    logit = _quality_logit(*_quality_features())
     scored = docs.select("lang", logit.alias("logit_milli"))
     passed = F.sum(F.when(F.col("logit_milli") >= 0, 1).otherwise(0)).cast(
         "long"
@@ -3612,26 +3642,8 @@ def quality_calibration_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact hash gate. At 100 TB: one map-only scoring scan into a
     16-bucket aggregate."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(tokenize("text"))
-    n_glyph = glyph_count("text")
-    n_upper = F.length(F.regexp_replace("text", "[^A-Z]", ""))
-    n_digit = F.length(F.regexp_replace("text", "[^0-9]", ""))
-    um = F.when(n_glyph > 0, F.floor((1000 * n_upper) / n_glyph)).otherwise(
-        F.lit(1000)
-    )
-    dm = F.when(n_glyph > 0, F.floor((1000 * n_digit) / n_glyph)).otherwise(
-        F.lit(1000)
-    )
-    wordlen_ok = (
-        (n_tok > 0) & (n_glyph >= 3 * n_tok) & (n_glyph <= 12 * n_tok)
-    )
-    logit = (
-        5 * F.least(n_tok, F.lit(300))
-        - 2 * um
-        - 3 * dm
-        + F.when(wordlen_ok, 500).otherwise(-500)
-        - 800
-    ).cast("long")
+    n_tok, n_glyph, n_upper, n_digit = _quality_features()
+    logit = _quality_logit(n_tok, n_glyph, n_upper, n_digit)
     y = (
         (n_tok >= 60)
         & (n_tok > 0)
@@ -4020,26 +4032,7 @@ def curriculum_order_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(tokenize("text"))
-    n_glyph = glyph_count("text")
-    n_upper = F.length(F.regexp_replace("text", "[^A-Z]", ""))
-    n_digit = F.length(F.regexp_replace("text", "[^0-9]", ""))
-    um = F.when(n_glyph > 0, F.floor((1000 * n_upper) / n_glyph)).otherwise(
-        F.lit(1000)
-    )
-    dm = F.when(n_glyph > 0, F.floor((1000 * n_digit) / n_glyph)).otherwise(
-        F.lit(1000)
-    )
-    wordlen_ok = (
-        (n_tok > 0) & (n_glyph >= 3 * n_tok) & (n_glyph <= 12 * n_tok)
-    )
-    logit = (
-        5 * F.least(n_tok, F.lit(300))
-        - 2 * um
-        - 3 * dm
-        + F.when(wordlen_ok, 500).otherwise(-500)
-        - 800
-    ).cast("long")
+    logit = _quality_logit(*_quality_features())
     scored = docs.select(
         "doc_id", logit.alias("logit_milli")
     ).localCheckpoint(eager=True)
@@ -4172,6 +4165,21 @@ _DECON_TOKS = f"""toks AS (
     )"""
 
 
+def _decon_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The Spark side of ``_DECON_TOKS``'s ``toks``: each document's
+    tokens ``toks`` and its md5 split bucket ``b`` (0 = eval)."""
+    from mapreduce511_spark.operators.dedup import hash60
+
+    docs = spread_scan(load_table(spark, sf_dir, "documents"))
+    return docs.select(
+        "doc_id",
+        tokenize("text").alias("toks"),
+        (
+            hash60(F.col("doc_id").cast("string")) % _DECON_EVAL_BUCKETS
+        ).alias("b"),
+    )
+
+
 @register(
     "decontamination_census",
     oracle=f"""
@@ -4225,16 +4233,7 @@ def decontamination_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     (companions: ``contamination_screen`` probe screening,
     ``duplicate_span_removal`` substring dedup,
     ``deterministic_split`` the split machinery)."""
-    from mapreduce511_spark.operators.dedup import hash60
-
-    docs = spread_scan(load_table(spark, sf_dir, "documents"))
-    toks = docs.select(
-        "doc_id",
-        tokenize("text").alias("toks"),
-        (
-            hash60(F.col("doc_id").cast("string")) % _DECON_EVAL_BUCKETS
-        ).alias("b"),
-    )
+    toks = _decon_tokens(spark, sf_dir)
     grams = (
         toks.filter(F.size("toks") >= _DECON_N)
         .select(
@@ -4322,18 +4321,7 @@ def decontamination_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference basis: extension tier — LLM-pipeline data hygiene
     (companions: ``decontamination_census`` doc-level flagging,
     ``duplicate_span_removal`` the island machinery)."""
-    from pyspark.sql import Window
-
-    from mapreduce511_spark.operators.dedup import hash60
-
-    docs = spread_scan(load_table(spark, sf_dir, "documents"))
-    toks = docs.select(
-        "doc_id",
-        tokenize("text").alias("toks"),
-        (
-            hash60(F.col("doc_id").cast("string")) % _DECON_EVAL_BUCKETS
-        ).alias("b"),
-    )
+    toks = _decon_tokens(spark, sf_dir)
     pos_grams = toks.filter(F.size("toks") >= _DECON_N).select(
         "doc_id",
         "b",
@@ -4345,42 +4333,7 @@ def decontamination_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(ev, "g")
         .select("doc_id", "p", (F.col("p") + _DECON_N - 1).alias("pe"))
     )
-    w_prev = (
-        Window.partitionBy("doc_id")
-        .orderBy("p")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_run = (
-        Window.partitionBy("doc_id")
-        .orderBy("p")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    islands = rem.withColumn(
-        "new_island",
-        F.when(F.max("pe").over(w_prev) >= F.col("p"), 0).otherwise(1),
-    ).withColumn("island", F.sum("new_island").over(w_run))
-    per_doc = (
-        islands.groupBy("doc_id", "island")
-        .agg(
-            F.count("*").alias("n_occ"),
-            (F.max("pe") - F.min("p") + 1).alias("width"),
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.sum("n_occ").cast("long").alias("removed_occurrences"),
-            F.sum("width").cast("long").alias("tokens_removed"),
-        )
-    )
-    return per_doc.join(
-        toks.select("doc_id", F.size("toks").cast("long").alias("n_tokens")),
-        "doc_id",
-    ).select(
-        "doc_id",
-        "n_tokens",
-        "removed_occurrences",
-        "tokens_removed",
-        (F.col("n_tokens") - F.col("tokens_removed")).alias("tokens_kept"),
-    )
+    return _span_removal(rem, toks, "toks")
 
 
 # ---------------------------------------------------------------------------

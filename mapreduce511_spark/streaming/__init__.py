@@ -24,11 +24,12 @@ from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from mapreduce511_spark.memo import session_conf
 from mapreduce511_spark.sources.tables import TABLES
 
 EVENTS_SCHEMA = TABLES["events"]
@@ -55,13 +56,12 @@ def prepare_events_dir(spark: SparkSession, sf_dir: str, out_dir: str) -> str:
     return out_dir
 
 
-def tumbling_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Watermarked 1-hour tumbling counts per event type — the
-    streaming twin of the batch ``tumbling_event_counts`` query (same
-    output schema and values once the stream drains)."""
+def window_counts(events: DataFrame, window: Column) -> DataFrame:
+    """Event count and value total (2 places) per event type in each
+    ``window`` of ``ts``: the Spark side of ``TUMBLING_HOUR_ORACLE``
+    for a 1-hour tumbling window."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        events.groupBy(window.alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 2).alias("total_value"),
@@ -75,6 +75,15 @@ def tumbling_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     )
 
 
+def tumbling_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+    """Watermarked 1-hour tumbling counts per event type — the
+    streaming twin of the batch ``tumbling_event_counts`` query (same
+    output schema and values once the stream drains)."""
+    return window_counts(
+        events.withWatermark("ts", watermark), F.window("ts", "1 hour")
+    )
+
+
 def sliding_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Watermarked SLIDING windows (1 hour long, 15-minute slide): each
     event updates four overlapping window states — the overlap factor
@@ -82,19 +91,9 @@ def sliding_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     tumbling state here). Streaming twin of the batch
     ``sliding_event_counts`` family; same drain-equals-batch contract
     as ``tumbling_counts``."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
+    return window_counts(
+        events.withWatermark("ts", watermark),
+        F.window("ts", "1 hour", "15 minutes"),
     )
 
 
@@ -262,22 +261,20 @@ def run_available_now(
     silently plan with the downsized count. The driver, bench, and
     pytest all run queries sequentially per session; a concurrent
     harness must give streaming queries their own session."""
-    spark = stream_df.sparkSession
+    plan = stream_df._jdf.queryExecution().logical().toString()
     if mode is None:
-        mode = "update" if _is_update_only(stream_df) else "complete"
+        # applyInPandasWithState plans only support update mode
+        pandas_state = "FlatMapGroupsInPandasWithState" in plan
+        mode = "update" if pandas_state else "complete"
     # Pandas-stateful plans (applyInPandasWithState /
     # transformWithStateInPandas) execute per-group PYTHON work whose
     # parallelism IS the partition count — downsizing them trades the
     # store bring-up win for worker starvation (measured: closed
     # sessions 5.1 -> 7.1 s at 8). Only JVM-stateful plans downsize.
-    plan = stream_df._jdf.queryExecution().logical().toString()
-    resize = "InPandas" not in plan
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if resize:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(STATE_PARTITIONS)
-        )
-    try:
+    parts = str(STATE_PARTITIONS) if "InPandas" not in plan else None
+    with session_conf(
+        stream_df.sparkSession, "spark.sql.shuffle.partitions", parts
+    ):
         query = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -287,15 +284,7 @@ def run_available_now(
             .start()
         )
         query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return stream_df.sparkSession.sql(f"SELECT * FROM {name}")
-
-
-def _is_update_only(stream_df: DataFrame) -> bool:
-    """applyInPandasWithState plans only support update mode."""
-    plan = stream_df._jdf.queryExecution().logical().toString()
-    return "FlatMapGroupsInPandasWithState" in plan
 
 
 def stream_monitor_lines(spark: SparkSession, watch_dir: str) -> DataFrame:
@@ -436,6 +425,46 @@ def sessionize_stream(events: DataFrame, watermark: str = "30 minutes") -> DataF
     )
 
 
+def _click_purchase(
+    clicks: DataFrame, purchases: DataFrame, within: str, how: str
+) -> DataFrame:
+    """The click-purchase interval join of type ``how``: each purchase
+    meets the same user's clicks in the ``within`` before it. Both
+    sides carry a ``within`` watermark; ``user_id`` is the click's,
+    or the purchase's on a purchase a full join keeps unmatched."""
+    c = clicks.withWatermark("ts", within).select(
+        F.col("user_id").alias("c_user"),
+        F.col("ts").alias("click_ts"),
+        F.col("event_id").alias("click_id"),
+    )
+    p = purchases.withWatermark("ts", within).select(
+        F.col("user_id").alias("p_user"),
+        F.col("ts").alias("purchase_ts"),
+        F.col("event_id").alias("purchase_id"),
+        F.col("value").alias("purchase_value"),
+    )
+    user = F.col("c_user")
+    if how == "fullOuter":
+        user = F.coalesce(user, F.col("p_user"))
+    return c.join(
+        p,
+        (F.col("c_user") == F.col("p_user"))
+        & (F.col("purchase_ts") >= F.col("click_ts"))
+        & (
+            F.col("purchase_ts")
+            <= F.col("click_ts") + F.expr(f"INTERVAL {within}")
+        ),
+        how,
+    ).select(
+        user.alias("user_id"),
+        "click_id",
+        "purchase_id",
+        "click_ts",
+        "purchase_ts",
+        "purchase_value",
+    )
+
+
 def click_purchase_join(
     clicks: DataFrame, purchases: DataFrame, within: str = "2 hours"
 ) -> DataFrame:
@@ -448,33 +477,7 @@ def click_purchase_join(
     buffered rows: state per side is O(events inside the watermark +
     interval horizon), not unbounded. The same expression tree runs
     batch-side for the parity test."""
-    c = clicks.withWatermark("ts", within).select(
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("click_ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    p = purchases.withWatermark("ts", within).select(
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("value").alias("purchase_value"),
-    )
-    return c.join(
-        p,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {within}")
-        ),
-    ).select(
-        F.col("c_user").alias("user_id"),
-        "click_id",
-        "purchase_id",
-        "click_ts",
-        "purchase_ts",
-        "purchase_value",
-    )
+    return _click_purchase(clicks, purchases, within, "inner")
 
 
 def click_purchase_left_join(
@@ -499,34 +502,7 @@ def click_purchase_left_join(
 
     At 100 TB the state bound is identical to the inner join's:
     watermark + interval horizon per side, user-keyed shuffle."""
-    c = clicks.withWatermark("ts", within).select(
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("click_ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    p = purchases.withWatermark("ts", within).select(
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("value").alias("purchase_value"),
-    )
-    return c.join(
-        p,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {within}")
-        ),
-        "leftOuter",
-    ).select(
-        F.col("c_user").alias("user_id"),
-        "click_id",
-        "purchase_id",
-        "click_ts",
-        "purchase_ts",
-        "purchase_value",
-    )
+    return _click_purchase(clicks, purchases, within, "leftOuter")
 
 
 def click_purchase_full_join(
@@ -545,34 +521,7 @@ def click_purchase_full_join(
     At 100 TB the state bound is unchanged from the inner join —
     watermark + interval horizon per side, user-keyed shuffle; outer
     rows add no state, only eviction-time emits on both sides."""
-    c = clicks.withWatermark("ts", within).select(
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("click_ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    p = purchases.withWatermark("ts", within).select(
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("value").alias("purchase_value"),
-    )
-    return c.join(
-        p,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {within}")
-        ),
-        "fullOuter",
-    ).select(
-        F.coalesce(F.col("c_user"), F.col("p_user")).alias("user_id"),
-        "click_id",
-        "purchase_id",
-        "click_ts",
-        "purchase_ts",
-        "purchase_value",
-    )
+    return _click_purchase(clicks, purchases, within, "fullOuter")
 
 
 def exactly_once_parquet_sink(

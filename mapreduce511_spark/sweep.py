@@ -21,6 +21,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce511_spark.memo import session_conf
+
 SWEEP_PARAM = "spark.sql.shuffle.partitions"
 
 
@@ -37,9 +39,8 @@ def run_sweep(
     ``job`` must build its plan INSIDE the call so the conf snapshot
     applies. Returns ``[param_value, run_id, wall_s, out_rows]``.
     """
-    original = spark.conf.get(param, None)
     rows = []
-    try:
+    with session_conf(spark, param, None):
         for value in values:
             spark.conf.set(param, str(value))
             for run in range(runs_per_value):
@@ -47,9 +48,6 @@ def run_sweep(
                 out_rows = job(spark).count()
                 wall = round(time.perf_counter() - start, 3)
                 rows.append((float(value), f"run{run}", wall, out_rows))
-    finally:
-        if original is not None:
-            spark.conf.set(param, original)
     return spark.createDataFrame(
         rows, ["param_value", "run_id", "wall_s", "out_rows"]
     )

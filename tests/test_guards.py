@@ -565,3 +565,55 @@ def test_ann_search_is_written_once():
             if text in anchors:
                 anchors[text].append(f"{f.relative_to(pkg).as_posix()}:{node.lineno}")
     assert {a: len(h) for a, h in anchors.items()} == dict.fromkeys(anchors, 1), anchors
+
+
+def test_spark_rules_are_written_once():
+    """Each shared query rule has one DataFrame definition under
+    ``mapreduce511_spark/``, next to the oracle form that pins it: the
+    quality features and logit (``queries/text.py::_quality_features``,
+    ``_quality_logit``), the rolling span hash and its oracle form
+    (``_span_hashes``, ``_SQL_SPAN_HASH``), the island merge
+    (``_span_removal``), the held-out perplexity tail (``_ppl_by_lang``),
+    the TF-IDF weights and cosine gate (``queries/similarity.py::
+    _tfidf_weights``, ``_tfidf_top20``), the 64-bit Hamming distance and
+    banded gates (``multimodal/__init__.py::hamming64``,
+    ``near_indexed``; ``queries/multimodal.py::_hamming_pairs``), the
+    semantic-dedup assignment and census (``_nearest_centroid``,
+    ``_sem_census``), the window counts (``streaming::window_counts``)
+    and the click-purchase interval join (``streaming::_click_purchase``).
+    Each anchor below is one line of such a rule, matched with all
+    whitespace removed; a second hit is a copy that can drift."""
+    import re
+    from pathlib import Path
+
+    from tests.conftest import REPO
+
+    literal = [
+        'F.regexp_replace("text", "[^A-Z]", "")',
+        "F.when(wordlen_ok, 500)",
+        "F.lit(36028797018963968)",
+        "% 36028797018963968) * 32",
+        'withColumn("new_island"',
+        "1_000_000.0 * n_val",
+        '"100 * CAST(dot AS DECIMAL(38,0)) * dot"',
+        '.repartition(n_pair_parts, "g")',
+        '(F.col("x.band") == F.col("y.band"))',
+        '(F.col("band") == F.col("iband"))',
+        'F.max_by(F.struct("cid", "embedding", "nrm")',
+        'countDistinct("ib")',
+        'F.col("w.start").alias("window_start"), "event_type", "n_events",'
+        ' "total_value"',
+        'alias("purchase_value")',
+    ]
+    anchors = {a: re.escape(re.sub(r"\s+", "", a)) for a in literal}
+    # the Hamming distance of two (lo, hi) fingerprints, whatever the
+    # column names
+    hamming = r"F\.bit_count\(F\.col\([^()]*\)\.bitwiseXOR\(F\.col\([^()]*\)\)\)\+F\.bit_count\("
+    anchors["bit_count(lo ^ lo) + bit_count(hi ^ hi)"] = hamming
+    pkg = Path(REPO) / "mapreduce511_spark"
+    hits = {a: [] for a in anchors}
+    for f in sorted(pkg.rglob("*.py")):
+        text = re.sub(r"\s+", "", f.read_text())
+        for a, pattern in anchors.items():
+            hits[a] += [f.relative_to(pkg).as_posix()] * len(re.findall(pattern, text))
+    assert {a: len(h) for a, h in hits.items()} == dict.fromkeys(anchors, 1), hits

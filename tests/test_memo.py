@@ -123,3 +123,20 @@ def test_cbo_tables_resolve_after_session_restart(tmp_path):
         timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
+
+
+def test_sweep_restores_the_swept_key_or_unsets_it(spark):
+    """``run_sweep`` (through ``memo.session_conf``) puts back the swept
+    key's earlier value, and unsets a key that had none."""
+    from mapreduce511_spark.sweep import run_sweep
+
+    key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    assert spark.conf.get(key, None) is None
+    run_sweep(spark, lambda s: s.range(3), [3, 5], param=key)
+    assert spark.conf.get(key, None) is None
+    spark.conf.set(key, "7")
+    try:
+        run_sweep(spark, lambda s: s.range(3), [3], param=key)
+        assert spark.conf.get(key, None) == "7"
+    finally:
+        spark.conf.unset(key)

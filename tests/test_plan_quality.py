@@ -428,11 +428,9 @@ _BROADCAST_ALLOWLIST: dict[tuple[str, str, str], str] = {
     ("queries/similarity.py", "ann_admission_drift_census", "cent"): "k-rows: 16 cached centroid rows from the admitted Lloyd index",
     ("queries/similarity.py", "embedding_random_projection", "spark.createDataFrame(_RP_SIGNS, ['i', 'j', 's'])"): "const: projection sign matrix",
     ("queries/similarity.py", "nearest_neighbor_sample", "probes"): "k-rows: 50 probes",
-    ("queries/similarity.py", "semantic_dedup_census", "cent"): "k-rows: frozen centroids",
-    ("queries/similarity.py", "semantic_dedup_kmeans_census", "spark.createDataFrame(cent_rows, ['cid', 'cv']).select('cid', 'cv', l2_norm(F.col('cv')).alias('cn'))"): "k-rows: trained centroids",
+    ("queries/similarity.py", "_nearest_centroid", "cent"): "k-rows: frozen or trained centroids",
     ("queries/similarity.py", "similarity_topk", "probe"): "1-row: single probe vector",
-    ("queries/similarity.py", "tfidf_cosine_pairs_exact_spec", "nd"): "1-row",
-    ("queries/similarity.py", "tfidf_cosine_pairs_capped", "nd"): "1-row",
+    ("queries/similarity.py", "_tfidf_weights", "nd"): "1-row",
     # --- retrieval
     ("queries/retrieval.py", "_bm25_scores", "df"): "k-rows: df of the fixed BM25 query terms only",
     ("queries/retrieval.py", "_bm25_scores", "stats"): "1-row",

@@ -18,6 +18,7 @@ if REPO not in sys.path:
 
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+from mapreduce511_spark.memo import session_conf  # noqa: E402
 from mapreduce511_spark.queries.streaming_queries import (  # noqa: E402
     _scratch_run,
     _shared_events_src,
@@ -42,20 +43,20 @@ for run in range(3):
     with _scratch_run("prof") as (ckpt, name):
         stream = stream_events(spark, src, max_files_per_trigger=4)
         agg = tumbling_counts(stream)
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
-        t1 = time.time()
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        wall = time.time() - t1
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        with session_conf(
+            spark, "spark.sql.shuffle.partitions", str(STATE_PARTITIONS)
+        ):
+            t1 = time.time()
+            q = (
+                agg.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("complete")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            wall = time.time() - t1
         n = spark.sql(f"SELECT count(*) FROM {name}").collect()[0][0]
         print(f"\nrun {run}: drain wall {wall:.2f}s, rows={n}, batches={len(q.recentProgress)}")
         for p in q.recentProgress:
